@@ -399,8 +399,8 @@ private[graft] object GateSupport {
         s.conf.set("graft.hop.salt", "auto")
         // prepEdges = false (optimization round 17): the store's edges are
         // already src-hash-partitioned, sorted and persisted — exactly
-        // what prep() would rebuild — and the auto probe (now memoized per
-        // (plan, partitions)) measures 0 here, so the walk takes the same
+        // what prep() would rebuild — and the auto probe measures 0
+        // here, so the walk takes the same
         // exchange-free hop joins as a13. On a future graph where auto
         // measures > 0 the salted equi-join still runs (stepPairs keys on
         // (src, __salt) regardless of layout); a24 pins the salted LAYOUT

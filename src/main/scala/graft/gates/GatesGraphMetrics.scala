@@ -313,7 +313,7 @@ private[graft] object GatesGraphMetrics extends GateFamily {
     // when V ≥ 1000 (the bench SF: real sampling, verified within
     // 50%), the full population below (where the spec separately
     // proves raw ≡ exact). SELF-EVALUATING (cd7 pattern): the exact
-    // stress rides in-row (memoized — x22's sweep is reused); sp_ok
+    // stress rides in-row (x22's sweep, recomputed here); sp_ok
     // cross-multiplies raw·n_sources vs exact·n_sampled in pure
     // integers — no floored quotient to disagree on.
     "x22b_stress_sampled" -> ((s, dir) => {
@@ -329,8 +329,8 @@ private[graft] object GatesGraphMetrics extends GateFamily {
     }),
 
     // Vertex eccentricity (bounded): per-vertex max min-hop distance —
-    // the periphery/radius read-out, derived FREE from the same memoized
-    // sweep x11/x14/x21 share (one O(pairs) closure serves five gates).
+    // the periphery/radius read-out, derived from the same min-hop sweep
+    // x11/x14/x21 read.
     "x25_eccentricity" -> ((s, dir) => {
       graph.Traversal.eccentricity(snrUndirected(s, dir), maxHop = 5)
     }),
@@ -395,8 +395,8 @@ private[graft] object GatesGraphMetrics extends GateFamily {
     // sketches — O(V) fixed-size state per round, no pair ever
     // materializes; THE 100 TB path where x11's exact closure cannot fit.
     // SELF-EVALUATING (the cd7 pattern): HLL registers are
-    // engine-specific, so the exact curve (memoized — the x11 sweep's
-    // collected rows are reused, not recomputed) rides the same rows and
+    // engine-specific, so the exact curve (the x11 sweep) rides the
+    // same rows and
     // the gate emits the error-bound VERDICT per hop — hb_ok flips (and
     // the hash breaks) if any hop's estimate drifts past 2% of the exact
     // cumulative pair count. The oracle recomputes the exact curve
@@ -531,7 +531,7 @@ private[graft] object GatesGraphMetrics extends GateFamily {
       val nr = t(s, dir, "nation").select(
         (lit(2L * B) + col("n_nationkey")).as("src"),
         (lit(1L * B) + col("n_regionkey")).as("dst"))
-      graph.Traversal.labelPropagationMemo(cn.unionByName(nr), rounds = 4)
+      graph.Traversal.labelPropagation(cn.unionByName(nr), rounds = 4)
     }),
 
     // Degree histogram of the whole graph: out-degree -> #vertices,
@@ -545,7 +545,7 @@ private[graft] object GatesGraphMetrics extends GateFamily {
     }),
 
     // Exact closeness centrality (Wasserman–Faust) — the fourth read-out
-    // of the ONE memoized distance sweep (x11/x14/x21/x25's): integer
+    // of the min-hop distance sweep (x11/x14/x21/x25's): integer
     // reach/dist-sum statistics, one floored micro division.
     "x26_closeness" -> ((s, dir) => {
       graph.Traversal.closenessCentrality(snrUndirected(s, dir), maxHop = 5)
@@ -563,7 +563,7 @@ private[graft] object GatesGraphMetrics extends GateFamily {
         (lit(1L * B) + col("n_regionkey")).as("dst"))
       val edges = cn.unionByName(nr)
       graph.Traversal.modularity(edges,
-        graph.Traversal.labelPropagationMemo(edges, rounds = 4))
+        graph.Traversal.labelPropagation(edges, rounds = 4))
     }),
 
     // Densest-subgraph parallel peel (Bahmani ε=0): the whole round

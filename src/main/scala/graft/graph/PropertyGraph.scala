@@ -133,13 +133,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     edgesFor(edgeLabel)
       .join(to.select(col("id")), edges("dst") === to("id"), "left_semi")
 
-  /** A8 — edge-target semi-join: does an edge `src --l--> dst` exist for any
-    * dst in `targets`? (`.where(inV().hasId(...)).hasNext()`,
-    * main.go:320,339,...). Returns the qualifying edges. */
-  def edgesInto(targets: DataFrame, edgeLabel: String = "in"): DataFrame =
-    edges.filter(col("label") === edgeLabel)
-      .join(targets.select(col("id").as("__tid")), edges("dst") === col("__tid"), "left_semi")
-
   /** A10 — adjacency (1-hop out): `.out()` (README.md:344). Returns neighbor
     * vertex rows, with the originating vertex id as `from_id`.
     * Two joins: edges⋈from (semi side small → broadcast), then ⋈vertices on
@@ -203,10 +196,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * [[dropVertices]]: a NULL predicate row is kept, not lost. */
   def dropEdges(pred: Column): PropertyGraph =
     PropertyGraph(vertices, edges.filter(!coalesce(pred, lit(false))))
-
-  /** A15 — `g.V().drop()` / `g.E().drop()`: empty graph of same schema. */
-  def dropAll: PropertyGraph =
-    PropertyGraph(vertices.limit(0), edges.limit(0))
 
   // ---------------------------------------------------------------- A16 subgraph
 

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,77 +21,95 @@ import org.apache.spark.storage.StorageLevel
   * the result like any other pair. Termination is unaffected — the pair
   * space is finite and each pair is emitted at most once.
   *
-  * Scale notes (100 TB):
-  *   - each hop is one join frontier⋈edges; the edge set is expected
-  *     hash-partitioned AND sorted by `src` ([[GraphStore]] layout), so
-  *     hop-joins find the big side exchange-free and sort-free and only
-  *     the frontier moves. For ad-hoc edge inputs, `prepEdges = true`
-  *     builds that layout on the fly;
-  *   - the anti-join runs BEFORE the frontier dedup so the following
-  *     `distinct` reuses the anti-join's (origin, node) exchange — one
-  *     shuffle of the stepped pairs per hop, not two;
-  *   - bounded k-hop builds the whole k-hop plan with no per-hop action —
-  *     a single eager checkpoint job executes all k hops; only the
-  *     unbounded fixpoint pays a per-hop emptiness check (it must detect
-  *     convergence);
-  *   - each frontier is persisted (the result is exactly the disjoint
-  *     union of the frontiers, so total cached volume = closure size);
-  *     every [[checkpointEvery]] rounds the accumulator is
-  *     `localCheckpoint`ed (cutting lineage that would otherwise grow
-  *     per-round) and superseded frontier blocks are released;
-  *   - before returning, the result is checkpointed and ALL loop-scoped
-  *     blocks are unpersisted, so repeated traversals do not accumulate
-  *     executor storage.
+  * Every iterative algorithm here runs on ONE superstep driver,
+  * [[iterate]] (the Pregelix shape: each superstep is the same dataflow,
+  * a state relation joined with the edges; only the step differs). The
+  * driver owns the four per-loop decisions:
+  *   - the cut: each round's new relation is [[cut]] exactly once,
+  *     LAZILY — it materializes inside the round's convergence probe, so
+  *     a round costs one job, and every logical plan stays O(rounds)
+  *     leaves deep instead of re-analysing the whole lineage each round;
+  *   - the probe: a full action over the round's state (a count or an
+  *     aggregate), run after every round, or after every second round
+  *     for level-set loops (`widen`: the second level's probe runs
+  *     through the first's shuffle, so one job answers both);
+  *   - the round limit: `maxRounds` rounds without convergence hand the
+  *     state to the algorithm's `atLimit`, which throws its own loud error
+  *     (a truncated fixpoint is a wrong answer) or, for fixed-round
+  *     sweeps, returns the state;
+  *   - release: loop-scoped persisted inputs are unpersisted when the
+  *     loop ends, whether it converged or threw.
+  *
+  * Scale notes (100 TB): each hop is one join frontier⋈edges; the edge
+  * set is expected hash-partitioned AND sorted by `src` ([[GraphStore]]
+  * layout), so hop-joins find the big side exchange-free and only the
+  * frontier moves (`prepEdges = true` builds that layout for ad-hoc
+  * inputs). The anti-join runs BEFORE the frontier dedup so the
+  * `distinct` reuses its (origin, node) exchange. Accumulating results
+  * (reachFix, bfsDepth, khop) are unions of the per-round cut relations,
+  * so the result is written once, as the disjoint union of its rounds.
   */
 object Traversal {
 
-  private val checkpointEvery = 8
-
-  /** Eager lineage cut for the iterative loops. Default `localCheckpoint`:
-    * blocks live on executors — the right latency locally and on healthy
-    * clusters, but a LOST executor loses its blocks and fails the job. For
-    * long multi-hour iterative jobs at cluster scale, opt into RELIABLE
-    * checkpoints (survive executor loss) by setting BOTH
+  /** Lineage cut. Default `localCheckpoint`: blocks live on executors —
+    * the right latency locally and on healthy clusters, but a LOST
+    * executor loses its blocks and fails the job. For long multi-hour
+    * iterative jobs at cluster scale, opt into RELIABLE checkpoints
+    * (survive executor loss) by setting BOTH
     * `spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)` and the session
-    * conf `graft.checkpoint.reliable=true` — every lineage cut in khop /
-    * bfsDepth / reachFix / minLabel / closureDoubling / hopPower then
-    * writes to the checkpoint dir instead of executor storage. Both forms
-    * are eager and return a frame reading from materialized blocks, so
-    * loop structure and results are identical either way. */
-  private[graft] def cut(df: DataFrame): DataFrame = {
+    * conf `graft.checkpoint.reliable=true` — every cut then writes to the
+    * checkpoint dir instead of executor storage. `eager = false`
+    * truncates the logical plan at once but materializes inside the
+    * frame's first consuming job instead of a dedicated one. The result is
+    * rebuilt constraint-free ([[org.apache.spark.sql.graft.CheckpointUtil]]):
+    * unions of cut frames under a join are the iterative shape here. */
+  private[graft] def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
     val reliable =
       df.sparkSession.conf.get("graft.checkpoint.reliable", "false") == "true"
-    if (reliable) {
+    if (reliable)
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "graft.checkpoint.reliable=true needs sparkContext.setCheckpointDir first")
-      df.checkpoint()
-    } else df.localCheckpoint()
+    org.apache.spark.sql.graft.CheckpointUtil.dropConstraints(
+      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager))
   }
 
-  /** LAZY lineage cut (optimization round 17): truncates the logical plan
-    * like [[cut]] but materializes inside the FIRST consumer's job instead
-    * of paying a dedicated checkpoint job — the topoLayers n1/n2 idiom
-    * generalized. Use in fixed-round loops with no per-round convergence
-    * probe (hyperBall's maxHop rounds): the whole chain then executes as
-    * ONE job at the caller's action while each round's state still
-    * materializes exactly once and every plan stays shallow. Same
-    * reliable-checkpoint opt-in as [[cut]]. */
-  private[graft] def lazyCut(df: DataFrame): DataFrame = {
-    val reliable =
-      df.sparkSession.conf.get("graft.checkpoint.reliable", "false") == "true"
-    if (reliable) {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "graft.checkpoint.reliable=true needs sparkContext.setCheckpointDir first")
-      df.checkpoint(false)
-    } else df.localCheckpoint(false)
-  }
+  /** The superstep driver (see the object doc). Round r = 1, 2, … calls
+    * `step(state, r)`, which returns the round's new relation and the
+    * function that wraps that relation — once cut — into the next state.
+    * After each round (each pair of rounds when `widen`; a pair never
+    * crosses `maxRounds`) the driver runs `converged`, which must be a
+    * full action over the new relation: that action is what materializes
+    * the lazy cut. With `widen`, a round whose probe finds nothing new
+    * must leave the state a fixpoint (level-set loops: the next level of
+    * an empty level is empty). `scoped` frames are unpersisted when the
+    * loop ends. */
+  private def iterate[S](maxRounds: Int, converged: S => Boolean = (_: S) => false,
+                         atLimit: S => S = (s: S) => s, widen: Boolean = false,
+                         scoped: Seq[DataFrame] = Nil)(init: S)(
+                         step: (S, Int) => (DataFrame, DataFrame => S)): S =
+    try {
+      def round(s: S, r: Int): S = {
+        val (frame, next) = step(s, r)
+        next(cut(frame, eager = false))
+      }
+      var s = init
+      var r = 1
+      var done = false
+      while (!done) {
+        if (r > maxRounds) return atLimit(s)
+        s = round(s, r)
+        if (widen && r < maxRounds) { r += 1; s = round(s, r) }
+        r += 1
+        done = converged(s)
+      }
+      s
+    } finally scoped.foreach(_.unpersist(false))
 
-  @inline private def timed[A](label: String)(f: => A): A =
-    if (!sys.props.contains("graft.verbose")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[bfs] $label%-30s ${(System.nanoTime() - t0) / 1e9}%7.2f s"); r
-    }
+  /** Loop state whose probe is its relation's row count, compared with
+    * the previous round's (peeling loops converge when nothing peels). */
+  private final class Counted(val df: DataFrame, val prev: Long) {
+    lazy val n: Long = df.count()
+  }
 
   /** Salt buckets for the frontier⋈edges hop join — session conf
     * `graft.hop.salt`: `0` (default) = off, `N` = fixed width, `auto` =
@@ -125,30 +143,17 @@ object Traversal {
   private[graft] def autoSaltBuckets(edges: DataFrame): Int = {
     val parts = edges.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "200").toInt
-    // Session memo (optimization round 17, the schema-memo discipline):
-    // the probe is a pure function of (edge set, partition count) and the
-    // gate inputs are immutable for the JVM lifetime, so the one
-    // degree-aggregate job runs once per distinct (plan, parts) instead
-    // of once per execution — a13b's auto walk re-paid it twice per bench
-    // pass. Keyed on the canonicalized plan like every other memo here.
-    val key = (edges.queryExecution.analyzed.canonicalized, parts)
-    saltProbeMemo.getOrElseUpdate(key) {
-      val row = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .agg(sum(col("deg")), max(col("deg"))).head()
-      if (row.isNullAt(0)) 0
-      else {
-        val total = row.getLong(0)
-        val maxDeg = row.getLong(1)
-        val perPart = math.max(1L, total / parts)
-        if (maxDeg <= 2 * perPart) 0
-        else math.min(parts.toLong, (maxDeg + perPart - 1) / perPart).toInt
-      }
+    val row = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .agg(sum(col("deg")), max(col("deg"))).head()
+    if (row.isNullAt(0)) 0
+    else {
+      val total = row.getLong(0)
+      val maxDeg = row.getLong(1)
+      val perPart = math.max(1L, total / parts)
+      if (maxDeg <= 2 * perPart) 0
+      else math.min(parts.toLong, (maxDeg + perPart - 1) / perPart).toInt
     }
   }
-
-  private val saltProbeMemo = new MemoCache[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), Int](
-    8, _ => ())
 
   private[graft] def prep(edges: DataFrame, prepEdges: Boolean): DataFrame = {
     val n = saltBuckets(edges)
@@ -222,53 +227,26 @@ object Traversal {
     * was discovered from `origin` (shortest-path semantics). A row
     * (a, a, h) means a directed cycle of length h through `a`.
     *
-    * The k hops compile into one plan executed by a single eager
-    * `localCheckpoint` job at the end (per-hop frontier persists make each
-    * frontier compute once inside that job even though it feeds both the
-    * result union and the next hop's join). The returned frame reads from
-    * the checkpoint blocks, so every loop-scoped cached frame — per-hop
-    * frontiers and, for ad-hoc edge inputs, the repartitioned edge set —
-    * is released before returning: repeated ad-hoc khop calls leave no
-    * residue in executor storage. Set `dedupStart = false` when start ids
-    * are known unique (e.g. a filter of a vertex store) to skip a shuffle. */
+    * A fixed-round loop (no probe): the k lazily cut hops execute inside
+    * ONE eager checkpoint job at the end, and the returned frame reads
+    * from that checkpoint, so the prepped edge set is released before
+    * returning. Set `dedupStart = false` when start ids are known unique
+    * (e.g. a filter of a vertex store) to skip a shuffle. */
   def khop(edges: DataFrame, start: DataFrame, k: Int,
            prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame = {
     require(k >= 1, s"khop needs k >= 1, got $k")
     val e = prep(edges, prepEdges)
-    var frontier = pairs(start, dedupStart)
-    var live = List.empty[DataFrame] // persisted frames not yet released
-    var result: Option[DataFrame] = None
-    var fresh = false // result is a checkpoint with nothing unioned since
-    var hop = 1
-    while (hop <= k) {
+    // state: (this hop's frontier, the hop-stamped frontiers so far)
+    val (_, found) = iterate[(DataFrame, List[DataFrame])](k)(
+        (pairs(start, dedupStart), Nil)) { case ((frontier, found), hop) =>
       val stepped = stepPairs(frontier, e)
-      val next = result.fold(stepped)(r =>
-          stepped.join(r.select(col("origin"), col("node")), Seq("origin", "node"), "left_anti"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val stamped = next.withColumn("hop", lit(hop))
-      result = Some(result.map(_.unionByName(stamped)).getOrElse(stamped))
-      // Bound the plan depth for large k: an eager checkpoint materializes
-      // the prefix (one job), truncates lineage, and lets the superseded
-      // frontier blocks go (the superseded checkpoint's own blocks are
-      // reclaimed by the ContextCleaner once the old plan is unreferenced).
-      // `next` itself joins the release list only on a LATER checkpoint
-      // (or the final cleanup): it is the active frontier and the eager
-      // checkpoint job has just filled its cache.
-      fresh = hop % checkpointEvery == 0
-      if (fresh) {
-        result = result.map(cut)
-        live.foreach(_.unpersist(false))
-        live = Nil
-      }
-      live ::= next
-      frontier = next
-      hop += 1
+      val next =
+        if (found.isEmpty) stepped
+        else stepped.join(found.map(_.select(col("origin"), col("node")))
+          .reduce(_ unionByName _), Seq("origin", "node"), "left_anti")
+      (next.distinct(), f => (f, f.withColumn("hop", lit(hop)) :: found))
     }
-    // Eager final checkpoint = the one traversal job — unless the loop
-    // ended exactly on a checkpoint (re-checkpointing would copy blocks).
-    val out = if (fresh) result.get else cut(result.get)
-    live.foreach(_.unpersist(false))
+    val out = cut(found.reverse.reduce(_ unionByName _))
     if (prepEdges) e.unpersist(false)
     out
   }
@@ -279,67 +257,28 @@ object Traversal {
     * frontier-only movement with a visited-set anti-join per level, so a
     * level costs one join however many seeds there are. Cycle-safe by the
     * visited set; levels beyond the first reach of a vertex never revisit
-    * it (that first reach IS the minimum — BFS invariant). Expands TWO
-    * levels per round so one convergence-probe job covers both (per-round
-    * job latency, not data, dominates shallow-diameter graphs locally and
-    * small frontiers at scale); converges in ceil(diameter/2) jobs; throws
+    * it (that first reach IS the minimum — BFS invariant). Probes every
+    * second level (`widen`), so it converges in ~diameter/2 jobs; throws
     * if `maxIter` levels are exceeded first (a truncated depth map is a
     * wrong answer, not a partial one). */
   def bfsDepth(edges: DataFrame, start: DataFrame, maxIter: Int = 64,
                prepEdges: Boolean = true): DataFrame = {
     val e = prep(edges, prepEdges)
-    if (sys.props.contains("graft.verbose")) timed("bfs prep")(e.count())
-    var visited = start.select(col("id")).distinct()
-      .withColumn("depth", lit(0L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var frontier = visited
-    var live = List(visited)
-    var depth = 1L
-    var done = false
-    // one BFS level: the unvisited neighbors of `f`, stamped with depth `d`
-    def level(f: DataFrame, seen: DataFrame, d: Long): DataFrame =
-      stepIds(f.select(col("id")), e).distinct()
+    val seed = cut(start.select(col("id")).distinct().withColumn("depth", lit(0L)),
+      eager = false)
+    // state: (this level, every level so far — the visited set)
+    val (_, levels) = iterate[(DataFrame, List[DataFrame])](maxIter,
+        converged = _._1.count() == 0,
+        atLimit = _ => throw new IllegalArgumentException(
+          s"bfsDepth did not converge in $maxIter levels — raise maxIter"),
+        widen = true, scoped = if (prepEdges) Seq(e) else Nil)(
+        (seed, List(seed))) { case ((frontier, levels), depth) =>
+      val seen = levels.map(_.select(col("id"))).reduce(_ unionByName _)
+      (stepIds(frontier.select(col("id")), e).distinct()
         .join(seen.hint("shuffle_hash"), Seq("id"), "left_anti")
-        .withColumn("depth", lit(d))
-    while (!done) {
-      require(depth <= maxIter,
-        s"bfsDepth did not converge in $maxIter levels — raise maxIter")
-      val seen = visited.select(col("id"))
-      val n1 = level(frontier, seen, depth)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // level d+1 anti-joins against visited ∪ n1 (its `visited` is one
-      // round stale otherwise); n2 ⊆ neighbors(n1), so n2 empty is the
-      // whole BFS's termination condition — n1 is then the last level.
-      val n2 = level(n1, seen.unionByName(n1.select(col("id"))), depth + 1L)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // ONE probe job per two levels: computing n2 runs through n1's
-      // distinct shuffle, so the count fills both caches.
-      if (timed(s"bfs probe d=$depth")(n2.count()) > 0) {
-        visited = timed(s"bfs cut d=$depth")(
-          cut(visited.unionByName(n1).unionByName(n2)))
-        live.foreach(_.unpersist(false))
-        n1.unpersist(false)
-        live = List(n2)
-        frontier = n2
-        depth += 2
-      } else {
-        n2.unpersist(false)
-        if (n1.isEmpty) n1.unpersist(false)
-        else {
-          visited = cut(visited.unionByName(n1))
-          live.foreach(_.unpersist(false))
-          live = List(n1)
-        }
-        done = true
-      }
+        .withColumn("depth", lit(depth.toLong)), l => (l, l :: levels))
     }
-    val out = visited
-    // A seed set with no out-edges converges on round 1 with `live` still
-    // holding the initial `visited` — which IS `out`. Unpersisting it would
-    // hand back an uncached result (recomputed by every consumer).
-    live.filterNot(_ eq out).foreach(_.unpersist(false))
-    if (prepEdges) e.unpersist(false)
-    out
+    levels.reverse.reduce(_ unionByName _)
   }
 
   /** Observable count of [[topoLayers]] depth-escape restarts: incremented
@@ -393,68 +332,40 @@ object Traversal {
     // union-distinct shuffle over the full vertex set
     val dstIds = e.select(col("dst").as("id")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val s0 = srcIds.join(dstIds, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cur = s0
-    var levels = List(cur.withColumn("layer", lit(0L)))
-    var live = List(cur, dstIds)
-    var k = 0L
-    var done = false
-    while (!done) {
-      require(k < maxIter,
-        s"topoLayers did not converge in $maxIter rounds — a cycle in the " +
-          "input? longest-path layering is defined on DAGs only")
-      if (k >= switchDepth) {
-        // deep DAG: stop paying a scheduler round-trip per two levels —
-        // restart as log-depth doubling (its own cycle guard applies)
-        topoDoublingSwitches.incrementAndGet()
-        live.foreach(_.unpersist(false))
-        val out = topoLayersDoubling(e, prepEdges = false)
-        if (prepEdges) e.unpersist(false)
-        return out
-      }
-      // TWO levels per convergence probe (the bfsDepth trick): counting
-      // S_{k+2} runs through S_{k+1}'s distinct shuffle, so one job
-      // fills both caches and answers "done?" for both.
-      // localCheckpoint(eager=false), not persist: each level frame's
-      // LOGICAL plan is truncated to a LogicalRDD the moment it
-      // materializes (still inside the same probe job), so round k's
-      // analysis cost is O(1) instead of re-walking a k-deep join chain.
-      // persist alone short-circuits execution but not analysis, and the
-      // re-analysis cost compounds — measured on the x32 chain corpus:
-      // probes went 0.6 s → 37 s by level 14 with persist, flat ~0.5 s
-      // with the cut (the same pathology the doubling loop's per-round
-      // cut() fixed in round 14). Lazy, not eager, so the probe keeps
-      // its one-job shape.
-      val n1 = timed(s"topo ckpt n1 k=$k")(
-        stepIds(cur, e).distinct().localCheckpoint(false))
-      val n2 = timed(s"topo ckpt n2 k=$k")(
-        stepIds(n1, e).distinct().localCheckpoint(false))
-      if (timed(s"topo levels ${k + 1}-${k + 2}")(n2.isEmpty)) {
-        n2.unpersist(false)
-        if (n1.isEmpty) n1.unpersist(false)
-        else { levels ::= n1.withColumn("layer", lit(k + 1)); live ::= n1 }
-        done = true
-      } else {
-        levels ::= n1.withColumn("layer", lit(k + 1))
-        levels ::= n2.withColumn("layer", lit(k + 2))
-        live = n2 :: n1 :: live
-        cur = n2
-        k += 2
-      }
+    val s0 = cut(srcIds.join(dstIds, Seq("id"), "left_anti"), eager = false)
+    // deep DAG: past switchDepth levels, stop paying a job per two levels
+    // and restart as log-depth doubling (its own cycle guard applies)
+    val deep = switchDepth < maxIter
+    var switched = false
+    // state: (level S_k, every level stamped with its layer)
+    val (_, levels) = iterate[(DataFrame, List[DataFrame])](
+        math.min(maxIter, switchDepth), converged = _._1.count() == 0,
+        atLimit = s => if (deep) { switched = true; s } else
+          throw new IllegalArgumentException(
+            s"topoLayers did not converge in $maxIter rounds — a cycle in the " +
+              "input? longest-path layering is defined on DAGs only"),
+        widen = true)((s0, List(s0.withColumn("layer", lit(0L))))) {
+      case ((cur, levels), k) =>
+        (stepIds(cur, e).distinct(), l => (l, l.withColumn("layer", lit(k.toLong)) :: levels))
     }
-    val out = timed("topo levels plan")(levels.reduce(_ unionByName _)
+    if (switched) {
+      topoDoublingSwitches.incrementAndGet()
+      dstIds.unpersist(false)
+      val out = topoLayersDoubling(e, prepEdges = false)
+      if (prepEdges) e.unpersist(false)
+      return out
+    }
+    val frozen = cut(levels.reduce(_ unionByName _)
       .groupBy(col("id")).agg(max(col("layer")).as("layer")))
-    val frozen = timed("topo final max-agg")(cut(out))
     // Contract guard: every edge-touching vertex must be layered. A
     // source-less cycle is unreachable from S₀, so the loop above
     // converges with those vertices silently MISSING — a wrong answer
     // maxIter alone cannot catch (it only fires when a cycle is fed by a
-    // source). All three counts read persisted/materialized frames; no
-    // new shuffle runs for the guard.
-    val nVerts = timed("topo vertex census")(s0.count() + dstIds.count())
-    val nLayered = timed("topo layered count")(frozen.count())
-    live.foreach(_.unpersist(false))
+    // source). All three counts read materialized frames; no new shuffle
+    // runs for the guard.
+    val nVerts = s0.count() + dstIds.count()
+    val nLayered = frozen.count()
+    dstIds.unpersist(false)
     if (prepEdges) e.unpersist(false)
     require(nLayered == nVerts,
       s"topoLayers: ${nVerts - nLayered} of $nVerts edge-touching vertices " +
@@ -495,127 +406,87 @@ object Traversal {
                          prepEdges: Boolean = true,
                          onRound: Int => Unit = _ => ()): DataFrame = {
     val e = prep(edges, prepEdges)
-    val base = e.select(col("src"), col("dst")) // salt-free view for compose joins
-    var r = base.distinct().withColumn("d", lit(1L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var live = List(r)
-    // one job per round: materializes the round's cache AND answers
-    // (pairs, Σd widened past BIGINT, self-pairs) for convergence + cycles
-    def stats(df: DataFrame): (Long, java.math.BigDecimal, Long) = {
-      val row = df.agg(count(lit(1)), sum(col("d").cast("decimal(38,0)")),
-        count(when(col("src") === col("dst"), 1))).head()
-      (row.getLong(0), row.getDecimal(1), row.getLong(2))
-    }
-    def assertAcyclic(selfPairs: Long): Unit =
-      if (selfPairs > 0) {
-        live.foreach(_.unpersist(false))
-        if (prepEdges) e.unpersist(false)
-        throw new IllegalArgumentException(
-          s"topoLayersDoubling: $selfPairs vertex(es) reach themselves — " +
-            "the graph contains a cycle; longest-path layering is defined " +
-            "on DAGs only")
+    try {
+      val base = e.select(col("src"), col("dst")) // salt-free view for compose joins
+      // (pairs, Σd widened past BIGINT, self-pairs) in one aggregate: the
+      // convergence fingerprint AND the cycle witness, and the job that
+      // materializes the round's lazy cut
+      final class Relation(val r: DataFrame, val before: (Long, java.math.BigDecimal)) {
+        lazy val stats: (Long, java.math.BigDecimal) = {
+          val row = r.agg(count(lit(1)), sum(col("d").cast("decimal(38,0)")),
+            count(when(col("src") === col("dst"), 1))).head()
+          if (row.getLong(2) > 0)
+            throw new IllegalArgumentException(
+              s"topoLayersDoubling: ${row.getLong(2)} vertex(es) reach themselves — " +
+                "the graph contains a cycle; longest-path layering is defined " +
+                "on DAGs only")
+          (row.getLong(0), row.getDecimal(1))
+        }
       }
-    var (n0, s0, cyc0) = timed("doubling seed stats")(stats(r))
-    assertAcyclic(cyc0)
-    var round = 0
-    var done = n0 == 0 // edge-less input layers nothing
-    while (!done) {
-      round += 1
-      onRound(round)
-      require(round <= maxRounds,
-        s"topoLayersDoubling did not converge in $maxRounds rounds — " +
-          s"a DAG deeper than 2^${maxRounds - 1}?")
-      // cut() EVERY round (the closureDoubling discipline): the squaring
-      // self-joins r with itself, so without a lineage cut the LOGICAL
-      // plan doubles per round — 2^rounds subtrees that the analyzer and
-      // optimizer re-walk on every subsequent round even though the data
-      // is persisted (caching short-circuits execution, not analysis;
-      // measured: the 63-level chain spec went minutes → seconds). The
-      // checkpoint IS the round's materialization and cache — no extra
-      // persist layer; superseded rounds drop via the context cleaner.
-      //
-      // AT-CAP compose, not the full square (optimization round 16): the
-      // left side is only the pairs sitting AT the round's dyadic cap,
-      // d == 2^(round−1), not all of r. Exact by the canonical split:
-      // any path of length m ∈ (2^k, 2^(k+1)] passes a vertex w exactly
-      // 2^k hops in, its prefix is an exact length-2^k path — and for
-      // any pair with an exact 2^k path the cap forces r_k(u,w) = 2^k
-      // (the cap can't record more, the exact path guarantees no less).
-      // That is all the argument needs; pairs WITHOUT an exact-2^k path
-      // may sit below the cap (e.g. an edge u→v beside a longer u→v
-      // path) and are correctly not recomposed — so every pair the full
-      // square would improve is reachable from the at-cap slice, and
-      // every composed candidate is a genuine path length
-      // (path concatenation in the acyclic regime; on cyclic input the
-      // self-pair check below still fires — the first dyadic window
-      // (2^k, 2^(k+1)] with 2^k ≥ girth contains a multiple of the
-      // girth, at most one round later than the full square). Join
-      // triples drop from Σ|r_k|·avg-fanout (quadratic in depth on a
-      // deep chain — the x32 corpus) to Σ|at-cap_k|·avg-fanout (linear):
-      // measured on the x32 chain corpus at sf0.1, the loop went
-      // 4.95 s → (see OPTIMIZATION_r16.md) with identical output.
-      val capD = 1L << (round - 1)
-      // Dev-only at-cap telemetry (graft.verbose): the compose's left-side
-      // row count per round — the number that must stay FLAT as depth
-      // grows for the at-cap claim (the full square's left side is |r|,
-      // which grows with the closure). One extra aggregate over the
-      // cached round state; silent in driver runs.
-      if (sys.props.contains("graft.verbose"))
-        println(f"[bfs] doubling round $round%2d at-cap(d=$capD%6d) rows " +
-          s"${r.filter(col("d") === capD).count()} of |r|=${r.count()}")
-      // lazyCut, not cut (optimization round 17): the stats aggregate on
-      // the next line is the round's ONLY other action, so a lazy
-      // checkpoint materialized BY the stats scan fuses the round's two
-      // barrier jobs (checkpoint, then agg over it) into one — the
-      // sigmaSweep discipline. The logical plan is truncated either way
-      // (LogicalRDD immediately), which is all the 2^rounds-analyzer
-      // argument above needs; the blocks land in the cache during the
-      // stats job exactly as the eager form's checkpoint job placed them.
-      val squared = timed(s"doubling round $round cut")(lazyCut(
-        r.filter(col("d") === capD)
+      val seed = new Relation(
+        cut(base.distinct().withColumn("d", lit(1L)), eager = false), null)
+      val r = iterate[Relation](maxRounds,
+          converged = s => s.stats._1 == 0 ||
+            (s.stats._1 == s.before._1 && s.stats._2.compareTo(s.before._2) == 0),
+          atLimit = _ => throw new IllegalArgumentException(
+            s"topoLayersDoubling did not converge in $maxRounds rounds — " +
+              s"a DAG deeper than 2^${maxRounds - 1}?"))(seed) { (s, round) =>
+        onRound(round)
+        // AT-CAP compose, not the full square (optimization round 16): the
+        // left side is only the pairs sitting AT the round's dyadic cap,
+        // d == 2^(round−1), not all of r. Exact by the canonical split:
+        // any path of length m ∈ (2^k, 2^(k+1)] passes a vertex w exactly
+        // 2^k hops in, its prefix is an exact length-2^k path — and for
+        // any pair with an exact 2^k path the cap forces r_k(u,w) = 2^k
+        // (the cap can't record more, the exact path guarantees no less).
+        // That is all the argument needs; pairs WITHOUT an exact-2^k path
+        // may sit below the cap (e.g. an edge u→v beside a longer u→v
+        // path) and are correctly not recomposed — so every pair the full
+        // square would improve is reachable from the at-cap slice, and
+        // every composed candidate is a genuine path length
+        // (path concatenation in the acyclic regime; on cyclic input the
+        // self-pair check still fires — the first dyadic window
+        // (2^k, 2^(k+1)] with 2^k ≥ girth contains a multiple of the
+        // girth, at most one round later than the full square). Join
+        // triples drop from Σ|r_k|·avg-fanout (quadratic in depth on a
+        // deep chain — the x32 corpus) to Σ|at-cap_k|·avg-fanout (linear).
+        val capD = 1L << (round - 1)
+        val before = s.stats
+        (s.r.filter(col("d") === capD)
           .select(col("src"), col("dst").as("__m"))
-          .join(r.select(col("src").as("__m"), col("dst"), col("d").as("d2"))
+          .join(s.r.select(col("src").as("__m"), col("dst"), col("d").as("d2"))
             .hint("shuffle_hash"), "__m")
           .select(col("src"), col("dst"), (col("d2") + capD).as("d"))
-          .unionByName(r)
-          .groupBy(col("src"), col("dst")).agg(max(col("d")).as("d"))))
-      val (n1, s1, cyc1) = timed(s"doubling round $round stats")(stats(squared))
-      assertAcyclic(cyc1)
-      live.foreach(_.unpersist(false))
-      live = Nil
-      // on the fixpoint round squared == r in content; using squared (the
-      // freshly materialized frame) either way keeps exactly one live frame
-      r = squared
-      if (n1 == n0 && s1.compareTo(s0) == 0) done = true
-      else { n0 = n1; s0 = s1 }
-    }
-    val srcIds = base.select(col("src").as("id")).distinct()
-    // persisted: probed by the anti-join, fed to the layer join, and
-    // counted by the guard — |srcIds ∪ dstIds| = |sources| + |dstIds|
-    // exactly (disjoint by construction), no union-distinct shuffle
-    val dstIds = base.select(col("dst").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sources = srcIds.join(dstIds, Seq("id"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    live = sources :: dstIds :: live
-    val out = sources.withColumn("layer", lit(0L))
-      .unionByName(
-        r.join(sources.select(col("id").as("src")), "src")
-          .select(col("dst").as("id"), col("d").as("layer")))
-      .groupBy(col("id")).agg(max(col("layer")).as("layer"))
-    // lazyCut: the guard's own count below is the materializing action
-    // (one readout job instead of checkpoint + count)
-    val frozen = timed("doubling layer readout")(lazyCut(out))
-    // belt-and-braces twin of the frontier form's guard (a cycle throws
-    // above, so this can only fire on a logic regression)
-    val nVerts = timed("doubling vertex census")(sources.count() + dstIds.count())
-    val nLayered = timed("doubling layer count")(frozen.count())
-    live.foreach(_.unpersist(false))
-    if (prepEdges) e.unpersist(false)
-    require(nLayered == nVerts,
-      s"topoLayersDoubling: ${nVerts - nLayered} of $nVerts edge-touching " +
-        "vertices are unreachable from any in-degree-0 source")
-    frozen
+          .unionByName(s.r)
+          .groupBy(col("src"), col("dst")).agg(max(col("d")).as("d")),
+          f => new Relation(f, before))
+      }.r
+      val srcIds = base.select(col("src").as("id")).distinct()
+      // persisted: probed by the anti-join, fed to the layer join, and
+      // counted by the guard — |srcIds ∪ dstIds| = |sources| + |dstIds|
+      // exactly (disjoint by construction), no union-distinct shuffle
+      val dstIds = base.select(col("dst").as("id")).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val sources = srcIds.join(dstIds, Seq("id"), "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val out = sources.withColumn("layer", lit(0L))
+        .unionByName(
+          r.join(sources.select(col("id").as("src")), "src")
+            .select(col("dst").as("id"), col("d").as("layer")))
+        .groupBy(col("id")).agg(max(col("layer")).as("layer"))
+      // lazy: the guard's own count below is the materializing action
+      val frozen = cut(out, eager = false)
+      // belt-and-braces twin of the frontier form's guard (a cycle throws
+      // above, so this can only fire on a logic regression)
+      val nVerts = sources.count() + dstIds.count()
+      val nLayered = frozen.count()
+      sources.unpersist(false)
+      dstIds.unpersist(false)
+      require(nLayered == nVerts,
+        s"topoLayersDoubling: ${nVerts - nLayered} of $nVerts edge-touching " +
+          "vertices are unreachable from any in-degree-0 source")
+      frozen
+    } finally if (prepEdges) e.unpersist(false)
   }
 
   /** Cycle-safe transitive closure: all (origin, node) pairs with a directed
@@ -625,57 +496,27 @@ object Traversal {
     * closure is a wrong answer, not a partial one. */
   def reachFix(edges: DataFrame, start: DataFrame, maxIter: Int = 64,
                prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame = {
-    val spark = start.sparkSession
     val e = prep(edges, prepEdges)
-    var frontier = pairs(start, dedupStart)
-    val zeroHop = frontier
-    var live = List.empty[DataFrame] // frontiers superseded since last checkpoint
-    var result: Option[DataFrame] = None
-    var iter = 1
-    var done = false
-    while (iter <= maxIter && !done) {
+    // state: (this round's new pairs, every round's new pairs); the
+    // result is their disjoint union, each round materialized by its
+    // own count probe
+    val (_, found) = iterate[(DataFrame, List[DataFrame])](maxIter,
+        converged = _._1.count() == 0,
+        atLimit = _ => throw new IllegalStateException(
+          s"reachFix did not converge within $maxIter iterations — " +
+            "the transitive closure would be silently truncated; raise maxIter"),
+        scoped = if (prepEdges) Seq(e) else Nil)(
+        (pairs(start, dedupStart), Nil)) { case ((frontier, found), _) =>
       val stepped = stepPairs(frontier, e)
       // shuffle_hash hint: the visited set only needs hash membership, not
       // order — SMJ would re-sort both multi-million-row sides every round.
-      val next = result.fold(stepped)(r =>
-          stepped.join(r.select(col("origin"), col("node")).hint("shuffle_hash"),
-            Seq("origin", "node"), "left_anti"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // count(), not isEmpty: the convergence probe doubles as a FULL cache
-      // fill, so every frontier block backing the returned union is complete
-      // and no final re-materialization pass is needed.
-      if (timed(s"iter $iter count")(next.count()) == 0) {
-        next.unpersist(false)
-        done = true
-      } else {
-        result = Some(result.map(_.unionByName(next)).getOrElse(next))
-        if (iter > 1) live = frontier :: live
-        frontier = next
-        if (iter % checkpointEvery == 0) {
-          val prev = result
-          result = timed(s"iter $iter checkpoint")(result.map(cut))
-          prev.foreach(p => if (p ne result.orNull) p.unpersist(false))
-          live.foreach(_.unpersist(false))
-          live = Nil
-        }
-        iter += 1
-      }
+      val next =
+        if (found.isEmpty) stepped
+        else stepped.join(found.reduce(_ unionByName _).hint("shuffle_hash"),
+          Seq("origin", "node"), "left_anti")
+      (next.distinct(), f => (f, f :: found))
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"reachFix did not converge within $maxIter iterations — " +
-          "the transitive closure would be silently truncated; raise maxIter")
-    // The result IS the union of fully-cached frontiers — returning it
-    // directly avoids a redundant re-materialization pass (measured: 30%
-    // of total runtime at sf0.1). The frontier blocks stay cached for the
-    // session, like any Spark cache (LRU-evictable; lineage stays valid).
-    // Only loop-scoped extras not backing the result are released.
-    val out = result.getOrElse(spark.emptyDataFrame
-      .select(lit(0L).as("origin"), lit(0L).as("node")).limit(0))
-    if (prepEdges) e.unpersist(false)
-    zeroHop.unpersist(false)
-    out
+    found.reverse.reduce(_ unionByName _)
   }
 
   /** Transitive closure by recursive doubling ("squaring"): maintains the
@@ -698,8 +539,8 @@ object Traversal {
     * reachFix: doubling materializes pairs between non-origin vertices
     * that a frontier walk never touches.
     *
-    * Semi-naive rounds: the naive square P∘P re-derives (and the eager
-    * checkpoint re-writes) every already-known pair every round. Instead
+    * Semi-naive rounds: the naive square P∘P re-derives (and the cut
+    * re-writes) every already-known pair every round. Instead
     * each round composes only the LAST round's delta against the full
     * set. That is sufficient: a pair whose shortest path is
     * m ∈ (2^k, 2^(k+1)] split at the vertex w exactly 2^k hops from the
@@ -710,8 +551,8 @@ object Traversal {
     * closure is written ONCE across the whole run (as the disjoint union
     * of cached deltas, the reachFix result shape), not once per round.
     *
-    * Convergence witness: empty delta — exact, type-agnostic, and the
-    * delta's eager checkpoint doubles as the cache fill. */
+    * Convergence witness: empty delta — exact and type-agnostic; its
+    * count is the job that materializes the delta's cut. */
   def closureDoubling(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // SOURCE PEEL (round 14): an in-degree-0 vertex cannot sit on a cycle
     // and no path passes THROUGH it (an edge into it would give it
@@ -733,20 +574,18 @@ object Traversal {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val srcE = e0.join(dstIds.select(col("dst").as("src")), Seq("src"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val ckptOut: DataFrame => DataFrame = df =>
-      org.apache.spark.sql.graft.CheckpointUtil.dropConstraints(cut(df))
     val coreE = e0.join(dstIds.select(col("dst").as("src")), Seq("src"), "left_semi")
     val cCore = doublingBody(coreE, maxIter)
     // one eager job covers the whole peeled side — direct edges plus the
     // compose — and a graph with no sources just checkpoints an empty
     // frame here (cheaper than probing emptiness with its own count job)
-    val srcPairs = timed("peel: source compose")(ckptOut(
+    val srcPairs = cut(
       srcE.select(col("src").as("origin"), col("dst").as("node"))
         .unionByName(
           srcE.join(cCore.hint("shuffle_hash"),
             srcE("dst") === cCore("origin"))
             .select(srcE("src").as("origin"), cCore("node").as("node")))
-        .distinct()))
+        .distinct())
     srcE.unpersist(false)
     dstIds.unpersist(false)
     cCore.unionByName(srcPairs)
@@ -766,50 +605,32 @@ object Traversal {
     // comment documents the same trap). A left join + explode emits the
     // edge's own endpoint and its continuations from ONE plan instead;
     // the seed's distinct dedups the per-continuation repeats.
-    // Each checkpointed delta is rebuilt constraint-free (same cached
-    // blocks): localCheckpoint's constraint rewrite can leave dangling
-    // attribute refs that kill any Join-over-Union of these frames — see
-    // [[org.apache.spark.sql.graft.CheckpointUtil]].
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.CheckpointUtil.dropConstraints(cut(df))
     val lhs = edges.select(col("src").as("o1"), col("dst").as("n1"))
     val rhs = edges.select(col("src").as("o2"), col("dst").as("n2"))
-    var delta = timed("doubling seed")(
-      ckpt(lhs.join(rhs.hint("shuffle_hash"), col("n1") === col("o2"), "left")
-        .select(col("o1").as("origin"),
-          explode(array(col("n1"), col("n2"))).as("node"))
-        .where(col("node").isNotNull)
-        .distinct()))
-    var deltas = List(delta)
-    // The closure is the union of the checkpointed deltas, rebuilt per use
-    // (each round's tree references it on both the compose side and the
-    // anti probe).
-    def full(): DataFrame = deltas.reduce(_.unionByName(_))
-    var iter = 1
-    var done = delta.isEmpty
-    while (!done) {
-      if (iter > maxIter)
-        throw new IllegalStateException(
+    val seed = cut(lhs.join(rhs.hint("shuffle_hash"), col("n1") === col("o2"), "left")
+      .select(col("o1").as("origin"), explode(array(col("n1"), col("n2"))).as("node"))
+      .where(col("node").isNotNull)
+      .distinct(), eager = false)
+    // state: (the last round's delta, every delta so far — the closure)
+    val (_, deltas) = iterate[(DataFrame, List[DataFrame])](maxIter,
+        converged = _._1.count() == 0,
+        atLimit = _ => throw new IllegalStateException(
           s"closureDoubling did not converge within $maxIter rounds " +
-            s"(path length 2^${iter - 1}) — the closure would be silently " +
-            "truncated; raise maxIter")
+            s"(path length 2^$maxIter) — the closure would be silently " +
+            "truncated; raise maxIter"))((seed, List(seed))) { case ((delta, deltas), _) =>
+      // the closure so far, rebuilt per use: the round's tree references
+      // it on both the compose side and the anti probe
+      def full(): DataFrame = deltas.reduce(_.unionByName(_))
       // anti-join then distinct: both hash on (origin, node), so the
       // distinct reuses the anti's exchange — one shuffle of the composed
-      // pairs — and the checkpointed delta's plan tops with an Aggregate,
-      // which (unlike a Join top) propagates only output-attribute
-      // constraints into the checkpoint (the union trap again).
+      // pairs
       val comp = delta.as("a")
         .join(full().as("b").hint("shuffle_hash"), col("a.node") === col("b.origin"))
         .select(col("a.origin").as("origin"), col("b.node").as("node"))
-      val next = timed(s"doubling round $iter")(
-        ckpt(comp.join(full().hint("shuffle_hash"), Seq("origin", "node"), "left_anti")
-          .distinct()))
-      done = next.isEmpty
-      if (!done) deltas = next :: deltas
-      delta = next
-      iter += 1
+      (comp.join(full().hint("shuffle_hash"), Seq("origin", "node"), "left_anti")
+        .distinct(), f => (f, f :: deltas))
     }
-    full()
+    deltas.reduce(_.unionByName(_))
   }
 
   /** Default driver union-find cutoff, sized to the JVM actually running:
@@ -843,8 +664,8 @@ object Traversal {
     * no row changed label. The probe is type-agnostic (ids may be numeric
     * or string — `least`/`min` order either) and exact — no cast, no
     * hash-collision caveat. State per round is
-    * O(vertices), eagerly localCheckpoint'ed (the jump self-join would
-    * otherwise double the logical plan per round); shuffles are two hash
+    * O(vertices), cut every round (the jump self-join would otherwise
+    * double the logical plan per round); shuffles are two hash
     * exchanges on `id` plus the jump join on `label`. Throws on `maxIter`
     * — a truncated labeling silently splits clusters.
     *
@@ -912,16 +733,21 @@ object Traversal {
       return out.toDF("id", "label")
         .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
     }
-    var labels = und.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var iter = 1
-    var done = false
-    while (!done) {
-      if (iter > maxIter)
-        throw new IllegalStateException(
+    val labels0 = cut(und.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label")), eager = false)
+    // state: (this round's labels, the previous round's)
+    iterate[(DataFrame, DataFrame)](maxIter,
+        // Type-agnostic convergence witness: the round is a fixed point
+        // iff no vertex changed label. Works for any orderable id type
+        // (numeric OR string) — no cast — and is exact, unlike a
+        // hashed-sum witness.
+        converged = { case (next, prev) =>
+          next.as("a").join(prev.as("b").hint("shuffle_hash"), col("a.id") === col("b.id"))
+            .where(col("a.label") =!= col("b.label")).count() == 0 },
+        atLimit = _ => throw new IllegalStateException(
           s"minLabel did not converge within $maxIter rounds — " +
-            "a truncated labeling would silently split components; raise maxIter")
+            "a truncated labeling would silently split components; raise maxIter"),
+        scoped = Seq(und))((labels0, labels0)) { case ((labels, _), _) =>
       // Neighbor-min via join+join, NOT a self-referential union: a union
       // whose second branch is also joined inside the first trips Union's
       // constraint rewrite (key-not-found during analysis). Coverage is
@@ -931,32 +757,11 @@ object Traversal {
       val l1 = labels.as("l")
         .join(nmin.as("n").hint("shuffle_hash"), col("l.id") === col("n.id"))
         .select(col("l.id").as("id"), least(col("l.label"), col("n.nl")).as("label"))
-      // Eager localCheckpoint EVERY round, not every N: the jump is a
-      // self-join, so an uncut logical plan DOUBLES per round — Catalyst
-      // re-analyzes the whole tree at each action, and 2^rounds plan nodes
-      // stalls the driver long before the data is the bottleneck. The
-      // checkpoint materializes the one-row-per-vertex state (cheap) and
-      // keeps every round's plan three joins deep.
-      val next = cut(l1.as("a")
+      (l1.as("a")
         .join(l1.as("b").hint("shuffle_hash"), col("a.label") === col("b.id"))
-        .select(col("a.id").as("id"), least(col("a.label"), col("b.label")).as("label")))
-      // Type-agnostic convergence witness: the round is a fixed point iff
-      // no vertex changed label. Works for any orderable id type (numeric
-      // OR string) — no cast — and is exact, unlike a hashed-sum witness.
-      // `next` is already materialized by the eager checkpoint above, so
-      // the probe joins two cached one-row-per-vertex frames; `isEmpty`
-      // plans a limit-1, so a single surviving changed row ends the scan.
-      done = timed(s"minLabel round $iter")(
-        next.as("a")
-          .join(labels.as("b").hint("shuffle_hash"), col("a.id") === col("b.id"))
-          .where(col("a.label") =!= col("b.label"))
-          .isEmpty)
-      labels.unpersist(false)
-      labels = next
-      iter += 1
-    }
-    und.unpersist(false)
-    labels
+        .select(col("a.id").as("id"), least(col("a.label"), col("b.label")).as("label")),
+        next => (next, labels))
+    }._1
   }
 
   /** Weighted single-source(-set) shortest paths — distributed
@@ -965,7 +770,7 @@ object Traversal {
     * traversals ignore). Per round: one join (edges ⋈ current distances)
     * + one min-aggregation = the relax step over EVERY edge, then a merge
     * with the previous distances; converges when no distance improves
-    * (probe join, limit-1 early exit like [[minLabel]]'s witness).
+    * (a changed-row count, like [[minLabel]]'s witness).
     * Distances are exact BIGINTs — deterministic in any engine, no float
     * min-plus caveats. Negative weights are rejected (a negative cycle
     * has no shortest path; nonnegative BF needs no cycle detection).
@@ -981,31 +786,27 @@ object Traversal {
       .persist(StorageLevel.MEMORY_AND_DISK)
     require(e.filter(col("w") < 0).isEmpty,
       "sssp requires nonnegative weights (negative cycles have no shortest path)")
-    var dist = cut(sources.select(col("id")).distinct().withColumn("dist", lit(0L)))
-    var iter = 1
-    var done = false
-    while (!done) {
-      if (iter > maxIter)
-        throw new IllegalStateException(
+    val dist0 = cut(sources.select(col("id")).distinct().withColumn("dist", lit(0L)),
+      eager = false)
+    // state: (this round's distances, the previous round's)
+    iterate[(DataFrame, DataFrame)](maxIter,
+        converged = { case (next, prev) =>
+          next.as("n").join(prev.as("o").hint("shuffle_hash"), Seq("id"), "left")
+            .where(col("o.dist").isNull || col("n.dist") < col("o.dist")).count() == 0 },
+        atLimit = _ => throw new IllegalStateException(
           s"sssp did not converge within $maxIter rounds — negative weights, " +
-            "or a longest shortest path beyond the bound; raise maxIter")
+            "or a longest shortest path beyond the bound; raise maxIter"),
+        scoped = Seq(e))((dist0, dist0)) { case ((dist, _), _) =>
       val relaxed = e.join(dist.hint("shuffle_hash"), e("src") === dist("id"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("d"))
         .groupBy("id").agg(min(col("d")).as("d"))
-      val next = cut(dist.as("a")
+      (dist.as("a")
         .join(relaxed.as("b"), Seq("id"), "full_outer")
         .select(col("id"), least(
           coalesce(col("a.dist"), lit(Long.MaxValue)),
-          coalesce(col("b.d"), lit(Long.MaxValue))).as("dist")))
-      done = next.as("n")
-        .join(dist.as("o").hint("shuffle_hash"), Seq("id"), "left")
-        .where(col("o.dist").isNull || col("n.dist") < col("o.dist"))
-        .isEmpty
-      dist = next
-      iter += 1
-    }
-    e.unpersist(false)
-    dist
+          coalesce(col("b.d"), lit(Long.MaxValue))).as("dist")),
+        next => (next, dist))
+    }._1
   }
 
   /** k-core decomposition (fixed k): the maximal subgraph in which every
@@ -1022,8 +823,8 @@ object Traversal {
     * static edge table to produce per-neighbor decrement counts (cost ∝
     * edges incident to the REMOVED delta — tiny after round 1, not the
     * whole graph), which merge into the surviving state by a left join,
-    * then an eager lineage [[cut]] of the O(V) state. The convergence
-    * witness is the delta's `isEmpty` (limit-1 early exit). A first-cut
+    * then the round's cut of the O(V) state. The convergence witness is
+    * the count of under-degree vertices left in the state. A first-cut
     * implementation that re-filtered the full edge set with two
     * anti-joins per round timed 9.0 s at sf0.1; this delta form does the
     * same 5 rounds over decrement-sized joins. Rounds are bounded by the
@@ -1048,35 +849,27 @@ object Traversal {
     val und = (if (assumeDistinct) sym else sym.distinct())
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var live = cut(und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
-    var iter = 1
-    var done = false
-    while (!done) {
-      if (iter > maxIter)
-        throw new IllegalStateException(
+    def under(live: DataFrame) = live.filter(col("deg") < k).select(col("id"))
+    iterate[DataFrame](maxIter, converged = under(_).count() == 0,
+        atLimit = _ => throw new IllegalStateException(
           s"kCore did not reach a fixpoint within $maxIter peel rounds — " +
-            "a truncated peel overstates the core; raise maxIter")
-      val newly = live.filter(col("deg") < k).select(col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (newly.isEmpty) done = true
-      else {
+            "a truncated peel overstates the core; raise maxIter"),
+        scoped = Seq(und))(
+        cut(und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), eager = false)) {
+      (live, _) =>
         // Edges FROM a peeled vertex, grouped by the surviving endpoint:
         // und is symmetric, so every undirected edge {u, v} with u peeled
         // decrements v exactly once. Edges between two peeled vertices
         // target a vertex absent from the surviving state — dropped by
         // the inner filter below, as they must be.
+        val newly = under(live)
         val dec = und.join(newly.hint("shuffle_hash"), und("src") === newly("id"))
           .groupBy(und("dst").as("id")).agg(count(lit(1)).as("__d"))
-        live = cut(live.filter(col("deg") >= k)
+        (live.filter(col("deg") >= k)
           .join(dec, Seq("id"), "left")
-          .select(col("id"),
-            (col("deg") - coalesce(col("__d"), lit(0L))).as("deg")))
-      }
-      newly.unpersist(false)
-      iter += 1
+          .select(col("id"), (col("deg") - coalesce(col("__d"), lit(0L))).as("deg")),
+          identity)
     }
-    und.unpersist(false)
-    live
   }
 
   /** Exactly-n-step reachability pairs by binary relation exponentiation:
@@ -1090,44 +883,35 @@ object Traversal {
     *
     * Each compose is distinct-deduped (semi-naive: pair sets, never walk
     * multiplicities — a dense level can't blow up into walk-count rows)
-    * and eagerly localCheckpoint'ed so the self-composed plan stays two
-    * joins deep instead of doubling per level. Same dense-graph caveat as
+    * and cut so the self-composed plan stays two joins deep instead of
+    * doubling per level. Same dense-graph caveat as
     * [[closureDoubling]]: R^k row count is bounded by V², not by E.
     *
     * Input needs (src, dst) columns; output is the distinct (src, dst)
     * pairs connected by a directed walk of length exactly n. */
   def hopPower(pairs: DataFrame, n: Int): DataFrame = {
     require(n >= 1, s"hopPower needs n >= 1, got $n")
-    // LAZY persist per compose, ONE eager cut at the end: each power is
+    // LAZY cut per compose, ONE eager cut at the end: each power is
     // referenced up to three times (both sides of its own square + the
     // accumulator compose), so it must materialize once — but an eager
-    // localCheckpoint per compose costs a dedicated job each (~1 s of
-    // fixed scheduling per round locally; measured 5.6 → 2.x s on the
-    // R⁸ gate). A lazy cache materializes inside its first consumer's
-    // job instead, and the final cut executes the whole ≤2·log₂(n)-join
-    // chain as one job over cached intermediates. Loop-scoped cache
-    // blocks are released once the final checkpoint holds the result.
-    var live = List.empty[DataFrame]
-    def mat(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      live ::= p
-      p
-    }
+    // cut per compose costs a dedicated job each (~1 s of fixed
+    // scheduling per round locally; measured 5.6 → 2.x s on the R⁸
+    // gate). A lazy cut materializes inside its first consumer's job
+    // instead, and the final cut executes the whole ≤2·log₂(n)-join
+    // chain as one job over the materialized intermediates.
     def compose(a: DataFrame, b: DataFrame): DataFrame =
-      mat(a.select(col("src"), col("dst").as("__mid"))
+      cut(a.select(col("src"), col("dst").as("__mid"))
         .join(b.select(col("src").as("__mid"), col("dst")).hint("shuffle_hash"), "__mid")
-        .select(col("src"), col("dst")).distinct())
-    var pow = mat(pairs.select(col("src"), col("dst")).distinct())
-    var acc: DataFrame = null
-    var k = n
-    while (k > 0) {
-      if ((k & 1) == 1) acc = if (acc == null) pow else compose(acc, pow)
-      k >>= 1
-      if (k > 0) pow = compose(pow, pow)
+        .select(col("src"), col("dst")).distinct(), eager = false)
+    // square-and-multiply over n's bits, low bit first
+    val bits = Iterator.iterate(n)(_ >> 1).takeWhile(_ > 0).toList
+    val (acc, _) = bits.foldLeft((Option.empty[DataFrame],
+        cut(pairs.select(col("src"), col("dst")).distinct(), eager = false))) {
+      case ((acc, pow), k) =>
+        val acc2 = if ((k & 1) == 1) Some(acc.fold(pow)(compose(_, pow))) else acc
+        (acc2, if (k > 1) compose(pow, pow) else pow)
     }
-    val out = cut(acc)
-    live.foreach(_.unpersist(false))
-    out
+    cut(acc.get)
   }
 
   /** All vertices of the edge set, one `id` column, either endpoint role. */
@@ -1152,7 +936,7 @@ object Traversal {
     * path lies entirely inside a cycle union, so labels computed on the
     * core equal the whole-graph labels exactly.
     *
-    * The core then takes one of two paths (the memoCutoff discipline):
+    * The core then takes one of two paths:
     * at or under the heap-derived [[defaultSmallCutoff]] edges it
     * collects to the driver and runs iterative Tarjan — one job instead
     * of the seed + log-diameter compose rounds + intersect + min-agg
@@ -1172,24 +956,18 @@ object Traversal {
   def scc(edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
     val spark = edges.sparkSession
-    val e0 = cut(edges.select(col("src"), col("dst")).distinct())
+    val e0 = cut(edges.select(col("src"), col("dst")).distinct(), eager = false)
     val allVerts = vertices(e0)
-    var core = e0
-    var n = core.count()
-    var rounds = 0
-    var changed = n > 0
-    while (changed && rounds < 3) {
-      rounds += 1
-      val next = timed(s"scc trim round $rounds") {
-        cut(core
-          .join(core.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
-          .join(core.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")))
-      }
-      val m = next.count()
-      if (m == n || m == 0) { core = next; n = m; changed = false }
-      else { core = next; n = m }
+    // at most 3 trim rounds; stop early once a round peels nothing
+    val trimmed = iterate[Counted](3, converged = t => t.n == t.prev || t.n == 0)(
+        new Counted(e0, -1L)) { (t, _) =>
+      (t.df
+        .join(t.df.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
+        .join(t.df.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
+        .select(col("src"), col("dst")), f => new Counted(f, t.n))
     }
+    val core = trimmed.df
+    val n = trimmed.n
     val idType = e0.schema("src").dataType
     val labelSchema = StructType(Seq(
       StructField("id", idType), StructField("component", idType)))
@@ -1198,13 +976,11 @@ object Traversal {
         spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), labelSchema)
       } else if (n <= sccCutoff.getOrElse(defaultSmallCutoff)) {
-        timed("scc driver tarjan") {
-          val rows = driverTarjan(
-            core.collect().map(r => (r.get(0), r.get(1))).toSeq)
-            .map { case (id, comp) => org.apache.spark.sql.Row(id, comp) }
-          import scala.jdk.CollectionConverters._
-          spark.createDataFrame(rows.asJava, labelSchema)
-        }
+        val rows = driverTarjan(
+          core.collect().map(r => (r.get(0), r.get(1))).toSeq)
+          .map { case (id, comp) => org.apache.spark.sql.Row(id, comp) }
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.asJava, labelSchema)
       } else {
         val closure = closureDoubling(core)
         val co = closure.intersect(
@@ -1218,7 +994,7 @@ object Traversal {
         coalesce(col("component"), col("id")).as("component"))
   }
 
-  /** Test hook for [[scc]]'s small-core collect (mirrors [[memoCutoff]]):
+  /** Test hook for [[scc]]'s small-core collect:
     * Some(0) forces the distributed closure branch on gate-sized cores. */
   @volatile private[graft] var sccCutoff: Option[Long] = None
 
@@ -1298,41 +1074,33 @@ object Traversal {
     * triples move — O(Σ common-neighbor pairs) join output, the same
     * wedge bound as triangle counting), drop edges below k−2, repeat to
     * fixpoint. Rounds are bounded by the peel depth (shallow in
-    * practice, like [[kCore]]); each round checkpoints the shrinking
-    * edge set. Output: (a, b, support) for surviving edges, support
+    * practice, like [[kCore]]); each round cuts the shrinking edge set.
+    * Output: (a, b, support) for surviving edges, support
     * measured in the final subgraph. */
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val empty = edges.select(col("src").as("a"), col("dst").as("b"))
       .limit(0).withColumn("support", lit(0L))
-    var e = cut(edges.select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    var n = e.count()
-    var out: DataFrame = empty
-    var iter = 0
-    var done = n == 0
-    while (!done) {
-      iter += 1
-      if (iter > maxIter)
-        throw new IllegalStateException(
+    // each round's state is the surviving edges with their supports;
+    // unchanged size ⇒ nothing peeled ⇒ the supports are final
+    val last = iterate[Counted](maxIter, converged = t => t.n == t.prev || t.n == 0,
+        atLimit = _ => throw new IllegalStateException(
           s"kTruss did not converge within $maxIter rounds — a silently " +
-            "truncated peel is a wrong answer; raise maxIter")
+            "truncated peel is a wrong answer; raise maxIter"))(
+        new Counted(cut(edges.select(
+            least(col("src"), col("dst")).as("a"),
+            greatest(col("src"), col("dst")).as("b"))
+          .filter(col("a") =!= col("b")).distinct(), eager = false), -1L)) { (t, _) =>
+      val e = t.df.select(col("a"), col("b"))
       val und = e.select(col("a").as("u"), col("b").as("v"))
         .unionByName(e.select(col("b").as("u"), col("a").as("v")))
-      val sup = e.join(und.select(col("u").as("a"), col("v").as("w")), Seq("a"))
+      (e.join(und.select(col("u").as("a"), col("v").as("w")), Seq("a"))
         .join(und.select(col("u").as("b"), col("v").as("w")), Seq("b", "w"))
         .filter(col("w") =!= col("a") && col("w") =!= col("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
-        .filter(col("support") >= k - 2)
-      val next = cut(sup)
-      val m = next.count()
-      if (m == n) { out = next; done = true } // unchanged ⇒ supports final
-      else if (m == 0) { out = empty; done = true }
-      else { e = next.select(col("a"), col("b")); n = m }
+        .filter(col("support") >= k - 2), f => new Counted(f, t.n))
     }
-    out
+    if (last.n == 0) empty else last.df
   }
 
   /** Maximal independent set by Luby's algorithm with DETERMINISTIC
@@ -1356,17 +1124,16 @@ object Traversal {
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var undecided = cut(vertices(edges).filter(col("id").isNotNull))
-    var decided: Option[DataFrame] = None
-    var round = 0
-    var done = undecided.isEmpty
-    while (!done) {
-      round += 1
-      if (round > maxIter)
-        throw new IllegalStateException(
+    // state: one (id, in_mis) row per vertex, in_mis NULL while undecided
+    val undecided = (st: DataFrame) => st.filter(col("in_mis").isNull)
+    iterate[DataFrame](maxIter, converged = undecided(_).count() == 0,
+        atLimit = _ => throw new IllegalStateException(
           s"Luby MIS did not converge within $maxIter rounds — astronomically " +
-            "unlikely under hashed priorities; raise maxIter")
-      val pr = undecided.select(col("id"),
+            "unlikely under hashed priorities; raise maxIter"),
+        scoped = Seq(und))(
+        cut(vertices(edges).filter(col("id").isNotNull)
+          .withColumn("in_mis", lit(null).cast("boolean")), eager = false)) { (st, round) =>
+      val pr = undecided(st).select(col("id"),
         md5Long(concat(col("id").cast("string"), lit(s"#mis#$round"))).as("p"))
       // smallest undecided-neighbor priority per vertex (strict total
       // order via the (p, id) pair; md5 ties break on id)
@@ -1382,14 +1149,71 @@ object Traversal {
       val losers = und.join(winners.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id")).distinct()
         .join(pr.select(col("id")), Seq("id"), "left_semi")
-      val settled = cut(winners.withColumn("in_mis", lit(true))
-        .unionByName(losers.withColumn("in_mis", lit(false))))
-      decided = Some(decided.fold(settled)(d => cut(d.unionByName(settled))))
-      undecided = cut(undecided.join(settled.select(col("id")), Seq("id"), "left_anti"))
-      done = undecided.isEmpty
+      val settled = winners.withColumn("__s", lit(true))
+        .unionByName(losers.withColumn("__s", lit(false)))
+      (st.join(settled, Seq("id"), "left")
+        .select(col("id"), coalesce(col("in_mis"), col("__s")).as("in_mis")), identity)
     }
-    und.unpersist(false)
-    decided.getOrElse(undecided.withColumn("in_mis", lit(true)))
+  }
+
+  /** The all-vertex min-hop sweep behind every exact distance read-out
+    * (ANF, harmonic centrality, [[eccentricity]], closeness): an O(pairs)
+    * all-vertex [[khop]] reduced to its sufficient statistic,
+    * per-(origin, hop) reached-vertex counts — at most V·maxHop tiny rows.
+    * Returns (vertices, per-origin hop histogram) — vertex schema
+    * preserved so string-keyed graphs work. */
+  private def hopSweep(edges: DataFrame, maxHop: Int): (DataFrame, DataFrame) = {
+    val verts = vertices(edges)
+    val hist = khop(edges, verts, maxHop, dedupStart = false)
+      .filter(col("origin") =!= col("node"))
+      .groupBy(col("origin"), col("hop").cast("long").as("hop"))
+      .agg(count(lit(1)).as("n"))
+    (verts, hist)
+  }
+
+  /** Densest-subgraph parallel peeling (Bahmani–Kumar–Vassilvitskii,
+    * ε = 0 form): each round removes EVERY vertex whose degree is at most
+    * the current average (deg_v ≤ 2·|E|/|V|, spelled as the exact integer
+    * compare deg_v·n ≤ m2 over the symmetrized ordered-edge count m2 and
+    * non-isolated vertex count n) — the O(log V)-round MapReduce answer
+    * to Charikar's inherently sequential one-vertex-at-a-time peel.
+    * Returns the round trace (round, n_vertices, m2, density_micro =
+    * ⌊10⁶·m2 / 2n⌋) for rounds with surviving vertices; the densest
+    * round's subgraph is the 2-approximation, and emitting the whole
+    * trace keeps the gate hashable and the peel auditable.
+    *
+    * Plan: per round one map-side-combinable degree aggregate and two
+    * anti-joins against the (small) peel set, plus one aggregate job for
+    * the round's (m2, n) — the probe that materializes its cut. V_r is
+    * the NON-ISOLATED form (endpoints of surviving edges) — isolated
+    * vertices only dilute density and their removal is what round r+1
+    * does anyway; the oracle replays the identical convention. */
+  def densestSubgraphTrace(edges: DataFrame, rounds: Int): DataFrame = {
+    require(rounds >= 1, s"densestSubgraphTrace needs rounds >= 1, got $rounds")
+    val spark = edges.sparkSession
+    // one state per trace row: the surviving ordered edges, their
+    // (m2, n), and the states before it
+    final class Peel(val und: DataFrame, val before: List[Peel]) {
+      lazy val (m2, n) = {
+        val row = und.agg(count(lit(1)), countDistinct(col("src"))).head()
+        (row.getLong(0), row.getLong(1))
+      }
+    }
+    val last = iterate[Peel](rounds - 1, converged = _.n == 0)(
+        new Peel(cut(edges.select(col("src"), col("dst"))
+          .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+          .filter(col("src") =!= col("dst")).distinct(), eager = false), Nil)) { (p, _) =>
+      val peel = p.und.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") * p.n <= p.m2).select(col("v"))
+      (p.und
+        .join(peel.select(col("v").as("src")), Seq("src"), "left_anti")
+        .join(peel.select(col("v").as("dst")), Seq("dst"), "left_anti")
+        .select(col("src"), col("dst")), f => new Peel(f, p :: p.before))
+    }
+    import spark.implicits._
+    (last :: last.before).reverse.takeWhile(_.n > 0).zipWithIndex
+      .map { case (p, i) => (i + 1L, p.n, p.m2, p.m2 * 1000000L / (2L * p.n)) }
+      .toDF("round", "n_vertices", "m2", "density_micro")
   }
 
   /** Exact neighborhood function N(h): for h = 0..maxHop, how many
@@ -1406,201 +1230,6 @@ object Traversal {
     * closure — exact but O(pairs); [[hyperBall]] is the sketch form that
     * scales past it. `maxHop` must be ≥ the graph diameter for the full
     * curve (beyond it the counts are simply complete). */
-  /** The ONE memoized all-vertex min-hop sweep behind every exact
-    * distance read-out (session-lifetime, the GraphStore pattern): the
-    * sweep is an O(pairs) all-vertex [[khop]], but its sufficient
-    * statistic — per-(origin, hop) reached-vertex counts — is at most
-    * V·maxHop tiny rows, so ANF ([[neighborhoodFunction]]), harmonic
-    * centrality, [[eccentricity]], and the effective-diameter gate all
-    * share ONE closure instead of each paying seconds of sweep. Keyed
-    * on the canonicalized logical plan of the edge input (structural
-    * equality == semantic plan identity) + maxHop; assumes the
-    * underlying source is immutable for the JVM lifetime, which holds
-    * for the parquet-backed gate inputs and every spec's literal
-    * frames. Returns (vertices, per-origin hop histogram) — vertex
-    * schema preserved so string-keyed graphs work. */
-  private def hopSweep(edges: DataFrame, maxHop: Int): (DataFrame, DataFrame) = {
-    val key = (edges.queryExecution.analyzed.canonicalized, maxHop)
-    val spark = edges.sparkSession
-    val cached = sweepMemo.getOrElseUpdate(key) {
-      val verts = vertices(edges)
-      val hist = khop(edges, verts, maxHop, dedupStart = false)
-        .filter(col("origin") =!= col("node"))
-        .groupBy(col("origin"), col("hop").cast("long").as("hop"))
-        .agg(count(lit(1)).as("n"))
-      (memoize(verts), memoize(hist))
-    }
-    (rehydrate(spark, cached._1), rehydrate(spark, cached._2))
-  }
-
-  private val sweepMemo = new MemoCache[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    (MemoVal, MemoVal)](8, { case (a, b) => unpersistMemo(a); unpersistMemo(b) })
-
-  /** Size-guarded session-memo payload: at or under the heap-derived
-    * [[defaultSmallCutoff]] (the minLabel discipline) the frame collects to
-    * driver rows — cheap replays, no cluster state held. Above it, the
-    * frame is persisted + materialized and handed back DISTRIBUTED: the
-    * driver never holds an unbounded O(V·maxHop) copy, which is what a
-    * 100× vertex count would otherwise OOM on. `memoCutoff` is a test
-    * hook (TraversalSpec forces 0 to drive the distributed branch on
-    * gate-sized graphs). */
-  private type MemoVal =
-    Either[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row]),
-      DataFrame]
-  @volatile private[graft] var memoCutoff: Option[Long] = None
-  private def memoize(df: DataFrame): MemoVal = {
-    val cutoff = memoCutoff.getOrElse(defaultSmallCutoff)
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = p.count()
-    if (n <= cutoff) {
-      val out = (p.schema, p.collect().toSeq)
-      p.unpersist(false)
-      Left(out)
-    } else Right(p)
-  }
-  private def rehydrate(spark: SparkSession, v: MemoVal): DataFrame = v match {
-    case Left((schema, rows)) =>
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, schema)
-    case Right(df) => df
-  }
-  private def unpersistMemo(v: MemoVal): Unit = v match {
-    case Right(df) => df.unpersist(false)
-    case Left(_) => ()
-  }
-
-  /** Bounded session memo: LRU over the last `maxEntries` distinct keys,
-    * evicting oldest-used with an unpersist hook. Unbounded memos were
-    * ADVICE r13's leak — a long session touching many distinct
-    * over-cutoff graphs (each memo entry = a persisted frame + its full
-    * canonicalized logical plan as the key) would accumulate cached
-    * blocks and plan trees for the JVM lifetime. 8 entries comfortably
-    * covers the gate board's sharing pattern (each memo serves 2-4 gates
-    * over 1-2 distinct graphs) while capping session growth at a handful
-    * of persisted frames per memo.
-    *
-    * Single-flight is per KEY, not per cache: map bookkeeping is O(1)
-    * under the cache lock, but the value computation (a multi-second
-    * distributed job) runs OUTSIDE it in a per-key holder — two callers
-    * memoizing DIFFERENT graphs proceed concurrently, while two racing
-    * the SAME key still share one computation. A failed computation is
-    * not cached; the next caller retries. */
-  private[graft] final class MemoCache[K, V](maxEntries: Int, onEvict: V => Unit) {
-    private final class Holder(compute: () => V) {
-      private val done = new java.util.concurrent.atomic.AtomicReference[Option[V]](None)
-      private val evictReq = new java.util.concurrent.atomic.AtomicBoolean(false)
-      def value: V = done.get() match {
-        case Some(v) => v
-        case None => this.synchronized {
-          done.get() match {
-            case Some(v) => v
-            case None =>
-              val v = compute()
-              done.set(Some(v))
-              // Dekker handshake with evict(): each side sets its flag
-              // then reads the other's; whoever wins getAndSet(false)
-              // performs the at-most-once release.
-              if (evictReq.get() && evictReq.getAndSet(false)) onEvict(v)
-              v
-          }
-        }
-      }
-      /** Non-blocking: if the value is still computing, the computing
-        * thread releases it on completion (the entry already left the
-        * LRU, so nobody else will see it). */
-      def evict(): Unit = {
-        evictReq.set(true)
-        done.get() match {
-          case Some(v) => if (evictReq.getAndSet(false)) onEvict(v)
-          case None => ()
-        }
-      }
-    }
-    private val m = new java.util.LinkedHashMap[K, Holder](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, Holder]): Boolean =
-        if (this.size() > maxEntries) { e.getValue.evict(); true } else false
-    }
-    def getOrElseUpdate(k: K)(v: => V): V = {
-      val h = m.synchronized {
-        val got = m.get(k)
-        if (got != null) got
-        else { val nh = new Holder(() => v); m.put(k, nh); nh }
-      }
-      h.value
-    }
-    private[graft] def size: Int = m.synchronized(m.size())
-  }
-
-  /** Densest-subgraph parallel peeling (Bahmani–Kumar–Vassilvitskii,
-    * ε = 0 form): each round removes EVERY vertex whose degree is at most
-    * the current average (deg_v ≤ 2·|E|/|V|, spelled as the exact integer
-    * compare deg_v·n ≤ m2 over the symmetrized ordered-edge count m2 and
-    * non-isolated vertex count n) — the O(log V)-round MapReduce answer
-    * to Charikar's inherently sequential one-vertex-at-a-time peel.
-    * Returns the round trace (round, n_vertices, m2, density_micro =
-    * ⌊10⁶·m2 / 2n⌋) for rounds with surviving vertices; the densest
-    * round's subgraph is the 2-approximation, and emitting the whole
-    * trace keeps the gate hashable and the peel auditable.
-    *
-    * Plan: per round one map-side-combinable degree aggregate and two
-    * anti-joins against the (small) peel set; per-round vertex/edge
-    * counts are the same driver-side reductions every peeling loop
-    * ([[kCore]]) already pays. V_r is the NON-ISOLATED form (endpoints
-    * of surviving edges) — isolated vertices only dilute density and
-    * their removal is what round r+1 does anyway; the oracle replays the
-    * identical convention. */
-  def densestSubgraphTrace(edges: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"densestSubgraphTrace needs rounds >= 1, got $rounds")
-    val spark = edges.sparkSession
-    var und = cut(edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct())
-    val trace = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)]()
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val m2 = und.count()
-      val n = und.select(col("src")).distinct().count()
-      if (n == 0) done = true
-      else {
-        trace += ((r.toLong, n, m2, m2 * 1000000L / (2L * n)))
-        val peel = und.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") * n <= m2).select(col("v"))
-        und = cut(und
-          .join(peel.select(col("v").as("src")), Seq("src"), "left_anti")
-          .join(peel.select(col("v").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")))
-        r += 1
-      }
-    }
-    import spark.implicits._
-    trace.toSeq.toDF("round", "n_vertices", "m2", "density_micro")
-  }
-
-  /** Session-memoized [[labelPropagation]] (the [[hopSweep]] pattern):
-    * the fixed-round partition is a pure function of (edge set, rounds),
-    * and two gates read it — x18 emits it, x27 scores its modularity —
-    * so the O(V) label rows are cached per canonicalized edge plan
-    * instead of re-running the 4 join+window rounds per gate. GATE-SCALE
-    * helper: a 100 TB deployment calls [[labelPropagation]] directly and
-    * keeps the result distributed; this one collects V rows to the
-    * driver, which is the memo's own size bound. */
-  def labelPropagationMemo(edges: DataFrame, rounds: Int = 4): DataFrame = {
-    val key = (edges.queryExecution.analyzed.canonicalized, rounds)
-    val spark = edges.sparkSession
-    val cached = lpaMemo.getOrElseUpdate(key) {
-      memoize(labelPropagation(edges, rounds))
-    }
-    rehydrate(spark, cached)
-  }
-
-  private val lpaMemo = new MemoCache[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), MemoVal](
-    8, unpersistMemo)
-  /** Test hook: the LRU bound is the observable (TraversalSpec). */
-  private[graft] def lpaMemoSize: Int = lpaMemo.size
-
   def neighborhoodFunction(edges: DataFrame, maxHop: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (verts, hist) = hopSweep(edges, maxHop)
@@ -1625,8 +1254,6 @@ object Traversal {
     * Boldi & Vigna 2013). Vertices reaching nothing score 0. */
   def harmonicCentrality(edges: DataFrame, maxHop: Int): DataFrame = {
     require(maxHop >= 1, s"harmonicCentrality needs maxHop >= 1, got $maxHop")
-    // Derived from the shared [[hopSweep]] memo: x11, x14, x21, x21b's
-    // exact twin, and x25 all pay for ONE O(pairs) closure per edge set.
     val (verts, hist) = hopSweep(edges, maxHop)
     val sums = hist
       .groupBy(col("origin").as("id"))
@@ -1657,8 +1284,8 @@ object Traversal {
     * reachable-fraction-weighted reciprocal mean distance, so vertices
     * in small islands don't outrank the giant component's center the
     * way raw 1/S̄ would. Integer numerator/denominator then ONE floored
-    * division: order-free and engine-exact. Derived free from the same
-    * memoized [[hopSweep]] the x11/x14/x21/x25 family shares; isolated
+    * division: order-free and engine-exact. Derived from the same
+    * [[hopSweep]] the x11/x14/x21/x25 family reads; isolated
     * vertices score 0. The 100 TB path reads the identical statistic
     * (reach + distance sum) from [[hyperBallCentrality]]'s per-hop ball
     * deltas with O(V) state. */
@@ -1740,34 +1367,35 @@ object Traversal {
     * exact form bit-for-bit (the x21b gate's in-row verdict). */
   def hyperBallCentrality(edges: DataFrame, maxHop: Int, lgK: Int = 12): DataFrame = {
     require(maxHop >= 1, s"hyperBallCentrality needs maxHop >= 1, got $maxHop")
-    val sketchOf = (c: org.apache.spark.sql.Column) =>
-      hll_sketch_agg(c.cast("string"), lit(lgK))
-    // lazyCut, not cut (optimization round 17): the loop is FIXED-round
-    // (no convergence probe reads per-round state), so every round's ball
-    // and accumulator materialize lazily inside the caller's ONE action
-    // instead of 3 eager checkpoint jobs per hop — measured 15+ jobs → 1
-    // on the x21b gate with identical output (each frame still
-    // materializes exactly once; plans stay shallow either way).
-    var ball = lazyCut(vertices(edges).groupBy("id").agg(sketchOf(col("id")).as("ball")))
-    var prev = ball.select(col("id"), hll_sketch_estimate(col("ball")).as("est"))
-    var acc = ball.select(col("id"), lit(0L).as("h_micro"))
-    for (h <- 1 to maxHop) {
-      ball = lazyCut(edges
-        .join(ball.withColumnRenamed("id", "__nid"), col("dst") === col("__nid"))
+    val est = balls(edges, maxHop, lgK)
+      .map(_.select(col("id"), hll_sketch_estimate(col("ball")).as("est")))
+    est.zip(est.tail).zipWithIndex
+      .foldLeft(est.head.select(col("id"), lit(0L).as("h_micro"))) {
+        case (acc, ((prev, cur), i)) =>
+          // greatest(0, Δ): register-max unions are monotone, but guard the
+          // estimator against ever flooring a −ε to −1
+          acc.join(cur.withColumnRenamed("est", "__cur"), Seq("id"))
+            .join(prev.withColumnRenamed("est", "__prev"), Seq("id"))
+            .select(col("id"), (col("h_micro") +
+              floor(greatest(col("__cur") - col("__prev"), lit(0.0)) * 1000000L / (i + 1))
+                .cast("long")).as("h_micro"))
+      }
+      .select(col("id"), col("h_micro").as("harmonic_est_micro"))
+  }
+
+  /** Per-vertex HLL balls B(0), …, B(maxHop): a fixed-round loop (no
+    * probe), so every ball materializes lazily inside the caller's one
+    * action — the sketch state [[hyperBall]] and [[hyperBallCentrality]]
+    * read. */
+  private def balls(edges: DataFrame, maxHop: Int, lgK: Int): List[DataFrame] = {
+    val b0 = cut(vertices(edges).groupBy("id")
+      .agg(hll_sketch_agg(col("id").cast("string"), lit(lgK)).as("ball")), eager = false)
+    iterate[List[DataFrame]](maxHop)(List(b0)) { (bs, _) =>
+      (edges.join(bs.head.withColumnRenamed("id", "__nid"), col("dst") === col("__nid"))
         .select(col("src").as("id"), col("ball"))
-        .unionByName(ball.select(col("id"), col("ball")))
-        .groupBy("id").agg(hll_union_agg(col("ball")).as("ball")))
-      val cur = ball.select(col("id"), hll_sketch_estimate(col("ball")).as("est"))
-      // greatest(0, Δ): register-max unions are monotone, but guard the
-      // estimator against ever flooring a −ε to −1
-      acc = lazyCut(acc.join(cur.withColumnRenamed("est", "__cur"), Seq("id"))
-        .join(prev.withColumnRenamed("est", "__prev"), Seq("id"))
-        .select(col("id"), (col("h_micro") +
-          floor(greatest(col("__cur") - col("__prev"), lit(0.0)) * 1000000L / h)
-            .cast("long")).as("h_micro")))
-      prev = cur
-    }
-    acc.select(col("id"), col("h_micro").as("harmonic_est_micro"))
+        .unionByName(bs.head.select(col("id"), col("ball")))
+        .groupBy("id").agg(hll_union_agg(col("ball")).as("ball")), b => b :: bs)
+    }.reverse
   }
 
   /** HyperBall (Boldi & Vigna): the approximate neighborhood function by
@@ -1781,25 +1409,10 @@ object Traversal {
     * [[neighborhoodFunction]]'s exact `cum_pairs`. */
   def hyperBall(edges: DataFrame, maxHop: Int, lgK: Int = 12): DataFrame = {
     require(maxHop >= 0, s"hyperBall needs maxHop >= 0, got $maxHop")
-    val sketchOf = (c: org.apache.spark.sql.Column) =>
-      hll_sketch_agg(c.cast("string"), lit(lgK))
-    // lazyCut (optimization round 17) — fixed-round loop, no per-round
-    // probe: maxHop+1 eager checkpoint jobs collapse into the caller's
-    // one action; see [[hyperBallCentrality]].
-    var ball = lazyCut(vertices(edges).groupBy("id").agg(sketchOf(col("id")).as("ball")))
-    def estimate(h: Int, b: DataFrame): DataFrame =
+    balls(edges, maxHop, lgK).zipWithIndex.map { case (b, h) =>
       b.agg(floor(sum(hll_sketch_estimate(col("ball")))).cast("long").as("est_pairs"))
         .select(lit(h.toLong).as("hop"), col("est_pairs"))
-    var out = estimate(0, ball)
-    for (h <- 1 to maxHop) {
-      val fromNeighbors = edges
-        .join(ball.withColumnRenamed("id", "__nid"), col("dst") === col("__nid"))
-        .select(col("src").as("id"), col("ball"))
-      ball = lazyCut(fromNeighbors.unionByName(ball.select(col("id"), col("ball")))
-        .groupBy("id").agg(hll_union_agg(col("ball")).as("ball")))
-      out = out.unionByName(estimate(h, ball))
-    }
-    out
+    }.reduce(_ unionByName _)
   }
 
   /** Stress centrality (Shimbel 1953) — the integer member of the
@@ -1832,69 +1445,6 @@ object Traversal {
     * transposed (undirected symmetry). */
   def stressCentrality(edges: DataFrame, maxHop: Int): DataFrame = {
     require(maxHop >= 1, s"stressCentrality needs maxHop >= 1, got $maxHop")
-    // Session-lifetime memo, the harmonicMemo pattern: V tiny rows from
-    // an O(pairs) sweep, shared by x22 and the x22b sampled twin's
-    // in-row exact column. Keyed on canonicalized plan + maxHop;
-    // assumes immutable sources.
-    val key = (edges.queryExecution.analyzed.canonicalized, maxHop)
-    val spark = edges.sparkSession
-    val cached = stressMemo.getOrElseUpdate(key) {
-      memoize(stressCentralityUncached(edges, maxHop))
-    }
-    rehydrate(spark, cached)
-  }
-
-  private val stressMemo = new MemoCache[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int), MemoVal](
-    8, unpersistMemo)
-
-  /** One BFS-with-counts level: the unvisited (s, dst) expansion of `f`,
-    * σ summed over the distance-(d−1) predecessors (all of which sit in
-    * `f` — the BFS invariant), anti-joined against `seen`. */
-  private def sigmaLevel(f: DataFrame, e: DataFrame, seen: DataFrame,
-                         d: Long): DataFrame =
-    f.join(e, f("v") === e("src"))
-      .groupBy(f("s"), e("dst"))
-      .agg(sum(col("sigma")).as("sigma"))
-      .select(col("s"), col("dst").as("v"), lit(d).as("d"), col("sigma"))
-      .join(seen.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
-
-  /** The σ sweep shared by the exact and sampled stress forms: TWO levels
-    * per probe job (the bfsDepth widening, optimization round 17) — level
-    * d is a LAZY cut that materializes inside level d+1's eager cut, so
-    * one job answers "done?" for both and per-sweep job count drops from
-    * maxHop to ⌈maxHop/2⌉ (+1 seed). Level d+1 anti-joins against
-    * state ∪ level_d (its `state` is one level stale otherwise), and
-    * level_{d+1} ⊆ neighbors(level_d), so an empty d+1 with nonempty d
-    * means d was the final level. */
-  private def sigmaSweep(seeds: DataFrame, e: DataFrame, maxHop: Int): DataFrame = {
-    var state = cut(seeds.select(col("id").as("s"), col("id").as("v"),
-      lit(0L).as("d"), lit(1L).as("sigma")))
-    var frontier = state
-    var hop = 1
-    var done = frontier.isEmpty
-    while (!done && hop <= maxHop) {
-      if (hop == maxHop) { // odd tail: one last single level
-        val f1 = cut(sigmaLevel(frontier, e, state, hop))
-        if (!f1.isEmpty) state = state.unionByName(f1)
-        done = true
-      } else {
-        val f1 = lazyCut(sigmaLevel(frontier, e, state, hop))
-        val f2 = cut(sigmaLevel(f1, e, state.unionByName(f1), hop + 1L))
-        if (f2.isEmpty) {
-          if (!f1.isEmpty) state = state.unionByName(f1)
-          done = true
-        } else {
-          state = state.unionByName(f1).unionByName(f2)
-          frontier = f2
-          hop += 2
-        }
-      }
-    }
-    state
-  }
-
-  private def stressCentralityUncached(edges: DataFrame, maxHop: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = vertices(edges)
@@ -1912,11 +1462,37 @@ object Traversal {
       .filter(col("d1") + col("d2") === col("dt"))
       .groupBy(col("v").as("id"))
       .agg(sum(col("sig1") * col("sig2")).as("stress"))
-    val out = verts.join(sums, Seq("id"), "left")
-      .select(col("id"), coalesce(col("stress"), lit(0L)).as("stress"))
-    val collected = cut(out)
+    val out = cut(verts.join(sums, Seq("id"), "left")
+      .select(col("id"), coalesce(col("stress"), lit(0L)).as("stress")))
     e.unpersist(false)
-    collected
+    out
+  }
+
+  /** One BFS-with-counts level: the unvisited (s, dst) expansion of `f`,
+    * σ summed over the distance-(d−1) predecessors (all of which sit in
+    * `f` — the BFS invariant), anti-joined against `seen`. */
+  private def sigmaLevel(f: DataFrame, e: DataFrame, seen: DataFrame,
+                         d: Long): DataFrame =
+    f.join(e, f("v") === e("src"))
+      .groupBy(f("s"), e("dst"))
+      .agg(sum(col("sigma")).as("sigma"))
+      .select(col("s"), col("dst").as("v"), lit(d).as("d"), col("sigma"))
+      .join(seen.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
+
+  /** The σ sweep shared by the exact and sampled stress forms: a level
+    * per round, probed every second level (`widen`), bounded by `maxHop`.
+    * Each level anti-joins against every level so far, and
+    * level_{d+1} ⊆ neighbors(level_d), so an empty level ends the sweep. */
+  private def sigmaSweep(seeds: DataFrame, e: DataFrame, maxHop: Int): DataFrame = {
+    val seed = cut(seeds.select(col("id").as("s"), col("id").as("v"),
+      lit(0L).as("d"), lit(1L).as("sigma")), eager = false)
+    // state: (this level, every level so far)
+    val (_, levels) = iterate[(DataFrame, List[DataFrame])](maxHop,
+        converged = _._1.count() == 0, widen = true)((seed, List(seed))) {
+      case ((frontier, levels), hop) =>
+        (sigmaLevel(frontier, e, levels.reduce(_ unionByName _), hop), l => (l, l :: levels))
+    }
+    levels.reverse.reduce(_ unionByName _)
   }
 
   /** Sampled-source stress centrality — [[stressCentrality]]'s 100 TB
@@ -1941,26 +1517,6 @@ object Traversal {
                               sampleMod: Int): DataFrame = {
     require(maxHop >= 1, s"stressCentralitySampled needs maxHop >= 1, got $maxHop")
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    // Session memo (optimization round 17), the stressMemo discipline: the
-    // sampled sweep is as much a pure function of (edge set, maxHop,
-    // sampleMod) as the exact one — the deterministic hash sample is a
-    // property of the ids — and the x22b gate re-executes it twice per
-    // bench pass while its exact column already rides the memo. Same V-row
-    // output bound, same LRU cache class.
-    val key = (edges.queryExecution.analyzed.canonicalized, maxHop, sampleMod)
-    val spark = edges.sparkSession
-    val cached = sampledStressMemo.getOrElseUpdate(key) {
-      memoize(stressCentralitySampledUncached(edges, maxHop, sampleMod))
-    }
-    rehydrate(spark, cached)
-  }
-
-  private val sampledStressMemo = new MemoCache[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int, Int), MemoVal](
-    8, unpersistMemo)
-
-  private def stressCentralitySampledUncached(edges: DataFrame, maxHop: Int,
-                                              sampleMod: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = vertices(edges)
@@ -2072,7 +1628,7 @@ object Traversal {
     * Plan: per round one edges⋈labels equi-join, one (id, label) count
     * aggregate (map-side combinable), one per-id top-1 window — O(E)
     * join rows, O(V) state, the same per-round shape as [[kCore]]'s
-    * peel; eager cuts keep the loop lineage flat. */
+    * peel; a fixed-round [[iterate]] loop keeps the lineage flat. */
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1, s"labelPropagation needs rounds >= 1, got $rounds")
@@ -2082,8 +1638,7 @@ object Traversal {
     // cut: the vertex set joins back every round — uncut, each round
     // re-runs the distinct-union
     val verts = cut(vertices(edges))
-    var labels = verts.select(col("id"), col("id").as("label"))
-    for (_ <- 1 to rounds) {
+    iterate[DataFrame](rounds)(verts.select(col("id"), col("id").as("label"))) { (labels, _) =>
       val counts = und.join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
         .groupBy(col("src").as("id"), col("label")).agg(count(lit(1)).as("n"))
       val w = Window.partitionBy(col("id")).orderBy(col("n").desc, col("label"))
@@ -2091,10 +1646,9 @@ object Traversal {
         .filter(col("__r") === 1).select(col("id"), col("label").as("__l"))
       // a vertex with no surviving neighbor rows (self-loop-only) keeps
       // labeling itself rather than silently vanishing
-      labels = cut(verts.join(chosen, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__l"), col("id")).as("label")))
+      (verts.join(chosen, Seq("id"), "left")
+        .select(col("id"), coalesce(col("__l"), col("id")).as("label")), identity)
     }
-    labels
   }
 
   /** Sampled neighbor aggregation (the GraphSAGE mini-batch data-prep
@@ -2195,25 +1749,26 @@ object Traversal {
     val ranked = cut(e.withColumn("idx",
       row_number().over(Window.partitionBy(col("src")).orderBy(col("dst"))) - 1))
     val deg = cut(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-    var state = e.select(col("src")).distinct()
+    val state0 = e.select(col("src")).distinct()
       .select(col("src").as("start"),
         explode(sequence(lit(0), lit(walks - 1))).as("walk"))
       .withColumn("cur", col("start"))
-    var out = state.select(col("start"), col("walk"),
-      lit(0).as("step"), col("cur").as("vertex"))
-    for (t <- 1 to len) {
-      val drawn = state.join(deg.withColumnRenamed("src", "cur"), Seq("cur"))
-        .withColumn("__idx", pmod(md5Long(concat(
-          col("start").cast("string"), lit("#walk#"),
-          col("walk").cast("string"), lit("#"), lit(t.toString))), col("deg")))
-      state = cut(drawn
-        .join(ranked.select(col("src").as("cur"), col("idx").as("__idx"),
-          col("dst").as("__next")), Seq("cur", "__idx"))
-        .select(col("start"), col("walk"), col("__next").as("cur")))
-      out = out.unionByName(state.select(col("start"), col("walk"),
-        lit(t).as("step"), col("cur").as("vertex")))
-    }
-    out
+    // state: (walkers at step t, every step's walkers)
+    iterate[(DataFrame, List[DataFrame])](len)((state0, List(state0))) {
+      case ((state, steps), t) =>
+        val drawn = state.join(deg.withColumnRenamed("src", "cur"), Seq("cur"))
+          .withColumn("__idx", pmod(md5Long(concat(
+            col("start").cast("string"), lit("#walk#"),
+            col("walk").cast("string"), lit("#"), lit(t.toString))), col("deg")))
+        (drawn
+          .join(ranked.select(col("src").as("cur"), col("idx").as("__idx"),
+            col("dst").as("__next")), Seq("cur", "__idx"))
+          .select(col("start"), col("walk"), col("__next").as("cur")),
+          st => (st, st :: steps))
+    }._2.reverse.zipWithIndex
+      .map { case (st, t) => st.select(col("start"), col("walk"),
+        lit(t).as("step"), col("cur").as("vertex")) }
+      .reduce(_ unionByName _)
   }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of the
@@ -2318,11 +1873,11 @@ object Traversal {
     * lands on the identical edge set. Per round: each component's minimum
     * outgoing edge via ONE `min(struct(w,u,v))` aggregate (Spark orders
     * structs lexicographically), then the selected component-graph merges
-    * through [[minLabel]]'s pointer jumping. State is one (id, comp) row
-    * per vertex plus the accumulated forest; per-round shuffles: the two
-    * comp-lookup joins, the half-edge aggregate, and the (tiny —
-    * ≤ #components rows) contraction. Round results are eagerly cut
-    * ([[cut]]) so the loop's plan depth stays constant.
+    * through [[minLabel]]'s pointer jumping. State is the shrinking set
+    * of cross-component edges labeled with their endpoints' components,
+    * plus the forest edges chosen so far; per-round shuffles: the
+    * half-edge aggregate, the (tiny — ≤ #components rows) contraction,
+    * and the two relabel joins.
     *
     * Size-guarded driver finish (the [[minLabel]] escape-hatch
     * precedent): once the surviving cross-component edge set fits under
@@ -2347,79 +1902,68 @@ object Traversal {
         col("w").cast("long").as("w"))
       .filter(col("u") =!= col("v"))
       .groupBy(col("u"), col("v")).agg(min(col("w")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var comp = canon.select(explode(array(col("u"), col("v"))).as("id"))
-      .distinct().select(col("id"), col("id").as("comp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var forest: DataFrame = null
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      require(round <= maxRounds,
-        s"boruvkaMst did not converge in $maxRounds rounds — raise maxRounds")
-      val ce = canon
-        .join(comp.select(col("id").as("u"), col("comp").as("cu")), Seq("u"))
-        .join(comp.select(col("id").as("v"), col("comp").as("cv")), Seq("v"))
-        .filter(col("cu") =!= col("cv"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val integralIds = Seq("u", "v", "cu", "cv").forall(c => ce.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-        case _ => false
-      })
-      val nCross = ce.count()
-      if (nCross == 0) { ce.unpersist(false); done = true }
-      else if (nCross <= smallCutoff && integralIds) {
-        // Driver Kruskal over component ids — one task instead of
-        // log(remaining) more rounds of join+contract job latency.
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val rows = ce.select(col("w").cast("long"), col("u").cast("long"),
-            col("v").cast("long"), col("cu").cast("long"), col("cv").cast("long"))
-          .as[(Long, Long, Long, Long, Long)].collect()
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        val sel = rows.sortBy(t => (t._1, t._2, t._3)).iterator.flatMap { case (w, u, v, cu, cv) =>
-          val (ru, rv) = (find(cu), find(cv))
-          if (ru == rv) None else { parent(ru) = rv; Some((u, v, w)) }
-        }.toSeq
-        val selDf = sel.toDF("u", "v", "w")
-          .select(col("u").cast(ce.schema("u").dataType).as("u"),
-            col("v").cast(ce.schema("v").dataType).as("v"), col("w"))
-        forest = if (forest == null) selDf else cut(forest.unionByName(selDf))
-        ce.unpersist(false)
-        done = true
-      }
-      else {
-        // Each endpoint component nominates its min (w, u, v) cross edge;
-        // an edge picked from both sides dedups in the distinct.
-        val half = ce.select(col("cu").as("c"), struct(col("w"), col("u"), col("v")).as("e"))
-          .unionByName(ce.select(col("cv").as("c"), struct(col("w"), col("u"), col("v")).as("e")))
-        val sel = cut(half.groupBy(col("c")).agg(min(col("e")).as("e"))
-          .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
-          .distinct())
-        forest = if (forest == null) sel else cut(forest.unionByName(sel))
+    val integralIds = Seq("u", "v").forall(c => canon.schema(c).dataType match {
+      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
+           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
+      case _ => false
+    })
+    // state: the cross-component edges (u, v, w, cu, cv) with each
+    // endpoint's component, and the forest edges chosen so far
+    final class Cross(val ce: DataFrame, val forest: List[DataFrame]) {
+      lazy val n: Long = ce.count()
+    }
+    val converged = (c: Cross) => c.n == 0 || (c.n <= smallCutoff && integralIds)
+    val ce0 = new Cross(cut(canon.select(col("u"), col("v"), col("w"),
+      col("u").as("cu"), col("v").as("cv")), eager = false), Nil)
+    val last = if (converged(ce0)) ce0 else iterate[Cross](maxRounds, converged,
+        atLimit = _ => throw new IllegalArgumentException(
+          s"boruvkaMst did not converge in $maxRounds rounds — raise maxRounds"))(ce0) {
+      (c, _) =>
+        // Each endpoint component nominates its min (w, u, v) cross edge
+        // ((u, v) fixes cu, cv, so they only ride along); an edge picked
+        // from both sides dedups in the distinct.
+        val e = struct(col("w"), col("u"), col("v"), col("cu"), col("cv"))
+        val sel = c.ce.select(col("cu").as("c"), e.as("e"))
+          .unionByName(c.ce.select(col("cv").as("c"), e.as("e")))
+          .groupBy(col("c")).agg(min(col("e")).as("e"))
+          .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"),
+            col("e.cu").as("cu"), col("e.cv").as("cv"))
+          .distinct()
         // Contract: merge the components the selected edges connect
         // (minLabel's own size guard applies — the contraction graph is
-        // ≤ #components rows, so it usually rides the driver shortcut).
-        val cg = sel
-          .join(comp.select(col("id").as("u"), col("comp").as("cu")), Seq("u"))
-          .join(comp.select(col("id").as("v"), col("comp").as("cv")), Seq("v"))
-          .select(col("cu").as("src"), col("cv").as("dst"))
-        val relabel = minLabel(cg)
-        val next = cut(comp
-          .join(relabel.select(col("id").as("comp"), col("label")), Seq("comp"), "left")
-          .select(col("id"), coalesce(col("label"), col("comp")).as("comp")))
-        comp.unpersist(false)
-        comp = next.persist(StorageLevel.MEMORY_AND_DISK)
-        ce.unpersist(false)
-      }
+        // ≤ #components rows, so it usually rides the driver shortcut),
+        // then relabel both endpoints of every cross edge; edges whose
+        // endpoints now share a component leave the state.
+        val lab = minLabel(sel.select(col("cu").as("src"), col("cv").as("dst")))
+        (c.ce
+          .join(lab.select(col("id").as("cu"), col("label").as("lu")), Seq("cu"), "left")
+          .join(lab.select(col("id").as("cv"), col("label").as("lv")), Seq("cv"), "left")
+          .select(col("u"), col("v"), col("w"),
+            coalesce(col("lu"), col("cu")).as("cu"), coalesce(col("lv"), col("cv")).as("cv"))
+          .filter(col("cu") =!= col("cv")),
+          next => new Cross(next, sel.select(col("u"), col("v"), col("w")) :: c.forest))
     }
-    canon.unpersist(false)
-    if (forest == null) canon.limit(0) else forest
+    val finish = if (last.n == 0) Nil else {
+      // Driver Kruskal over component ids — one task instead of
+      // log(remaining) more rounds of join+contract job latency.
+      import spark.implicits._
+      val rows = last.ce.select(col("w").cast("long"), col("u").cast("long"),
+          col("v").cast("long"), col("cu").cast("long"), col("cv").cast("long"))
+        .as[(Long, Long, Long, Long, Long)].collect()
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      val sel = rows.sortBy(t => (t._1, t._2, t._3)).iterator.flatMap { case (w, u, v, cu, cv) =>
+        val (ru, rv) = (find(cu), find(cv))
+        if (ru == rv) None else { parent(ru) = rv; Some((u, v, w)) }
+      }.toSeq
+      List(sel.toDF("u", "v", "w")
+        .select(col("u").cast(canon.schema("u").dataType).as("u"),
+          col("v").cast(canon.schema("v").dataType).as("v"), col("w")))
+    }
+    (finish ++ last.forest).reduceOption(_ unionByName _)
+      .getOrElse(canon.limit(0))
   }
 }

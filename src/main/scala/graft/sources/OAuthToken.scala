@@ -56,9 +56,6 @@ private[graft] object JwtGrant {
   def provider(cfg: Config): Provider =
     providers.computeIfAbsent(cfg, c => new Provider(c))
 
-  /** Test-only: drop every cached provider (spec isolation). */
-  private[graft] def resetForTest(): Unit = providers.clear()
-
   /** Mints, caches, and refreshes access tokens for one grant config.
     * Synchronized mint: concurrent readers hitting an expired token
     * produce ONE token request, not a stampede of them. */

@@ -27,14 +27,6 @@ object EventPipeline {
       .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("ws"), col("event_type"), col("cnt"), col("sum_value"))
 
-  /** Sliding-window variant (windowLen every slide). */
-  def slidingCounts(events: DataFrame, windowLen: String = "2 hours",
-                    slide: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("ws"), col("event_type"), col("cnt"))
-
   /** Stateful sessionization with mapGroupsWithState: per-user running
     * (event count, max value) with processing-time state that a real
     * pipeline would expire via timeout. */

@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Constraint-free rebuild of a (local)checkpointed DataFrame.
   *
@@ -16,20 +17,25 @@ import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, SparkSession
   * the union (e.g. `graft.graph.Traversal.closureDoubling`) hit exactly
   * that shape.
   *
-  * The rebuild wraps the checkpoint's already-materialized InternalRow RDD
-  * in a fresh `LogicalRDD` with NO origin constraints/stats — zero copy,
-  * no re-encoding — via `internalCreateDataFrame`, which is package-
-  * private to `org.apache.spark.sql`; hence this shim lives in Spark's
-  * namespace (the standard extension technique — no Spark internals are
-  * modified).
+  * The rebuild wraps the checkpoint's RDD in a fresh `LogicalRDD` that
+  * keeps its size statistics, partitioning and ordering (so join planning
+  * and exchange reuse are unchanged) and drops only the origin
+  * constraints — zero copy, no re-encoding. `LogicalRDD`'s constructor and
+  * `Dataset.ofRows` are package-private to `org.apache.spark.sql`; hence
+  * this shim lives in Spark's namespace (the standard extension
+  * technique — no Spark internals are modified).
   */
 object CheckpointUtil {
-  /** `df` must already be checkpoint/RDD-backed (its `queryExecution.toRdd`
-    * must be the cached blocks, not a recomputation) — call directly on
-    * the result of `localCheckpoint()`. */
+  /** `df` must be checkpoint/RDD-backed — call directly on the result of
+    * `localCheckpoint()` / `checkpoint()`, eager or lazy. */
   def dropConstraints(df: DataFrame): DataFrame = {
     val classic = df.asInstanceOf[ClassicDataFrame]
     val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    spark.internalCreateDataFrame(classic.queryExecution.toRdd, df.schema)
+    classic.queryExecution.logical match {
+      case r: LogicalRDD =>
+        ClassicDataset.ofRows(spark, LogicalRDD(r.output, r.rdd, r.outputPartitioning,
+          r.outputOrdering, r.isStreaming)(spark, Some(r.stats), None))
+      case _ => spark.internalCreateDataFrame(classic.queryExecution.toRdd, df.schema)
+    }
   }
 }

@@ -144,86 +144,30 @@ class TraversalSpec extends AnyFunSuite {
     }
   }
 
-  test("session memos are LRU-bounded: 8 entries, evicted keys recompute right") {
-    // force the distributed (persisted) memo branch, then touch 12
-    // distinct graphs — the 8-entry LRU must cap the memo (each entry
-    // holds a persisted frame + its canonicalized plan; unbounded growth
-    // was ADVICE r13's leak) and an evicted key must recompute correctly
-    Traversal.memoCutoff = Some(0L)
-    try {
-      val first = edgesDF(Seq((1L, 2L), (2L, 3L)))
-      val r0 = Traversal.labelPropagationMemo(first, rounds = 2).collect()
-        .map(_.toString).sorted.toSeq
-      (1 until 12).foreach { i =>
-        val base = 100L * i
-        val es = edgesDF(Seq((base + 1, base + 2), (base + 2, base + 3)))
-        assert(Traversal.labelPropagationMemo(es, rounds = 2).collect().nonEmpty)
-      }
-      assert(Traversal.lpaMemoSize <= 8,
-        s"memo grew past the LRU bound: ${Traversal.lpaMemoSize}")
-      // `first` was evicted (11 newer keys) — recomputation must agree
-      val r1 = Traversal.labelPropagationMemo(first, rounds = 2).collect()
-        .map(_.toString).sorted.toSeq
-      assert(r1 == r0)
-    } finally Traversal.memoCutoff = None
-  }
-
-  test("memo single-flight is per key: a slow compute never blocks other keys") {
-    // r14 review finding: the first LRU rework computed values INSIDE the
-    // cache-wide lock, so a multi-second memoization of graph A stalled a
-    // cache HIT on graph B. Deterministic handshake: key "slow" blocks in
-    // its compute until released; a concurrent lookup of the already-
-    // cached key "fast" must complete while "slow" is still computing.
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val evicted = new java.util.concurrent.atomic.AtomicInteger
-    val cache = new Traversal.MemoCache[String, Int](8, _ => evicted.incrementAndGet())
-    assert(cache.getOrElseUpdate("fast")(1) == 1)
-    val entered = new CountDownLatch(1)
-    val release = new CountDownLatch(1)
-    val slow = new Thread(() =>
-      cache.getOrElseUpdate("slow") { entered.countDown(); release.await(); 2 })
-    slow.start()
-    assert(entered.await(5, TimeUnit.SECONDS), "slow compute never started")
-    // while "slow" computes, a hit on "fast" must not block
-    val hit = new CountDownLatch(1)
-    val reader = new Thread(() => { cache.getOrElseUpdate("fast")(99); hit.countDown() })
-    reader.start()
-    assert(hit.await(5, TimeUnit.SECONDS),
-      "cache hit on a different key blocked behind an in-flight compute")
-    release.countDown()
-    slow.join(5000); reader.join(5000)
-    assert(cache.getOrElseUpdate("slow")(3) == 2) // the shared computation won
-    assert(evicted.get() == 0)
-  }
-
-  test("memo eviction mid-compute still releases the value exactly once") {
-    // pathological LRU case: an entry ages out BEFORE its computation
-    // finishes — the computing thread must run the evict hook on
-    // completion (exactly once), and the caller still gets its value.
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val evictedVals = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val cache = new Traversal.MemoCache[String, Int](2, v => evictedVals.add(v))
-    val entered = new CountDownLatch(1)
-    val release = new CountDownLatch(1)
-    var got = -1
-    val slow = new Thread(() =>
-      got = cache.getOrElseUpdate("victim") { entered.countDown(); release.await(); 7 })
-    slow.start()
-    assert(entered.await(5, TimeUnit.SECONDS))
-    // push "victim" out of the 2-entry LRU while it is still computing
-    cache.getOrElseUpdate("a")(1); cache.getOrElseUpdate("b")(2)
-    cache.getOrElseUpdate("c")(3) // evicts "victim" (oldest)
-    release.countDown()
-    slow.join(5000)
-    assert(got == 7, "caller of the evicted-mid-compute entry lost its value")
-    assert(evictedVals.contains(7), "evict hook never ran for the in-flight value")
-  }
-
   test("reachFix throws instead of silently truncating") {
     val e = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
     assertThrows[IllegalStateException] {
       Traversal.reachFix(e, Seq(1L).toDF("id"), maxIter = 2).count()
     }
+  }
+
+  test("reachFix and khop plans grow linearly in rounds, not exponentially") {
+    // Each round's relation is cut, so the returned frame's analyzed plan
+    // is a union of one leaf per round. Caching alone (persist) skips
+    // re-execution but not re-analysis: the plan then doubles per round
+    // (thousands of lines at 6 hops, minutes of analysis at 8).
+    val hops = 6
+    val chain = edgesDF((0L until hops.toLong).map(i => (i, i + 1)))
+    def lines(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.treeString.split("\n").length
+    val reach = Traversal.reachFix(chain, Seq(0L).toDF("id"))
+    assert(reach.count() == hops)
+    // hops productive rounds plus the empty round that converges
+    val rounds = hops + 1
+    assert(lines(reach) <= 4 * rounds + 8, reach.queryExecution.analyzed.treeString)
+    val k = Traversal.khop(chain, Seq(0L).toDF("id"), hops)
+    assert(k.count() == hops)
+    assert(lines(k) <= 4 * hops + 8, k.queryExecution.analyzed.treeString)
   }
 
   /** canonical per vertex via the r4 all-pairs closure form (the shape
@@ -340,6 +284,10 @@ class TraversalSpec extends AnyFunSuite {
     val defaultLabels = Traversal.minLabel(edgesDF(es), smallCutoff = 0)
       .as[(Long, Long)].collect().toSet
     val defaultPower = Traversal.hopPower(edgesDF(es), 5).as[(Long, Long)].collect().toSet
+    val start = Seq(1L, 5L).toDF("id")
+    val defaultReach = Traversal.reachFix(edgesDF(es), start).as[(Long, Long)].collect().toSet
+    val defaultKhop = Traversal.khop(edgesDF(es), start, 3).as[(Long, Long, Int)].collect().toSet
+    val defaultDepth = Traversal.bfsDepth(edgesDF(es), start).as[(Long, Long)].collect().toSet
     val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set("graft.checkpoint.reliable", "true")
@@ -350,6 +298,12 @@ class TraversalSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toSet == defaultLabels)
       assert(Traversal.hopPower(edgesDF(es), 5).as[(Long, Long)].collect().toSet
         == defaultPower)
+      assert(Traversal.reachFix(edgesDF(es), start).as[(Long, Long)].collect().toSet
+        == defaultReach)
+      assert(Traversal.khop(edgesDF(es), start, 3).as[(Long, Long, Int)].collect().toSet
+        == defaultKhop)
+      assert(Traversal.bfsDepth(edgesDF(es), start).as[(Long, Long)].collect().toSet
+        == defaultDepth)
       // the reliable path really wrote checkpoint files
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
@@ -675,38 +629,20 @@ class TraversalSpec extends AnyFunSuite {
     assert(got(7L) == 7L && got.contains(1L) && got.contains(2L))
   }
 
-  test("memoized metrics over the spill cutoff stay distributed AND equal the small path") {
-    // memoCutoff = 0 forces every memo payload onto the persisted-
-    // DataFrame branch (what a 100× graph takes automatically via the
-    // heap-derived defaultSmallCutoff) — outputs must be identical to
-    // the unmemoized ground truth, and a second hit must rehydrate the
-    // same values. Graphs here are distinct from every other test's so
-    // the session-lifetime memos can't serve stale collected payloads.
+  test("stressCentrality and neighborhoodFunction: exact counts on path graphs") {
     def sym(es: Seq[(Long, Long)]) = es ++ es.map(_.swap)
-    Traversal.memoCutoff = Some(0L)
-    try {
-      val lpaEdges = Seq((21L, 22L), (22L, 23L), (31L, 32L))
-      val viaMemo = Traversal.labelPropagationMemo(edgesDF(lpaEdges), rounds = 4)
-        .as[(Long, Long)].collect().toMap
-      val direct = Traversal.labelPropagation(edgesDF(lpaEdges), rounds = 4)
-        .as[(Long, Long)].collect().toMap
-      assert(viaMemo == direct)
-      assert(Traversal.labelPropagationMemo(edgesDF(lpaEdges), rounds = 4)
-        .as[(Long, Long)].collect().toMap == direct) // memo hit, rehydrated
+    // path 41–42–43–44: interior vertices carry 2·(ordered pairs through)
+    val stress = Traversal.stressCentrality(
+      edgesDF(sym(Seq((41L, 42L), (42L, 43L), (43L, 44L)))), maxHop = 4)
+      .as[(Long, Long)].collect().toMap
+    assert(stress == Map(41L -> 0L, 42L -> 4L, 43L -> 4L, 44L -> 0L))
 
-      // path 41–42–43–44: interior vertices carry 2·(ordered pairs through)
-      val stress = Traversal.stressCentrality(
-        edgesDF(sym(Seq((41L, 42L), (42L, 43L), (43L, 44L)))), maxHop = 4)
-        .as[(Long, Long)].collect().toMap
-      assert(stress == Map(41L -> 0L, 42L -> 4L, 43L -> 4L, 44L -> 0L))
-
-      // directed path 51→52→53→54, maxHop 3: N(0)=4 self-pairs,
-      // +3 at hop 1, +2 at hop 2, +1 at hop 3
-      val nf = Traversal.neighborhoodFunction(
-        edgesDF(Seq((51L, 52L), (52L, 53L), (53L, 54L))), maxHop = 3)
-        .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-      assert(nf == Map(0L -> (4L, 4L), 1L -> (3L, 7L), 2L -> (2L, 9L), 3L -> (1L, 10L)))
-    } finally Traversal.memoCutoff = None
+    // directed path 51→52→53→54, maxHop 3: N(0)=4 self-pairs,
+    // +3 at hop 1, +2 at hop 2, +1 at hop 3
+    val nf = Traversal.neighborhoodFunction(
+      edgesDF(Seq((51L, 52L), (52L, 53L), (53L, 54L))), maxHop = 3)
+      .as[(Long, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(nf == Map(0L -> (4L, 4L), 1L -> (3L, 7L), 2L -> (2L, 9L), 3L -> (1L, 10L)))
   }
 
   test("harmonicCentrality exact values; hyperBall twin matches in the exact regime") {
@@ -962,7 +898,7 @@ class TraversalSpec extends AnyFunSuite {
     val out = Traversal.eccentricity(und, maxHop = 8)
       .as[(Long, Long)].collect().toMap
     assert(out == Map(1L -> 4L, 2L -> 3L, 3L -> 2L, 4L -> 3L, 5L -> 4L))
-    // shares the sweep memo with the other read-outs: derived curves agree
+    // the same min-hop sweep feeds the other read-outs: derived curves agree
     val anf = Traversal.neighborhoodFunction(und, 8)
       .as[(Long, Long, Long)].collect().map(r => r._1 -> r._2).toMap
     assert(anf(1L) == 8L && anf(4L) == 2L) // 8 dist-1 pairs, 2 dist-4 pairs
@@ -994,17 +930,6 @@ class TraversalSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     assert(out.toSeq == Seq((1L, 6L, 16L, 1333333L), (2L, 4L, 12L, 1500000L)),
       s"got ${out.toSeq}")
-  }
-
-  test("labelPropagationMemo: identical to the direct run, cache-stable") {
-    val es = edgesDF(Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L)))
-    val direct = Traversal.labelPropagation(es, rounds = 2)
-      .as[(Long, Long)].collect().toSet
-    assert(Traversal.labelPropagationMemo(es, rounds = 2)
-      .as[(Long, Long)].collect().toSet == direct)
-    // second call serves the memo; identity is the contract
-    assert(Traversal.labelPropagationMemo(es, rounds = 2)
-      .as[(Long, Long)].collect().toSet == direct)
   }
 
   test("modularity: perfect two-clique split = 1/2; cross-cut split negative") {

@@ -2,7 +2,11 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointUtil
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Distributed traversal engine — the Spark-native replacement for the
   * reference's two traversal mechanisms:
@@ -38,7 +42,12 @@ import org.apache.spark.storage.StorageLevel
   *     (a truncated fixpoint is a wrong answer) or, for fixed-round
   *     sweeps, returns the state;
   *   - release: loop-scoped persisted inputs are unpersisted when the
-  *     loop ends, whether it converged or threw.
+  *     loop ends, whether it converged or threw; and every public
+  *     algorithm runs inside [[released]], so when it returns, each frame
+  *     it cut that its result does not read (superseded rounds, the
+  *     per-round frames under a final eager cut) is unpersisted at once
+  *     instead of waiting for the ContextCleaner — repeated calls leave
+  *     no residue in executor storage.
   *
   * Scale notes (100 TB): each hop is one join frontier⋈edges; the edge
   * set is expected hash-partitioned AND sorted by `src` ([[GraphStore]]
@@ -69,20 +78,48 @@ object Traversal {
     if (reliable)
       require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "graft.checkpoint.reliable=true needs sparkContext.setCheckpointDir first")
-    org.apache.spark.sql.graft.CheckpointUtil.dropConstraints(
+    val out = CheckpointUtil.dropConstraints(
       if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager))
+    Option(cutsMade.get).foreach(_ += out)
+    out
+  }
+
+  /** The frames [[cut]] so far by the [[released]] body running on this
+    * thread (null outside one). */
+  private val cutsMade = new ThreadLocal[mutable.ArrayBuffer[DataFrame]]
+
+  /** Runs an algorithm body, then unpersists every frame it [[cut]] that
+    * its result does not read ([[CheckpointUtil.readRdds]]: a lazy result
+    * keeps the whole unmaterialized lineage it still needs). The frames
+    * the result does read pass to the enclosing body, if any, which
+    * decides for its own result. If the body throws, all its cuts go. */
+  private def released(body: => DataFrame): DataFrame = {
+    val outer = cutsMade.get
+    val cuts = mutable.ArrayBuffer.empty[DataFrame]
+    cutsMade.set(cuts)
+    val out =
+      try body
+      catch { case NonFatal(t) => cuts.foreach(CheckpointUtil.release); throw t }
+      finally cutsMade.set(outer)
+    val read = CheckpointUtil.readRdds(out)
+    val (kept, unread) = cuts.partition(c => read(CheckpointUtil.rddId(c)))
+    unread.foreach(CheckpointUtil.release)
+    if (outer != null) outer ++= kept
+    out
   }
 
   /** The superstep driver (see the object doc). Round r = 1, 2, … calls
     * `step(state, r)`, which returns the round's new relation and the
     * function that wraps that relation — once cut — into the next state.
-    * After each round (each pair of rounds when `widen`; a pair never
-    * crosses `maxRounds`) the driver runs `converged`, which must be a
-    * full action over the new relation: that action is what materializes
-    * the lazy cut. With `widen`, a round whose probe finds nothing new
-    * must leave the state a fixpoint (level-set loops: the next level of
-    * an empty level is empty). `scoped` frames are unpersisted when the
-    * loop ends. */
+    * After each round (each pair of rounds when `widen`) the driver runs
+    * `converged`, which must be a full action over the new relation:
+    * that action is what materializes the lazy cut. With `widen`, a round
+    * whose probe finds nothing new must leave the state a fixpoint
+    * (level-set loops: the next level of an empty level is empty), and a
+    * pair starts while r ≤ `maxRounds`: when r = `maxRounds` its second
+    * round is the emptiness witness that decides between converging and
+    * `atLimit` (a sweep bounded at `maxRounds` makes its later levels
+    * empty). `scoped` frames are unpersisted when the loop ends. */
   private def iterate[S](maxRounds: Int, converged: S => Boolean = (_: S) => false,
                          atLimit: S => S = (s: S) => s, widen: Boolean = false,
                          scoped: Seq[DataFrame] = Nil)(init: S)(
@@ -98,7 +135,7 @@ object Traversal {
       while (!done) {
         if (r > maxRounds) return atLimit(s)
         s = round(s, r)
-        if (widen && r < maxRounds) { r += 1; s = round(s, r) }
+        if (widen) { r += 1; s = round(s, r) }
         r += 1
         done = converged(s)
       }
@@ -229,11 +266,12 @@ object Traversal {
     *
     * A fixed-round loop (no probe): the k lazily cut hops execute inside
     * ONE eager checkpoint job at the end, and the returned frame reads
-    * from that checkpoint, so the prepped edge set is released before
-    * returning. Set `dedupStart = false` when start ids are known unique
-    * (e.g. a filter of a vertex store) to skip a shuffle. */
+    * from that checkpoint, so the prepped edge set and the per-hop cuts
+    * are released before returning — repeated calls leave no residue in
+    * executor storage. Set `dedupStart = false` when start ids are known
+    * unique (e.g. a filter of a vertex store) to skip a shuffle. */
   def khop(edges: DataFrame, start: DataFrame, k: Int,
-           prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame = {
+           prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame = released {
     require(k >= 1, s"khop needs k >= 1, got $k")
     val e = prep(edges, prepEdges)
     // state: (this hop's frontier, the hop-stamped frontiers so far)
@@ -262,7 +300,7 @@ object Traversal {
     * if `maxIter` levels are exceeded first (a truncated depth map is a
     * wrong answer, not a partial one). */
   def bfsDepth(edges: DataFrame, start: DataFrame, maxIter: Int = 64,
-               prepEdges: Boolean = true): DataFrame = {
+               prepEdges: Boolean = true): DataFrame = released {
     val e = prep(edges, prepEdges)
     val seed = cut(start.select(col("id")).distinct().withColumn("depth", lit(0L)),
       eager = false)
@@ -323,7 +361,7 @@ object Traversal {
     * Σ|S_k| ≤ V·depth rows — on a shallow wide DAG the frontier form is
     * strictly cheaper. */
   def topoLayers(edges: DataFrame, maxIter: Int = 64,
-                 prepEdges: Boolean = true, switchDepth: Int = 32): DataFrame = {
+                 prepEdges: Boolean = true, switchDepth: Int = 32): DataFrame = released {
     val e = prep(edges, prepEdges)
     val srcIds = e.select(col("src").as("id")).distinct()
     // persisted: the anti-join below probes it AND the final guard counts
@@ -353,25 +391,26 @@ object Traversal {
       dstIds.unpersist(false)
       val out = topoLayersDoubling(e, prepEdges = false)
       if (prepEdges) e.unpersist(false)
-      return out
+      out
+    } else {
+      val frozen = cut(levels.reduce(_ unionByName _)
+        .groupBy(col("id")).agg(max(col("layer")).as("layer")))
+      // Contract guard: every edge-touching vertex must be layered. A
+      // source-less cycle is unreachable from S₀, so the loop above
+      // converges with those vertices silently MISSING — a wrong answer
+      // maxIter alone cannot catch (it only fires when a cycle is fed by a
+      // source). All three counts read materialized frames; no new shuffle
+      // runs for the guard.
+      val nVerts = s0.count() + dstIds.count()
+      val nLayered = frozen.count()
+      dstIds.unpersist(false)
+      if (prepEdges) e.unpersist(false)
+      require(nLayered == nVerts,
+        s"topoLayers: ${nVerts - nLayered} of $nVerts edge-touching vertices " +
+          "are unreachable from any in-degree-0 source — the graph contains " +
+          "a source-less cycle; longest-path layering is defined on DAGs only")
+      frozen
     }
-    val frozen = cut(levels.reduce(_ unionByName _)
-      .groupBy(col("id")).agg(max(col("layer")).as("layer")))
-    // Contract guard: every edge-touching vertex must be layered. A
-    // source-less cycle is unreachable from S₀, so the loop above
-    // converges with those vertices silently MISSING — a wrong answer
-    // maxIter alone cannot catch (it only fires when a cycle is fed by a
-    // source). All three counts read materialized frames; no new shuffle
-    // runs for the guard.
-    val nVerts = s0.count() + dstIds.count()
-    val nLayered = frozen.count()
-    dstIds.unpersist(false)
-    if (prepEdges) e.unpersist(false)
-    require(nLayered == nVerts,
-      s"topoLayers: ${nVerts - nLayered} of $nVerts edge-touching vertices " +
-        "are unreachable from any in-degree-0 source — the graph contains " +
-        "a source-less cycle; longest-path layering is defined on DAGs only")
-    frozen
   }
 
   /** Log-depth [[topoLayers]]: longest-path layering by MAX-PLUS RELATION
@@ -404,7 +443,7 @@ object Traversal {
     * (TraversalSpec proves a 63-level chain converges in ≤ 7). */
   def topoLayersDoubling(edges: DataFrame, maxRounds: Int = 40,
                          prepEdges: Boolean = true,
-                         onRound: Int => Unit = _ => ()): DataFrame = {
+                         onRound: Int => Unit = _ => ()): DataFrame = released {
     val e = prep(edges, prepEdges)
     try {
       val base = e.select(col("src"), col("dst")) // salt-free view for compose joins
@@ -495,7 +534,7 @@ object Traversal {
     * Throws if `maxIter` is hit before convergence: a silently truncated
     * closure is a wrong answer, not a partial one. */
   def reachFix(edges: DataFrame, start: DataFrame, maxIter: Int = 64,
-               prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame = {
+               prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame = released {
     val e = prep(edges, prepEdges)
     // state: (this round's new pairs, every round's new pairs); the
     // result is their disjoint union, each round materialized by its
@@ -553,7 +592,7 @@ object Traversal {
     *
     * Convergence witness: empty delta — exact and type-agnostic; its
     * count is the job that materializes the delta's cut. */
-  def closureDoubling(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  def closureDoubling(edges: DataFrame, maxIter: Int = 20): DataFrame = released {
     // SOURCE PEEL (round 14): an in-degree-0 vertex cannot sit on a cycle
     // and no path passes THROUGH it (an edge into it would give it
     // in-degree), so
@@ -677,7 +716,7 @@ object Traversal {
     * pass `smallCutoff = 0` to force the distributed rounds.
     */
   def minLabel(edges: DataFrame, maxIter: Int = 64,
-               smallCutoff: Long = defaultSmallCutoff): DataFrame = {
+               smallCutoff: Long = defaultSmallCutoff): DataFrame = released {
     val und = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src"))
@@ -730,38 +769,39 @@ object Traversal {
       val out = Array.tabulate(n)(i => (ids(i), ids(find(i)))).toSeq
       und.unpersist(false)
       // Cast back to the input id type so both paths return one schema.
-      return out.toDF("id", "label")
+      out.toDF("id", "label")
         .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
+    } else {
+      val labels0 = cut(und.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label")), eager = false)
+      // state: (this round's labels, the previous round's)
+      iterate[(DataFrame, DataFrame)](maxIter,
+          // Type-agnostic convergence witness: the round is a fixed point
+          // iff no vertex changed label. Works for any orderable id type
+          // (numeric OR string) — no cast — and is exact, unlike a
+          // hashed-sum witness.
+          converged = { case (next, prev) =>
+            next.as("a").join(prev.as("b").hint("shuffle_hash"), col("a.id") === col("b.id"))
+              .where(col("a.label") =!= col("b.label")).count() == 0 },
+          atLimit = _ => throw new IllegalStateException(
+            s"minLabel did not converge within $maxIter rounds — " +
+              "a truncated labeling would silently split components; raise maxIter"),
+          scoped = Seq(und))((labels0, labels0)) { case ((labels, _), _) =>
+        // Neighbor-min via join+join, NOT a self-referential union: a union
+        // whose second branch is also joined inside the first trips Union's
+        // constraint rewrite (key-not-found during analysis). Coverage is
+        // intact — und is symmetrized, so every vertex appears as a dst.
+        val nmin = und.join(labels.hint("shuffle_hash"), und("src") === labels("id"))
+          .groupBy(und("dst").as("id")).agg(min(col("label")).as("nl"))
+        val l1 = labels.as("l")
+          .join(nmin.as("n").hint("shuffle_hash"), col("l.id") === col("n.id"))
+          .select(col("l.id").as("id"), least(col("l.label"), col("n.nl")).as("label"))
+        (l1.as("a")
+          .join(l1.as("b").hint("shuffle_hash"), col("a.label") === col("b.id"))
+          .select(col("a.id").as("id"), least(col("a.label"), col("b.label")).as("label")),
+          next => (next, labels))
+      }._1
     }
-    val labels0 = cut(und.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")), eager = false)
-    // state: (this round's labels, the previous round's)
-    iterate[(DataFrame, DataFrame)](maxIter,
-        // Type-agnostic convergence witness: the round is a fixed point
-        // iff no vertex changed label. Works for any orderable id type
-        // (numeric OR string) — no cast — and is exact, unlike a
-        // hashed-sum witness.
-        converged = { case (next, prev) =>
-          next.as("a").join(prev.as("b").hint("shuffle_hash"), col("a.id") === col("b.id"))
-            .where(col("a.label") =!= col("b.label")).count() == 0 },
-        atLimit = _ => throw new IllegalStateException(
-          s"minLabel did not converge within $maxIter rounds — " +
-            "a truncated labeling would silently split components; raise maxIter"),
-        scoped = Seq(und))((labels0, labels0)) { case ((labels, _), _) =>
-      // Neighbor-min via join+join, NOT a self-referential union: a union
-      // whose second branch is also joined inside the first trips Union's
-      // constraint rewrite (key-not-found during analysis). Coverage is
-      // intact — und is symmetrized, so every vertex appears as a dst.
-      val nmin = und.join(labels.hint("shuffle_hash"), und("src") === labels("id"))
-        .groupBy(und("dst").as("id")).agg(min(col("label")).as("nl"))
-      val l1 = labels.as("l")
-        .join(nmin.as("n").hint("shuffle_hash"), col("l.id") === col("n.id"))
-        .select(col("l.id").as("id"), least(col("l.label"), col("n.nl")).as("label"))
-      (l1.as("a")
-        .join(l1.as("b").hint("shuffle_hash"), col("a.label") === col("b.id"))
-        .select(col("a.id").as("id"), least(col("a.label"), col("b.label")).as("label")),
-        next => (next, labels))
-    }._1
   }
 
   /** Weighted single-source(-set) shortest paths — distributed
@@ -781,7 +821,7 @@ object Traversal {
     * distances. Lineage is [[cut]] per round (reliable-checkpoint opt-in
     * applies). `edges` needs (src, dst, w); `sources` needs `id`.
     * Returns (id, dist) for every vertex reachable from the source set. */
-  def sssp(edges: DataFrame, sources: DataFrame, maxIter: Int = 64): DataFrame = {
+  def sssp(edges: DataFrame, sources: DataFrame, maxIter: Int = 64): DataFrame = released {
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     require(e.filter(col("w") < 0).isEmpty,
@@ -835,7 +875,7 @@ object Traversal {
     * INSIDE the core (initial degree minus decrements from peeled
     * neighbors) — exact BIGINTs, engine-independent. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 64,
-            assumeDistinct: Boolean = false): DataFrame = {
+            assumeDistinct: Boolean = false): DataFrame = released {
     require(k >= 1, s"kCore needs k >= 1, got $k")
     // `assumeDistinct = true` skips the symmetrized-distinct exchange (the
     // single most expensive stage — the edge table is 2|E| rows). Safe
@@ -889,7 +929,7 @@ object Traversal {
     *
     * Input needs (src, dst) columns; output is the distinct (src, dst)
     * pairs connected by a directed walk of length exactly n. */
-  def hopPower(pairs: DataFrame, n: Int): DataFrame = {
+  def hopPower(pairs: DataFrame, n: Int): DataFrame = released {
     require(n >= 1, s"hopPower needs n >= 1, got $n")
     // LAZY cut per compose, ONE eager cut at the end: each power is
     // referenced up to three times (both sides of its own square + the
@@ -953,7 +993,7 @@ object Traversal {
     * hierarchies) the cyclic core is a vanishing fraction of V. For a
     * core whose closure still would not fit, forward-backward coloring
     * at O(diameter) rounds per pivot remains the escape hatch. */
-  def scc(edges: DataFrame): DataFrame = {
+  def scc(edges: DataFrame): DataFrame = released {
     import org.apache.spark.sql.types.{StructField, StructType}
     val spark = edges.sparkSession
     val e0 = cut(edges.select(col("src"), col("dst")).distinct(), eager = false)
@@ -1077,7 +1117,7 @@ object Traversal {
     * practice, like [[kCore]]); each round cuts the shrinking edge set.
     * Output: (a, b, support) for surviving edges, support
     * measured in the final subgraph. */
-  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = released {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val empty = edges.select(col("src").as("a"), col("dst").as("b"))
       .limit(0).withColumn("support", lit(0L))
@@ -1118,7 +1158,7 @@ object Traversal {
     * Output: (id, in_mis) for every vertex of the edge set. The result is
     * a function of the edge SET only — partitioning/merge order cannot
     * change it, so the DuckDB oracle unrolls the same rounds. */
-  def maximalIndependentSet(edges: DataFrame, maxIter: Int = 40): DataFrame = {
+  def maximalIndependentSet(edges: DataFrame, maxIter: Int = 40): DataFrame = released {
     import graft.functions.Hashing.md5Long
     val und = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -1188,7 +1228,7 @@ object Traversal {
     * the NON-ISOLATED form (endpoints of surviving edges) — isolated
     * vertices only dilute density and their removal is what round r+1
     * does anyway; the oracle replays the identical convention. */
-  def densestSubgraphTrace(edges: DataFrame, rounds: Int): DataFrame = {
+  def densestSubgraphTrace(edges: DataFrame, rounds: Int): DataFrame = released {
     require(rounds >= 1, s"densestSubgraphTrace needs rounds >= 1, got $rounds")
     val spark = edges.sparkSession
     // one state per trace row: the surviving ordered edges, their
@@ -1365,7 +1405,7 @@ object Traversal {
     * — the read-out [[harmonicCentrality]] cannot afford at 100 TB.
     * While sketches are in the HLL exact regime the result equals the
     * exact form bit-for-bit (the x21b gate's in-row verdict). */
-  def hyperBallCentrality(edges: DataFrame, maxHop: Int, lgK: Int = 12): DataFrame = {
+  def hyperBallCentrality(edges: DataFrame, maxHop: Int, lgK: Int = 12): DataFrame = released {
     require(maxHop >= 1, s"hyperBallCentrality needs maxHop >= 1, got $maxHop")
     val est = balls(edges, maxHop, lgK)
       .map(_.select(col("id"), hll_sketch_estimate(col("ball")).as("est")))
@@ -1407,7 +1447,7 @@ object Traversal {
     * max — partitioning and merge order cannot change the estimate.
     * Output: (hop, est_pairs) — floor-truncated estimates, comparable to
     * [[neighborhoodFunction]]'s exact `cum_pairs`. */
-  def hyperBall(edges: DataFrame, maxHop: Int, lgK: Int = 12): DataFrame = {
+  def hyperBall(edges: DataFrame, maxHop: Int, lgK: Int = 12): DataFrame = released {
     require(maxHop >= 0, s"hyperBall needs maxHop >= 0, got $maxHop")
     balls(edges, maxHop, lgK).zipWithIndex.map { case (b, h) =>
       b.agg(floor(sum(hll_sketch_estimate(col("ball")))).cast("long").as("est_pairs"))
@@ -1443,7 +1483,7 @@ object Traversal {
     * unchanged, the composition join already keys on the small hub
     * side, and σ_v(t) for the t-side reuses the sampled sweep
     * transposed (undirected symmetry). */
-  def stressCentrality(edges: DataFrame, maxHop: Int): DataFrame = {
+  def stressCentrality(edges: DataFrame, maxHop: Int): DataFrame = released {
     require(maxHop >= 1, s"stressCentrality needs maxHop >= 1, got $maxHop")
     val e = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1480,8 +1520,9 @@ object Traversal {
       .join(seen.select(col("s"), col("v")), Seq("s", "v"), "left_anti")
 
   /** The σ sweep shared by the exact and sampled stress forms: a level
-    * per round, probed every second level (`widen`), bounded by `maxHop`.
-    * Each level anti-joins against every level so far, and
+    * per round, probed every second level (`widen`), bounded by `maxHop`
+    * (a level past it is empty, so an odd `maxHop` ends on an empty
+    * witness). Each level anti-joins against every level so far, and
     * level_{d+1} ⊆ neighbors(level_d), so an empty level ends the sweep. */
   private def sigmaSweep(seeds: DataFrame, e: DataFrame, maxHop: Int): DataFrame = {
     val seed = cut(seeds.select(col("id").as("s"), col("id").as("v"),
@@ -1490,7 +1531,8 @@ object Traversal {
     val (_, levels) = iterate[(DataFrame, List[DataFrame])](maxHop,
         converged = _._1.count() == 0, widen = true)((seed, List(seed))) {
       case ((frontier, levels), hop) =>
-        (sigmaLevel(frontier, e, levels.reduce(_ unionByName _), hop), l => (l, l :: levels))
+        val level = sigmaLevel(frontier, e, levels.reduce(_ unionByName _), hop)
+        (if (hop > maxHop) level.limit(0) else level, l => (l, l :: levels))
     }
     levels.reverse.reduce(_ unionByName _)
   }
@@ -1514,7 +1556,7 @@ object Traversal {
     * work and the hub-keyed composition stay identical to the exact
     * form. */
   def stressCentralitySampled(edges: DataFrame, maxHop: Int,
-                              sampleMod: Int): DataFrame = {
+                              sampleMod: Int): DataFrame = released {
     require(maxHop >= 1, s"stressCentralitySampled needs maxHop >= 1, got $maxHop")
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
     val e = edges.select(col("src"), col("dst")).distinct()
@@ -1573,7 +1615,7 @@ object Traversal {
     * as sequence packing. Candidate join is an equi-join on position;
     * the rejection anti-join hashes on (src, dst). No stage touches more
     * than O(E + k·V) rows. */
-  def negativeSample(edges: DataFrame, k: Int, shards: Int = 32): DataFrame = {
+  def negativeSample(edges: DataFrame, k: Int, shards: Int = 32): DataFrame = released {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.Hashing.md5Long
     require(k >= 1, s"negativeSample needs k >= 1, got $k")
@@ -1629,7 +1671,7 @@ object Traversal {
     * aggregate (map-side combinable), one per-id top-1 window — O(E)
     * join rows, O(V) state, the same per-round shape as [[kCore]]'s
     * peel; a fixed-round [[iterate]] loop keeps the lineage flat. */
-  def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = released {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1, s"labelPropagation needs rounds >= 1, got $rounds")
     val und = cut(edges.select(col("src"), col("dst"))
@@ -1700,7 +1742,7 @@ object Traversal {
     * pairs. A celebrity hub w inflates deg(w)² — cap or sample hot
     * vertices upstream (Skew.capBuckets) when the degree distribution
     * has a heavy tail. */
-  def linkPredict(edges: DataFrame, k: Int): DataFrame = {
+  def linkPredict(edges: DataFrame, k: Int): DataFrame = released {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"linkPredict needs k >= 1, got $k")
     val und = cut(edges.select(col("src"), col("dst"))
@@ -1738,7 +1780,7 @@ object Traversal {
     * O(walks·V) walker state; the per-step frames union at the end.
     * State never exceeds walks·V rows regardless of edge count —
     * frontier-sized, not edge-sized. */
-  def randomWalks(edges: DataFrame, walks: Int, len: Int): DataFrame = {
+  def randomWalks(edges: DataFrame, walks: Int, len: Int): DataFrame = released {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.Hashing.md5Long
     require(walks >= 1, s"randomWalks needs walks >= 1, got $walks")
@@ -1834,7 +1876,7 @@ object Traversal {
     * corners via one explode + hash aggregate; degrees join back.
     * Vertices of degree < 2 have no defined coefficient and are
     * excluded (c undefined, not 0). Only (a, b) id pairs ever move. */
-  def localClustering(edges: DataFrame): DataFrame = {
+  def localClustering(edges: DataFrame): DataFrame = released {
     val e = cut(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -1894,7 +1936,7 @@ object Traversal {
     * duplicate (u, v) pairs are dropped (min w kept) before any round.
     * Throws past `maxRounds` — a truncated forest is silently wrong. */
   def boruvkaMst(edges: DataFrame, maxRounds: Int = 48,
-                 smallCutoff: Long = defaultSmallCutoff): DataFrame = {
+                 smallCutoff: Long = defaultSmallCutoff): DataFrame = released {
     val spark = edges.sparkSession
     val canon = edges.select(
         least(col("src"), col("dst")).as("u"),

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Constraint-free rebuild of a (local)checkpointed DataFrame.
+/** Constraint-free rebuild of a (local)checkpointed DataFrame, plus the
+  * block bookkeeping of such frames.
   *
   * `Dataset.localCheckpoint` copies the origin plan's constraints onto the
   * resulting `LogicalRDD`, rewriting them to the new output attributes —
@@ -26,16 +28,42 @@ import org.apache.spark.sql.execution.LogicalRDD
   * technique — no Spark internals are modified).
   */
 object CheckpointUtil {
-  /** `df` must be checkpoint/RDD-backed — call directly on the result of
-    * `localCheckpoint()` / `checkpoint()`, eager or lazy. */
+  /** `df` must be the result of `localCheckpoint()` / `checkpoint()`,
+    * eager or lazy (its plan is a single `LogicalRDD`). */
   def dropConstraints(df: DataFrame): DataFrame = {
-    val classic = df.asInstanceOf[ClassicDataFrame]
-    val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    classic.queryExecution.logical match {
-      case r: LogicalRDD =>
-        ClassicDataset.ofRows(spark, LogicalRDD(r.output, r.rdd, r.outputPartitioning,
-          r.outputOrdering, r.isStreaming)(spark, Some(r.stats), None))
-      case _ => spark.internalCreateDataFrame(classic.queryExecution.toRdd, df.schema)
-    }
+    val r = logicalRdd(df)
+    val spark = df.sparkSession.asInstanceOf[ClassicSparkSession]
+    ClassicDataset.ofRows(spark, LogicalRDD(r.output, r.rdd, r.outputPartitioning,
+      r.outputOrdering, r.isStreaming)(spark, Some(r.stats), None))
   }
+
+  /** Id of the RDD behind checkpointed frame `df`. */
+  def rddId(df: DataFrame): Int = logicalRdd(df).rdd.id
+
+  /** Frees the blocks of checkpointed frame `df`; any later read of it fails. */
+  def release(df: DataFrame): Unit = logicalRdd(df).rdd.unpersist(blocking = false)
+
+  /** Ids of every RDD that computing `df` may read: the RDD leaves of its
+    * plan and, through lineage a checkpoint has not yet truncated, every
+    * RDD they depend on. A materialized checkpoint reads only its own
+    * blocks; a lazy one not yet run still reads its whole lineage. */
+  def readRdds(df: DataFrame): Set[Int] = {
+    val leaves = df.asInstanceOf[ClassicDataFrame].queryExecution.logical
+      .collectWithSubqueries { case r: LogicalRDD => r.rdd: RDD[_] }
+    val seen = scala.collection.mutable.Set.empty[Int]
+    var todo = leaves.toList
+    while (todo.nonEmpty) {
+      val rdd = todo.head
+      todo = todo.tail
+      if (seen.add(rdd.id)) todo = rdd.dependencies.map(_.rdd).toList ++ todo
+    }
+    seen.toSet
+  }
+
+  private def logicalRdd(df: DataFrame): LogicalRDD =
+    df.asInstanceOf[ClassicDataFrame].queryExecution.logical match {
+      case r: LogicalRDD => r
+      case p => throw new IllegalArgumentException(
+        s"expected a checkpointed frame (a LogicalRDD plan), got ${p.nodeName}")
+    }
 }

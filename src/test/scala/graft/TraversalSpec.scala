@@ -73,6 +73,17 @@ class TraversalSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException] {
       Traversal.bfsDepth(es, Seq(1L).toDF("id"), maxIter = 1)
     }
+    // Depth exactly an odd maxIter converges: the level past it is the
+    // emptiness witness, not a round-limit failure.
+    val star = edgesDF(Seq((1L, 2L), (1L, 3L), (1L, 4L)))
+    assert(Traversal.bfsDepth(star, Seq(1L).toDF("id"), maxIter = 1)
+      .as[(Long, Long)].collect().toMap == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    val chain = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
+    assert(Traversal.bfsDepth(chain, Seq(1L).toDF("id"), maxIter = 3)
+      .as[(Long, Long)].collect().toMap == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+    assertThrows[IllegalArgumentException] {
+      Traversal.bfsDepth(chain, Seq(1L).toDF("id"), maxIter = 2)
+    }
   }
 
   test("topoLayers: longest path wins over shortest; diamond re-relaxes; cycle throws") {
@@ -151,7 +162,7 @@ class TraversalSpec extends AnyFunSuite {
     }
   }
 
-  test("reachFix and khop plans grow linearly in rounds, not exponentially") {
+  test("reachFix plans grow linearly in rounds, not exponentially") {
     // Each round's relation is cut, so the returned frame's analyzed plan
     // is a union of one leaf per round. Caching alone (persist) skips
     // re-execution but not re-analysis: the plan then doubles per round
@@ -165,9 +176,21 @@ class TraversalSpec extends AnyFunSuite {
     // hops productive rounds plus the empty round that converges
     val rounds = hops + 1
     assert(lines(reach) <= 4 * rounds + 8, reach.queryExecution.analyzed.treeString)
-    val k = Traversal.khop(chain, Seq(0L).toDF("id"), hops)
-    assert(k.count() == hops)
-    assert(lines(k) <= 4 * hops + 8, k.queryExecution.analyzed.treeString)
+  }
+
+  test("khop and hopPower release their per-round cuts: each call leaves only its result") {
+    val sc = spark.sparkContext
+    val chain = edgesDF((0L until 6L).map(i => (i, i + 1)))
+    for (_ <- 1 to 3) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val k = Traversal.khop(chain, Seq(0L).toDF("id"), 4)
+      assert(k.count() == 4)
+      val h = Traversal.hopPower(chain, 5)
+      assert(h.as[(Long, Long)].collect().toSet == Set((0L, 5L), (1L, 6L)))
+      val results = Set(k, h).map(org.apache.spark.sql.graft.CheckpointUtil.rddId)
+      assert(sc.getPersistentRDDs.keySet.toSet -- before == results)
+      results.foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
+    }
   }
 
   /** canonical per vertex via the r4 all-pairs closure form (the shape
@@ -675,6 +698,12 @@ class TraversalSpec extends AnyFunSuite {
       edgesDF(sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)))), maxHop = 4)
       .as[(Long, Long)].collect().toMap
     assert(c == Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 2L))
+    // odd maxHop bounds the sweep: on path 1–…–5 the distance-4 pairs
+    // (1,5),(5,1) are beyond maxHop = 3 and add no stress
+    val path = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
+    val b = Traversal.stressCentrality(edgesDF(path), maxHop = 3)
+      .as[(Long, Long)].collect().toMap
+    assert(b == Map(1L -> 0L, 2L -> 4L, 3L -> 6L, 4L -> 4L, 5L -> 0L))
   }
 
   test("stressCentrality: duplicate edges do not double path counts") {

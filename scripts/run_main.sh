@@ -1,5 +1,5 @@
 #!/bin/bash
-# Run a graft main (Bench/Verify/Probe) outside sbt — same JVM flags as
+# Run a graft main (Bench/Verify/Plans) outside sbt — same JVM flags as
 # build.sbt's forked run, classpath = compiled classes + /opt/spark/jars.
 # Usage: scripts/run_main.sh graft.Bench [gate ...]
 set -euo pipefail

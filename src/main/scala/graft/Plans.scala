@@ -6,7 +6,9 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps annotated physical plans for the flagship query shapes into
   * PLANS.md — the evidence that layout/pushdown/broadcast decisions land
-  * where intended. Not part of the driver contract. */
+  * where intended. Given gate names instead, prints the formatted plans
+  * of those `SparkEntry` gates and leaves PLANS.md alone. Not part of the
+  * driver contract. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -18,6 +20,14 @@ object Plans {
 
     def plan(df: DataFrame): String =
       df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+    if (args.nonEmpty) {
+      val unknown = args.filterNot(SparkEntry.queries.keySet)
+      require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+      args.foreach(n => println(s"\n========== $n ==========\n" +
+        plan(SparkEntry.queries(n)(spark, dir))))
+      spark.stop(); return
+    }
 
     val sb = new StringBuilder
     sb ++= s"""# PLANS — annotated physical plans (sf dir: $dir)

@@ -25,23 +25,18 @@ private[graft] object GateSupport {
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     GraphBuilder.table(s, dir, name)
 
-  /** Scope a streaming gate's query to `n` shuffle partitions: shuffle
-    * count = state-store instances per stateful operator per micro-batch
-    * (a stream-stream join provisions FOUR per partition), and 32 stores
-    * for a 150k-row gate feed is pure setup overhead — real deployments
-    * size this to state volume. The conf pins at query START and is
-    * restored right after, so batch gates are unaffected. */
-  private[graft] def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** Scope runtime confs to `body`, restoring (or unsetting) each after —
-    * the withShufflePartitions pattern generalized for gates, plan dumps,
-    * and specs that need non-default knobs (RocksDB state-store provider,
-    * runtime bloom-filter thresholds, ...). The single definition serves
-    * every call site; don't re-implement the save/restore inline.
+    * for gates, plan dumps, and specs that need non-default knobs (RocksDB
+    * state-store provider, runtime bloom-filter thresholds, ...). The
+    * single definition serves every call site; don't re-implement the
+    * save/restore inline.
+    *
+    * The streaming gates scope `spark.sql.shuffle.partitions` to 8 here:
+    * shuffle count = state-store instances per stateful operator per
+    * micro-batch (a stream-stream join provisions FOUR per partition), and
+    * 32 stores for a 150k-row gate feed is pure setup overhead — real
+    * deployments size this to state volume. The conf pins at query START
+    * and is restored right after, so batch gates are unaffected.
     *
     * Scope caveat: this mutates SESSION-GLOBAL runtime confs for the
     * duration of `body` — safe only because gates/queries run serially on
@@ -90,15 +85,6 @@ private[graft] object GateSupport {
       finally walk.close()
     }
   }
-
-  /** Dev-only phase timer (graft.verbose, the Traversal.timed twin) for
-    * the streaming replay harnesses — stays silent in driver runs. */
-  @inline private[graft] def timedSw[A](label: String)(f: => A): A =
-    if (!sys.props.contains("graft.verbose")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[sw] $label%-30s ${(System.nanoTime() - t0) / 1e9}%7.2f s"); r
-    }
 
   /** Stage each frame as ONE parquet file in `inDir` with strictly
     * increasing mtimes, so a FileStreamSource with maxFilesPerTrigger=1
@@ -161,7 +147,7 @@ private[graft] object GateSupport {
     * scales with STATE size, changelog with BATCH size, exactly the
     * difference that matters at 100 TB) — and return the memory-sink
     * table. 8 shuffle partitions: state-store instances per stateful op
-    * (see [[withShufflePartitions]]). */
+    * (see [[withConfs]]). */
   private[graft] def runTwsReplayGate(s: SparkSession, prefix: String,
       batches: Seq[DataFrame], schema: org.apache.spark.sql.types.StructType,
       outputMode: String)(pipeline: DataFrame => DataFrame): DataFrame = {
@@ -169,7 +155,7 @@ private[graft] object GateSupport {
     val tmp = java.nio.file.Files.createTempDirectory(s"graft-$prefix")
     try {
       val inDir = tmp.resolve("in")
-      timedSw(s"$prefix stage feed")(stageReplayFeed(inDir, batches))
+      stageReplayFeed(inDir, batches)
       val name = s"${prefix}_out_${sinkSeq.incrementAndGet()}"
       withConfs(s,
         "spark.sql.streaming.stateStore.providerClass" ->
@@ -179,16 +165,15 @@ private[graft] object GateSupport {
         // single-sentinel gates (sw24) flush final state in the engine's
         // no-data batch — pin the default so a session override cannot
         // silently drop the watermark-driven emits
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
-        withShufflePartitions(s, 8) {
-          val stream = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          val q = timedSw(s"$prefix query start")(pipeline(stream)
-            .writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", s"$tmp/ck")
-            .outputMode(outputMode).trigger(Trigger.AvailableNow()).start())
-          timedSw(s"$prefix awaitTermination")(q.awaitTermination())
-        }
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "8") {
+        val stream = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+        val q = pipeline(stream)
+          .writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", s"$tmp/ck")
+          .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
       }
       s.table(name)
     // the memory sink holds the result rows; the replay feed and the
@@ -233,48 +218,47 @@ private[graft] object GateSupport {
         "spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true") {
-        withShufflePartitions(s, 8) {
-          def run(frames: Seq[DataFrame], startIndex: Int,
-                  expectedRows: Long): DataFrame = {
-            stageReplayFeed(inDir, frames, startIndex)
-            val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-            val out = pipeline(s.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(inDir.toString))
-            val outSchema = out.schema
-            val dataBatchDone = new java.util.concurrent.atomic.AtomicLong(-1L)
-            val q = out.writeStream
-              .foreachBatch { (df: DataFrame, id: Long) =>
-                val rows = df.collect()
-                rows.foreach(buf.add)
-                if (rows.nonEmpty) dataBatchDone.set(id)
-                ()
-              }
-              .option("checkpointLocation", s"$tmp/ck")
-              .outputMode("update").start()
-            try {
-              val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-              def overdue(what: String): Unit = require(
-                System.nanoTime() < deadline,
-                s"$prefix: $what after 120 s (${buf.size}/$expectedRows emits)")
-              while (buf.size < expectedRows) {
-                overdue("emits still short"); Thread.sleep(50)
-              }
-              // wait for a batch PAST the data batch: its construction
-              // implies the data batch committed, so stop() cannot force
-              // an at-least-once replay into the next phase
-              while (Option(q.lastProgress).forall(_.batchId <= dataBatchDone.get())) {
-                overdue("no post-data batch observed"); Thread.sleep(50)
-              }
-            } finally q.stop()
-            s.createDataFrame(s.sparkContext.parallelize(
-              buf.toArray(Array.empty[org.apache.spark.sql.Row]).toSeq, 1), outSchema)
-          }
-          val out1 = run(phase1._1, 0, phase1._2)
-          Thread.sleep(sleepMs)
-          val out2 = run(phase2._1, phase1._1.length, phase2._2)
-          (out1, out2)
+          "true",
+        "spark.sql.shuffle.partitions" -> "8") {
+        def run(frames: Seq[DataFrame], startIndex: Int,
+                expectedRows: Long): DataFrame = {
+          stageReplayFeed(inDir, frames, startIndex)
+          val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+          val out = pipeline(s.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(inDir.toString))
+          val outSchema = out.schema
+          val dataBatchDone = new java.util.concurrent.atomic.AtomicLong(-1L)
+          val q = out.writeStream
+            .foreachBatch { (df: DataFrame, id: Long) =>
+              val rows = df.collect()
+              rows.foreach(buf.add)
+              if (rows.nonEmpty) dataBatchDone.set(id)
+              ()
+            }
+            .option("checkpointLocation", s"$tmp/ck")
+            .outputMode("update").start()
+          try {
+            val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+            def overdue(what: String): Unit = require(
+              System.nanoTime() < deadline,
+              s"$prefix: $what after 120 s (${buf.size}/$expectedRows emits)")
+            while (buf.size < expectedRows) {
+              overdue("emits still short"); Thread.sleep(50)
+            }
+            // wait for a batch PAST the data batch: its construction
+            // implies the data batch committed, so stop() cannot force
+            // an at-least-once replay into the next phase
+            while (Option(q.lastProgress).forall(_.batchId <= dataBatchDone.get())) {
+              overdue("no post-data batch observed"); Thread.sleep(50)
+            }
+          } finally q.stop()
+          s.createDataFrame(s.sparkContext.parallelize(
+            buf.toArray(Array.empty[org.apache.spark.sql.Row]).toSeq, 1), outSchema)
         }
+        val out1 = run(phase1._1, 0, phase1._2)
+        Thread.sleep(sleepMs)
+        val out2 = run(phase2._1, phase1._1.length, phase2._2)
+        (out1, out2)
       }
     } finally deleteRecursively(tmp)
   }

@@ -243,7 +243,7 @@ private[graft] object GatesGraph extends GateFamily {
       // if the gate materializes rather than returning a lazy plan). The
       // deployment knob is the same conf sized to level volume; rows are
       // identical (cut() is a lineage checkpoint, not a computation).
-      withShufflePartitions(s, 8) {
+      withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
         graph.Traversal.cut(s.sql(
           """WITH RECURSIVE reach(origin, node) AS (
             |  SELECT src, dst FROM a25_edges

@@ -173,7 +173,7 @@ private[graft] object GatesGraphMetrics extends GateFamily {
       // LATENCY-bound, not data-bound — the deployment knob is the same
       // conf sized to the relation, exactly like the streaming gates'
       // state-store scoping.
-      val layered = withShufflePartitions(s, 8) {
+      val layered = withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
         graph.Traversal.topoLayers(edges)
       }
       require(graph.Traversal.topoDoublingSwitches.get() > before,

@@ -420,7 +420,7 @@ private[graft] object GatesStream extends GateFamily {
       ev.unionByName(ev.filter(col("event_id") % 3 === 0))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
       val name = s"sw11_out_${sinkSeq.incrementAndGet()}"
-      withShufflePartitions(s, 8) {
+      withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = streaming.EventPipeline.dedupStream(
             s.readStream.schema(ev.schema).parquet(s"$tmp/in"), "1 hour")
           .writeStream.format("memory").queryName(name)
@@ -486,7 +486,7 @@ private[graft] object GatesStream extends GateFamily {
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
       val name = s"sw15_out_${sinkSeq.incrementAndGet()}"
-      withShufflePartitions(s, 8) {
+      withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = streaming.EventPipeline.sessionize(
             stream.as[streaming.EventPipeline.SessionEvent], gapMs)
           .toDF()
@@ -523,8 +523,8 @@ private[graft] object GatesStream extends GateFamily {
       val name = s"sw12_out_${sinkSeq.incrementAndGet()}"
       // A stream-stream join provisions FOUR state stores per shuffle
       // partition; at this volume store setup dominates the join
-      // (see GateSupport.withShufflePartitions).
-      withShufflePartitions(s, 8) {
+      // (see GateSupport.withConfs).
+      withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = joined.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", s"$tmp/ck")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -573,7 +573,7 @@ private[graft] object GatesStream extends GateFamily {
           .toDF("id", "label", "key", "props"),
         Seq.empty[(Long, Long, String, Int)].toDF("src", "dst", "label", "weight"))
       val state = new streaming.EventPipeline.GraphState(empty)
-      withShufflePartitions(s, 8) {
+      withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1") // force the replay into its own batch
           .parquet(s"$tmp/in/*")
@@ -605,7 +605,7 @@ private[graft] object GatesStream extends GateFamily {
       ev.filter(col("event_id") % 2 =!= 0).coalesce(1).write.parquet(s"$tmp/in/b2")
       val state = new streaming.EventPipeline.CmState(
         Seq.empty[(Int, Long, Long)].toDF("r", "b", "c"))
-      withShufflePartitions(s, 8) {
+      withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
         val q = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$tmp/in/*")
@@ -685,12 +685,10 @@ private[graft] object GatesStream extends GateFamily {
       // (the no-data batch is part of the engine's termination contract:
       // AvailableNow only stops once no stateful op requests another
       // batch).
-      timedSw(s"$prefix stage feeds") {
-        stageReplayFeed(cDir, Seq(clicks,
-          Seq((-1L, sentTs(10))).toDF("user_id", "ts")))
-        stageReplayFeed(bDir, Seq(buys,
-          Seq((-1L, sentTs(10), 0.0)).toDF("user_id", "ts", "value")))
-      }
+      stageReplayFeed(cDir, Seq(clicks,
+        Seq((-1L, sentTs(10))).toDF("user_id", "ts")))
+      stageReplayFeed(bDir, Seq(buys,
+        Seq((-1L, sentTs(10), 0.0)).toDF("user_id", "ts", "value")))
     } finally ev.unpersist()
     val joined = streaming.EventPipeline.clickAttribution(
       s.readStream.schema(clicks.schema).option("maxFilesPerTrigger", "1").parquet(cDir.toString),
@@ -704,20 +702,12 @@ private[graft] object GatesStream extends GateFamily {
     // (unlike the TWS gates, whose state-v2 API requires it). Default
     // provider kept; at deployment state volume the trade reverses with
     // state size, not with this code.
-    withConfs(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
-      withShufflePartitions(s, 8) {
-        val q = timedSw(s"$prefix query start")(
-          joined.writeStream.format("memory").queryName(name)
-            .option("checkpointLocation", s"$tmp/ck")
-            .outputMode("append").trigger(Trigger.AvailableNow()).start())
-        timedSw(s"$prefix awaitTermination")(q.awaitTermination())
-        // dev-only micro-batch anatomy (the VERDICT item-2 phase table):
-        // durationMs names where each batch went — addBatch vs the
-        // offset/commit-log bookkeeping
-        if (sys.props.contains("graft.verbose"))
-          q.recentProgress.foreach(p =>
-            println(s"[sw] $prefix batch=${p.batchId} rows=${p.numInputRows} ${p.durationMs}"))
-      }
+    withConfs(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "8") {
+      val q = joined.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$tmp/ck")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
     }
     s.table(name).filter(col("user_id") >= 0)
       .select(col("user_id"), col("click_ts"), col("purchase_ts"), col("value"))

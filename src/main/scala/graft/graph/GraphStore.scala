@@ -39,10 +39,4 @@ object GraphStore {
       g.edges.count()
       g
     })
-
-  /** Drop the cached graph for `dir` (test hygiene). */
-  def invalidate(dir: String): Unit =
-    cache.remove(dir).foreach { g =>
-      g.vertices.unpersist(false); g.edges.unpersist(false)
-    }
 }

@@ -211,8 +211,9 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   // ---------------------------------------------------------------- A13 / A14
 
   /** True when the stored edges are already cached (e.g. via
-    * [[GraphStore]]) — traversals then skip their own edge prep. */
-  private def edgesCached: Boolean =
+    * [[GraphStore]]) — traversals over them, or over narrow derivations
+    * of them (filters, broadcast anti-joins), then skip their own edge prep. */
+  private[graft] def edgesCached: Boolean =
     edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
 
   /** A13 — bounded k-hop traversal (see [[Traversal.khop]]).

@@ -66,13 +66,6 @@ object GremlinLite {
     * log₂ n cache writes vs n straight hop joins). */
   private val RepeatDoublingMin = 8
 
-  /** True when the graph's edges are a cached frame (the GraphStore
-    * layout: src-hash-partitioned + sorted + persisted) — traversals over
-    * them or over narrow derivations (filters, broadcast anti-joins) skip
-    * their own edge prep, the PropertyGraph.edgesCached discipline. */
-  private def cachedEdges(g: PropertyGraph): Boolean =
-    g.edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-
   /** Apply a typed mutation script — the reference's console statement
     * shapes (`g.addV('l').property(...)`, lookup-bind + `addE`,
     * main.go:205-211/310-322, README.md:331-340) plus
@@ -98,10 +91,7 @@ object GremlinLite {
     var cur = g
     val buf = new StringBuilder
     def flush(): Unit = if (buf.nonEmpty) {
-      // Managed form: both batches are materialized inside this flush, so
-      // the loader's parse cache can be released immediately — the plain
-      // form leaked one cached dataset per drop() into session storage.
-      val (pv, pe, parsed) = graft.sources.GroovyLoader.parsedBatchesManaged(
+      val (pv, pe) = graft.sources.GroovyLoader.parsedBatches(
         Seq(buf.toString).toDS(), keyProps)
       cur = cur.upsertVertices(
         graft.sources.GroovyLoader.vertexBatch(pv).localCheckpoint())
@@ -149,7 +139,6 @@ object GremlinLite {
             s"exactly one vertex; Gremlin .next() on an empty traversal throws — so do we)")
         cur = cur.upsertEdges(full.drop("__stmt"))
       }
-      parsed.unpersist(false)
       buf.setLength(0)
     }
     script.linesIterator.foreach { line =>
@@ -414,7 +403,7 @@ object GremlinLite {
                 // on the flagship walk); per-level re-evaluation of the
                 // anti is a cheap scan of cached blocks.
                 val onward = Traversal.bfsDepth(ePrime, contStart,
-                    prepEdges = !cachedEdges(g)).select(col("id"))
+                    prepEdges = !g.edgesCached).select(col("id"))
                 val visited = s1.unionByName(onward).distinct()
                 if (emitAll) visited
                 else visited.join(stopIds, Seq("id"), "left_semi")
@@ -424,7 +413,7 @@ object GremlinLite {
                 val s1 = startIds.join(step, col("id") === col("src"))
                   .select(col("dst").as("id")).distinct()
                 Traversal.bfsDepth(step, s1,
-                  prepEdges = !cachedEdges(g)).select(col("id"))
+                  prepEdges = !g.edgesCached).select(col("id"))
             }
             cur = endIds.select(col("id").as("__end"))
               .join(g.vertices.as("v"), col("__end") === col("v.id"))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing.md5Long
-import graft.graph.GraphBuilder
+import graft.graph.{GraphBuilder, Traversal}
 
 /** Ingests the reference's interchange artifact — Groovy upsert scripts —
   * back into set-semantics vertex/edge batches.
@@ -135,26 +135,18 @@ object GroovyLoader {
 
   /** Distributed parse only — batches still in (label, prop, key) lookup
     * form. One task per chunk. [[load]] stamps ids; `GremlinLite.mutate`
-    * instead resolves edge endpoints against an existing graph. */
+    * instead resolves edge endpoints against an existing graph. Both
+    * batches read ONE parse: a lazy lineage cut that materializes inside
+    * the first consuming job and registers nothing in the session's
+    * CacheManager — its blocks go with the batches once those are
+    * unreferenced (ContextCleaner), so no caller has a handle to release. */
   def parsedBatches(scripts: Dataset[String], keyProps: Map[String, String])
   : (Dataset[ParsedVertex], Dataset[ParsedEdge]) = {
-    val (pv, pe, _) = parsedBatchesManaged(scripts, keyProps)
-    (pv, pe)
-  }
-
-  /** As [[parsedBatches]], but also hands back the persisted parse
-    * intermediate so a caller that MATERIALIZES both batches (e.g.
-    * `GremlinLite.mutate`, which localCheckpoints them per flush) can
-    * unpersist it — otherwise each flush leaks one cached dataset into
-    * session storage for the life of the session. Callers that consume
-    * the batches lazily (e.g. [[load]]) must keep it cached: the batches'
-    * lineage runs through it, and unpersisting early re-parses per sink. */
-  def parsedBatchesManaged(scripts: Dataset[String], keyProps: Map[String, String])
-  : (Dataset[ParsedVertex], Dataset[ParsedEdge], Dataset[(Seq[ParsedVertex], Seq[ParsedEdge])]) = {
     val spark = scripts.sparkSession
     import spark.implicits._
-    val parsed = scripts.map(t => parseScript(t, keyProps)).persist()
-    (parsed.flatMap(_._1), parsed.flatMap(_._2), parsed)
+    val parsed = Traversal.cut(scripts.map(t => parseScript(t, keyProps)).toDF(), eager = false)
+      .as[(Seq[ParsedVertex], Seq[ParsedEdge])]
+    (parsed.flatMap(_._1), parsed.flatMap(_._2))
   }
 
   /** Vertex batch with deterministic ids stamped. */

@@ -25,6 +25,10 @@ class GateCoverageSpec extends AnyFunSuite {
       s"gate(s) with neither oracle nor allowlist entry: ${unverified.toSeq.sorted.mkString(", ")}")
   }
 
+  test("SparkEntry.entry returns rows on sf0.001 (the driver's smoke contract)") {
+    assert(SparkEntry.entry(TestSpark.spark).count() > 0)
+  }
+
   test("every Bench headline entry names a real gate (silent drops otherwise)") {
     val ghosts = Bench.headline.filterNot(SparkEntry.queries.keySet)
     assert(ghosts.isEmpty, s"headline names missing gates: ${ghosts.mkString(", ")}")

@@ -88,6 +88,21 @@ class GroovyLoaderSpec extends AnyFunSuite {
     assert(ids("007") != ids("7")) // '007' takes the md5 path, not vid(7)
   }
 
+  test("load() parses once and registers nothing in the session's CacheManager") {
+    import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
+    import org.apache.spark.sql.graft.CheckpointUtil.readRdds
+    // The suites share one session: start from an empty CacheManager so
+    // whatever earlier suites cached cannot mask (or fake) a leak.
+    val cm = spark.asInstanceOf[ClassicSparkSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    val (v, e) = GroovyLoader.load(Seq(script).toDS(), GroovyLoader.ReferenceKeyProps)
+    assert(v.count() == 3 && e.count() == 1)
+    assert(cm.isEmpty, "load left a CacheManager entry behind")
+    // One parse: the script input is a local relation, so the only RDD
+    // both batches can share is the parse they both read.
+    assert((readRdds(v) & readRdds(e)).nonEmpty, "vertex and edge batches parse separately")
+  }
+
   test("render -> parse -> upsert twice == once (idempotent round trip)") {
     val rendered = Seq(3, 4).map(k =>
       s"""if (g.V().hasLabel('region').has('rkey','$k').hasNext() == false) {

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.CheckpointUtil
 
 object Bench {
 
@@ -70,8 +71,11 @@ object Bench {
     graph.GraphStore.get(spark, sfDir)
 
     // A failed query times as -1 so it can never flatter the total; the
-    // final JSON carries the failed names explicitly.
+    // final JSON carries the failed names explicitly. A query that leaves
+    // CacheManager entries behind fails too: the store's two are the only
+    // long-lived state a query may find.
     def run(name: String): Double = {
+      val before = CheckpointUtil.cachedEntries(spark)
       val t0 = System.nanoTime()
       val ok =
         try { SparkEntry.queries(name)(spark, sfDir).count(); true }
@@ -79,7 +83,11 @@ object Bench {
           Console.err.println(s"BENCH FAIL $name: ${t.getClass.getSimpleName}: ${t.getMessage}")
           false
         }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      val secs = (System.nanoTime() - t0) / 1e9
+      val leaked = CheckpointUtil.cachedEntries(spark) - before
+      if (leaked > 0)
+        Console.err.println(s"BENCH FAIL $name: left $leaked CacheManager entries behind")
+      if (ok && leaked <= 0) secs else -1.0
     }
 
     // Optional args: bench only the named queries (dev-mode adjudication

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.CheckpointUtil
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,13 +20,28 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // Load the graph store first: its two persisted frames are the only
+    // CacheManager entries a gate may find, and none may be left behind.
+    graph.GraphStore.get(spark, sfDir)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      val before = CheckpointUtil.cachedEntries(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      // Leak guard: a gate that leaves cache entries behind fails — its
+      // output is emptied, so the parity check reports it.
+      val leaked = CheckpointUtil.cachedEntries(spark) - before
+      if (leaked > 0) {
+        System.err.println(s"[verify] $name failed: left $leaked CacheManager " +
+          "entries behind")
+        val d = Paths.get(s"$outDir/$name")
+        if (Files.exists(d))
+          Files.walk(d).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+        Files.createDirectories(d)
       }
     }
     // Cap-precondition audit: the dedup/similarity oracles mirror the

@@ -60,7 +60,7 @@ private[graft] object GateSupport {
     * driver rows, rebuild via createDataFrame. For gates whose plan must
     * run inside a scope that is gone by the time Verify consumes the
     * returned DataFrame (conf overrides via [[withConfs]], temp dirs the
-    * finally deletes). Unlike `localCheckpoint()` — the r15 shape — the
+    * finally deletes). Unlike a [[Cuts.cut]] — the r15 shape — the
     * rebuilt frame pins nothing in the block manager, so a gated run
     * leaves no cached blocks behind (r15 ADVICE on o5). Only for
     * aggregate-sized results: the collect is driver-memory-bound. */

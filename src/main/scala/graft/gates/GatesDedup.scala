@@ -321,15 +321,14 @@ private[graft] object GatesDedup extends GateFamily {
     // says whether 8 hashes are enough for this corpus.
     "d_minhash_estimate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // LAZY localCheckpoint (optimization round 17): the signature feeds
+      // LAZY cut (optimization round 17): the signature feeds
       // BOTH sides of the self-join below, and without the cut each side
       // re-pays the full shingle + 8×md5-per-shingle pass (the gate's
       // dominant compute — measured ~3.2 s, two signature subtrees in the
       // plan). Lazily checkpointed, it materializes once inside the
       // gate's single action; blocks release with the frame.
-      val sig = operators.Dedup.minhashSignature(docs, "text", k = 8)
-        .select(col("doc_id") +: (1 to 8).map(i => col(s"h$i")): _*)
-        .localCheckpoint(false)
+      val sig = Cuts.cut(operators.Dedup.minhashSignature(docs, "text", k = 8)
+        .select(col("doc_id") +: (1 to 8).map(i => col(s"h$i")): _*), eager = false)
       val a = sig.toDF("id_a" +: (1 to 8).map(i => s"a$i"): _*)
       val b = sig.toDF("id_b" +: (1 to 8).map(i => s"b$i"): _*)
       val matches = (1 to 8).map(i =>

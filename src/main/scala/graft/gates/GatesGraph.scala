@@ -244,7 +244,7 @@ private[graft] object GatesGraph extends GateFamily {
       // deployment knob is the same conf sized to level volume; rows are
       // identical (cut() is a lineage checkpoint, not a computation).
       withConfs(s, "spark.sql.shuffle.partitions" -> "8") {
-        graph.Traversal.cut(s.sql(
+        Cuts.cut(s.sql(
           """WITH RECURSIVE reach(origin, node) AS (
             |  SELECT src, dst FROM a25_edges
             |  UNION ALL

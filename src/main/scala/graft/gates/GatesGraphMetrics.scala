@@ -119,7 +119,7 @@ private[graft] object GatesGraphMetrics extends GateFamily {
         (lit(2L * B) + col("n_nationkey")).as("src"),
         (lit(1L * B) + col("n_regionkey")).as("dst"))
       val e = sn.unionByName(nring).unionByName(nr)
-      val comp = graph.Traversal.scc(e).localCheckpoint()
+      val comp = Cuts.cut(graph.Traversal.scc(e))
       val ce = e
         .join(comp.select(col("id").as("src"), col("component").as("csrc")),
           Seq("src"))

@@ -318,14 +318,13 @@ private[graft] object GatesQuality extends GateFamily {
       // per-micro-batch partial counts the same way (sw14's pattern).
       // One md5 per key; buckets are disjoint 10-bit fields and signs
       // disjoint single bits of the same 60-bit value.
-      // localCheckpoint: the tiny per-key table feeds 7 branches (3 cell
+      // cut: the tiny per-key table feeds 7 branches (3 cell
       // selects, top, 3 probe selects) — uncut, EACH replays the corpus
       // aggregate (measured 14.9 s at sf1; cut: one corpus pass)
-      val counted = t(s, dir, "lineitem")
+      val counted = Cuts.cut(t(s, dir, "lineitem")
         .select(col("l_suppkey").cast("string").as("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("exact"))
-        .withColumn("h", functions.Hashing.md5Long(col("k")))
-        .localCheckpoint()
+        .withColumn("h", functions.Hashing.md5Long(col("k"))))
       def hb(i: Int) = shiftright(col("h"), 10 * (i - 1)) % w
       def sg(i: Int) = when(
         shiftright(col("h"), 40 + i) % 2 === 0, 1L).otherwise(-1L)

@@ -81,20 +81,20 @@ private[graft] object GatesStream extends GateFamily {
     // The update-mode memory sink accumulates every emit; the latest emit
     // per user (max cnt — strictly increasing) equals the batch groupBy,
     // which is the oracle. State is O(users) however long the stream runs.
-    "sw23_stream_tws_totals" -> ((s, dir) => {
+    "sw23_stream_tws_totals" -> ((s, dir) => Cuts.released {
       import s.implicits._
-      val base = events(s, dir).select(col("event_id"), col("user_id"),
-        cents(col("value")).as("cents"))
+      // cut: three filtered stage writes — scan events once
+      val base = Cuts.cut(events(s, dir).select(col("event_id"), col("user_id"),
+        cents(col("value")).as("cents")), eager = false)
       val feed = base.select(col("user_id"), col("cents"))
-      base.persist() // three filtered stage writes — scan events once
-      val out = try runTwsReplayGate(s, "sw23",
+      val out = runTwsReplayGate(s, "sw23",
         (0 until 3).map { i =>
           base.filter(pmod(col("event_id"), lit(3)) === i)
             .select(col("user_id"), col("cents"))
         }, feed.schema, "update") { stream =>
         streaming.EventPipeline.runningTotals(
           stream.as[streaming.EventPipeline.TwsEvent]).toDF()
-      } finally base.unpersist()
+      }
       out.groupBy(col("user_id"))
         .agg(max(struct(col("cnt"), col("sum_cents"))).as("r"))
         .select(col("user_id"), col("r.cnt").as("cnt"),
@@ -108,32 +108,30 @@ private[graft] object GatesStream extends GateFamily {
     // sentinel-driven watermark advance (the timers fire on watermark
     // alone — no new rows for a user needed), same batch gaps-and-islands
     // oracle as sw15, row for row.
-    "sw24_stream_tws_sessionize" -> ((s, dir) => {
+    "sw24_stream_tws_sessionize" -> ((s, dir) => Cuts.released {
       import s.implicits._
       val gapMs = 1800L * 1000
       // ms truncation on the input: session state runs on epoch millis,
       // and the oracle truncates identically
-      val ev = events(s, dir)
+      // cut: the maxTs aggregate AND the b0 stage both read it
+      val ev = Cuts.cut(events(s, dir)
         .withColumn("ts", expr("timestamp_millis(unix_millis(ts))"))
-        .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
-      ev.persist() // the maxTs aggregate AND the b0 stage both read it
-      val out = try {
-        val maxTs = ev.agg(max(col("ts"))).as[java.sql.Timestamp].head()
-        def sentinel(days: Int) = Seq((-1L,
-          new java.sql.Timestamp(maxTs.getTime + days * 86400000L))).toDF("user_id", "ts")
-        // ONE sentinel batch (optimization round 17; was two): the
-        // sentinel advances the watermark past every session's close; the
-        // batch that fires the event-time timers with it is the engine's
-        // no-data batch (noDataMicroBatches, default on — a stateful op
-        // whose watermark advanced requests one more batch before
-        // AvailableNow may terminate). Same mechanism as the sw18/sw29
-        // attribution sides; parity green on repeated runs.
-        runTwsReplayGate(s, "sw24",
-          Seq(ev, sentinel(10)), ev.schema, "append") { stream =>
-          streaming.EventPipeline.sessionizeTws(
-            stream.as[streaming.EventPipeline.SessionEvent], gapMs).toDF()
-        }
-      } finally ev.unpersist()
+        .select(col("user_id"), col("ts").cast("timestamp").as("ts")), eager = false)
+      val maxTs = ev.agg(max(col("ts"))).as[java.sql.Timestamp].head()
+      def sentinel(days: Int) = Seq((-1L,
+        new java.sql.Timestamp(maxTs.getTime + days * 86400000L))).toDF("user_id", "ts")
+      // ONE sentinel batch (optimization round 17; was two): the
+      // sentinel advances the watermark past every session's close; the
+      // batch that fires the event-time timers with it is the engine's
+      // no-data batch (noDataMicroBatches, default on — a stateful op
+      // whose watermark advanced requests one more batch before
+      // AvailableNow may terminate). Same mechanism as the sw18/sw29
+      // attribution sides; parity green on repeated runs.
+      val out = runTwsReplayGate(s, "sw24",
+        Seq(ev, sentinel(10)), ev.schema, "append") { stream =>
+        streaming.EventPipeline.sessionizeTws(
+          stream.as[streaming.EventPipeline.SessionEvent], gapMs).toDF()
+      }
       out.filter(col("user_id") >= 0)
         .select(col("user_id"), col("start").as("session_start"),
           col("end").as("session_end"), col("n_events"))
@@ -147,19 +145,20 @@ private[graft] object GatesStream extends GateFamily {
     // mod 3, so users recur ACROSS batches and only the membership probe
     // keeps the count exact. Latest emit per type (max — the count is
     // non-decreasing) equals batch count(DISTINCT), the oracle.
-    "sw25_stream_tws_distinct" -> ((s, dir) => {
+    "sw25_stream_tws_distinct" -> ((s, dir) => Cuts.released {
       import s.implicits._
-      val base = events(s, dir).select(col("event_id"), col("event_type"), col("user_id"))
+      // cut: three filtered stage writes — scan events once
+      val base = Cuts.cut(events(s, dir).select(col("event_id"), col("event_type"),
+        col("user_id")), eager = false)
       val feed = base.select(col("event_type"), col("user_id"))
-      base.persist() // three filtered stage writes — scan events once
-      val out = try runTwsReplayGate(s, "sw25",
+      val out = runTwsReplayGate(s, "sw25",
         (0 until 3).map { i =>
           base.filter(pmod(col("event_id"), lit(3)) === i)
             .select(col("event_type"), col("user_id"))
         }, feed.schema, "update") { stream =>
         streaming.EventPipeline.distinctUsers(
           stream.as[streaming.EventPipeline.TypedEvent]).toDF()
-      } finally base.unpersist()
+      }
       out.groupBy(col("event_type"))
         .agg(max(col("n_users")).as("n_users"))
     }),
@@ -174,20 +173,20 @@ private[graft] object GatesStream extends GateFamily {
     // (which is out-of-order-safe, see RecentKProcessor) keeps the
     // window exact. Latest emit per user (max cnt — strictly increasing)
     // must equal the batch window: top-5 by (µs, event_id) descending.
-    "sw26_stream_tws_lastk" -> ((s, dir) => {
+    "sw26_stream_tws_lastk" -> ((s, dir) => Cuts.released {
       import s.implicits._
-      val base = events(s, dir).select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("us"), col("event_type"))
+      // cut: three filtered stage writes — scan events once
+      val base = Cuts.cut(events(s, dir).select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("us"), col("event_type")), eager = false)
       val feed = base.select(col("user_id"), col("us"), col("event_id"), col("event_type"))
-      base.persist() // three filtered stage writes — scan events once
-      val out = try runTwsReplayGate(s, "sw26",
+      val out = runTwsReplayGate(s, "sw26",
         (0 until 3).map { i =>
           base.filter(pmod(col("event_id"), lit(3)) === i)
             .select(col("user_id"), col("us"), col("event_id"), col("event_type"))
         }, feed.schema, "update") { stream =>
         streaming.EventPipeline.recentK(
           stream.as[streaming.EventPipeline.SeqEvent], k = 5).toDF()
-      } finally base.unpersist()
+      }
       out.groupBy(col("user_id"))
         .agg(max(struct(col("cnt"), col("recent"))).as("r"))
         .select(col("user_id"), col("r.cnt").as("cnt"), col("r.recent").as("recent"))
@@ -211,20 +210,20 @@ private[graft] object GatesStream extends GateFamily {
     // differential control (same harness, same sleep, TTL disabled →
     // counts DO accumulate) runs in StreamingSpec, proving the sleep
     // itself isn't what resets the counts.
-    "sw28_stream_tws_ttl" -> ((s, dir) => {
+    "sw28_stream_tws_ttl" -> ((s, dir) => Cuts.released {
       import s.implicits._
-      val base = events(s, dir).select(col("event_id"), col("user_id"))
+      // cut: two filtered stage writes + two counts — scan events once
+      val base = Cuts.cut(events(s, dir).select(col("event_id"), col("user_id")), eager = false)
       val feed = base.select(col("user_id"))
-      base.persist() // two filtered stage writes + two counts — scan events once
       def half(i: Int) =
         base.filter(pmod(col("event_id"), lit(2)) === i).select(col("user_id"))
-      val (out1, out2) = try runTwsTwoPhaseReplay(s, "sw28",
+      val (out1, out2) = runTwsTwoPhaseReplay(s, "sw28",
         (Seq(half(0)), half(0).distinct().count()),
         (Seq(half(1)), half(1).distinct().count()),
         feed.schema, sleepMs = 1500L) { stream =>
         streaming.EventPipeline.ttlCounts(
           stream.as[streaming.EventPipeline.KeyOnlyEvent], ttlMs = 600L).toDF()
-      } finally base.unpersist()
+      }
       out1.withColumn("phase", lit(1))
         .unionByName(out2.withColumn("phase", lit(2)))
         .select(col("user_id"), col("phase"), col("cnt"))
@@ -462,27 +461,25 @@ private[graft] object GatesStream extends GateFamily {
     // batch gaps-and-islands twin, the oracle. State per user is the
     // open-session list, evicted on close: bounded by concurrency,
     // never O(stream).
-    "sw15_stream_sessionize" -> ((s, dir) => {
+    "sw15_stream_sessionize" -> ((s, dir) => Cuts.released {
       import org.apache.spark.sql.streaming.Trigger
       import s.implicits._
       val gapMs = 1800L * 1000
       // ms truncation on the input: sessionize state runs on epoch
-      // millis, and the oracle truncates identically
-      val ev = events(s, dir)
+      // millis, and the oracle truncates identically; cut: the maxTs
+      // aggregate AND the b0 stage both read it
+      val ev = Cuts.cut(events(s, dir)
         .withColumn("ts", expr("timestamp_millis(unix_millis(ts))"))
-        .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
+        .select(col("user_id"), col("ts").cast("timestamp").as("ts")), eager = false)
       val tmp = java.nio.file.Files.createTempDirectory("graft-sw15").toString
-      ev.persist() // the maxTs aggregate AND the b0 stage both read it
       val inDir = java.nio.file.Paths.get(tmp, "in")
-      try {
-        val maxTs = ev.agg(max(col("ts"))).as[java.sql.Timestamp].head()
-        def sentinel(days: Int) = Seq((-1L,
-          new java.sql.Timestamp(maxTs.getTime + days * 86400000L))).toDF("user_id", "ts")
-        // ONE sentinel batch (optimization round 17; was two) — the
-        // no-data batch fires the event-time timeouts once the sentinel
-        // advanced the watermark; see sw24/the attribution gates.
-        stageReplayFeed(inDir, Seq(ev, sentinel(10)))
-      } finally ev.unpersist()
+      val maxTs = ev.agg(max(col("ts"))).as[java.sql.Timestamp].head()
+      def sentinel(days: Int) = Seq((-1L,
+        new java.sql.Timestamp(maxTs.getTime + days * 86400000L))).toDF("user_id", "ts")
+      // ONE sentinel batch (optimization round 17; was two) — the
+      // no-data batch fires the event-time timeouts once the sentinel
+      // advanced the watermark; see sw24/the attribution gates.
+      stageReplayFeed(inDir, Seq(ev, sentinel(10)))
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
       val name = s"sw15_out_${sinkSeq.incrementAndGet()}"
@@ -656,40 +653,37 @@ private[graft] object GatesStream extends GateFamily {
     * comment at the staging site). Sentinel rows carry user_id −1 and
     * are filtered from the result. */
   private def attributionGate(s: SparkSession, dir: String,
-                              prefix: String, joinType: String): DataFrame = {
+                              prefix: String, joinType: String): DataFrame = Cuts.released {
     import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
-    val ev = events(s, dir)
+    // cut: one events scan feeds the maxTs aggregate and both side stages
+    // (was 3 scans + 6 write jobs; each side now stages in ONE
+    // stageReplayFeed job, data + the two watermark sentinels)
+    val ev = Cuts.cut(events(s, dir), eager = false)
     val tmp = java.nio.file.Files.createTempDirectory(s"graft-$prefix").toString
     val clicks = ev.filter(col("event_type") === "click").select(col("user_id"), col("ts"))
     val buys = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("value"))
     val cDir = java.nio.file.Paths.get(tmp, "clicks")
     val bDir = java.nio.file.Paths.get(tmp, "buys")
-    // one events scan feeds the maxTs aggregate and both side stages
-    // (was 3 scans + 6 write jobs; each side now stages in ONE
-    // stageReplayFeed job, data + the two watermark sentinels)
-    ev.persist()
-    try {
-      val maxTs = ev.agg(max(col("ts"))).as[java.sql.Timestamp].head()
-      def sentTs(days: Int) = new java.sql.Timestamp(maxTs.getTime + days * 86400000L)
-      // ONE sentinel batch per side (optimization round 17; was two): the
-      // sentinel advances the watermark past every click's deadline, and
-      // the batch that EVICTS with that watermark is the no-data batch
-      // MicroBatchExecution appends when a stateful op's
-      // shouldRunAnotherBatch sees the advanced watermark
-      // (spark.sql.streaming.noDataMicroBatches.enabled, default true —
-      // pinned here so a session-level override can't silently drop the
-      // outer rows). Drops one staged file, one micro-batch and one
-      // state-store load cycle per side; parity green on repeated runs
-      // (the no-data batch is part of the engine's termination contract:
-      // AvailableNow only stops once no stateful op requests another
-      // batch).
-      stageReplayFeed(cDir, Seq(clicks,
-        Seq((-1L, sentTs(10))).toDF("user_id", "ts")))
-      stageReplayFeed(bDir, Seq(buys,
-        Seq((-1L, sentTs(10), 0.0)).toDF("user_id", "ts", "value")))
-    } finally ev.unpersist()
+    val maxTs = ev.agg(max(col("ts"))).as[java.sql.Timestamp].head()
+    def sentTs(days: Int) = new java.sql.Timestamp(maxTs.getTime + days * 86400000L)
+    // ONE sentinel batch per side (optimization round 17; was two): the
+    // sentinel advances the watermark past every click's deadline, and
+    // the batch that EVICTS with that watermark is the no-data batch
+    // MicroBatchExecution appends when a stateful op's
+    // shouldRunAnotherBatch sees the advanced watermark
+    // (spark.sql.streaming.noDataMicroBatches.enabled, default true —
+    // pinned here so a session-level override can't silently drop the
+    // outer rows). Drops one staged file, one micro-batch and one
+    // state-store load cycle per side; parity green on repeated runs
+    // (the no-data batch is part of the engine's termination contract:
+    // AvailableNow only stops once no stateful op requests another
+    // batch).
+    stageReplayFeed(cDir, Seq(clicks,
+      Seq((-1L, sentTs(10))).toDF("user_id", "ts")))
+    stageReplayFeed(bDir, Seq(buys,
+      Seq((-1L, sentTs(10), 0.0)).toDF("user_id", "ts", "value")))
     val joined = streaming.EventPipeline.clickAttribution(
       s.readStream.schema(clicks.schema).option("maxFilesPerTrigger", "1").parquet(cDir.toString),
       s.readStream.schema(buys.schema).option("maxFilesPerTrigger", "1").parquet(bDir.toString),

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Cuts
 import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -100,7 +101,7 @@ object GraphXBridge {
     // their edge subtree is two dimension scans). deg/verts stay lazy:
     // each is one cheap step over the checkpoint, and cutting them too
     // just adds eager-job latency (measured +0.1 s on x4's tiny graph).
-    val e = Traversal.cut(edges.select(col("src"), col("dst")).distinct())
+    val e = Cuts.cut(edges.select(col("src"), col("dst")).distinct())
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val verts = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
@@ -175,10 +176,10 @@ object GraphXBridge {
     * keep the loop's lineage flat. */
   def hitsFixed(edges: DataFrame, iters: Int = 2): DataFrame = {
     require(iters >= 1, s"hitsFixed needs iters >= 1, got $iters")
-    val e = Traversal.cut(edges.select(col("src"), col("dst")).distinct())
+    val e = Cuts.cut(edges.select(col("src"), col("dst")).distinct())
     // cut: the vertex set left-joins into every half-step — uncut it
     // would re-run the distinct-union 2·iters times
-    val verts = Traversal.cut(e.select(col("src").as("id"))
+    val verts = Cuts.cut(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
     // The raw half-step (join + sum — the expensive subtree) is cut
     // BEFORE normalizing: maxNorm reads it twice (main input + the
@@ -186,7 +187,7 @@ object GraphXBridge {
     // shuffle work. The normalized frame itself stays lazy — it is a
     // cheap projection over the checkpoint.
     def maxNorm(raw0: DataFrame, out: String): DataFrame = {
-      val raw = Traversal.cut(raw0)
+      val raw = Cuts.cut(raw0)
       raw.crossJoin(broadcast(raw.agg(max(col("raw")).as("__mx"))))
         .select(col("id"), expr(s"raw * 1000000L div greatest(__mx, 1L)").as(out))
     }

@@ -1,12 +1,8 @@
 package graft.graph
 
+import graft.Cuts.{cut, released}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointUtil
-import org.apache.spark.storage.StorageLevel
-
-import scala.collection.mutable
-import scala.util.control.NonFatal
 
 /** Distributed traversal engine — the Spark-native replacement for the
   * reference's two traversal mechanisms:
@@ -29,7 +25,7 @@ import scala.util.control.NonFatal
   * [[iterate]] (the Pregelix shape: each superstep is the same dataflow,
   * a state relation joined with the edges; only the step differs). The
   * driver owns the four per-loop decisions:
-  *   - the cut: each round's new relation is [[cut]] exactly once,
+  *   - the cut: each round's new relation is [[graft.Cuts.cut]] exactly once,
   *     LAZILY — it materializes inside the round's convergence probe, so
   *     a round costs one job, and every logical plan stays O(rounds)
   *     leaves deep instead of re-analysing the whole lineage each round;
@@ -41,72 +37,26 @@ import scala.util.control.NonFatal
   *     state to the algorithm's `atLimit`, which throws its own loud error
   *     (a truncated fixpoint is a wrong answer) or, for fixed-round
   *     sweeps, returns the state;
-  *   - release: loop-scoped persisted inputs are unpersisted when the
-  *     loop ends, whether it converged or threw; and every public
-  *     algorithm runs inside [[released]], so when it returns, each frame
-  *     it cut that its result does not read (superseded rounds, the
-  *     per-round frames under a final eager cut) is unpersisted at once
-  *     instead of waiting for the ContextCleaner — repeated calls leave
-  *     no residue in executor storage.
+  *   - release: every public algorithm runs inside [[graft.Cuts.released]],
+  *     and every frame it materializes (loop inputs such as the prepped
+  *     edge layout, and each round) is a [[graft.Cuts.cut]]; so when it
+  *     returns or throws, each cut its result does not read (superseded
+  *     rounds, loop inputs under a final eager cut) is unpersisted at
+  *     once instead of waiting for the ContextCleaner — repeated calls
+  *     leave no residue in executor storage.
   *
   * Scale notes (100 TB): each hop is one join frontier⋈edges; the edge
   * set is expected hash-partitioned AND sorted by `src` ([[GraphStore]]
   * layout), so hop-joins find the big side exchange-free and only the
   * frontier moves (`prepEdges = true` builds that layout for ad-hoc
-  * inputs). The anti-join runs BEFORE the frontier dedup so the
+  * inputs, in a cut; Spark 4.1's checkpoint reports no partitioning, so
+  * the planner re-exchanges a prepped layout at each hop where the
+  * persisted store's layout is reused). The anti-join runs BEFORE the frontier dedup so the
   * `distinct` reuses its (origin, node) exchange. Accumulating results
   * (reachFix, bfsDepth, khop) are unions of the per-round cut relations,
   * so the result is written once, as the disjoint union of its rounds.
   */
 object Traversal {
-
-  /** Lineage cut. Default `localCheckpoint`: blocks live on executors —
-    * the right latency locally and on healthy clusters, but a LOST
-    * executor loses its blocks and fails the job. For long multi-hour
-    * iterative jobs at cluster scale, opt into RELIABLE checkpoints
-    * (survive executor loss) by setting BOTH
-    * `spark.sparkContext.setCheckpointDir(<hdfs/s3 path>)` and the session
-    * conf `graft.checkpoint.reliable=true` — every cut then writes to the
-    * checkpoint dir instead of executor storage. `eager = false`
-    * truncates the logical plan at once but materializes inside the
-    * frame's first consuming job instead of a dedicated one. The result is
-    * rebuilt constraint-free ([[org.apache.spark.sql.graft.CheckpointUtil]]):
-    * unions of cut frames under a join are the iterative shape here. */
-  private[graft] def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val reliable =
-      df.sparkSession.conf.get("graft.checkpoint.reliable", "false") == "true"
-    if (reliable)
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "graft.checkpoint.reliable=true needs sparkContext.setCheckpointDir first")
-    val out = CheckpointUtil.dropConstraints(
-      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager))
-    Option(cutsMade.get).foreach(_ += out)
-    out
-  }
-
-  /** The frames [[cut]] so far by the [[released]] body running on this
-    * thread (null outside one). */
-  private val cutsMade = new ThreadLocal[mutable.ArrayBuffer[DataFrame]]
-
-  /** Runs an algorithm body, then unpersists every frame it [[cut]] that
-    * its result does not read ([[CheckpointUtil.readRdds]]: a lazy result
-    * keeps the whole unmaterialized lineage it still needs). The frames
-    * the result does read pass to the enclosing body, if any, which
-    * decides for its own result. If the body throws, all its cuts go. */
-  private def released(body: => DataFrame): DataFrame = {
-    val outer = cutsMade.get
-    val cuts = mutable.ArrayBuffer.empty[DataFrame]
-    cutsMade.set(cuts)
-    val out =
-      try body
-      catch { case NonFatal(t) => cuts.foreach(CheckpointUtil.release); throw t }
-      finally cutsMade.set(outer)
-    val read = CheckpointUtil.readRdds(out)
-    val (kept, unread) = cuts.partition(c => read(CheckpointUtil.rddId(c)))
-    unread.foreach(CheckpointUtil.release)
-    if (outer != null) outer ++= kept
-    out
-  }
 
   /** The superstep driver (see the object doc). Round r = 1, 2, … calls
     * `step(state, r)`, which returns the round's new relation and the
@@ -119,28 +69,26 @@ object Traversal {
     * pair starts while r ≤ `maxRounds`: when r = `maxRounds` its second
     * round is the emptiness witness that decides between converging and
     * `atLimit` (a sweep bounded at `maxRounds` makes its later levels
-    * empty). `scoped` frames are unpersisted when the loop ends. */
+    * empty). */
   private def iterate[S](maxRounds: Int, converged: S => Boolean = (_: S) => false,
-                         atLimit: S => S = (s: S) => s, widen: Boolean = false,
-                         scoped: Seq[DataFrame] = Nil)(init: S)(
-                         step: (S, Int) => (DataFrame, DataFrame => S)): S =
-    try {
-      def round(s: S, r: Int): S = {
-        val (frame, next) = step(s, r)
-        next(cut(frame, eager = false))
-      }
-      var s = init
-      var r = 1
-      var done = false
-      while (!done) {
-        if (r > maxRounds) return atLimit(s)
-        s = round(s, r)
-        if (widen) { r += 1; s = round(s, r) }
-        r += 1
-        done = converged(s)
-      }
-      s
-    } finally scoped.foreach(_.unpersist(false))
+                         atLimit: S => S = (s: S) => s, widen: Boolean = false)(init: S)(
+                         step: (S, Int) => (DataFrame, DataFrame => S)): S = {
+    def round(s: S, r: Int): S = {
+      val (frame, next) = step(s, r)
+      next(cut(frame, eager = false))
+    }
+    var s = init
+    var r = 1
+    var done = false
+    while (!done) {
+      if (r > maxRounds) return atLimit(s)
+      s = round(s, r)
+      if (widen) { r += 1; s = round(s, r) }
+      r += 1
+      done = converged(s)
+    }
+    s
+  }
 
   /** Loop state whose probe is its relation's row count, compared with
     * the previous round's (peeling loops converge when nothing peels). */
@@ -205,11 +153,14 @@ object Traversal {
           pmod(xxhash64(col("dst")), lit(n.toLong)).cast("int").as("__salt", meta))
       } else edges.select(col("src"), col("dst"))
     if (prepEdges) {
+      // an explicit width: the cut runs this plan under AQE, which would
+      // otherwise coalesce a small edge set's partitions and with them
+      // the salt spread
+      val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       val parted =
-        if (n > 0) base.repartition(col("src"), col("__salt"))
-        else base.repartition(col("src"))
-      parted.sortWithinPartitions(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        if (n > 0) base.repartition(parts, col("src"), col("__salt"))
+        else base.repartition(parts, col("src"))
+      cut(parted.sortWithinPartitions(col("src")), eager = false)
     } else base
   }
 
@@ -284,9 +235,7 @@ object Traversal {
           .reduce(_ unionByName _), Seq("origin", "node"), "left_anti")
       (next.distinct(), f => (f, f.withColumn("hop", lit(hop)) :: found))
     }
-    val out = cut(found.reverse.reduce(_ unionByName _))
-    if (prepEdges) e.unpersist(false)
-    out
+    cut(found.reverse.reduce(_ unionByName _))
   }
 
   /** Multi-source BFS depth: for every vertex reachable from the seed SET,
@@ -309,8 +258,7 @@ object Traversal {
         converged = _._1.count() == 0,
         atLimit = _ => throw new IllegalArgumentException(
           s"bfsDepth did not converge in $maxIter levels — raise maxIter"),
-        widen = true, scoped = if (prepEdges) Seq(e) else Nil)(
-        (seed, List(seed))) { case ((frontier, levels), depth) =>
+        widen = true)((seed, List(seed))) { case ((frontier, levels), depth) =>
       val seen = levels.map(_.select(col("id"))).reduce(_ unionByName _)
       (stepIds(frontier.select(col("id")), e).distinct()
         .join(seen.hint("shuffle_hash"), Seq("id"), "left_anti")
@@ -364,12 +312,11 @@ object Traversal {
                  prepEdges: Boolean = true, switchDepth: Int = 32): DataFrame = released {
     val e = prep(edges, prepEdges)
     val srcIds = e.select(col("src").as("id")).distinct()
-    // persisted: the anti-join below probes it AND the final guard counts
+    // cut: the anti-join below probes it AND the final guard counts
     // it — |srcIds ∪ dstIds| = |S₀| + |dstIds| exactly (S₀ = srcIds \
     // dstIds is disjoint from dstIds), so the census needs NO extra
     // union-distinct shuffle over the full vertex set
-    val dstIds = e.select(col("dst").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dstIds = cut(e.select(col("dst").as("id")).distinct(), eager = false)
     val s0 = cut(srcIds.join(dstIds, Seq("id"), "left_anti"), eager = false)
     // deep DAG: past switchDepth levels, stop paying a job per two levels
     // and restart as log-depth doubling (its own cycle guard applies)
@@ -388,10 +335,7 @@ object Traversal {
     }
     if (switched) {
       topoDoublingSwitches.incrementAndGet()
-      dstIds.unpersist(false)
-      val out = topoLayersDoubling(e, prepEdges = false)
-      if (prepEdges) e.unpersist(false)
-      out
+      topoLayersDoubling(e, prepEdges = false)
     } else {
       val frozen = cut(levels.reduce(_ unionByName _)
         .groupBy(col("id")).agg(max(col("layer")).as("layer")))
@@ -403,8 +347,6 @@ object Traversal {
       // runs for the guard.
       val nVerts = s0.count() + dstIds.count()
       val nLayered = frozen.count()
-      dstIds.unpersist(false)
-      if (prepEdges) e.unpersist(false)
       require(nLayered == nVerts,
         s"topoLayers: ${nVerts - nLayered} of $nVerts edge-touching vertices " +
           "are unreachable from any in-degree-0 source — the graph contains " +
@@ -445,87 +387,81 @@ object Traversal {
                          prepEdges: Boolean = true,
                          onRound: Int => Unit = _ => ()): DataFrame = released {
     val e = prep(edges, prepEdges)
-    try {
-      val base = e.select(col("src"), col("dst")) // salt-free view for compose joins
-      // (pairs, Σd widened past BIGINT, self-pairs) in one aggregate: the
-      // convergence fingerprint AND the cycle witness, and the job that
-      // materializes the round's lazy cut
-      final class Relation(val r: DataFrame, val before: (Long, java.math.BigDecimal)) {
-        lazy val stats: (Long, java.math.BigDecimal) = {
-          val row = r.agg(count(lit(1)), sum(col("d").cast("decimal(38,0)")),
-            count(when(col("src") === col("dst"), 1))).head()
-          if (row.getLong(2) > 0)
-            throw new IllegalArgumentException(
-              s"topoLayersDoubling: ${row.getLong(2)} vertex(es) reach themselves — " +
-                "the graph contains a cycle; longest-path layering is defined " +
-                "on DAGs only")
-          (row.getLong(0), row.getDecimal(1))
-        }
+    val base = e.select(col("src"), col("dst")) // salt-free view for compose joins
+    // (pairs, Σd widened past BIGINT, self-pairs) in one aggregate: the
+    // convergence fingerprint AND the cycle witness, and the job that
+    // materializes the round's lazy cut
+    final class Relation(val r: DataFrame, val before: (Long, java.math.BigDecimal)) {
+      lazy val stats: (Long, java.math.BigDecimal) = {
+        val row = r.agg(count(lit(1)), sum(col("d").cast("decimal(38,0)")),
+          count(when(col("src") === col("dst"), 1))).head()
+        if (row.getLong(2) > 0)
+          throw new IllegalArgumentException(
+            s"topoLayersDoubling: ${row.getLong(2)} vertex(es) reach themselves — " +
+              "the graph contains a cycle; longest-path layering is defined " +
+              "on DAGs only")
+        (row.getLong(0), row.getDecimal(1))
       }
-      val seed = new Relation(
-        cut(base.distinct().withColumn("d", lit(1L)), eager = false), null)
-      val r = iterate[Relation](maxRounds,
-          converged = s => s.stats._1 == 0 ||
-            (s.stats._1 == s.before._1 && s.stats._2.compareTo(s.before._2) == 0),
-          atLimit = _ => throw new IllegalArgumentException(
-            s"topoLayersDoubling did not converge in $maxRounds rounds — " +
-              s"a DAG deeper than 2^${maxRounds - 1}?"))(seed) { (s, round) =>
-        onRound(round)
-        // AT-CAP compose, not the full square (optimization round 16): the
-        // left side is only the pairs sitting AT the round's dyadic cap,
-        // d == 2^(round−1), not all of r. Exact by the canonical split:
-        // any path of length m ∈ (2^k, 2^(k+1)] passes a vertex w exactly
-        // 2^k hops in, its prefix is an exact length-2^k path — and for
-        // any pair with an exact 2^k path the cap forces r_k(u,w) = 2^k
-        // (the cap can't record more, the exact path guarantees no less).
-        // That is all the argument needs; pairs WITHOUT an exact-2^k path
-        // may sit below the cap (e.g. an edge u→v beside a longer u→v
-        // path) and are correctly not recomposed — so every pair the full
-        // square would improve is reachable from the at-cap slice, and
-        // every composed candidate is a genuine path length
-        // (path concatenation in the acyclic regime; on cyclic input the
-        // self-pair check still fires — the first dyadic window
-        // (2^k, 2^(k+1)] with 2^k ≥ girth contains a multiple of the
-        // girth, at most one round later than the full square). Join
-        // triples drop from Σ|r_k|·avg-fanout (quadratic in depth on a
-        // deep chain — the x32 corpus) to Σ|at-cap_k|·avg-fanout (linear).
-        val capD = 1L << (round - 1)
-        val before = s.stats
-        (s.r.filter(col("d") === capD)
-          .select(col("src"), col("dst").as("__m"))
-          .join(s.r.select(col("src").as("__m"), col("dst"), col("d").as("d2"))
-            .hint("shuffle_hash"), "__m")
-          .select(col("src"), col("dst"), (col("d2") + capD).as("d"))
-          .unionByName(s.r)
-          .groupBy(col("src"), col("dst")).agg(max(col("d")).as("d")),
-          f => new Relation(f, before))
-      }.r
-      val srcIds = base.select(col("src").as("id")).distinct()
-      // persisted: probed by the anti-join, fed to the layer join, and
-      // counted by the guard — |srcIds ∪ dstIds| = |sources| + |dstIds|
-      // exactly (disjoint by construction), no union-distinct shuffle
-      val dstIds = base.select(col("dst").as("id")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val sources = srcIds.join(dstIds, Seq("id"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val out = sources.withColumn("layer", lit(0L))
-        .unionByName(
-          r.join(sources.select(col("id").as("src")), "src")
-            .select(col("dst").as("id"), col("d").as("layer")))
-        .groupBy(col("id")).agg(max(col("layer")).as("layer"))
-      // lazy: the guard's own count below is the materializing action
-      val frozen = cut(out, eager = false)
-      // belt-and-braces twin of the frontier form's guard (a cycle throws
-      // above, so this can only fire on a logic regression)
-      val nVerts = sources.count() + dstIds.count()
-      val nLayered = frozen.count()
-      sources.unpersist(false)
-      dstIds.unpersist(false)
-      require(nLayered == nVerts,
-        s"topoLayersDoubling: ${nVerts - nLayered} of $nVerts edge-touching " +
-          "vertices are unreachable from any in-degree-0 source")
-      frozen
-    } finally if (prepEdges) e.unpersist(false)
+    }
+    val seed = new Relation(
+      cut(base.distinct().withColumn("d", lit(1L)), eager = false), null)
+    val r = iterate[Relation](maxRounds,
+        converged = s => s.stats._1 == 0 ||
+          (s.stats._1 == s.before._1 && s.stats._2.compareTo(s.before._2) == 0),
+        atLimit = _ => throw new IllegalArgumentException(
+          s"topoLayersDoubling did not converge in $maxRounds rounds — " +
+            s"a DAG deeper than 2^${maxRounds - 1}?"))(seed) { (s, round) =>
+      onRound(round)
+      // AT-CAP compose, not the full square (optimization round 16): the
+      // left side is only the pairs sitting AT the round's dyadic cap,
+      // d == 2^(round−1), not all of r. Exact by the canonical split:
+      // any path of length m ∈ (2^k, 2^(k+1)] passes a vertex w exactly
+      // 2^k hops in, its prefix is an exact length-2^k path — and for
+      // any pair with an exact 2^k path the cap forces r_k(u,w) = 2^k
+      // (the cap can't record more, the exact path guarantees no less).
+      // That is all the argument needs; pairs WITHOUT an exact-2^k path
+      // may sit below the cap (e.g. an edge u→v beside a longer u→v
+      // path) and are correctly not recomposed — so every pair the full
+      // square would improve is reachable from the at-cap slice, and
+      // every composed candidate is a genuine path length
+      // (path concatenation in the acyclic regime; on cyclic input the
+      // self-pair check still fires — the first dyadic window
+      // (2^k, 2^(k+1)] with 2^k ≥ girth contains a multiple of the
+      // girth, at most one round later than the full square). Join
+      // triples drop from Σ|r_k|·avg-fanout (quadratic in depth on a
+      // deep chain — the x32 corpus) to Σ|at-cap_k|·avg-fanout (linear).
+      val capD = 1L << (round - 1)
+      val before = s.stats
+      (s.r.filter(col("d") === capD)
+        .select(col("src"), col("dst").as("__m"))
+        .join(s.r.select(col("src").as("__m"), col("dst"), col("d").as("d2"))
+          .hint("shuffle_hash"), "__m")
+        .select(col("src"), col("dst"), (col("d2") + capD).as("d"))
+        .unionByName(s.r)
+        .groupBy(col("src"), col("dst")).agg(max(col("d")).as("d")),
+        f => new Relation(f, before))
+    }.r
+    val srcIds = base.select(col("src").as("id")).distinct()
+    // cut: probed by the anti-join, fed to the layer join, and
+    // counted by the guard — |srcIds ∪ dstIds| = |sources| + |dstIds|
+    // exactly (disjoint by construction), no union-distinct shuffle
+    val dstIds = cut(base.select(col("dst").as("id")).distinct(), eager = false)
+    val sources = cut(srcIds.join(dstIds, Seq("id"), "left_anti"), eager = false)
+    val out = sources.withColumn("layer", lit(0L))
+      .unionByName(
+        r.join(sources.select(col("id").as("src")), "src")
+          .select(col("dst").as("id"), col("d").as("layer")))
+      .groupBy(col("id")).agg(max(col("layer")).as("layer"))
+    // lazy: the guard's own count below is the materializing action
+    val frozen = cut(out, eager = false)
+    // belt-and-braces twin of the frontier form's guard (a cycle throws
+    // above, so this can only fire on a logic regression)
+    val nVerts = sources.count() + dstIds.count()
+    val nLayered = frozen.count()
+    require(nLayered == nVerts,
+      s"topoLayersDoubling: ${nVerts - nLayered} of $nVerts edge-touching " +
+        "vertices are unreachable from any in-degree-0 source")
+    frozen
   }
 
   /** Cycle-safe transitive closure: all (origin, node) pairs with a directed
@@ -543,8 +479,7 @@ object Traversal {
         converged = _._1.count() == 0,
         atLimit = _ => throw new IllegalStateException(
           s"reachFix did not converge within $maxIter iterations — " +
-            "the transitive closure would be silently truncated; raise maxIter"),
-        scoped = if (prepEdges) Seq(e) else Nil)(
+            "the transitive closure would be silently truncated; raise maxIter"))(
         (pairs(start, dedupStart), Nil)) { case ((frontier, found), _) =>
       val stepped = stepPairs(frontier, e)
       // shuffle_hash hint: the visited set only needs hash membership, not
@@ -609,10 +544,9 @@ object Traversal {
     // any, live entirely in the core and keep their set-semantics
     // treatment there.
     val e0 = edges.select(col("src"), col("dst"))
-    val dstIds = e0.select(col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val srcE = e0.join(dstIds.select(col("dst").as("src")), Seq("src"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dstIds = cut(e0.select(col("dst")).distinct(), eager = false)
+    val srcE = cut(e0.join(dstIds.select(col("dst").as("src")), Seq("src"), "left_anti"),
+      eager = false)
     val coreE = e0.join(dstIds.select(col("dst").as("src")), Seq("src"), "left_semi")
     val cCore = doublingBody(coreE, maxIter)
     // one eager job covers the whole peeled side — direct edges plus the
@@ -625,8 +559,6 @@ object Traversal {
             srcE("dst") === cCore("origin"))
             .select(srcE("src").as("origin"), cCore("node").as("node")))
         .distinct())
-    srcE.unpersist(false)
-    dstIds.unpersist(false)
     cCore.unionByName(srcPairs)
   }
 
@@ -717,10 +649,9 @@ object Traversal {
     */
   def minLabel(edges: DataFrame, maxIter: Int = 64,
                smallCutoff: Long = defaultSmallCutoff): DataFrame = released {
-    val und = edges.select(col("src"), col("dst"))
+    val und = cut(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")), eager = false)
     // Size-guarded driver escape hatch (the GraphX tiny-graph-skip
     // precedent): a pair graph under `smallCutoff` undirected rows is
     // cheaper to solve in ONE task of union-find than in log(diameter)
@@ -767,7 +698,6 @@ object Traversal {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       val out = Array.tabulate(n)(i => (ids(i), ids(find(i)))).toSeq
-      und.unpersist(false)
       // Cast back to the input id type so both paths return one schema.
       out.toDF("id", "label")
         .select(col("id").cast(idType).as("id"), col("label").cast(idType).as("label"))
@@ -785,8 +715,8 @@ object Traversal {
               .where(col("a.label") =!= col("b.label")).count() == 0 },
           atLimit = _ => throw new IllegalStateException(
             s"minLabel did not converge within $maxIter rounds — " +
-              "a truncated labeling would silently split components; raise maxIter"),
-          scoped = Seq(und))((labels0, labels0)) { case ((labels, _), _) =>
+              "a truncated labeling would silently split components; raise maxIter"))(
+          (labels0, labels0)) { case ((labels, _), _) =>
         // Neighbor-min via join+join, NOT a self-referential union: a union
         // whose second branch is also joined inside the first trips Union's
         // constraint rewrite (key-not-found during analysis). Coverage is
@@ -818,12 +748,12 @@ object Traversal {
     * State is O(vertices) like [[bfsDepth]]; each round's exchange
     * carries (id, dist) longs. Rounds ≤ the longest shortest path's hop
     * count ≤ V-1; throws past `maxIter` instead of returning truncated
-    * distances. Lineage is [[cut]] per round (reliable-checkpoint opt-in
+    * distances. Lineage is [[graft.Cuts.cut]] per round (reliable-checkpoint opt-in
     * applies). `edges` needs (src, dst, w); `sources` needs `id`.
     * Returns (id, dist) for every vertex reachable from the source set. */
   def sssp(edges: DataFrame, sources: DataFrame, maxIter: Int = 64): DataFrame = released {
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = cut(edges.select(col("src"), col("dst"), col("w").cast("long").as("w")),
+      eager = false)
     require(e.filter(col("w") < 0).isEmpty,
       "sssp requires nonnegative weights (negative cycles have no shortest path)")
     val dist0 = cut(sources.select(col("id")).distinct().withColumn("dist", lit(0L)),
@@ -835,8 +765,7 @@ object Traversal {
             .where(col("o.dist").isNull || col("n.dist") < col("o.dist")).count() == 0 },
         atLimit = _ => throw new IllegalStateException(
           s"sssp did not converge within $maxIter rounds — negative weights, " +
-            "or a longest shortest path beyond the bound; raise maxIter"),
-        scoped = Seq(e))((dist0, dist0)) { case ((dist, _), _) =>
+            "or a longest shortest path beyond the bound; raise maxIter"))((dist0, dist0)) { case ((dist, _), _) =>
       val relaxed = e.join(dist.hint("shuffle_hash"), e("src") === dist("id"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("d"))
         .groupBy("id").agg(min(col("d")).as("d"))
@@ -886,15 +815,13 @@ object Traversal {
     // degrees — callers without the proof keep the default.
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val und = (if (assumeDistinct) sym else sym.distinct())
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = cut((if (assumeDistinct) sym else sym.distinct())
+      .repartition(col("src")), eager = false)
     def under(live: DataFrame) = live.filter(col("deg") < k).select(col("id"))
     iterate[DataFrame](maxIter, converged = under(_).count() == 0,
         atLimit = _ => throw new IllegalStateException(
           s"kCore did not reach a fixpoint within $maxIter peel rounds — " +
-            "a truncated peel overstates the core; raise maxIter"),
-        scoped = Seq(und))(
+            "a truncated peel overstates the core; raise maxIter"))(
         cut(und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), eager = false)) {
       (live, _) =>
         // Edges FROM a peeled vertex, grouped by the surviving endpoint:
@@ -1160,17 +1087,15 @@ object Traversal {
     * change it, so the DuckDB oracle unrolls the same rounds. */
   def maximalIndependentSet(edges: DataFrame, maxIter: Int = 40): DataFrame = released {
     import graft.functions.Hashing.md5Long
-    val und = edges.select(col("src"), col("dst"))
+    val und = cut(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("src") =!= col("dst")).distinct(), eager = false)
     // state: one (id, in_mis) row per vertex, in_mis NULL while undecided
     val undecided = (st: DataFrame) => st.filter(col("in_mis").isNull)
     iterate[DataFrame](maxIter, converged = undecided(_).count() == 0,
         atLimit = _ => throw new IllegalStateException(
           s"Luby MIS did not converge within $maxIter rounds — astronomically " +
-            "unlikely under hashed priorities; raise maxIter"),
-        scoped = Seq(und))(
+            "unlikely under hashed priorities; raise maxIter"))(
         cut(vertices(edges).filter(col("id").isNotNull)
           .withColumn("in_mis", lit(null).cast("boolean")), eager = false)) { (st, round) =>
       val pr = undecided(st).select(col("id"),
@@ -1485,8 +1410,8 @@ object Traversal {
     * transposed (undirected symmetry). */
   def stressCentrality(edges: DataFrame, maxHop: Int): DataFrame = released {
     require(maxHop >= 1, s"stressCentrality needs maxHop >= 1, got $maxHop")
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = cut(edges.select(col("src"), col("dst")).distinct()
+      .repartition(col("src")), eager = false)
     val verts = vertices(edges)
     val state = sigmaSweep(verts, e, maxHop)
     val pairsSV = state.filter(col("d") > 0)
@@ -1502,10 +1427,8 @@ object Traversal {
       .filter(col("d1") + col("d2") === col("dt"))
       .groupBy(col("v").as("id"))
       .agg(sum(col("sig1") * col("sig2")).as("stress"))
-    val out = cut(verts.join(sums, Seq("id"), "left")
+    cut(verts.join(sums, Seq("id"), "left")
       .select(col("id"), coalesce(col("stress"), lit(0L)).as("stress")))
-    e.unpersist(false)
-    out
   }
 
   /** One BFS-with-counts level: the unvisited (s, dst) expansion of `f`,
@@ -1559,8 +1482,8 @@ object Traversal {
                               sampleMod: Int): DataFrame = released {
     require(maxHop >= 1, s"stressCentralitySampled needs maxHop >= 1, got $maxHop")
     require(sampleMod >= 1, s"sampleMod must be >= 1, got $sampleMod")
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+    val e = cut(edges.select(col("src"), col("dst")).distinct()
+      .repartition(col("src")), eager = false)
     val verts = vertices(edges)
     val hubs = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
       .filter(col("__deg") > 1).select(col("src").as("id"))
@@ -1588,9 +1511,7 @@ object Traversal {
     val out = verts.join(sums, Seq("id"), "left")
       .select(col("id"), coalesce(col("raw"), lit(0L)).as("raw"),
         lit(nSampled).as("n_sampled"), lit(nAll).as("n_sources"))
-    val collected = cut(out)
-    e.unpersist(false)
-    collected
+    cut(out)
   }
 
   /** Deterministic negative edge sampling — the contrastive-pair generator

@@ -1,5 +1,6 @@
 package graft.gremlin
 
+import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.graph.{PropertyGraph, Traversal}
@@ -94,17 +95,16 @@ object GremlinLite {
       val (pv, pe) = graft.sources.GroovyLoader.parsedBatches(
         Seq(buf.toString).toDS(), keyProps)
       cur = cur.upsertVertices(
-        graft.sources.GroovyLoader.vertexBatch(pv).localCheckpoint())
+        Cuts.cut(graft.sources.GroovyLoader.vertexBatch(pv)))
       // Resolve addE endpoints by LOOKUP against the (just-upserted)
       // graph — Gremlin's `u1 = g.V()...next()` semantics — so mutate
       // works on graphs whose ids don't follow the loader's scheme. The
       // bound property may be the promoted key (stored in `key`, not in
       // `props`) — consult the per-label registry for that.
       val kp = typedLit(keyProps)
-      // localCheckpoint freezes the per-statement ids so the validation
+      // the cut freezes the per-statement ids so the validation
       // aggregates and the upsert all see the same numbering.
-      val e = pe.toDF().withColumn("__stmt", monotonically_increasing_id())
-        .localCheckpoint()
+      val e = Cuts.cut(pe.toDF().withColumn("__stmt", monotonically_increasing_id()))
       def vside(s: String) = cur.vertices.select(
         col("id").as(s"__${s}id"), col("label").as(s"__${s}l"),
         col("key").as(s"__${s}k"), col("props").as(s"__${s}p"))
@@ -382,8 +382,8 @@ object GremlinLite {
                 // — without the cut, the |V_start| ⋈ edges hop join
                 // re-executes once per consumer (measured 3× ≈ 2 s at
                 // sf0.1 on the flagship lineitem walk).
-                val s1 = startIds.join(step, col("id") === col("src"))
-                  .select(col("dst").as("id")).distinct().localCheckpoint()
+                val s1 = Cuts.cut(startIds.join(step, col("id") === col("src"))
+                  .select(col("dst").as("id")).distinct())
                 val contStart = s1.join(stopIds, Seq("id"), "left_anti")
                 val ePrime = step.join(
                   stopIds.withColumnRenamed("id", "__stop"),

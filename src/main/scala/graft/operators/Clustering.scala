@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -124,22 +125,24 @@ object Clustering {
   /** Returns (assignments(vid, vec, cid), centroids(cid, cvec)). */
   def kmeansLite(vecs: DataFrame, idCol: String, vecCol: String,
                  k: Int, iters: Int = 2): (DataFrame, DataFrame) = {
-    val v = vecs.select(col(idCol).as("vid"),
-        transform(col(vecCol), x => x.cast("double")).as("vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Cuts.cut(vecs.select(col(idCol).as("vid"),
+        transform(col(vecCol), x => x.cast("double")).as("vec")), eager = false)
     val seedW = Window.orderBy(col("__h"), col("vid"))
-    var centroids = v.withColumn("__h", md5Long(col("vid")))
-      .withColumn("__rn", row_number().over(seedW)).filter(col("__rn") <= k)
-      .select((col("__rn") - 1).cast("int").as("cid"), col("vec").as("cvec"))
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      centroids = assign(v, centroids)
-        .select(col("cid"), posexplode(col("vec")))
-        .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
-        .groupBy(col("cid"))
-        .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
-          s => s.getField("m")).as("cvec"))
-        .localCheckpoint() // k rows; sever the growing lineage per round
+    // k rows per round, each cut to sever the growing lineage; the
+    // superseded rounds are freed when the loop returns
+    val centroids = Cuts.released {
+      var c = Cuts.cut(v.withColumn("__h", md5Long(col("vid")))
+        .withColumn("__rn", row_number().over(seedW)).filter(col("__rn") <= k)
+        .select((col("__rn") - 1).cast("int").as("cid"), col("vec").as("cvec")))
+      (1 to iters).foreach { _ =>
+        c = Cuts.cut(assign(v, c)
+          .select(col("cid"), posexplode(col("vec")))
+          .groupBy(col("cid"), col("pos")).agg(avg(col("col")).as("m"))
+          .groupBy(col("cid"))
+          .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
+            s => s.getField("m")).as("cvec")))
+      }
+      c
     }
     (assign(v, centroids), centroids)
   }

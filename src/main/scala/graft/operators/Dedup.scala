@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing.md5Long
@@ -87,17 +88,12 @@ object Dedup {
                     bands: Int = 4, rowsPerBand: Int = 2, n: Int = 3,
                     maxBucket: Int = 8192): DataFrame = {
     val sig = minhashSignature(docs, textCol, bands * rowsPerBand, n)
-    // Persist the RAW bucket table: the size count, and both sides of the
+    // Cut the RAW bucket table: the size count, and both sides of the
     // self-join, read it — recomputing would re-hash every shingle of the
     // corpus per consumer. One row per (doc, band) — negligible next to
     // the corpus at any scale. The capped view stays derived (a cheap join
-    // against the cached table + cached sizes). The cache lives until LRU
-    // eviction — the returned frame still reads it lazily, so this
-    // function cannot unpersist; a long-lived session composing many of
-    // these calls reclaims them with spark.catalog.clearCache() (same
-    // contract at the substringSpans and keepBest persists).
-    val raw = lshBuckets(sig, idCol, bands, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // against the cut table + its sizes).
+    val raw = Cuts.cut(lshBuckets(sig, idCol, bands, rowsPerBand), eager = false)
     val b = Skew.capBuckets(raw, Seq("band", "bucket"), idCol, maxBucket)
     val l = b.select(col("band"), col("bucket"), col(idCol).as("id_a"))
     val r = b.select(col("band"), col("bucket"), col(idCol).as("id_b"))
@@ -280,14 +276,13 @@ object Dedup {
     val fp = fps.select(col(idCol), col(fpCol).as("simhash"))
     val bandVals = array((0 to maxHamming).map(b =>
       shiftright(col("simhash"), b * bandBits).bitwiseAND(lit(mask))): _*)
-    // Persist the banded table (the lshCandidates pattern): the cap's
-    // size count and BOTH self-join sides scan it, and each uncached scan
+    // Cut the banded table (the lshCandidates pattern): the cap's
+    // size count and BOTH self-join sides scan it, and each uncut scan
     // re-runs the `bits` vote folds over the whole corpus — the dominant
     // cost of this operator (measured 3× fingerprint recompute ≈ 5 s vs
-    // ~1.5 s cached at sf0.1). (id, fingerprint, band) longs only.
-    val banded = fp.select(col(idCol), col("simhash"),
-        posexplode(bandVals).as(Seq("band", "bval")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // ~1.5 s materialized at sf0.1). (id, fingerprint, band) longs only.
+    val banded = Cuts.cut(fp.select(col(idCol), col("simhash"),
+        posexplode(bandVals).as(Seq("band", "bval"))), eager = false)
     val b = Skew.capBuckets(banded, Seq("band", "bval"), idCol, maxBucket)
     val l = b.select(col("band"), col("bval"), col(idCol).as("id_a"),
       col("simhash").as("fp_a"))
@@ -343,13 +338,13 @@ object Dedup {
     * failure mode: every boilerplate doc shares one h1). */
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String, n: Int = 3,
                    maxBucket: Int = 8192): DataFrame = {
-    // Persist the RAW shingle table: the cap's size count and both join
+    // Cut the RAW shingle table: the cap's size count and both join
     // sides scan it, and the shingle set + hash are the expensive part
     // (one md5 per shingle). One row per doc; the capped view is a cheap
     // derived join against it.
-    val pre = docs.select(col(idCol), array_distinct(shingles(col(textCol), n)).as("sh"),
-      array_min(transform(shingles(col(textCol), n), s => md5Long(s, 1))).as("h1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pre = Cuts.cut(docs.select(col(idCol), array_distinct(shingles(col(textCol), n)).as("sh"),
+      array_min(transform(shingles(col(textCol), n), s => md5Long(s, 1))).as("h1")),
+      eager = false)
     val base = Skew.capBuckets(pre, Seq("h1"), idCol, maxBucket)
     val l = base.select(col("h1"), col(idCol).as("id_a"), col("sh").as("sh_a"))
     val r = base.select(col("h1"), col(idCol).as("id_b"), col("sh").as("sh_b"))
@@ -373,9 +368,9 @@ object Dedup {
     * shuffles past the shingle projection. */
   def ngramContainment(docs: DataFrame, idCol: String, textCol: String, n: Int = 3,
                        maxBucket: Int = 8192): DataFrame = {
-    val pre = docs.select(col(idCol), array_distinct(shingles(col(textCol), n)).as("sh"),
-      array_min(transform(shingles(col(textCol), n), s => md5Long(s, 1))).as("h1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pre = Cuts.cut(docs.select(col(idCol), array_distinct(shingles(col(textCol), n)).as("sh"),
+      array_min(transform(shingles(col(textCol), n), s => md5Long(s, 1))).as("h1")),
+      eager = false)
     val base = Skew.capBuckets(pre, Seq("h1"), idCol, maxBucket)
     val l = base.select(col("h1"), col(idCol).as("id_a"), col("sh").as("sh_a"))
     val r = base.select(col("h1"), col(idCol).as("id_b"), col("sh").as("sh_b"))
@@ -404,10 +399,9 @@ object Dedup {
                           bands: Int = 4, rowsPerBand: Int = 2, n: Int = 3,
                           maxBucket: Int = 8192): DataFrame = {
     val k = bands * rowsPerBand
-    val sig = minhashSignature(docs, textCol, k, n)
+    val sig = Cuts.cut(minhashSignature(docs, textCol, k, n)
       .withColumn("__sz", size(array_distinct(shingles(col(textCol), n))).cast("long"))
-      .select(col(idCol) +: (1 to k).map(i => col(s"h$i")) :+ col("__sz"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col(idCol) +: (1 to k).map(i => col(s"h$i")) :+ col("__sz"): _*), eager = false)
     val buckets = Skew.capBuckets(
       lshBuckets(sig, idCol, bands, rowsPerBand), Seq("band", "bucket"), idCol, maxBucket)
     val cand = buckets.select(col("band"), col("bucket"), col(idCol).as("id_a"))
@@ -537,18 +531,14 @@ object Dedup {
                      k: Int = 8, minDocs: Int = 2): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    // Persist the hashed windows (the [[lshCandidates]] raw-bucket
+    // Cut the hashed windows (the [[lshCandidates]] raw-bucket
     // pattern): both the df branch and the flag join read them, and
     // recomputing would re-tokenize and re-hash every window of the
     // corpus per branch. Three longs per window — negligible next to the
-    // text it replaces at any scale. Cache lifetime is the session's (LRU
-    // evictable; the lazy return means no in-function unpersist is
-    // possible) — reclaim with spark.catalog.clearCache(), as at the
-    // lshCandidates persist.
-    val spans = docs.select(col(idCol), posexplode(shingles(col(textCol), k)))
+    // text it replaces at any scale.
+    val spans = Cuts.cut(docs.select(col(idCol), posexplode(shingles(col(textCol), k)))
       .select(col(idCol), (col("pos") + 1).cast("long").as("start"),
-        md5Long(col("col")).as("span_hash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        md5Long(col("col")).as("span_hash")), eager = false)
     val dfreq = spans.select(col("span_hash"), col(idCol)).distinct()
       .groupBy(col("span_hash")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDocs)
@@ -725,17 +715,13 @@ object Dedup {
     * cluster→canonical chain is type-generic. */
   def keepBest(members: DataFrame, scores: DataFrame, idCol: String,
                labelCol: String, scoreCol: String): DataFrame = {
-    // Persist the (id, label, score) triple (the [[substringSpans]]
+    // Cut the (id, label, score) triple (the [[substringSpans]]
     // hashed-window pattern): all three argmax branches read it, and
-    // without the persist each branch re-runs the members⋈scores join —
+    // without the cut each branch re-runs the members⋈scores join —
     // at corpus scale that is three reads of the scoring pipeline for
     // one. Three narrow columns, negligible next to the text upstream.
-    // Cache lifetime is the session's (LRU evictable; the lazy return
-    // means no in-function unpersist is possible) — reclaim with
-    // spark.catalog.clearCache(), as at the lshCandidates persist.
-    val m = members.select(col(idCol), col(labelCol))
-      .join(scores.select(col(idCol), col(scoreCol)), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val m = Cuts.cut(members.select(col(idCol), col(labelCol))
+      .join(scores.select(col(idCol), col(scoreCol)), Seq(idCol)), eager = false)
     val best = m.groupBy(col(labelCol)).agg(max(col(scoreCol)).as("__best"))
     val winner = m.join(best, Seq(labelCol))
       .filter(col(scoreCol) === col("__best"))
@@ -782,12 +768,10 @@ object Dedup {
       .select(col("__id"), col("__s"),
         explode(concat(array(s), dels)).as("__v"))
       .dropDuplicates("__id", "__v") // adjacent equal chars repeat a variant
-    // persisted (the lshCandidates contract: evictable MEMORY_AND_DISK,
-    // no in-function unpersist on a lazily-returned result): BOTH sides
-    // of the self-join read this frame — without the cache the variant
-    // explode and the cap's count aggregate execute twice per run
-    val capped = Skew.capBuckets(variants, Seq("__v"), "__id", maxBucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // cut: BOTH sides of the self-join read this frame — without it the
+    // variant explode and the cap's count aggregate execute twice per run
+    val capped = Cuts.cut(Skew.capBuckets(variants, Seq("__v"), "__id", maxBucket),
+      eager = false)
     val a = capped.select(col("__v"), col("__id").as("id_a"), col("__s").as("s_a"))
     val b = capped.select(col("__v"), col("__id").as("id_b"), col("__s").as("s_b"))
     a.join(b, Seq("__v"))
@@ -831,8 +815,8 @@ object Dedup {
     * Audit the realized sizes with [[shardOverflow]].
     *
     * Unlike the rest of this file, the sizing count() is EAGER and the
-    * input plan evaluates twice (once counted, once sharded) — persist
-    * `df` around the call if its upstream is expensive. */
+    * input plan evaluates twice (once counted, once sharded) — cut
+    * `df` before the call if its upstream is expensive. */
   def shuffleShardAuto(df: DataFrame, keyCol: String,
                        maxShardRows: Long = 1000000L, minShards: Int = 8): DataFrame = {
     require(maxShardRows >= 1, s"maxShardRows must be >= 1, got $maxShardRows")
@@ -1179,7 +1163,7 @@ object Dedup {
     * candidate volume tracks RESULT size, not corpus size, which is the
     * 100 TB argument. Shuffles: shingle-df aggregate, the df join, one
     * per-doc window for prefix ranks, the candidate self-join keyed on
-    * prefix shingle, and the verify join back to the (persisted) set
+    * prefix shingle, and the verify join back to the (cut) set
     * table — each moving (id, hash-sized) rows only; full shingle arrays
     * cross the wire once, into the verify join.
     *
@@ -1191,14 +1175,13 @@ object Dedup {
     require(thetaNum > 0 && thetaNum <= thetaDen,
       s"theta must be in (0, 1]: got $thetaNum/$thetaDen")
     import org.apache.spark.sql.expressions.Window
-    // Canonical distinct shingle set per doc; persisted because the
-    // verify join reads it twice (same cache contract as lshCandidates).
-    val sets = docs
+    // Canonical distinct shingle set per doc; cut because the verify
+    // join reads it twice.
+    val sets = Cuts.cut(docs
       .select(col(idCol).as("id"),
         array_sort(array_distinct(shingles(col(textCol), n))).as("shd"))
       .filter(size(col("shd")) > 0)
-      .withColumn("sz", size(col("shd")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("sz", size(col("shd")).cast("long")), eager = false)
     // Global document frequency — the rarest-first total order (ties
     // broken by the shingle string itself, so the order is total and
     // both join sides rank identically).

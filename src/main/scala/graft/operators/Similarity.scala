@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing.md5Long
@@ -125,13 +126,13 @@ object Similarity {
     * every corpus vector as a query, rank ≤ k by (cos desc, id asc). */
   def nnDescentTopK(vecs: DataFrame, idCol: String, vecCol: String,
                     k: Int = 5, blocks: Int = 16, rounds: Int = 1,
-                    seedings: Int = 2, native: Boolean = false): DataFrame = {
+                    seedings: Int = 2, native: Boolean = false): DataFrame = Cuts.released {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1 && blocks >= 1 && rounds >= 0 && seedings >= 1,
       s"need k>=1, blocks>=1, rounds>=0, seedings>=1: " +
         s"got k=$k blocks=$blocks rounds=$rounds seedings=$seedings")
-    val v = vecs.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Cuts.cut(vecs.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v")),
+      eager = false)
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
     // Rescore a distinct (query_id, neighbor_id) candidate table and keep
     // each query's top-k. Rounding BEFORE ranking (the scoredPairs
@@ -152,11 +153,10 @@ object Similarity {
     }.reduce(_ unionByName _).distinct()
     var g = topk(seedPairs)
     for (_ <- 1 to rounds) {
-      // Persist the round's graph: the undirected view reads it twice and
+      // Cut the round's graph: the undirected view reads it twice and
       // the 2-hop join twice more — recomputing would re-run the scoring
-      // join per consumer (same cache contract as lshCandidates).
-      val gp = g.select(col("query_id"), col("neighbor_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // join per consumer.
+      val gp = Cuts.cut(g.select(col("query_id"), col("neighbor_id")), eager = false)
       val und = gp.select(col("query_id").as("u"), col("neighbor_id").as("w"))
         .unionByName(gp.select(col("neighbor_id").as("u"), col("query_id").as("w")))
         .distinct()
@@ -372,10 +372,10 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     // ONE md5 pass + ONE global top-k over the corpus supplies both the
     // coarse centroids (first nlist seeds — identical to kmeansLite with
-    // iters = 0) and the PQ codebook (first k seeds); localCheckpoint
-    // because the max(nlist, k)-row seed table feeds three consumers.
+    // iters = 0) and the PQ codebook (first k seeds); cut because the
+    // max(nlist, k)-row seed table feeds three consumers.
     val v = pqNormalize(corpus, idCol, vecCol, m)
-    val seeds = seedVecs(v, math.max(nlist, k)).localCheckpoint()
+    val seeds = Cuts.cut(seedVecs(v, math.max(nlist, k)))
     val centroids = seeds.filter(col("cid") < nlist)
       .select(col("cid"), col("vec").as("cvec"))
     val codebook = codebookOf(seeds.filter(col("cid") < k), m)
@@ -787,13 +787,12 @@ object Similarity {
     * broadcast join of the d-row vector against it plus a d-row
     * aggregate — the corpus is touched exactly once, by the Gram pass
     * itself. Output: (i, v_micro) for the final iterate. */
-  def powerIteration(gram: DataFrame, iters: Int = 3): DataFrame = {
+  def powerIteration(gram: DataFrame, iters: Int = 3): DataFrame = Cuts.released {
     require(iters >= 1, s"powerIteration needs iters >= 1, got $iters")
     // Expand the i <= j triangle into the full symmetric matrix.
-    val full = gram.select(col("i"), col("j"), col("dot"))
+    val full = Cuts.cut(gram.select(col("i"), col("j"), col("dot"))
       .unionByName(gram.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("dot")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("j").as("i"), col("i").as("j"), col("dot"))), eager = false)
     var v = gram.select(col("i")).union(gram.select(col("j"))).distinct()
       .select(col("i").as("dim"), lit(1000L).as("v_milli"))
     for (_ <- 1 to iters) {
@@ -809,8 +808,6 @@ object Similarity {
             .otherwise(lit(0L)).as("v_milli"))
     }
     // Eager cut so the returned frame no longer reads the expanded Gram.
-    val out = v.select(col("dim"), col("v_milli")).localCheckpoint()
-    full.unpersist()
-    out
+    Cuts.cut(v.select(col("dim"), col("v_milli")))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -150,13 +151,10 @@ object Sketch {
   def countMinHeavy(df: DataFrame, keyCol: String, threshold: Long,
                     depth: Int = 4, width: Int = 256): DataFrame = {
     require(depth >= 1 && width >= 1, s"need depth/width >= 1, got $depth/$width")
-    // Persist the key projection: BUILD, PROBE, and EXACT each scan it,
+    // Cut the key projection: BUILD, PROBE, and EXACT each scan it,
     // and the upstream is typically an explode over text (re-tokenizing
-    // the corpus 3x). One string column — far smaller than the source;
-    // MEMORY_AND_DISK spills rather than OOMs at scale (the ngramJaccard
-    // persist contract: reclaimed by LRU / spark.catalog.clearCache).
-    val keys = df.select(col(keyCol).cast("string").as("k"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the corpus 3x). One string column — far smaller than the source.
+    val keys = Cuts.cut(df.select(col(keyCol).cast("string").as("k")), eager = false)
     val sketch = cmsCells(keys, "k", depth, width)
       .groupBy(col("r"), col("b"))
       .agg(count(lit(1)).as("c"))
@@ -243,7 +241,7 @@ object Sketch {
     //   exact_inter = Σ inA·inB — one aggregate;
     //   sketches = top-k by hash over the flagged slices — TakeOrdered
     //   per-partition heaps, never a sort.
-    // The flag table is a LAZY localCheckpoint: the gate's single action
+    // The flag table is a LAZY cut: the gate's single action
     // materializes it once for all consumers, the plan above it is
     // truncated, and the blocks are released by the ContextCleaner when
     // the result frame is dropped — no session-lifetime persist (the r16
@@ -253,10 +251,9 @@ object Sketch {
     val tagged = a.select(col(keyCol).as("__key"), lit(1L).as("__a"), lit(0L).as("__b"))
       .unionByName(
         b.select(col(keyCol).as("__key"), lit(0L).as("__a"), lit(1L).as("__b")))
-    val d = tagged.groupBy(col("__key"))
+    val d = Cuts.cut(tagged.groupBy(col("__key"))
       .agg(max(col("__a")).as("inA"), max(col("__b")).as("inB"))
-      .select(md5Long(col("__key")).as("h"), col("inA"), col("inB"))
-      .localCheckpoint(false)
+      .select(md5Long(col("__key")).as("h"), col("inA"), col("inB")), eager = false)
     // distinct over the HASHES (not just the keys): byte-identical to the
     // old per-side sketch under an md5 collision, where two distinct keys
     // must still contribute one sketch entry
@@ -339,11 +336,10 @@ object Sketch {
     import org.apache.spark.sql.expressions.Window
     val spark = df.sparkSession
     // eager k-row materialization: consumed twice (count + window read)
-    val sample = df
+    val sample = Cuts.cut(df
       .select(col(valueCol).cast("long").as("v"), md5Long(col(priorityCol)).as("__p"))
       .filter(col("v").isNotNull)
-      .orderBy(col("__p"), col("v")).limit(k)
-      .localCheckpoint()
+      .orderBy(col("__p"), col("v")).limit(k))
     val ns = sample.count()
     require(ns > 0, s"sampleQuantiles needs at least one non-null $valueCol value")
     // ≤k rows: the single-partition window sort is bounded by k, not corpus

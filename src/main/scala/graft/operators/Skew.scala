@@ -61,12 +61,12 @@ object Skew {
                  maxBucket: Int): DataFrame = {
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
     val keys = bucketCols.map(col)
-    // Deliberately NOT persisted: with mostly-singleton buckets (the LSH
-    // norm) the size table is the same order as the data, and a cached
-    // copy per invocation would accumulate session storage pressure
-    // against the deliberately-kept graph caches. Callers persist `df`
+    // Deliberately NOT cut: with mostly-singleton buckets (the LSH
+    // norm) the size table is the same order as the data, and a
+    // materialized copy per invocation would add storage pressure
+    // against the deliberately-kept graph caches. Callers cut `df`
     // itself when it is expensive (the LSH/shingle call sites do), making
-    // the recomputed count pass one cheap aggregate over cache.
+    // the recomputed count pass one cheap aggregate over the cut.
     val sizes = df.groupBy(keys: _*).agg(count(lit(1)).as("__sz"))
     val member = graft.functions.Hashing.md5Long(
       concat_ws("", (bucketCols :+ memberCol).map(c => col(c).cast("string")): _*))

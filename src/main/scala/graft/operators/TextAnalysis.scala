@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing.md5Long
@@ -139,7 +140,7 @@ object TextAnalysis {
     * loop (the one corpus-sized exchange — 10⁷ rows at 100 TB, not 10¹³
     * tokens); every round then runs vocabulary-sized: one pair-explode
     * aggregate, a 1-row argmax broadcast back via cross join, one
-    * codegen'd `replace` projection, and an eager `localCheckpoint` that
+    * codegen'd `replace` projection, and an eager cut that
     * keeps the per-round plan flat (an uncut chain would nest each
     * round's argmax subtree inside the next round's scan). Rounds are a
     * fixed hyperparameter (real tokenizers: 30-50k), not a convergence
@@ -147,12 +148,11 @@ object TextAnalysis {
     *
     * Returns (round, merge_left, merge_right, cnt) — one row per learned
     * merge, in learning order. */
-  def bpeLearn(docs: DataFrame, textCol: String, rounds: Int = 5): DataFrame = {
+  def bpeLearn(docs: DataFrame, textCol: String, rounds: Int = 5): DataFrame = Cuts.released {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var vocab = docs.select(explode(tokens(col(textCol))).as("w"))
+    var vocab = Cuts.cut(docs.select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("seg"), col("n"))
-      .localCheckpoint()
+      .select(concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("seg"), col("n")))
     var merges: Option[DataFrame] = None
     (1 to rounds).foreach { r =>
       val t = split(trim(col("seg")), " ")
@@ -167,11 +167,10 @@ object TextAnalysis {
         expr("split_part(pair, ' ', 1)").as("merge_left"),
         expr("split_part(pair, ' ', 2)").as("merge_right"), col("cnt"))
       merges = Some(merges.fold(m)(_.unionByName(m)))
-      vocab = vocab.crossJoin(broadcast(best.select(col("pair").as("__p"))))
+      vocab = Cuts.cut(vocab.crossJoin(broadcast(best.select(col("pair").as("__p"))))
         .select(expr(
           "replace(seg, ' ' || __p || ' ', ' ' || replace(__p, ' ', '') || ' ')").as("seg"),
-          col("n"))
-        .localCheckpoint()
+          col("n")))
     }
     merges.get
   }
@@ -345,16 +344,15 @@ object TextAnalysis {
                        r: Int = 5, k: Int = 3, maxBucket: Int = 256): DataFrame = {
     require(r >= 1 && k >= 1)
     import org.apache.spark.sql.expressions.Window
-    // Persist the raw postings (one row per kept (doc, term) — tiny next
+    // Cut the raw postings (one row per kept (doc, term) — tiny next
     // to the corpus) and join both sides of the term self-join against
-    // the cache: same contract as Dedup.lshCandidates' bucket persist.
+    // the cut, as Dedup.lshCandidates does with its bucket table.
     // Hot posting lists are capped (Skew.capBuckets, deterministic member
     // subset) so a stop-term's df² pair fan-out is bounded at any corpus
     // size; Verify audits that the cap is INACTIVE at the oracle SFs
     // (the uncapped oracle stays exact), and Skew.bucketOverflow reports
     // what a capped run dropped.
-    val raw = sparsePostings(docs, idCol, textCol, r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val raw = Cuts.cut(sparsePostings(docs, idCol, textCol, r), eager = false)
     val pruned = Skew.capBuckets(raw, Seq("term"), idCol, maxBucket)
     val a = pruned.select(col(idCol).as("doc_a"), col("term"),
       col("w").as("wa"), col("nn").as("nna"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Cuts
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.PropertyGraph
@@ -86,14 +87,13 @@ object GraphStorage {
     * guard on the wrong property key). */
   def merge(spark: SparkSession, path: String, newV: DataFrame, newE: DataFrame): Unit = {
     val existing = load(spark, path)
-    val freshV = newV.dropDuplicates("label", "key")
+    // eager cuts: sever from the store files about to be appended
+    val freshV = Cuts.cut(newV.dropDuplicates("label", "key")
       .join(existing.vertices.select("label", "key"), Seq("label", "key"), "left_anti")
-      .select(col("id"), col("label"), col("key"), col("props"))
-      .localCheckpoint() // sever from the store files about to be appended
-    val freshE = newE.dropDuplicates("src", "dst", "label")
+      .select(col("id"), col("label"), col("key"), col("props")))
+    val freshE = Cuts.cut(newE.dropDuplicates("src", "dst", "label")
       .join(existing.edges.select("src", "dst", "label"), Seq("src", "dst", "label"), "left_anti")
-      .select(col("src"), col("dst"), col("label"), col("weight"))
-      .localCheckpoint()
+      .select(col("src"), col("dst"), col("label"), col("weight")))
     freshV.write.mode(SaveMode.Append).partitionBy("label").parquet(s"$path/vertices")
     freshE.write.mode(SaveMode.Append).parquet(s"$path/edges")
   }

@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing.md5Long
-import graft.graph.{GraphBuilder, Traversal}
+import graft.Cuts
+import graft.graph.GraphBuilder
 
 /** Ingests the reference's interchange artifact — Groovy upsert scripts —
   * back into set-semantics vertex/edge batches.
@@ -144,7 +145,7 @@ object GroovyLoader {
   : (Dataset[ParsedVertex], Dataset[ParsedEdge]) = {
     val spark = scripts.sparkSession
     import spark.implicits._
-    val parsed = Traversal.cut(scripts.map(t => parseScript(t, keyProps)).toDF(), eager = false)
+    val parsed = Cuts.cut(scripts.map(t => parseScript(t, keyProps)).toDF(), eager = false)
       .as[(Seq[ParsedVertex], Seq[ParsedEdge])]
     (parsed.flatMap(_._1), parsed.flatMap(_._2))
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -775,7 +776,7 @@ object EventPipeline {
     * linear sketch, sketch(A ⊎ B) = sketch(A) + sketch(B), so batch
     * boundaries are invisible in the final state and the stream's sketch
     * equals the batch sketch of everything seen. State stays
-    * O(depth·width) rows however long the stream runs (localCheckpoint
+    * O(depth·width) rows however long the stream runs (a [[graft.Cuts.cut]]
     * per batch cuts lineage). Additivity cuts both ways: an
     * at-least-once REPLAY double-counts — feed through
     * [[dedupStream]] first when the source replays. */
@@ -783,9 +784,8 @@ object EventPipeline {
                   (batch: DataFrame, batchId: Long): Unit = {
     val inc = graft.operators.Sketch.cmsCells(batch, keyCol, depth, width)
       .groupBy(col("r"), col("b")).agg(count(lit(1)).as("c"))
-    state.cells = state.cells.unionByName(inc)
-      .groupBy(col("r"), col("b")).agg(sum(col("c")).as("c"))
-      .localCheckpoint()
+    state.cells = Cuts.cut(state.cells.unionByName(inc)
+      .groupBy(col("r"), col("b")).agg(sum(col("c")).as("c")))
   }
 
   /** foreachBatch incremental graph merge: each micro-batch of events
@@ -817,6 +817,6 @@ object EventPipeline {
       .upsertVertices(users.unionByName(types))
       .upsertEdges(edges)
     state.graph = PropertyGraph(
-      merged.vertices.localCheckpoint(), merged.edges.localCheckpoint())
+      Cuts.cut(merged.vertices), Cuts.cut(merged.edges))
   }
 }

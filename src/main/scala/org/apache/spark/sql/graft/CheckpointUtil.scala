@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.{BlockId, RDDBlockId, StorageLevel}
 
 /** Constraint-free rebuild of a (local)checkpointed DataFrame, plus the
   * block bookkeeping of such frames.
@@ -43,10 +45,16 @@ object CheckpointUtil {
   /** Frees the blocks of checkpointed frame `df`; any later read of it fails. */
   def release(df: DataFrame): Unit = logicalRdd(df).rdd.unpersist(blocking = false)
 
+  /** Entries in the session's CacheManager (its count is `private[sql]`). */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[ClassicSparkSession].sharedState.cacheManager.numCachedEntries
+
   /** Ids of every RDD that computing `df` may read: the RDD leaves of its
-    * plan and, through lineage a checkpoint has not yet truncated, every
-    * RDD they depend on. A materialized checkpoint reads only its own
-    * blocks; a lazy one not yet run still reads its whole lineage. */
+    * plan and, through lineage that is neither truncated by a checkpoint
+    * nor fully cached, every RDD they depend on. A materialized
+    * checkpoint reads only its own blocks, and so does a lazy one that a
+    * later job already computed whole; a lazy one not yet run still reads
+    * its whole lineage. */
   def readRdds(df: DataFrame): Set[Int] = {
     val leaves = df.asInstanceOf[ClassicDataFrame].queryExecution.logical
       .collectWithSubqueries { case r: LogicalRDD => r.rdd: RDD[_] }
@@ -55,10 +63,17 @@ object CheckpointUtil {
     while (todo.nonEmpty) {
       val rdd = todo.head
       todo = todo.tail
-      if (seen.add(rdd.id)) todo = rdd.dependencies.map(_.rdd).toList ++ todo
+      if (seen.add(rdd.id) && !cached(rdd)) todo = rdd.dependencies.map(_.rdd).toList ++ todo
     }
     seen.toSet
   }
+
+  /** True when every partition of `rdd` sits in the block manager. */
+  private def cached(rdd: RDD[_]): Boolean =
+    rdd.getStorageLevel != StorageLevel.NONE && {
+      val blocks = rdd.partitions.map(p => RDDBlockId(rdd.id, p.index): BlockId)
+      SparkEnv.get.blockManager.master.getLocations(blocks).forall(_.nonEmpty)
+    }
 
   private def logicalRdd(df: DataFrame): LogicalRDD =
     df.asInstanceOf[ClassicDataFrame].queryExecution.logical match {

@@ -157,9 +157,15 @@ class TraversalSpec extends AnyFunSuite {
 
   test("reachFix throws instead of silently truncating") {
     val e = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
     assertThrows[IllegalStateException] {
       Traversal.reachFix(e, Seq(1L).toDF("id"), maxIter = 2).count()
     }
+    // the throw frees every cut the call made, the prepped edge layout
+    // included (no ids are new; the ContextCleaner may drop older ones)
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty, s"persisted RDDs left by the failed call: $added")
   }
 
   test("reachFix plans grow linearly in rounds, not exponentially") {
@@ -190,6 +196,26 @@ class TraversalSpec extends AnyFunSuite {
       val results = Set(k, h).map(org.apache.spark.sql.graft.CheckpointUtil.rddId)
       assert(sc.getPersistentRDDs.keySet.toSet -- before == results)
       results.foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
+    }
+  }
+
+  test("bfsDepth, topoLayers and reachFix release their prepped edges: only the cuts the result reads stay") {
+    val sc = spark.sparkContext
+    val chain = edgesDF((0L until 6L).map(i => (i, i + 1)))
+    def leaves(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+    for ((run, rows) <- Seq[(() => org.apache.spark.sql.DataFrame, Long)](
+        (() => Traversal.bfsDepth(chain, Seq(0L).toDF("id")), 7L),
+        (() => Traversal.topoLayers(chain), 7L),
+        (() => Traversal.reachFix(chain, Seq(0L).toDF("id")), 6L))) {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = run()
+      assert(out.count() == rows)
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.subsetOf(leaves(out)), s"persisted but not read by the result: ${left -- leaves(out)}")
+      left.foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
     }
   }
 

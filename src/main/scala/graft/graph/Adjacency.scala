@@ -1,0 +1,145 @@
+package graft.graph
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+import scala.collection.mutable.ArrayBuffer
+
+/** A (src, dst) edge relation collected into compressed sparse row form:
+  * vertex `v` (an index into the sorted distinct ids) has out-neighbors
+  * `targets(offsets(v) until offsets(v + 1))`. Primitive arrays only, so
+  * a task that captures it in its closure carries a few bytes per edge,
+  * and every search over it runs without allocating per vertex.
+  * Duplicate edges stay as they are: a search skips a vertex it already
+  * reached. This is [[Traversal]]'s small-relation path (see its object
+  * doc); nothing here runs a Spark job. */
+private[graph] final class Adjacency private (
+    ids: Array[Long], offsets: Array[Int], targets: Array[Int], hasIn: Array[Boolean])
+  extends Serializable {
+
+  def size: Int = ids.length
+
+  /** The index of vertex `id`, or -1 when no edge touches it. */
+  def indexOf(id: Long): Int = math.max(-1, java.util.Arrays.binarySearch(ids, id))
+
+  def hasOut(v: Int): Boolean = offsets(v + 1) > offsets(v)
+
+  /** True when some edge enters `v` (it is not an in-degree-0 source). */
+  def hasIncoming(v: Int): Boolean = hasIn(v)
+
+  /** Per-origin reachability, streamed: for each origin index, one
+    * (origin id, node id) pair per node reachable in ≥ 1 hop (the origin
+    * itself only through a cycle). Each origin's search fills one reused
+    * int queue, which is drained before the next origin starts. Once the
+    * iterator is drained, `done` gets the largest discovery hop over the
+    * origins for which `counted` holds (0 if none). */
+  def pairs(origins: Iterator[Int], counted: Int => Boolean,
+            done: Int => Unit): Iterator[(Long, Long)] = {
+    val s = new Search
+    var maxHop = 0
+    origins.flatMap { o =>
+      val hop = s.from(o)
+      if (counted(o)) maxHop = math.max(maxHop, hop)
+      val origin = ids(o)
+      Iterator.range(0, s.reached).map(i => (origin, ids(s.queue(i))))
+    } ++ { done(maxHop); Iterator.empty }
+  }
+
+  /** Multi-source breadth-first depths: every seed at depth 0 (a null seed
+    * or one no edge touches included), then every vertex the seeds reach,
+    * at its first depth. `seeds` must be distinct. The search runs before
+    * this returns, and `done` gets its largest depth. */
+  def depths(seeds: Iterator[java.lang.Long],
+             done: Int => Unit): Iterator[(java.lang.Long, Long)] = {
+    val s = new Search
+    val untouched = ArrayBuffer.empty[java.lang.Long]
+    seeds.foreach { id =>
+      val v = if (id == null) -1 else indexOf(id)
+      if (v < 0) untouched += id else s.seed(v)
+    }
+    val depth = s.expand()
+    done(depth)
+    var d = 0
+    untouched.iterator.map(id => (id, 0L)) ++
+      Iterator.range(0, s.reached).map { i =>
+        while (i >= s.levelEnd(d)) d += 1
+        (java.lang.Long.valueOf(ids(s.queue(i))), d.toLong)
+      }
+  }
+
+  /** One task's search state, reused across searches: a vertex is marked
+    * reached when `mark(v) == stamp`, so a new search costs no clearing. */
+  private final class Search {
+    private val mark = new Array[Int](ids.length)
+    private var stamp = 1
+    val queue = new Array[Int](ids.length)
+    var reached = 0
+    private val ends = ArrayBuffer.empty[Int]
+
+    /** Queue end of level `d`: the vertices at depth d are
+      * `queue(levelEnd(d - 1) until levelEnd(d))` (level 0 = the seeds). */
+    def levelEnd(d: Int): Int = ends(d)
+
+    def seed(v: Int): Unit = push(v)
+
+    /** A fresh search whose level 1 is `o`'s out-neighbors; `o` itself is
+      * not reached at level 0. Returns the largest discovery hop. */
+    def from(o: Int): Int = {
+      stamp += 1
+      reached = 0
+      pushOut(o)
+      if (reached == 0) 0 else 1 + expand()
+    }
+
+    /** Expands the queue level by level from its current contents (one
+      * level) until a level reaches nothing new; returns the number of
+      * levels added. */
+    def expand(): Int = {
+      ends.clear()
+      ends += reached
+      var lo = 0
+      while (lo < reached) {
+        val hi = reached
+        while (lo < hi) { pushOut(queue(lo)); lo += 1 }
+        if (reached > hi) ends += reached
+      }
+      ends.length - 1
+    }
+
+    private def push(v: Int): Unit =
+      if (mark(v) != stamp) { mark(v) = stamp; queue(reached) = v; reached += 1 }
+
+    private def pushOut(v: Int): Unit = {
+      var i = offsets(v)
+      val end = offsets(v + 1)
+      while (i < end) { push(targets(i)); i += 1 }
+    }
+  }
+}
+
+private[graph] object Adjacency {
+
+  /** Collects `edges`' (src, dst) columns, which must be integral, in one
+    * job. None when an id is null: the join rounds define what a null
+    * endpoint does. */
+  def collect(edges: DataFrame): Option[Adjacency] = {
+    val rows = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val all = rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+    java.util.Arrays.sort(all)
+    val ids = all.distinct // stays sorted: distinct keeps first occurrences
+    val s = rows.map(r => java.util.Arrays.binarySearch(ids, r.getLong(0)))
+    val d = rows.map(r => java.util.Arrays.binarySearch(ids, r.getLong(1)))
+    val offsets = new Array[Int](ids.length + 1)
+    s.foreach(v => offsets(v + 1) += 1)
+    for (v <- ids.indices) offsets(v + 1) += offsets(v)
+    val fill = offsets.clone()
+    val targets = new Array[Int](rows.length)
+    val hasIn = new Array[Boolean](ids.length)
+    for (i <- rows.indices) {
+      targets(fill(s(i))) = d(i); fill(s(i)) += 1
+      hasIn(d(i)) = true
+    }
+    Some(new Adjacency(ids, offsets, targets, hasIn))
+  }
+}

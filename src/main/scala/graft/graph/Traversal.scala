@@ -1,8 +1,13 @@
 package graft.graph
 
 import graft.Cuts.{cut, released}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.util.CollectionAccumulator
+
+import scala.jdk.CollectionConverters._
 
 /** Distributed traversal engine — the Spark-native replacement for the
   * reference's two traversal mechanisms:
@@ -44,6 +49,20 @@ import org.apache.spark.sql.functions._
   *     rounds, loop inputs under a final eager cut) is unpersisted at
   *     once instead of waiting for the ContextCleaner — repeated calls
   *     leave no residue in executor storage.
+  *
+  * Small-relation path: [[reachFix]], [[closureDoubling]] and [[bfsDepth]]
+  * skip the join rounds when the planner would broadcast the edge
+  * relation — integral ids, and the (src, dst) frame's
+  * `optimizedPlan.stats.sizeInBytes` at most
+  * `spark.sql.autoBroadcastJoinThreshold` (-1 turns it off). The edges
+  * are then collected once into an [[Adjacency]] (primitive CSR arrays,
+  * held for the call only), and the whole fixpoint runs in ONE eager cut
+  * whose tasks search that adjacency from their closure: one search per
+  * origin for reachFix and closure, one multi-source search in a single
+  * task for bfsDepth. The largest discovery hop comes back from the same
+  * job, and the call throws the join rounds' error exactly when their
+  * round limit would. Same rows and schema as the rounds; above the
+  * bound, or with non-integral or null ids, the rounds run unchanged.
   *
   * Scale notes (100 TB): each hop is one join frontier⋈edges; the edge
   * set is expected hash-partitioned AND sorted by `src` ([[GraphStore]]
@@ -204,6 +223,47 @@ object Traversal {
         .select(col("dst").as("id"))
     }
 
+  /** The small-relation path's test (see the object doc): `edges`
+    * collected as an [[Adjacency]] when its (src, dst) columns and the `id`
+    * column of every frame in `starts` are integral and the planner would
+    * broadcast the (src, dst) relation; None, and the join rounds run,
+    * otherwise. */
+  private def small(edges: DataFrame, starts: DataFrame*): Option[Adjacency] = {
+    val e = edges.select(col("src"), col("dst"))
+    // a start frame without an `id` fails in the rounds' own analysis
+    val integral = starts.forall(_.columns.contains("id")) &&
+      (e.schema.fields ++ starts.map(_.schema("id"))).forall(_.dataType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      })
+    val t = e.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    val threshold = if (t.startsWith("-")) -1L else JavaUtils.byteStringAsBytes(t)
+    val adj =
+      if (integral && e.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold))
+        Adjacency.collect(e)
+      else None
+    if (adj.isDefined) smallPathRuns.incrementAndGet()
+    adj
+  }
+
+  /** Calls that took the small-relation path, so a caller (TraversalSpec)
+    * can assert which path ran instead of trusting the input's size. */
+  private[graft] val smallPathRuns = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  private val longPairs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+
+  /** The small path's one job: `search` builds the result from tasks that
+    * report their largest hop to the accumulator it is given. The result
+    * is cut eagerly, and the call throws `limit` when `over` holds for the
+    * largest hop reported (0 if no task ran). */
+  private def searched(spark: SparkSession, over: Int => Boolean, limit: => RuntimeException)(
+      search: CollectionAccumulator[Int] => DataFrame): DataFrame = released {
+    val hops = spark.sparkContext.collectionAccumulator[Int]
+    val out = cut(search(hops))
+    if (over(hops.value.asScala.foldLeft(0)(math.max))) throw limit
+    out
+  }
+
   private def pairs(start: DataFrame, dedupStart: Boolean): DataFrame = {
     val p = start.select(col("id").as("origin"), col("id").as("node"))
     if (dedupStart) p.distinct() else p
@@ -249,15 +309,43 @@ object Traversal {
     * if `maxIter` levels are exceeded first (a truncated depth map is a
     * wrong answer, not a partial one). */
   def bfsDepth(edges: DataFrame, start: DataFrame, maxIter: Int = 64,
-               prepEdges: Boolean = true): DataFrame = released {
+               prepEdges: Boolean = true): DataFrame =
+    small(edges, start) match {
+      case Some(adj) => bfsDepthSmall(adj, edges, start, maxIter)
+      case None => bfsDepthRounds(edges, start, maxIter, prepEdges)
+    }
+
+  private def bfsDepthLimit(maxIter: Int) = new IllegalArgumentException(
+    s"bfsDepth did not converge in $maxIter levels — raise maxIter")
+
+  /** [[bfsDepth]] over a collected adjacency: one multi-source search in
+    * one task. The rounds probe every second level, so they stop after
+    * level D + 1 rounded up to even (D = the largest depth) and throw when
+    * the pair holding it would start past `maxIter`. */
+  private def bfsDepthSmall(adj: Adjacency, edges: DataFrame, start: DataFrame,
+                            maxIter: Int): DataFrame = {
+    // the rounds' id is the seed and neighbor ids' union type
+    val idType = start.select(col("id"))
+      .unionByName(edges.select(col("dst").as("id"))).schema("id").dataType
+    searched(start.sparkSession, d => math.max(1, if (d % 2 == 1) d else d + 1) > maxIter,
+        bfsDepthLimit(maxIter)) { hops =>
+      start.select(col("id").cast("long").as("id")).distinct().coalesce(1)
+        .as(Encoders.LONG)
+        .mapPartitions(it => adj.depths(it, hops.add))(
+          Encoders.tuple(Encoders.LONG, Encoders.scalaLong))
+        .toDF("id", "depth").select(col("id").cast(idType).as("id"), col("depth"))
+    }
+  }
+
+  private def bfsDepthRounds(edges: DataFrame, start: DataFrame, maxIter: Int,
+                             prepEdges: Boolean): DataFrame = released {
     val e = prep(edges, prepEdges)
     val seed = cut(start.select(col("id")).distinct().withColumn("depth", lit(0L)),
       eager = false)
     // state: (this level, every level so far — the visited set)
     val (_, levels) = iterate[(DataFrame, List[DataFrame])](maxIter,
         converged = _._1.count() == 0,
-        atLimit = _ => throw new IllegalArgumentException(
-          s"bfsDepth did not converge in $maxIter levels — raise maxIter"),
+        atLimit = _ => throw bfsDepthLimit(maxIter),
         widen = true)((seed, List(seed))) { case ((frontier, levels), depth) =>
       val seen = levels.map(_.select(col("id"))).reduce(_ unionByName _)
       (stepIds(frontier.select(col("id")), e).distinct()
@@ -470,16 +558,43 @@ object Traversal {
     * Throws if `maxIter` is hit before convergence: a silently truncated
     * closure is a wrong answer, not a partial one. */
   def reachFix(edges: DataFrame, start: DataFrame, maxIter: Int = 64,
-               prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame = released {
+               prepEdges: Boolean = true, dedupStart: Boolean = true): DataFrame =
+    small(edges, start) match {
+      case Some(adj) => reachFixSmall(adj, edges, start, maxIter)
+      case None => reachFixRounds(edges, start, maxIter, prepEdges, dedupStart)
+    }
+
+  private def reachFixLimit(maxIter: Int) = new IllegalStateException(
+    s"reachFix did not converge within $maxIter iterations — " +
+      "the transitive closure would be silently truncated; raise maxIter")
+
+  /** [[reachFix]] over a collected adjacency: one search per distinct
+    * origin. Round r of the rounds finds the pairs at shortest distance r,
+    * so they stop after round D + 1 (D = the largest discovery hop) and
+    * throw when that round would pass `maxIter`. The start ids are
+    * deduplicated whatever `dedupStart` says: the rounds' per-round
+    * `distinct` makes their result a set either way. */
+  private def reachFixSmall(adj: Adjacency, edges: DataFrame, start: DataFrame,
+                            maxIter: Int): DataFrame =
+    searched(start.sparkSession, _ >= maxIter, reachFixLimit(maxIter)) { hops =>
+      start.select(col("id").cast("long").as("id"))
+        .where(col("id").isNotNull).distinct().as(Encoders.scalaLong)
+        .mapPartitions(it =>
+          adj.pairs(it.map(adj.indexOf).filter(_ >= 0), _ => true, hops.add))(longPairs)
+        .toDF("origin", "node").select(
+          col("origin").cast(start.schema("id").dataType).as("origin"),
+          col("node").cast(edges.schema("dst").dataType).as("node"))
+    }
+
+  private def reachFixRounds(edges: DataFrame, start: DataFrame, maxIter: Int,
+                             prepEdges: Boolean, dedupStart: Boolean): DataFrame = released {
     val e = prep(edges, prepEdges)
     // state: (this round's new pairs, every round's new pairs); the
     // result is their disjoint union, each round materialized by its
     // own count probe
     val (_, found) = iterate[(DataFrame, List[DataFrame])](maxIter,
         converged = _._1.count() == 0,
-        atLimit = _ => throw new IllegalStateException(
-          s"reachFix did not converge within $maxIter iterations — " +
-            "the transitive closure would be silently truncated; raise maxIter"))(
+        atLimit = _ => throw reachFixLimit(maxIter))(
         (pairs(start, dedupStart), Nil)) { case ((frontier, found), _) =>
       val stepped = stepPairs(frontier, e)
       // shuffle_hash hint: the visited set only needs hash membership, not
@@ -527,7 +642,38 @@ object Traversal {
     *
     * Convergence witness: empty delta — exact and type-agnostic; its
     * count is the job that materializes the delta's cut. */
-  def closureDoubling(edges: DataFrame, maxIter: Int = 20): DataFrame = released {
+  def closureDoubling(edges: DataFrame, maxIter: Int = 20): DataFrame =
+    small(edges) match {
+      case Some(adj) => closureSmall(adj, edges, maxIter)
+      case None => closureRounds(edges, maxIter)
+    }
+
+  private def closureLimit(maxIter: Int) = new IllegalStateException(
+    s"closureDoubling did not converge within $maxIter rounds " +
+      s"(path length 2^$maxIter) — the closure would be silently " +
+      "truncated; raise maxIter")
+
+  /** [[closureDoubling]] over a collected adjacency: one search per edge
+    * source. The rounds double only the core (the peel below), and after
+    * round r they hold its pairs of shortest distance ≤ 2^r, so they throw
+    * when the core's longest shortest path L exceeds 2^maxIter (or when
+    * `maxIter` < 1: round 1 always runs). A core vertex is one with an
+    * incoming edge, and a search from it only ever walks core edges, so L
+    * is the largest hop over the searches from such origins. */
+  private def closureSmall(adj: Adjacency, edges: DataFrame, maxIter: Int): DataFrame = {
+    val spark = edges.sparkSession
+    searched(spark, l => maxIter < 1 || (maxIter < 62 && l > (1L << maxIter)),
+        closureLimit(maxIter)) { hops =>
+      spark.range(0, adj.size, 1, spark.sparkContext.defaultParallelism)
+        .mapPartitions(it =>
+          adj.pairs(it.map(_.intValue).filter(adj.hasOut), adj.hasIncoming, hops.add))(longPairs)
+        .toDF("origin", "node").select(
+          col("origin").cast(edges.schema("src").dataType).as("origin"),
+          col("node").cast(edges.schema("dst").dataType).as("node"))
+    }
+  }
+
+  private def closureRounds(edges: DataFrame, maxIter: Int): DataFrame = released {
     // SOURCE PEEL (round 14): an in-degree-0 vertex cannot sit on a cycle
     // and no path passes THROUGH it (an edge into it would give it
     // in-degree), so
@@ -585,10 +731,7 @@ object Traversal {
     // state: (the last round's delta, every delta so far — the closure)
     val (_, deltas) = iterate[(DataFrame, List[DataFrame])](maxIter,
         converged = _._1.count() == 0,
-        atLimit = _ => throw new IllegalStateException(
-          s"closureDoubling did not converge within $maxIter rounds " +
-            s"(path length 2^$maxIter) — the closure would be silently " +
-            "truncated; raise maxIter"))((seed, List(seed))) { case ((delta, deltas), _) =>
+        atLimit = _ => throw closureLimit(maxIter))((seed, List(seed))) { case ((delta, deltas), _) =>
       // the closure so far, rebuilt per use: the round's tree references
       // it on both the compose side and the anti probe
       def full(): DataFrame = deltas.reduce(_.unionByName(_))

@@ -377,11 +377,11 @@ object GremlinLite {
                 // vertex satisfying the predicate still steps), then the
                 // closure continues only from and through non-stop
                 // vertices (until halts a traverser AT the predicate).
-                // Eagerly materialized: s1 feeds the BFS seed, the BFS
-                // seed's visited union, AND the final traverser-set union
-                // — without the cut, the |V_start| ⋈ edges hop join
-                // re-executes once per consumer (measured 3× ≈ 2 s at
-                // sf0.1 on the flagship lineitem walk).
+                // Eagerly materialized: s1 feeds the BFS seeds AND the
+                // final traverser-set union — without the cut, the
+                // |V_start| ⋈ edges hop join re-executes once per consumer
+                // (measured 3× ≈ 2 s at sf0.1 on the flagship lineitem
+                // walk). One job, whichever path bfsDepth takes below.
                 val s1 = Cuts.cut(startIds.join(step, col("id") === col("src"))
                   .select(col("dst").as("id")).distinct())
                 val contStart = s1.join(stopIds, Seq("id"), "left_anti")
@@ -394,6 +394,12 @@ object GremlinLite {
                 // O(origins × nodes) pair closure. bfsDepth returns
                 // contStart (depth 0) ∪ reach≥1(contStart); unioned with
                 // s1 ⊇ contStart that is exactly the traverser set.
+                // What runs: when ePrime is broadcast-sized (perfbench's
+                // IAM stores; the g5 walk at sf0.001 and sf0.01), bfsDepth
+                // collects it once and runs the whole search in one task —
+                // Traversal's small-relation path, which ignores prepEdges.
+                // Above that bound (g5 at sf0.1) its join rounds run, one
+                // job per two levels, and there
                 // prepEdges = false when the store's edges are cached
                 // (optimization round 17): ePrime is a broadcast anti-join
                 // OVER the src-partitioned cached edge frame — the layout
@@ -409,7 +415,9 @@ object GremlinLite {
                 else visited.join(stopIds, Seq("id"), "left_semi")
               case None => // bare emit(): everything reachable in ≥ 1 hop
                 // explicit first hop, then BFS from it: s1 ∪ reach≥1(s1)
-                // = reach≥1(start), cycles through the start included
+                // = reach≥1(start), cycles through the start included.
+                // No cut: bfsDepth reads s1 once, as its seeds, on either
+                // path
                 val s1 = startIds.join(step, col("id") === col("src"))
                   .select(col("dst").as("id")).distinct()
                 Traversal.bfsDepth(step, s1,

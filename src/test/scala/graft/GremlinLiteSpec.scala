@@ -127,6 +127,30 @@ class GremlinLiteSpec extends AnyFunSuite {
     }
   }
 
+  test("property: repeat().until()/emit() agree on the small-relation path and the join rounds") {
+    // seeded random graphs: cycles, a self-loop and a duplicate edge each
+    val rnd = new scala.util.Random(99)
+    val labels = Seq("user", "group", "project")
+    for (_ <- 1 to 4) {
+      val n = 6 + rnd.nextInt(10)
+      val vs = (0 until n).map(v =>
+        (v.toLong, labels(rnd.nextInt(labels.length)), s"k$v", Map.empty[String, String]))
+      val drawn = Seq.fill(2 * n)((rnd.nextLong(n), rnd.nextLong(n)))
+      val es = (drawn :+ drawn.head :+ ((0L, 0L))).map { case (s, d) => (s, d, "in", 1) }
+      val rg = PropertyGraph(vs.toDF("id", "label", "key", "props"),
+        es.toDF("src", "dst", "label", "weight"))
+      for (q <- Seq(
+          "g.V().hasLabel('user').repeat(out('in')).until(hasLabel('project')).id()",
+          "g.V().hasLabel('user').repeat(out('in')).until(hasLabel('project')).emit().id()",
+          "g.V().hasLabel('project').repeat(in('in')).until(hasLabel('user')).emit().id()",
+          "g.V().hasLabel('user').repeat(out('in')).emit().id()",
+          "g.V().hasLabel('group').repeat(in('in')).emit().id()")) {
+        val (small, rounds) = TestSpark.onBothPaths(TestSpark.rowsAndSchema(GremlinLite.run(rg, q)))
+        assert(small == rounds, s"$q on edges $es")
+      }
+    }
+  }
+
   test("mutate(): typed addV/addE upsert and drop() lower to the set-semantics API") {
     val script =
       """if (g.V().hasLabel('user').has('email','new@d').hasNext() == false) {

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.DataType
+import org.scalatest.Assertions
 
 /** Shared local session for all suites (one JVM, one context). */
 object TestSpark {
@@ -18,4 +20,25 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` twice: first on `Traversal`'s small-relation path (the
+    * default broadcast threshold, which the specs' graphs are under), then
+    * on its join rounds (the threshold at -1). Asserts that each run took
+    * its path, and returns both results. */
+  def onBothPaths[A](body: => A): (A, A) = {
+    val runs = graph.Traversal.smallPathRuns
+    val before = runs.get
+    val small = body
+    Assertions.assert(runs.get > before, "the small-relation path did not run")
+    val mid = runs.get
+    val rounds = GateSupport.withConfs(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+    Assertions.assert(runs.get == mid, "the small-relation path ran with the threshold at -1")
+    (small, rounds)
+  }
+
+  /** `df`'s rows in a fixed order (duplicates kept) and its schema's
+    * column names and types. */
+  def rowsAndSchema(df: DataFrame): (Seq[Row], Seq[(String, DataType)]) =
+    (df.collect().toSeq.sortBy(_.toString), df.schema.map(f => f.name -> f.dataType))
 }

@@ -59,30 +59,32 @@ class TraversalSpec extends AnyFunSuite {
   }
 
   test("bfsDepth: multi-source min-hop; short path wins; cycles terminate") {
-    // 1 -> 2 -> 3 -> 4 and 1 -> 4 directly: 4's min depth is 1, not 3.
-    // 5 <-> 6 cycle hangs off 4 (4 -> 5): cycle-safe, depths 2 and 3.
-    val es = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L), (5L, 6L), (6L, 5L)))
-    val d = Traversal.bfsDepth(es, Seq(1L).toDF("id"))
-      .as[(Long, Long)].collect().toMap
-    assert(d == Map(1L -> 0L, 2L -> 1L, 4L -> 1L, 3L -> 2L, 5L -> 2L, 6L -> 3L))
-    // Multi-source: seeds {3, 1} — 4 still depth 1 (via 1), 5 depth 2.
-    val d2 = Traversal.bfsDepth(es, Seq(3L, 1L).toDF("id"))
-      .as[(Long, Long)].collect().toMap
-    assert(d2(4L) == 1L && d2(3L) == 0L && d2(5L) == 2L)
-    // Unreachable convergence guard: tiny maxIter on a longer graph throws.
-    assertThrows[IllegalArgumentException] {
-      Traversal.bfsDepth(es, Seq(1L).toDF("id"), maxIter = 1)
-    }
-    // Depth exactly an odd maxIter converges: the level past it is the
-    // emptiness witness, not a round-limit failure.
-    val star = edgesDF(Seq((1L, 2L), (1L, 3L), (1L, 4L)))
-    assert(Traversal.bfsDepth(star, Seq(1L).toDF("id"), maxIter = 1)
-      .as[(Long, Long)].collect().toMap == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-    val chain = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
-    assert(Traversal.bfsDepth(chain, Seq(1L).toDF("id"), maxIter = 3)
-      .as[(Long, Long)].collect().toMap == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
-    assertThrows[IllegalArgumentException] {
-      Traversal.bfsDepth(chain, Seq(1L).toDF("id"), maxIter = 2)
+    TestSpark.onBothPaths {
+      // 1 -> 2 -> 3 -> 4 and 1 -> 4 directly: 4's min depth is 1, not 3.
+      // 5 <-> 6 cycle hangs off 4 (4 -> 5): cycle-safe, depths 2 and 3.
+      val es = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (4L, 5L), (5L, 6L), (6L, 5L)))
+      val d = Traversal.bfsDepth(es, Seq(1L).toDF("id"))
+        .as[(Long, Long)].collect().toMap
+      assert(d == Map(1L -> 0L, 2L -> 1L, 4L -> 1L, 3L -> 2L, 5L -> 2L, 6L -> 3L))
+      // Multi-source: seeds {3, 1} — 4 still depth 1 (via 1), 5 depth 2.
+      val d2 = Traversal.bfsDepth(es, Seq(3L, 1L).toDF("id"))
+        .as[(Long, Long)].collect().toMap
+      assert(d2(4L) == 1L && d2(3L) == 0L && d2(5L) == 2L)
+      // Unreachable convergence guard: tiny maxIter on a longer graph throws.
+      assertThrows[IllegalArgumentException] {
+        Traversal.bfsDepth(es, Seq(1L).toDF("id"), maxIter = 1)
+      }
+      // Depth exactly an odd maxIter converges: the level past it is the
+      // emptiness witness, not a round-limit failure.
+      val star = edgesDF(Seq((1L, 2L), (1L, 3L), (1L, 4L)))
+      assert(Traversal.bfsDepth(star, Seq(1L).toDF("id"), maxIter = 1)
+        .as[(Long, Long)].collect().toMap == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+      val chain = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
+      assert(Traversal.bfsDepth(chain, Seq(1L).toDF("id"), maxIter = 3)
+        .as[(Long, Long)].collect().toMap == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+      assertThrows[IllegalArgumentException] {
+        Traversal.bfsDepth(chain, Seq(1L).toDF("id"), maxIter = 2)
+      }
     }
   }
 
@@ -156,32 +158,36 @@ class TraversalSpec extends AnyFunSuite {
   }
 
   test("reachFix throws instead of silently truncating") {
-    val e = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    assertThrows[IllegalStateException] {
-      Traversal.reachFix(e, Seq(1L).toDF("id"), maxIter = 2).count()
+    TestSpark.onBothPaths {
+      val e = edgesDF(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet.toSet
+      assertThrows[IllegalStateException] {
+        Traversal.reachFix(e, Seq(1L).toDF("id"), maxIter = 2).count()
+      }
+      // the throw frees every cut the call made, the prepped edge layout
+      // included (no ids are new; the ContextCleaner may drop older ones)
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(added.isEmpty, s"persisted RDDs left by the failed call: $added")
     }
-    // the throw frees every cut the call made, the prepped edge layout
-    // included (no ids are new; the ContextCleaner may drop older ones)
-    val added = sc.getPersistentRDDs.keySet.toSet -- before
-    assert(added.isEmpty, s"persisted RDDs left by the failed call: $added")
   }
 
   test("reachFix plans grow linearly in rounds, not exponentially") {
-    // Each round's relation is cut, so the returned frame's analyzed plan
-    // is a union of one leaf per round. Caching alone (persist) skips
-    // re-execution but not re-analysis: the plan then doubles per round
-    // (thousands of lines at 6 hops, minutes of analysis at 8).
-    val hops = 6
-    val chain = edgesDF((0L until hops.toLong).map(i => (i, i + 1)))
-    def lines(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.analyzed.treeString.split("\n").length
-    val reach = Traversal.reachFix(chain, Seq(0L).toDF("id"))
-    assert(reach.count() == hops)
-    // hops productive rounds plus the empty round that converges
-    val rounds = hops + 1
-    assert(lines(reach) <= 4 * rounds + 8, reach.queryExecution.analyzed.treeString)
+    TestSpark.onBothPaths {
+      // Each round's relation is cut, so the returned frame's analyzed plan
+      // is a union of one leaf per round. Caching alone (persist) skips
+      // re-execution but not re-analysis: the plan then doubles per round
+      // (thousands of lines at 6 hops, minutes of analysis at 8).
+      val hops = 6
+      val chain = edgesDF((0L until hops.toLong).map(i => (i, i + 1)))
+      def lines(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.analyzed.treeString.split("\n").length
+      val reach = Traversal.reachFix(chain, Seq(0L).toDF("id"))
+      assert(reach.count() == hops)
+      // hops productive rounds plus the empty round that converges
+      val rounds = hops + 1
+      assert(lines(reach) <= 4 * rounds + 8, reach.queryExecution.analyzed.treeString)
+    }
   }
 
   test("khop and hopPower release their per-round cuts: each call leaves only its result") {
@@ -200,22 +206,111 @@ class TraversalSpec extends AnyFunSuite {
   }
 
   test("bfsDepth, topoLayers and reachFix release their prepped edges: only the cuts the result reads stay") {
+    TestSpark.onBothPaths {
+      val sc = spark.sparkContext
+      val chain = edgesDF((0L until 6L).map(i => (i, i + 1)))
+      def leaves(df: org.apache.spark.sql.DataFrame): Set[Int] =
+        df.queryExecution.logical.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+        }.toSet
+      for ((run, rows) <- Seq[(() => org.apache.spark.sql.DataFrame, Long)](
+          (() => Traversal.bfsDepth(chain, Seq(0L).toDF("id")), 7L),
+          (() => Traversal.topoLayers(chain), 7L),
+          (() => Traversal.reachFix(chain, Seq(0L).toDF("id")), 6L))) {
+        val before = sc.getPersistentRDDs.keySet.toSet
+        val out = run()
+        assert(out.count() == rows)
+        val left = sc.getPersistentRDDs.keySet.toSet -- before
+        assert(left.subsetOf(leaves(out)), s"persisted but not read by the result: ${left -- leaves(out)}")
+        left.foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
+      }
+    }
+  }
+
+  test("property: the small-relation path equals the join rounds on seeded random graphs") {
+    // cycles, self-loops, duplicate edges, a start id no edge touches,
+    // duplicate and null start ids; Long, Int and mixed id types; at the
+    // spec's 4 shuffle partitions, at 1, and at 2N + 1 = 9 (N = 4 cores)
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val rnd = new scala.util.Random(2026)
+    val idTypes = Seq(LongType -> LongType, IntegerType -> IntegerType,
+      IntegerType -> LongType, LongType -> IntegerType) // (edge ids, start ids)
+    for (parts <- Seq("4", "1", "9"); (edgeType, startType) <- idTypes) {
+      val n = 3 + rnd.nextInt(10)
+      val drawn = Seq.fill(2 + rnd.nextInt(25))((rnd.nextLong(n), rnd.nextLong(n)))
+      val es = drawn :+ drawn.head :+ ((n - 1L, n - 1L))
+      val starts = Seq(Some(rnd.nextLong(n)), Some(0L), Some(0L), Some(n + 50L), None)
+      val e = es.toDF("src", "dst")
+        .select(col("src").cast(edgeType).as("src"), col("dst").cast(edgeType).as("dst"))
+      val s = starts.toDF("id").select(col("id").cast(startType).as("id"))
+      GateSupport.withConfs(spark, "spark.sql.shuffle.partitions" -> parts) {
+        for ((alg, run) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+            "reachFix" -> (() => Traversal.reachFix(e, s)),
+            "reachFix(dedupStart = false)" -> (() => Traversal.reachFix(e, s, dedupStart = false)),
+            "closureDoubling" -> (() => Traversal.closureDoubling(e)),
+            "bfsDepth" -> (() => Traversal.bfsDepth(e, s)))) {
+          val (small, rounds) = TestSpark.onBothPaths(TestSpark.rowsAndSchema(run()))
+          assert(small == rounds,
+            s"$alg, $parts partitions, ids $edgeType/$startType, edges $es, starts $starts")
+        }
+      }
+    }
+  }
+
+  test("round limits: the small-relation path throws exactly when the join rounds do") {
+    val sc = spark.sparkContext
+    /** The call's rows, or its error's class and message; a throw must
+      * leave no new persisted RDD behind, a result only its own cut. */
+    def outcome(run: => org.apache.spark.sql.DataFrame): Either[(Class[_], String), Seq[String]] = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out =
+        try Right(run.collect().map(_.toString).sorted.toSeq)
+        catch { case t: RuntimeException => Left((t.getClass, t.getMessage)) }
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      if (out.isLeft) assert(added.isEmpty, s"persisted RDDs left by the failed call: $added")
+      added.foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
+      out
+    }
+    val graphs = Seq(
+      "chain of 4" -> (1L to 4L).map(i => (i, i + 1)),
+      "chain of 5" -> (1L to 5L).map(i => (i, i + 1)),
+      "chain of 10" -> (1L to 10L).map(i => (i, i + 1)),
+      "star" -> (2L to 5L).map(i => (1L, i)),
+      "4-cycle" -> Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)))
+    val thrown = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    for ((name, es) <- graphs; maxIter <- 1 to 6) {
+      val e = edgesDF(es)
+      val start = Seq(1L).toDF("id")
+      for ((alg, run) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+          "reachFix" -> (() => Traversal.reachFix(e, start, maxIter)),
+          "closureDoubling" -> (() => Traversal.closureDoubling(e, maxIter)),
+          "bfsDepth" -> (() => Traversal.bfsDepth(e, start, maxIter)))) {
+        val (small, rounds) = TestSpark.onBothPaths(outcome(run()))
+        assert(small == rounds, s"$alg on the $name at maxIter $maxIter")
+        if (small.isLeft) thrown(alg) += 1
+      }
+    }
+    // every algorithm hit its limit somewhere, and converged somewhere
+    assert(thrown.keySet == Set("reachFix", "closureDoubling", "bfsDepth") &&
+      thrown.values.forall(_ < graphs.length * 6), s"throws per algorithm: $thrown")
+  }
+
+  test("the small-relation path keeps no state: repeated calls leave only their result cuts") {
     val sc = spark.sparkContext
     val chain = edgesDF((0L until 6L).map(i => (i, i + 1)))
-    def leaves(df: org.apache.spark.sql.DataFrame): Set[Int] =
-      df.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }.toSet
-    for ((run, rows) <- Seq[(() => org.apache.spark.sql.DataFrame, Long)](
-        (() => Traversal.bfsDepth(chain, Seq(0L).toDF("id")), 7L),
-        (() => Traversal.topoLayers(chain), 7L),
-        (() => Traversal.reachFix(chain, Seq(0L).toDF("id")), 6L))) {
+    for (_ <- 1 to 3) {
+      val runs = Traversal.smallPathRuns.get
       val before = sc.getPersistentRDDs.keySet.toSet
-      val out = run()
-      assert(out.count() == rows)
-      val left = sc.getPersistentRDDs.keySet.toSet -- before
-      assert(left.subsetOf(leaves(out)), s"persisted but not read by the result: ${left -- leaves(out)}")
-      left.foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
+      val entries = org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark)
+      val outs = Seq(Traversal.reachFix(chain, Seq(0L).toDF("id")),
+        Traversal.closureDoubling(chain), Traversal.bfsDepth(chain, Seq(0L).toDF("id")))
+      assert(outs.map(_.count()) == Seq(6L, 21L, 7L))
+      assert(Traversal.smallPathRuns.get == runs + 3)
+      val results = outs.map(org.apache.spark.sql.graft.CheckpointUtil.rddId).toSet
+      assert(sc.getPersistentRDDs.keySet.toSet -- before == results)
+      assert(org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark) == entries)
+      results.foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
     }
   }
 

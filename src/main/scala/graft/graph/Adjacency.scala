@@ -1,7 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -67,6 +67,31 @@ private[graph] final class Adjacency private (
       }
   }
 
+  /** GremlinLite's `repeat().until()/emit()` search, run on the driver:
+    * `s1` is the out-neighbors of `seeds`, and a breadth-first search
+    * starts from `s1` minus the `stops` and never expands a stop vertex.
+    * Returns the ids of `s1` ∪ everything reached (only the stop vertices
+    * among them when `onlyStops`) and the search's largest depth — the
+    * depth bfsDepth finds from the same start over the edges that leave
+    * no stop vertex. A stop vertex in `s1` is no seed, so reaching it
+    * again later counts toward that depth. Ids no edge touches never
+    * match. */
+  def stopping(seeds: Iterator[Long], stops: Iterator[Long],
+               onlyStops: Boolean): (Array[Long], Int) = {
+    val stop = new Array[Boolean](ids.length)
+    stops.foreach { id => val v = indexOf(id); if (v >= 0) stop(v) = true }
+    val hit = new Array[Boolean](ids.length) // s1, then everything reached
+    seeds.foreach { id =>
+      val u = indexOf(id)
+      if (u >= 0) for (i <- offsets(u) until offsets(u + 1)) hit(targets(i)) = true
+    }
+    val s = new Search
+    for (v <- ids.indices if hit(v) && !stop(v)) s.seed(v)
+    val depth = s.expand(stop)
+    for (i <- 0 until s.reached) hit(s.queue(i)) = true
+    (ids.indices.iterator.filter(v => hit(v) && (stop(v) || !onlyStops)).map(v => ids(v)).toArray, depth)
+  }
+
   /** One task's search state, reused across searches: a vertex is marked
     * reached when `mark(v) == stamp`, so a new search costs no clearing. */
   private final class Search {
@@ -92,15 +117,19 @@ private[graph] final class Adjacency private (
     }
 
     /** Expands the queue level by level from its current contents (one
-      * level) until a level reaches nothing new; returns the number of
-      * levels added. */
-    def expand(): Int = {
+      * level) until a level reaches nothing new, never from a vertex `v`
+      * with `stop(v)` (null: none); returns the number of levels added. */
+    def expand(stop: Array[Boolean] = null): Int = {
       ends.clear()
       ends += reached
       var lo = 0
       while (lo < reached) {
         val hi = reached
-        while (lo < hi) { pushOut(queue(lo)); lo += 1 }
+        while (lo < hi) {
+          val v = queue(lo)
+          if (stop == null || !stop(v)) pushOut(v)
+          lo += 1
+        }
         if (reached > hi) ends += reached
       }
       ends.length - 1
@@ -119,11 +148,22 @@ private[graph] final class Adjacency private (
 
 private[graph] object Adjacency {
 
-  /** Collects `edges`' (src, dst) columns, which must be integral, in one
-    * job. None when an id is null: the join rounds define what a null
-    * endpoint does. */
-  def collect(edges: DataFrame): Option[Adjacency] = {
-    val rows = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+  /** The rows of every frame in `frames`, in one job: each frame's one or
+    * two integral columns, as longs (`a`, then `b`), are tagged with the
+    * frame's position, and the union of the tagged rows is collected
+    * once. Returns each frame's rows, in `frames`' order. */
+  def collectAll(frames: DataFrame*): Seq[Array[Row]] = {
+    val tagged = frames.zipWithIndex.map { case (f, k) =>
+      val ab = f.columns.map(c => col(c).cast("long")).padTo(2, lit(null).cast("long"))
+      f.select(lit(k).as("kind"), ab(0).as("a"), ab(1).as("b"))
+    }.reduce(_ unionByName _)
+    val byKind = tagged.collect().groupBy(_.getInt(0))
+    frames.indices.map(k => byKind.getOrElse(k, Array.empty[Row]).map(r => Row(r.get(1), r.get(2))))
+  }
+
+  /** The adjacency of (src, dst) rows of longs. None when an id is null:
+    * the join rounds define what a null endpoint does. */
+  def of(rows: Array[Row]): Option[Adjacency] = {
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val all = rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
     java.util.Arrays.sort(all)

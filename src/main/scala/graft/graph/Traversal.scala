@@ -4,7 +4,7 @@ import graft.Cuts.{cut, released}
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField}
 import org.apache.spark.util.CollectionAccumulator
 
 import scala.jdk.CollectionConverters._
@@ -63,6 +63,9 @@ import scala.jdk.CollectionConverters._
   * job, and the call throws the join rounds' error exactly when their
   * round limit would. Same rows and schema as the rounds; above the
   * bound, or with non-integral or null ids, the rounds run unchanged.
+  * GremlinLite's `repeat().until()/emit()` takes the same test through
+  * [[untilSmall]], over its hop relation, seed ids and stop ids, and
+  * searches on the driver instead of in a task.
   *
   * Scale notes (100 TB): each hop is one join frontier⋈edges; the edge
   * set is expected hash-partitioned AND sorted by `src` ([[GraphStore]]
@@ -231,19 +234,48 @@ object Traversal {
   private def small(edges: DataFrame, starts: DataFrame*): Option[Adjacency] = {
     val e = edges.select(col("src"), col("dst"))
     // a start frame without an `id` fails in the rounds' own analysis
-    val integral = starts.forall(_.columns.contains("id")) &&
-      (e.schema.fields ++ starts.map(_.schema("id"))).forall(_.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      })
-    val t = e.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
-    val threshold = if (t.startsWith("-")) -1L else JavaUtils.byteStringAsBytes(t)
-    val adj =
-      if (integral && e.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold))
-        Adjacency.collect(e)
-      else None
+    val integral = starts.forall(s => s.columns.contains("id") && integralType(s.schema("id")))
+    val adj = if (integral && broadcastSized(e)) Adjacency.of(Adjacency.collectAll(e).head) else None
     if (adj.isDefined) smallPathRuns.incrementAndGet()
     adj
+  }
+
+  private def integralType(f: StructField): Boolean = f.dataType match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The planner's own broadcast test on each of `frames`: every column
+    * integral, and the optimized plan's `sizeInBytes` at most
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 turns it off). */
+  private def broadcastSized(frames: DataFrame*): Boolean = {
+    val t = frames.head.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    val threshold = if (t.startsWith("-")) -1L else JavaUtils.byteStringAsBytes(t)
+    frames.forall(f => f.schema.fields.forall(integralType) &&
+      f.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold))
+  }
+
+  /** GremlinLite's `repeat().until()/emit()` on the small-relation path:
+    * when `step` (src, dst), `seeds` (id) and `stops` (id, given for an
+    * `until`) each pass [[broadcastSized]], ONE job collects all three and
+    * [[Adjacency.stopping]] searches on the driver. Returns the ids the
+    * lowering keeps (the stop vertices among them only, when there is an
+    * `until` and no `emit`), or None (a frame is over the bound, or an
+    * edge endpoint is null) and the join-round lowering runs. Throws
+    * bfsDepth's round-limit error exactly where the lowering's
+    * bfsDepth(ePrime, contStart) would. */
+  private[graft] def untilSmall(step: DataFrame, seeds: DataFrame, stops: Option[DataFrame],
+                                emit: Boolean, maxIter: Int = 64): Option[Array[Long]] = {
+    val frames = step.select(col("src"), col("dst")) +: (seeds +: stops.toSeq).map(_.select(col("id")))
+    if (!broadcastSized(frames: _*)) return None
+    val rows = Adjacency.collectAll(frames: _*)
+    def ids(k: Int) = rows.lift(k).iterator.flatten.filterNot(_.isNullAt(0)).map(_.getLong(0))
+    Adjacency.of(rows(0)).map { adj =>
+      smallPathRuns.incrementAndGet()
+      val (found, depth) = adj.stopping(ids(1), ids(2), onlyStops = stops.isDefined && !emit)
+      if (bfsDepthOver(maxIter)(depth)) throw bfsDepthLimit(maxIter)
+      found
+    }
   }
 
   /** Calls that took the small-relation path, so a caller (TraversalSpec)
@@ -318,17 +350,20 @@ object Traversal {
   private def bfsDepthLimit(maxIter: Int) = new IllegalArgumentException(
     s"bfsDepth did not converge in $maxIter levels — raise maxIter")
 
+  /** The rounds probe every second level, so they stop after level D + 1
+    * rounded up to even (D = the largest depth) and throw when the pair
+    * holding it would start past `maxIter`. */
+  private def bfsDepthOver(maxIter: Int)(d: Int): Boolean =
+    math.max(1, if (d % 2 == 1) d else d + 1) > maxIter
+
   /** [[bfsDepth]] over a collected adjacency: one multi-source search in
-    * one task. The rounds probe every second level, so they stop after
-    * level D + 1 rounded up to even (D = the largest depth) and throw when
-    * the pair holding it would start past `maxIter`. */
+    * one task, which throws where the rounds would ([[bfsDepthOver]]). */
   private def bfsDepthSmall(adj: Adjacency, edges: DataFrame, start: DataFrame,
                             maxIter: Int): DataFrame = {
     // the rounds' id is the seed and neighbor ids' union type
     val idType = start.select(col("id"))
       .unionByName(edges.select(col("dst").as("id"))).schema("id").dataType
-    searched(start.sparkSession, d => math.max(1, if (d % 2 == 1) d else d + 1) > maxIter,
-        bfsDepthLimit(maxIter)) { hops =>
+    searched(start.sparkSession, bfsDepthOver(maxIter), bfsDepthLimit(maxIter)) { hops =>
       start.select(col("id").cast("long").as("id")).distinct().coalesce(1)
         .as(Encoders.LONG)
         .mapPartitions(it => adj.depths(it, hops.add))(

@@ -369,19 +369,29 @@ object GremlinLite {
             }
             val step = if (body == "out") e0.select(col("src"), col("dst"))
                        else e0.select(col("dst").as("src"), col("src").as("dst"))
+            // What runs: when the hop relation, the seed ids and the stop
+            // ids are each broadcast-sized (perfbench's IAM stores; the g5
+            // walk at sf0.001 and sf0.01), Traversal.untilSmall collects
+            // all three in ONE job and searches on the driver, and the
+            // result is one filter of the vertices by the reached ids.
+            // Otherwise (g5 at sf0.1 starts from every lineitem) the join
+            // lowering below runs: an eager cut of s1, then bfsDepth —
+            // itself on its small-relation path (one collect, one search
+            // task) when ePrime alone is broadcast-sized, else its join
+            // rounds — then a join back to the vertices.
+            val small = Traversal.untilSmall(step, cur.select(col("id")),
+              untilPred.map(p => g.vertices.filter(p).select(col("id"))), emitAll)
             val startIds = cur.select(col("id")).distinct()
-            val endIds = untilPred match {
+            lazy val endIds = untilPred match {
               case Some(p) =>
                 val stopIds = g.vertices.filter(p).select(col("id"))
                 // Do-while semantics: the first hop always runs (a start
                 // vertex satisfying the predicate still steps), then the
                 // closure continues only from and through non-stop
                 // vertices (until halts a traverser AT the predicate).
-                // Eagerly materialized: s1 feeds the BFS seeds AND the
-                // final traverser-set union — without the cut, the
-                // |V_start| ⋈ edges hop join re-executes once per consumer
-                // (measured 3× ≈ 2 s at sf0.1 on the flagship lineitem
-                // walk). One job, whichever path bfsDepth takes below.
+                // s1 is cut eagerly because it feeds the BFS seeds AND the
+                // final union: uncut, the |V_start| ⋈ edges hop join ran
+                // once per consumer (3× ≈ 2 s at sf0.1 on the g5 walk).
                 val s1 = Cuts.cut(startIds.join(step, col("id") === col("src"))
                   .select(col("dst").as("id")).distinct())
                 val contStart = s1.join(stopIds, Seq("id"), "left_anti")
@@ -394,20 +404,10 @@ object GremlinLite {
                 // O(origins × nodes) pair closure. bfsDepth returns
                 // contStart (depth 0) ∪ reach≥1(contStart); unioned with
                 // s1 ⊇ contStart that is exactly the traverser set.
-                // What runs: when ePrime is broadcast-sized (perfbench's
-                // IAM stores; the g5 walk at sf0.001 and sf0.01), bfsDepth
-                // collects it once and runs the whole search in one task —
-                // Traversal's small-relation path, which ignores prepEdges.
-                // Above that bound (g5 at sf0.1) its join rounds run, one
-                // job per two levels, and there
-                // prepEdges = false when the store's edges are cached
-                // (optimization round 17): ePrime is a broadcast anti-join
-                // OVER the src-partitioned cached edge frame — the layout
-                // prep() would rebuild with a full repartition+sort
-                // survives the anti-join, so prep was re-shuffling 2.4M
-                // already-placed rows per execution (measured ~0.8-1.0 s
-                // on the flagship walk); per-level re-evaluation of the
-                // anti is a cheap scan of cached blocks.
+                // In its join rounds (one job per two levels), prepEdges
+                // is off over a cached store: ePrime is a broadcast
+                // anti-join over the src-partitioned cached edges, whose
+                // layout survives it, so prep would only re-shuffle it.
                 val onward = Traversal.bfsDepth(ePrime, contStart,
                     prepEdges = !g.edgesCached).select(col("id"))
                 val visited = s1.unionByName(onward).distinct()
@@ -423,10 +423,14 @@ object GremlinLite {
                 Traversal.bfsDepth(step, s1,
                   prepEdges = !g.edgesCached).select(col("id"))
             }
-            cur = endIds.select(col("id").as("__end"))
-              .join(g.vertices.as("v"), col("__end") === col("v.id"))
-              .select(col("v.id").as("id"), col("v.label").as("label"),
-                col("v.key").as("key"), col("v.props").as("props"))
+            cur = small match {
+              case Some(ids) => g.vertices.filter(col("id").isInCollection(ids))
+                .select(col("id"), col("label"), col("key"), col("props"))
+              case None => endIds.select(col("id").as("__end"))
+                .join(g.vertices.as("v"), col("__end") === col("v.id"))
+                .select(col("v.id").as("id"), col("v.label").as("label"),
+                  col("v.key").as("key"), col("v.props").as("props"))
+            }
           } else {
           val nTimes = nTimesOpt.get
           // Log-round lowering: `repeat(out(l)).times(n).dedup()` with no

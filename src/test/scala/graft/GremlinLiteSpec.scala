@@ -149,6 +149,114 @@ class GremlinLiteSpec extends AnyFunSuite {
         assert(small == rounds, s"$q on edges $es")
       }
     }
+    // Edge cases of the lowering. Users 1, 2 (no out-edge) and a null-id
+    // user; groups 3, 4, 7 (promoted key `email` in the key column only);
+    // projects 5, 6. Project 5 is in s1 of user 1 AND is reached again
+    // through 3 → 4 → 7 → 5; 5 → 6 must not be expanded under until.
+    val vs = Seq[(java.lang.Long, String, String, Map[String, String])](
+      (1L, "user", "u1@d", Map("isExternal" -> "false")),
+      (2L, "user", "u2@d", Map.empty), (null, "user", "ghost@d", Map.empty),
+      (3L, "group", "g3@d", Map.empty), (4L, "group", "g4@d", Map.empty),
+      (7L, "group", "g7@d", Map.empty),
+      (5L, "project", "p5", Map.empty), (6L, "project", "p6", Map.empty))
+    val es = Seq((1L, 3L, "in"), (1L, 5L, "in"), (3L, 4L, "in"), (4L, 7L, "in"),
+      (7L, 5L, "in"), (5L, 6L, "in"), (4L, 3L, "in"), (3L, 6L, "in"), (1L, 4L, "owns"))
+    val eg = PropertyGraph(vs.toDF("id", "label", "key", "props"),
+      es.map { case (a, b, l) => (a, b, l, 1) }.toDF("src", "dst", "label", "weight"))
+    val untilP = ".repeat(out('in')).until(hasLabel('project'))"
+    for (q <- Seq(
+        s"g.V().hasLabel('nobody')$untilP",                   // empty seed set
+        s"g.V().hasLabel('nobody').repeat(out('in')).emit()",
+        "g.V(5).repeat(out('in')).until(hasLabel('project'))", // seed is a stop
+        s"g.V(2)$untilP.emit()",                              // no out-edge
+        "g.V(2).repeat(out('in')).emit()",
+        s"g.V(1)$untilP", s"g.V(1)$untilP.emit()",            // 5 in s1, reached again
+        "g.V(1).repeat(out()).until(hasLabel('project')).emit()", // label-less
+        "g.V(1).repeat(out()).emit()",
+        "g.V().hasLabel('project').repeat(in('in')).until(hasLabel('user'))", // in()
+        "g.V(6).repeat(in()).emit()",
+        "g.V(1).repeat(out('in')).until(has('email','g4@d')).emit()", // promoted key
+        "g.V(1).repeat(out('in')).until(has('email','g4@d'))",
+        s"g.V(1).out().in()$untilP.emit()",                   // duplicate seed rows
+        s"g.V().hasLabel('user')$untilP.emit()",              // a null seed id
+        "g.V().hasLabel('user').repeat(out('in')).emit().valueMap()")) {
+      val (small, rounds) = TestSpark.onBothPaths(TestSpark.rowsAndSchema(GremlinLite.run(eg, q)))
+      assert(small == rounds, q)
+    }
+  }
+
+  test("repeat().until()/emit() throw the round-limit error at the same depth on both paths") {
+    // D = the largest depth of bfsDepth from contStart (s1 minus the stop
+    // ids); the rounds return at D = 63 and throw at D = 64. `stopInS1`
+    // puts project 0 in s1 and reaches it again at depth D, after the
+    // chain's last group, so a search that counted s1 as reached would
+    // find D - 1 and return.
+    def chain(d: Int, stopInS1: Boolean) = {
+      // user -1 → group 1 → … → group d → the project, at depth d from 1
+      val proj = if (stopInS1) 0L else d + 1L
+      val vs = ((-1L, "user") +: (1L to d.toLong).map(_ -> "group")) :+ (proj -> "project")
+      val es = (if (stopInS1) Seq((-1L, 0L)) else Nil) ++
+        ((-1L, 1L) +: (1L until d.toLong).map(i => (i, i + 1))) :+ ((d.toLong, proj))
+      PropertyGraph(vs.map { case (i, l) => (i, l, s"k$i", Map.empty[String, String]) }
+          .toDF("id", "label", "key", "props"),
+        es.map { case (a, b) => (a, b, "in", 1) }.toDF("src", "dst", "label", "weight"))
+    }
+    def outcome(cg: PropertyGraph, q: String) =
+      scala.util.Try(TestSpark.rowsAndSchema(GremlinLite.run(cg, q))).toEither
+        .left.map(e => (e.getClass, e.getMessage))
+    // each join-round run takes about a minute: one chain per modulator
+    for ((stopInS1, q) <- Seq(true -> "g.V(-1).repeat(out('in')).until(hasLabel('project'))",
+           false -> "g.V(-1).repeat(out('in')).emit()"); d <- Seq(63, 64)) {
+      val cg = chain(d, stopInS1)
+      val (small, rounds) = TestSpark.onBothPaths(outcome(cg, q))
+      assert(small == rounds, s"$q at D = $d")
+      if (d == 63) assert(small.exists(_._1.nonEmpty), s"$q at D = 63: $small")
+      else assert(small.left.exists(_._2.contains("did not converge in 64 levels")),
+        s"$q at D = 64: $small")
+    }
+  }
+
+  test("console reach and who_can run at most 3 jobs and leave nothing cached") {
+    // An IAM-shaped store, written and loaded back as the console does:
+    // users -in-> nested groups -in-> projects, buckets <-in- groups.
+    val users = (1L to 6L).map(i => (i, "user", s"u$i@d", Map.empty[String, String]))
+    val groups = (11L to 16L).map(i => (i, "group", s"g$i@d", Map.empty[String, String]))
+    val others = Seq((21L, "project", "p21", Map("name" -> "p21")),
+      (22L, "project", "p22", Map("name" -> "p22")),
+      (31L, "bucket", "b31", Map("name" -> "b31")), (32L, "bucket", "b32", Map("name" -> "b32")))
+    val es = Seq((1L, 11L), (2L, 11L), (3L, 12L), (4L, 13L), (5L, 14L), (6L, 16L),
+      (11L, 12L), (12L, 13L), (13L, 11L), (13L, 21L), (14L, 22L), (15L, 22L),
+      (12L, 31L), (14L, 32L), (16L, 32L), (1L, 21L))
+    val dir = java.nio.file.Files.createTempDirectory("graft-console").toString
+    graft.sources.GraphStorage.write(PropertyGraph(
+      (users ++ groups ++ others).toDF("id", "label", "key", "props"),
+      es.map { case (a, b) => (a, b, "in", 1) }.toDF("src", "dst", "label", "weight")), dir)
+    val store = graft.sources.GraphStorage.load(spark, dir)
+    val sc = spark.sparkContext
+    def jobs(tag: String, q: String, binds: Map[String, Long] = Map.empty): Int = {
+      sc.setJobGroup(tag, tag)
+      try GremlinLite.run(store, q, binds).collect() finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      sc.statusTracker.getJobIdsForGroup(tag).length
+    }
+    // other suites' released RDDs may be cleaned meanwhile: no NEW id may appear
+    val persisted = sc.getPersistentRDDs.keySet
+    val entries = org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark)
+    val small = graft.graph.Traversal.smallPathRuns.get
+    val counts = (1 to 3).flatMap { i =>
+      Seq(s"reach $i" -> jobs(s"reach-$i",
+          s"g.V().hasLabel('user').has('email','u$i@d').repeat(out('in')).until(hasLabel('project')).emit()"),
+        s"who_can $i" -> jobs(s"who_can-$i",
+          s"g.V().hasLabel('bucket').has('name','b3${1 + i % 2}').repeat(in('in')).until(hasLabel('user'))"),
+        s"lookup $i" -> jobs(s"lookup-$i",
+          s"g.V().hasLabel('user').has('email','u$i@d').out('in').valueMap()"),
+        s"guard $i" -> jobs(s"guard-$i", "g.V(u1).outE('in').where(inV().hasId( g1.id() )).hasNext()",
+          Map("u1" -> i, "g1" -> (10L + i))))
+    }
+    assert(graft.graph.Traversal.smallPathRuns.get == small + 6, "reach/who_can left the small path")
+    counts.foreach { case (q, n) => assert(n >= 1 && n <= 3, s"$q ran $n jobs: $counts") }
+    assert(sc.getPersistentRDDs.keySet.subsetOf(persisted))
+    assert(org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark) <= entries)
   }
 
   test("mutate(): typed addV/addE upsert and drop() lower to the set-semantics API") {

@@ -2,6 +2,8 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.LocalFrames
+import org.apache.spark.sql.types.LongType
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -12,7 +14,8 @@ import scala.collection.mutable.ArrayBuffer
   * and every search over it runs without allocating per vertex.
   * Duplicate edges stay as they are: a search skips a vertex it already
   * reached. This is [[Traversal]]'s small-relation path (see its object
-  * doc); nothing here runs a Spark job. */
+  * doc); nothing here runs a Spark job but [[Adjacency.collectAll]]'s
+  * collect. */
 private[graph] final class Adjacency private (
     ids: Array[Long], offsets: Array[Int], targets: Array[Int], hasIn: Array[Boolean])
   extends Serializable {
@@ -148,17 +151,24 @@ private[graph] final class Adjacency private (
 
 private[graph] object Adjacency {
 
-  /** The rows of every frame in `frames`, in one job: each frame's one or
-    * two integral columns, as longs (`a`, then `b`), are tagged with the
-    * frame's position, and the union of the tagged rows is collected
-    * once. Returns each frame's rows, in `frames`' order. */
+  /** The rows of every frame in `frames`, in at most one job: each
+    * frame's one or two integral columns, as longs (`a`, then `b`). A
+    * frame that has folded to local rows is read on the driver; the
+    * others are tagged with their position, and the union of the tagged
+    * rows is collected once. Returns each frame's rows, in `frames`'
+    * order. */
   def collectAll(frames: DataFrame*): Seq[Array[Row]] = {
-    val tagged = frames.zipWithIndex.map { case (f, k) =>
-      val ab = f.columns.map(c => col(c).cast("long")).padTo(2, lit(null).cast("long"))
-      f.select(lit(k).as("kind"), ab(0).as("a"), ab(1).as("b"))
-    }.reduce(_ unionByName _)
-    val byKind = tagged.collect().groupBy(_.getInt(0))
-    frames.indices.map(k => byKind.getOrElse(k, Array.empty[Row]).map(r => Row(r.get(1), r.get(2))))
+    val ab = frames.map { f =>
+      val c = f.columns.map(c => col(c).cast("long")).padTo(2, lit(null).cast("long"))
+      f.select(c(0).as("a"), c(1).as("b"))
+    }
+    val local = ab.map(LocalFrames.rows(_).map(_.map(r => Row(r.get(0, LongType), r.get(1, LongType))).toArray))
+    val rest = ab.indices.filter(local(_).isEmpty)
+    val byKind = if (rest.isEmpty) Map.empty[Int, Array[Row]]
+      else rest.map(k => ab(k).select(lit(k).as("kind"), col("a"), col("b")))
+        .reduce(_ unionByName _).collect().groupBy(_.getInt(0))
+    frames.indices.map(k => local(k).getOrElse(
+      byKind.getOrElse(k, Array.empty[Row]).map(r => Row(r.get(1), r.get(2)))))
   }
 
   /** The adjacency of (src, dst) rows of longs. None when an id is null:

@@ -22,7 +22,21 @@ import org.apache.spark.sql.functions._
   *     across executors (contrast with the reference's server-assigned ids,
   *     main.go:207 `.id().next()`).
   *
-  * Every method returns lazy DataFrames; nothing collects to the driver.
+  * Every method returns lazy DataFrames. Two exceptions keep a small
+  * graph on the driver:
+  *   - [[resident]] is the graph an interactive session (GremlinLite)
+  *     queries: when the planner would broadcast both frames
+  *     ([[Traversal.broadcastSized]], decided per call), both are
+  *     collected once into `LocalRelation`s, held by this object and
+  *     freed with it. That makes no CacheManager entry and no persisted
+  *     RDD. Filters and projections over it fold on the driver (Spark's
+  *     `ConvertToLocalRelation`).
+  *   - The hops (`out`, `in`, `outE`, `inE`, `inV`, `outV`) of a graph
+  *     whose frames have folded so (a resident copy, or a graph built
+  *     from local rows) run on the driver over per-label indexes
+  *     ([[Resident.Index]]) when their input has folded too, and return
+  *     a folded frame with the join lowering's rows and schema; every
+  *     other input takes the join lowering.
   */
 final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
@@ -122,16 +136,16 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     outE(from, Some(edgeLabel))
 
   def outE(from: DataFrame, edgeLabel: Option[String]): DataFrame =
-    edgesFor(edgeLabel)
-      .join(from.select(col("id")), edges("src") === from("id"), "left_semi")
+    index.flatMap(_.edgeHop(from, edgeLabel, out = true)).getOrElse(edgesFor(edgeLabel)
+      .join(from.select(col("id")), edges("src") === from("id"), "left_semi"))
 
   /** In-edges of `to` vertices: `g.V(v).inE(l)`. */
   def inE(to: DataFrame, edgeLabel: String = "in"): DataFrame =
     inE(to, Some(edgeLabel))
 
   def inE(to: DataFrame, edgeLabel: Option[String]): DataFrame =
-    edgesFor(edgeLabel)
-      .join(to.select(col("id")), edges("dst") === to("id"), "left_semi")
+    index.flatMap(_.edgeHop(to, edgeLabel, out = false)).getOrElse(edgesFor(edgeLabel)
+      .join(to.select(col("id")), edges("dst") === to("id"), "left_semi"))
 
   /** A10 — adjacency (1-hop out): `.out()` (README.md:344). Returns neighbor
     * vertex rows, with the originating vertex id as `from_id`.
@@ -141,27 +155,41 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   def out(from: DataFrame, edgeLabel: String = "in"): DataFrame =
     out(from, Some(edgeLabel))
 
-  def out(from: DataFrame, edgeLabel: Option[String]): DataFrame = {
-    val f = from.select(col("id").as("from_id"))
-    val e = edgesFor(edgeLabel).as("e")
-    f.join(e, col("from_id") === col("e.src"))
-      .join(vertices.as("v"), col("e.dst") === col("v.id"))
-      .select(col("from_id"), col("v.id").as("id"), col("v.label").as("label"),
-        col("v.key").as("key"), col("v.props").as("props"))
-  }
+  def out(from: DataFrame, edgeLabel: Option[String]): DataFrame =
+    index.flatMap(_.vertexHop(from, edgeLabel, out = true)).getOrElse {
+      val f = from.select(col("id").as("from_id"))
+      val e = edgesFor(edgeLabel).as("e")
+      f.join(e, col("from_id") === col("e.src"))
+        .join(vertices.as("v"), col("e.dst") === col("v.id"))
+        .select(col("from_id"), col("v.id").as("id"), col("v.label").as("label"),
+          col("v.key").as("key"), col("v.props").as("props"))
+    }
 
   /** 1-hop in: `.in()`. */
   def in(to: DataFrame, edgeLabel: String = "in"): DataFrame =
     in(to, Some(edgeLabel))
 
-  def in(to: DataFrame, edgeLabel: Option[String]): DataFrame = {
-    val t = to.select(col("id").as("to_id"))
-    val e = edgesFor(edgeLabel).as("e")
-    t.join(e, col("to_id") === col("e.dst"))
-      .join(vertices.as("v"), col("e.src") === col("v.id"))
-      .select(col("to_id"), col("v.id").as("id"), col("v.label").as("label"),
-        col("v.key").as("key"), col("v.props").as("props"))
-  }
+  def in(to: DataFrame, edgeLabel: Option[String]): DataFrame =
+    index.flatMap(_.vertexHop(to, edgeLabel, out = false)).getOrElse {
+      val t = to.select(col("id").as("to_id"))
+      val e = edgesFor(edgeLabel).as("e")
+      t.join(e, col("to_id") === col("e.dst"))
+        .join(vertices.as("v"), col("e.src") === col("v.id"))
+        .select(col("to_id"), col("v.id").as("id"), col("v.label").as("label"),
+          col("v.key").as("key"), col("v.props").as("props"))
+    }
+
+  /** The vertices at the heads of edge frame `e` (`inV()`), one row per
+    * (edge, vertex). */
+  def inV(e: DataFrame): DataFrame = endpoint(e, "dst")
+
+  /** The vertices at the tails of edge frame `e` (`outV()`). */
+  def outV(e: DataFrame): DataFrame = endpoint(e, "src")
+
+  private def endpoint(e: DataFrame, end: String): DataFrame =
+    index.flatMap(_.endpoint(e, end)).getOrElse(e.join(vertices.as("v"), col(end) === col("v.id"))
+      .select(col("v.id").as("id"), col("v.label").as("label"),
+        col("v.key").as("key"), col("v.props").as("props")))
 
   // ---------------------------------------------------------------- A11 / A12
 
@@ -207,6 +235,26 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     val touched = e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
     PropertyGraph(vertices.join(touched, Seq("id"), "left_semi"), e)
   }
+
+  // ---------------------------------------------------------------- resident copy
+
+  /** This graph as an interactive session queries it: its resident copy
+    * when both frames pass [[Traversal.broadcastSized]], the bound under
+    * which the planner would collect them for a broadcast anyway; else
+    * this graph. Decided per call, so the threshold at -1 turns the copy
+    * off. A call that takes the copy counts as a small-path run
+    * ([[Traversal.smallPathRuns]]). */
+  private[graft] def resident: PropertyGraph =
+    if (!Traversal.broadcastSized(vertices, edges)) this
+    else { Traversal.smallPathRuns.incrementAndGet(); residentCopy }
+
+  /** Both frames over `LocalRelation`s: collected once, one job each,
+    * unless they already are. */
+  private lazy val residentCopy: PropertyGraph =
+    PropertyGraph(Resident.collected(vertices), Resident.collected(edges))
+
+  /** The driver indexes of the hops, when both frames have folded. */
+  private lazy val index: Option[Resident.Index] = Resident.index(this)
 
   // ---------------------------------------------------------------- A13 / A14
 

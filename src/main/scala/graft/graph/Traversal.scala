@@ -234,7 +234,8 @@ object Traversal {
   private def small(edges: DataFrame, starts: DataFrame*): Option[Adjacency] = {
     val e = edges.select(col("src"), col("dst"))
     // a start frame without an `id` fails in the rounds' own analysis
-    val integral = starts.forall(s => s.columns.contains("id") && integralType(s.schema("id")))
+    val integral = integralCols(e) &&
+      starts.forall(s => s.columns.contains("id") && integralType(s.schema("id")))
     val adj = if (integral && broadcastSized(e)) Adjacency.of(Adjacency.collectAll(e).head) else None
     if (adj.isDefined) smallPathRuns.incrementAndGet()
     adj
@@ -245,19 +246,26 @@ object Traversal {
     case _ => false
   }
 
-  /** The planner's own broadcast test on each of `frames`: every column
-    * integral, and the optimized plan's `sizeInBytes` at most
-    * `spark.sql.autoBroadcastJoinThreshold` (-1 turns it off). */
-  private def broadcastSized(frames: DataFrame*): Boolean = {
+  /** Every column of `f` integral: what an [[Adjacency]] holds. */
+  private def integralCols(f: DataFrame): Boolean = f.schema.fields.forall(integralType)
+
+  /** The planner's own broadcast test on each of `frames`: the optimized
+    * plan's `sizeInBytes` at most `spark.sql.autoBroadcastJoinThreshold`
+    * (-1 turns it off, without optimizing any plan). The one size test of
+    * every driver-side escape: the small-relation paths here and the
+    * resident graph and driver steps of [[Resident]]. */
+  private[graft] def broadcastSized(frames: DataFrame*): Boolean = {
     val t = frames.head.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
-    val threshold = if (t.startsWith("-")) -1L else JavaUtils.byteStringAsBytes(t)
-    frames.forall(f => f.schema.fields.forall(integralType) &&
-      f.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(threshold))
+    !t.startsWith("-") && {
+      val threshold = BigInt(JavaUtils.byteStringAsBytes(t))
+      frames.forall(_.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
+    }
   }
 
   /** GremlinLite's `repeat().until()/emit()` on the small-relation path:
     * when `step` (src, dst), `seeds` (id) and `stops` (id, given for an
-    * `until`) each pass [[broadcastSized]], ONE job collects all three and
+    * `until`) are each integral and pass [[broadcastSized]], ONE job
+    * (none, when all three have folded to local rows) collects them and
     * [[Adjacency.stopping]] searches on the driver. Returns the ids the
     * lowering keeps (the stop vertices among them only, when there is an
     * `until` and no `emit`), or None (a frame is over the bound, or an
@@ -267,7 +275,7 @@ object Traversal {
   private[graft] def untilSmall(step: DataFrame, seeds: DataFrame, stops: Option[DataFrame],
                                 emit: Boolean, maxIter: Int = 64): Option[Array[Long]] = {
     val frames = step.select(col("src"), col("dst")) +: (seeds +: stops.toSeq).map(_.select(col("id")))
-    if (!broadcastSized(frames: _*)) return None
+    if (!frames.forall(integralCols) || !broadcastSized(frames: _*)) return None
     val rows = Adjacency.collectAll(frames: _*)
     def ids(k: Int) = rows.lift(k).iterator.flatten.filterNot(_.isNullAt(0)).map(_.getLong(0))
     Adjacency.of(rows(0)).map { adj =>

@@ -3,7 +3,7 @@ package graft.gremlin
 import graft.Cuts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.graph.{PropertyGraph, Traversal}
+import graft.graph.{PropertyGraph, Resident, Traversal}
 
 /** Text-level compatibility with the reference's console workflow: run the
   * read-only Gremlin traversals its README actually types
@@ -14,7 +14,13 @@ import graft.graph.{PropertyGraph, Traversal}
   * This is a small traversal-step interpreter, not a Gremlin engine: each
   * step lowers to the corresponding PropertyGraph DataFrame call, so the
   * produced plan is identical to the fluent API's (Catalyst sees filters
-  * and joins, never the query string). Traverser semantics follow Gremlin:
+  * and joins, never the query string). A broadcast-sized graph is queried
+  * through its resident copy ([[PropertyGraph.resident]]): while a
+  * step's input stays folded to a `LocalRelation`, the hops, `count()`,
+  * `hasNext()`, `groupCount()` and the `repeat()` gather run on the
+  * driver ([[graft.graph.Resident]]) with the lowering's rows and schema,
+  * and a console query runs no Spark job; every other step keeps its
+  * lowering. Traverser semantics follow Gremlin:
   * `out()` multiplies per path (no implicit dedup) — use `dedup()`.
   * One declared divergence: with live `as()`/`path()` tags, `dedup()`
   * dedups on the full path signature (current id + labeled ids), not on
@@ -215,8 +221,13 @@ object GremlinLite {
         s"(bound: ${bindings.keys.mkString(",")})"))
   }
 
-  private def eval(g: PropertyGraph, query: String, bindings: Map[String, Long],
+  private def eval(graph: PropertyGraph, query: String, bindings: Map[String, Long],
                    keyProps: Map[String, String]): (DataFrame, Map[String, PropertyGraph]) = {
+    // A broadcast-sized graph is queried through its resident copy: its
+    // filters and projections fold on the driver, and so do the steps
+    // with a driver form (hops, count, hasNext, groupCount, the
+    // repeat() gather) while their inputs stay folded.
+    val g = graph.resident
     // Vertex property reads resolve promoted keys per label (the key
     // column, not props — see PropertyGraph.propColFor) so loader-built
     // graphs, whose props omit the promoted key, match like fluent ones.
@@ -288,12 +299,6 @@ object GremlinLite {
       else when(col(s"__as_${tag}_label").isin(promoted: _*), keyC).otherwise(flat)
     }
     var captured = Map.empty[String, PropertyGraph]
-    def toVertices(joinOn: String): DataFrame = {
-      val v = g.vertices.as("v")
-      cur.join(v, col(joinOn) === col("v.id"))
-        .select(col("v.id").as("id"), col("v.label").as("label"),
-          col("v.key").as("key"), col("v.props").as("props"))
-    }
 
     val rest = steps.tail.iterator.buffered
     while (rest.hasNext) {
@@ -372,7 +377,8 @@ object GremlinLite {
             // What runs: when the hop relation, the seed ids and the stop
             // ids are each broadcast-sized (perfbench's IAM stores; the g5
             // walk at sf0.001 and sf0.01), Traversal.untilSmall collects
-            // all three in ONE job and searches on the driver, and the
+            // all three in ONE job (none over a resident copy, whose
+            // frames have folded) and searches on the driver, and the
             // result is one filter of the vertices by the reached ids.
             // Otherwise (g5 at sf0.1 starts from every lineitem) the join
             // lowering below runs: an eager cut of s1, then bfsDepth —
@@ -475,7 +481,7 @@ object GremlinLite {
           // direction (Gremlin both() emits one traverser per edge — a
           // vertex reached via out AND in appears twice; dedup() collapses).
           arity(0, 1)
-          cur = ptag(hop("out", args)(cur).unionByName(hop("in", args)(cur)))
+          cur = ptag(Resident.union(hop("out", args)(cur), hop("in", args)(cur)))
         case ("outE", false) =>
           arity(0, 1)
           require(!wantsPath, s"path() is supported on vertex-hop traversals only: $query")
@@ -487,15 +493,16 @@ object GremlinLite {
         case ("bothE", false) =>
           arity(0, 1)
           require(!wantsPath, s"path() is supported on vertex-hop traversals only: $query")
-          cur = g.outE(cur, edgeLabel(args)).unionByName(g.inE(cur, edgeLabel(args)))
+          cur = Resident.union(g.outE(cur, edgeLabel(args)), g.inE(cur, edgeLabel(args)))
           onEdges = true
-        case ("inV", true) => arity(0); cur = toVertices("dst"); onEdges = false
-        case ("outV", true) => arity(0); cur = toVertices("src"); onEdges = false
+        case ("inV", true) => arity(0); cur = g.inV(cur); onEdges = false
+        case ("outV", true) => arity(0); cur = g.outV(cur); onEdges = false
         case ("valueMap", false) => arity(0); cur = g.valueMap(cur)
         case ("values", false) =>
           arity(1); cur = cur.select(vProp(args.head).as(args.head))
         case ("id", false) => arity(0); cur = g.ids(cur)
-        case ("count", _) => arity(0); cur = cur.agg(count(lit(1)).as("count"))
+        case ("count", _) =>
+          arity(0); cur = Resident.count(cur).getOrElse(cur.agg(count(lit(1)).as("count")))
         case ("dedup", _) =>
           // Gremlin dedups traversers by element identity, and Spark cannot
           // set-op MAP columns anyway — dedup on the identity columns.
@@ -578,7 +585,8 @@ object GremlinLite {
           }
         case ("groupCount", _) =>
           // groupCount().by(label|'k'): the console census line
-          // (`g.V().groupCount().by(label)`) — one partial+final agg.
+          // (`g.V().groupCount().by(label)`) — counted on the driver over a
+          // folded input, else one partial+final agg.
           arity(0)
           require(rest.hasNext && rest.head._1 == "by",
             s"groupCount() must be followed by .by(label|'key') in: $query")
@@ -589,8 +597,8 @@ object GremlinLite {
             case k if !onEdges => vProp(k)
             case k => col(k)
           }
-          cur = cur.groupBy(keyCol.as(byArgs.head))
-            .agg(count(lit(1)).as("count"))
+          cur = Resident.groupCount(cur.select(keyCol.as(byArgs.head))).getOrElse(
+            cur.groupBy(keyCol.as(byArgs.head)).agg(count(lit(1)).as("count")))
         case ("as", false) =>
           // as('x') labels the current traverser position: snapshot the
           // vertex identity columns under a prefixed name and carry them
@@ -658,7 +666,7 @@ object GremlinLite {
           // Console boolean terminal (`...hasNext() == false`, main.go:311)
           // — one row, one boolean; the emptiness probe stays in-plan.
           arity(0)
-          cur = cur.agg((count(lit(1)) > 0).as("hasNext"))
+          cur = Resident.hasNext(cur).getOrElse(cur.agg((count(lit(1)) > 0).as("hasNext")))
         case ("next", _) => arity(0) // console terminal — a no-op here
         case ("iterate", _) => arity(0) // gremlin-python submit suffix (README.md:327)
         case (other, oe) => throw new IllegalArgumentException(

@@ -185,6 +185,76 @@ class GremlinLiteSpec extends AnyFunSuite {
     }
   }
 
+  test("property: every step family agrees on the resident driver path and the DataFrame lowering") {
+    val binds = Map("u1" -> 1L, "g1" -> 3L)
+    def agree(graph: PropertyGraph, queries: Seq[String]): Unit = queries.foreach { q =>
+      val (resident, lowered) =
+        TestSpark.onBothPaths(TestSpark.rowsAndSchema(GremlinLite.run(graph, q, binds)))
+      assert(resident == lowered, q)
+    }
+    // Frames read from parquet, so the resident path collects its copy. Duplicate
+    // edge 1 → 3 and vertex 6, self-loop 4 → 4, an edge into a missing
+    // vertex (99), null vertex and edge ids, a null edge label and weight;
+    // `tier` is unset on most vertices (a null groupCount key).
+    val vs = Seq[(java.lang.Long, String, String, Map[String, String])](
+      (1L, "user", "u1@d", Map("isExternal" -> "false", "tier" -> "gold")),
+      (2L, "user", "u2@d", Map.empty), (null, "user", "ghost@d", Map.empty),
+      (3L, "group", "g3@d", Map("tier" -> "gold")), (4L, "group", "g4@d", Map.empty),
+      (5L, "project", "p5", Map("tier" -> "silver")), (6L, "bucket", "b6", Map("name" -> "b6")),
+      (6L, "bucket", "b6-copy", Map("name" -> "b6")))
+    val es = Seq[(java.lang.Long, java.lang.Long, String, java.lang.Integer)](
+      (1L, 3L, "in", 1), (1L, 3L, "in", 1), (3L, 4L, "in", 2), (4L, 4L, "in", 1),
+      (4L, 5L, "in", 1), (1L, 5L, "owns", 3), (5L, 6L, "in", 1), (3L, 99L, "in", 1),
+      (null, 3L, "in", 1), (2L, null, "owns", 1), (3L, 5L, null, 1), (6L, 1L, "grants", null))
+    val dir = java.nio.file.Files.createTempDirectory("graft-resident").toString
+    vs.toDF("id", "label", "key", "props").write.parquet(s"$dir/v")
+    es.toDF("src", "dst", "label", "weight").write.parquet(s"$dir/e")
+    val eg = PropertyGraph(spark.read.parquet(s"$dir/v"), spark.read.parquet(s"$dir/e"))
+    agree(eg, Seq(
+      // count / hasNext, over folded and empty frontiers
+      "g.V().count()", "g.E().count()", "g.V().hasLabel('nobody').count()",
+      "g.V().hasNext()", "g.V().hasLabel('nobody').hasNext()", "g.E().hasLabel('in').hasNext()",
+      // vertex hops, labelled and label-less, chained, from an empty frontier
+      "g.V().out()", "g.V().out('in')", "g.V().in()", "g.V().in('owns')", "g.V().both()",
+      "g.V().both('in').id()", "g.V().hasLabel('nobody').out()", "g.V(1).out().out().valueMap()",
+      "g.V(3).in().in()", "g.V().out().out().count()", "g.V().out().dedup().id()",
+      "g.V().repeat(out()).times(2).id()",
+      // edge hops and their endpoints
+      "g.V().outE()", "g.V().inE('in')", "g.V().bothE()", "g.V().bothE('owns')",
+      "g.V().hasLabel('nobody').outE()", "g.V().outE('in').inV()", "g.V().inE().outV().id()",
+      "g.E().inV()", "g.E().outV()", "g.E().hasLabel('in').inV().out()",
+      "g.V(u1).outE('in').where(inV().hasId( g1.id() )).hasNext()",
+      "g.V(u1).outE('owns').where(inV().hasId( g1.id() )).hasNext()",
+      // groupCount, null keys included
+      "g.V().groupCount().by(label)", "g.V().groupCount().by('tier')",
+      "g.V().groupCount().by('email')", "g.E().groupCount().by(label)",
+      "g.E().groupCount().by('weight')", "g.E().groupCount().by('dst')",
+      "g.V().out().groupCount().by('key')", "g.V().hasLabel('nobody').groupCount().by(label)",
+      // as() / select() / path(), and the steps that keep their lowering
+      "g.V().as('a').out().as('b').select('a','b')", "g.V().as('a').out('in').in().select('a').id()",
+      "g.V().hasLabel('user').as('u').out().as('x').select('u','x').by('key')",
+      "g.V().out().in().path()", "g.V(1).out().both().path()", "g.V().out().values('tier')",
+      "g.V().out().where(hasLabel('group')).in().hasId(1).count()",
+      "g.V().out().order().by('key').id()", "g.V().outE().subgraph('sg').cap('sg')"))
+    // Seeded random graphs built from local rows: cycles, self-loops,
+    // duplicate edges and two edge labels.
+    val rnd = new scala.util.Random(7)
+    val labels = Seq("user", "group", "project")
+    for (_ <- 1 to 3) {
+      val n = 5 + rnd.nextInt(8)
+      val rv = (0 until n).map(v => (v.toLong, labels(rnd.nextInt(labels.length)), s"k$v",
+        if (rnd.nextBoolean()) Map("tier" -> s"t${rnd.nextInt(2)}") else Map.empty[String, String]))
+      val drawn = Seq.fill(2 * n)((rnd.nextLong(n), rnd.nextLong(n), if (rnd.nextBoolean()) "in" else "owns"))
+      val re = (drawn :+ drawn.head :+ ((0L, 0L, "in"))).map { case (a, b, l) => (a, b, l, 1) }
+      agree(PropertyGraph(rv.toDF("id", "label", "key", "props"), re.toDF("src", "dst", "label", "weight")),
+        Seq("g.V().hasLabel('user').out('in')", "g.V().in()", "g.V().both('owns').count()",
+          "g.V().hasLabel('group').outE().inV().groupCount().by(label)", "g.V().inE('in').outV()",
+          "g.V().groupCount().by('tier')", "g.V().out().out().hasNext()",
+          "g.V().hasLabel('project').as('p').in().as('q').select('p','q')",
+          "g.V().hasLabel('user').out().out().path()"))
+    }
+  }
+
   test("repeat().until()/emit() throw the round-limit error at the same depth on both paths") {
     // D = the largest depth of bfsDepth from contStart (s1 minus the stop
     // ids); the rounds return at D = 63 and throw at D = 64. `stopInS1`
@@ -217,6 +287,8 @@ class GremlinLiteSpec extends AnyFunSuite {
   }
 
   test("console reach and who_can run at most 3 jobs and leave nothing cached") {
+    // Tightened: on a resident store, after its one collect, all five
+    // console classes run 0 jobs; at most 3 (and at least 1) without one.
     // An IAM-shaped store, written and loaded back as the console does:
     // users -in-> nested groups -in-> projects, buckets <-in- groups.
     val users = (1L to 6L).map(i => (i, "user", s"u$i@d", Map.empty[String, String]))
@@ -231,30 +303,65 @@ class GremlinLiteSpec extends AnyFunSuite {
     graft.sources.GraphStorage.write(PropertyGraph(
       (users ++ groups ++ others).toDF("id", "label", "key", "props"),
       es.map { case (a, b) => (a, b, "in", 1) }.toDF("src", "dst", "label", "weight")), dir)
-    val store = graft.sources.GraphStorage.load(spark, dir)
+    def load() = graft.sources.GraphStorage.load(spark, dir)
     val sc = spark.sparkContext
-    def jobs(tag: String, q: String, binds: Map[String, Long] = Map.empty): Int = {
+    def jobs(store: PropertyGraph, tag: String, q: String, binds: Map[String, Long] = Map.empty): Int = {
       sc.setJobGroup(tag, tag)
       try GremlinLite.run(store, q, binds).collect() finally sc.clearJobGroup()
       org.apache.spark.TestBus.drain(sc)
       sc.statusTracker.getJobIdsForGroup(tag).length
     }
+    // the console's five query classes, three of each
+    def deck(store: PropertyGraph, run: String): Seq[(String, Int)] = (1 to 3).flatMap { i =>
+      def q(c: String, text: String, binds: Map[String, Long] = Map.empty) =
+        s"$c $i" -> jobs(store, s"$run-$c-$i", text, binds)
+      Seq(q("reach",
+          s"g.V().hasLabel('user').has('email','u$i@d').repeat(out('in')).until(hasLabel('project')).emit()"),
+        q("who_can",
+          s"g.V().hasLabel('bucket').has('name','b3${1 + i % 2}').repeat(in('in')).until(hasLabel('user'))"),
+        q("lookup", s"g.V().hasLabel('user').has('email','u$i@d').out('in').valueMap()"),
+        q("guard", "g.V(u1).outE('in').where(inV().hasId( g1.id() )).hasNext()",
+          Map("u1" -> i, "g1" -> (10L + i))),
+        q("scan", "g.V().groupCount().by(label)"))
+    }
+    def noResident[A](body: => A): A =
+      GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
     // other suites' released RDDs may be cleaned meanwhile: no NEW id may appear
     val persisted = sc.getPersistentRDDs.keySet
     val entries = org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark)
-    val small = graft.graph.Traversal.smallPathRuns.get
-    val counts = (1 to 3).flatMap { i =>
-      Seq(s"reach $i" -> jobs(s"reach-$i",
-          s"g.V().hasLabel('user').has('email','u$i@d').repeat(out('in')).until(hasLabel('project')).emit()"),
-        s"who_can $i" -> jobs(s"who_can-$i",
-          s"g.V().hasLabel('bucket').has('name','b3${1 + i % 2}').repeat(in('in')).until(hasLabel('user'))"),
-        s"lookup $i" -> jobs(s"lookup-$i",
-          s"g.V().hasLabel('user').has('email','u$i@d').out('in').valueMap()"),
-        s"guard $i" -> jobs(s"guard-$i", "g.V(u1).outE('in').where(inV().hasId( g1.id() )).hasNext()",
-          Map("u1" -> i, "g1" -> (10L + i))))
+    val runs = graft.graph.Traversal.smallPathRuns
+
+    // Not resident (-1): each query runs its lowering, with shuffle joins
+    // for the broadcasts and the join rounds for reach and who_can.
+    val store = load()
+    val before = runs.get
+    val lowered = noResident(deck(store, "lowered"))
+    assert(runs.get == before, "a small path ran with the threshold at -1")
+    lowered.foreach { case (q, n) =>
+      assert(n >= 1 && (n <= 5 || q.startsWith("reach") || q.startsWith("who_can")),
+        s"$q ran $n jobs: $lowered")
     }
-    assert(graft.graph.Traversal.smallPathRuns.get == small + 6, "reach/who_can left the small path")
-    counts.foreach { case (q, n) => assert(n >= 1 && n <= 3, s"$q ran $n jobs: $counts") }
+
+    // Resident: the first query collects both frames, one job each; after
+    // it every query runs 0 jobs.
+    val first = jobs(store, "first", "g.V().groupCount().by(label)")
+    assert(first >= 1 && first <= 2, s"the resident copy took $first jobs")
+    val resident = deck(store, "resident")
+    resident.foreach { case (q, n) => assert(n == 0, s"$q ran $n jobs: $resident") }
+
+    // A second graph object over the same store collects again.
+    val second = load()
+    assert(jobs(second, "second", "g.V().groupCount().by(label)") >= 1)
+    assert(jobs(second, "second-again", "g.V().groupCount().by(label)") == 0)
+
+    // Over the bound, a graph never collects: its first query once the
+    // bound is lifted still pays the collect.
+    val over = load()
+    val overBound = GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "512")(
+      deck(over, "over"))
+    overBound.foreach { case (q, n) => assert(n >= 1, s"$q over the bound ran $n jobs: $overBound") }
+    assert(jobs(over, "over-lifted", "g.V().groupCount().by(label)") >= 1)
+
     assert(sc.getPersistentRDDs.keySet.subsetOf(persisted))
     assert(org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark) <= entries)
   }

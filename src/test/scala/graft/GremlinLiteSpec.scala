@@ -326,9 +326,6 @@ class GremlinLiteSpec extends AnyFunSuite {
     }
     def noResident[A](body: => A): A =
       GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
-    // other suites' released RDDs may be cleaned meanwhile: no NEW id may appear
-    val persisted = sc.getPersistentRDDs.keySet
-    val entries = org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark)
     val runs = graft.graph.Traversal.smallPathRuns
 
     // Not resident (-1): each query runs its lowering, with shuffle joins
@@ -342,6 +339,13 @@ class GremlinLiteSpec extends AnyFunSuite {
         s"$q ran $n jobs: $lowered")
     }
 
+    // The lowering's cuts above are freed by the ContextCleaner; the
+    // resident path below must leave nothing: no NEW persisted RDD id
+    // (other suites' released RDDs may be cleaned meanwhile) and no
+    // CacheManager entry.
+    val persisted = sc.getPersistentRDDs.keySet
+    val entries = org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark)
+
     // Resident: the first query collects both frames, one job each; after
     // it every query runs 0 jobs.
     val first = jobs(store, "first", "g.V().groupCount().by(label)")
@@ -353,6 +357,8 @@ class GremlinLiteSpec extends AnyFunSuite {
     val second = load()
     assert(jobs(second, "second", "g.V().groupCount().by(label)") >= 1)
     assert(jobs(second, "second-again", "g.V().groupCount().by(label)") == 0)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(persisted))
+    assert(org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark) <= entries)
 
     // Over the bound, a graph never collects: its first query once the
     // bound is lifted still pays the collect.
@@ -361,9 +367,6 @@ class GremlinLiteSpec extends AnyFunSuite {
       deck(over, "over"))
     overBound.foreach { case (q, n) => assert(n >= 1, s"$q over the bound ran $n jobs: $overBound") }
     assert(jobs(over, "over-lifted", "g.V().groupCount().by(label)") >= 1)
-
-    assert(sc.getPersistentRDDs.keySet.subsetOf(persisted))
-    assert(org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark) <= entries)
   }
 
   test("mutate(): typed addV/addE upsert and drop() lower to the set-semantics API") {

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalFrames
 
 /** Labeled property graph over two DataFrames — the Spark-native analogue of
   * the reference's JanusGraph store (reference: /root/reference/main.go,
@@ -242,19 +243,22 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * when both frames pass [[Traversal.broadcastSized]], the bound under
     * which the planner would collect them for a broadcast anyway; else
     * this graph. Decided per call, so the threshold at -1 turns the copy
-    * off. A call that takes the copy counts as a small-path run
-    * ([[Traversal.smallPathRuns]]). */
+    * off. A call that takes the copy counts in [[Resident.runs]]. */
   private[graft] def resident: PropertyGraph =
     if (!Traversal.broadcastSized(vertices, edges)) this
-    else { Traversal.smallPathRuns.incrementAndGet(); residentCopy }
+    else { Resident.runs.incrementAndGet(); residentCopy }
 
   /** Both frames over `LocalRelation`s: collected once, one job each,
     * unless they already are. */
   private lazy val residentCopy: PropertyGraph =
-    PropertyGraph(Resident.collected(vertices), Resident.collected(edges))
+    PropertyGraph(LocalFrames.collected(vertices), LocalFrames.collected(edges))
 
-  /** The driver indexes of the hops, when both frames have folded. */
-  private lazy val index: Option[Resident.Index] = Resident.index(this)
+  /** The driver indexes of the hops, when both frames pass the size test
+    * (per call) and have folded. */
+  private def index: Option[Resident.Index] =
+    if (Traversal.broadcastSized(vertices, edges)) foldedIndex else None
+
+  private lazy val foldedIndex: Option[Resident.Index] = Resident.index(this)
 
   // ---------------------------------------------------------------- A13 / A14
 

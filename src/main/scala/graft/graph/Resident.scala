@@ -8,7 +8,6 @@ import org.apache.spark.sql.graft.LocalFrames
 import org.apache.spark.sql.types._
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** Console steps on the driver, over frames that have folded to
   * `LocalRelation`s (see [[org.apache.spark.sql.graft.LocalFrames]]):
@@ -20,20 +19,18 @@ import scala.jdk.CollectionConverters._
   * returns the rows and schema of the step's DataFrame lowering, with the
   * same multiplicity, as a frame over a `LocalRelation` again, so the
   * next step folds too. Otherwise it returns None and the caller runs the
-  * lowering. Nothing here runs a Spark job, except [[collected]].
+  * lowering. Nothing here runs a Spark job.
   */
 private[graft] object Resident {
+
+  /** Calls that took a graph's resident copy ([[PropertyGraph.resident]]),
+    * so a caller (GremlinLiteSpec) can assert which path ran. */
+  private[graft] val runs = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** `df`'s rows when it has folded to a `LocalRelation` that passes the
     * size test; None otherwise. */
   def rows(df: DataFrame): Option[Seq[InternalRow]] =
     if (Traversal.broadcastSized(df)) LocalFrames.rows(df) else None
-
-  /** `df` over a `LocalRelation`: `df` itself when it has folded, else its
-    * rows collected in one job. */
-  def collected(df: DataFrame): DataFrame =
-    if (LocalFrames.rows(df).isDefined) df
-    else df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   /** `count()`: one row, the number of traversers. */
   def count(df: DataFrame): Option[DataFrame] =
@@ -79,7 +76,8 @@ private[graft] object Resident {
 
   /** The driver indexes of `g`, when both of its frames have folded and
     * carry the schema contract's long ids, `src`/`dst` and string edge
-    * label; None otherwise. */
+    * label; None otherwise. Reads the frames' own optimized plans only:
+    * the caller has sized them. */
   def index(g: PropertyGraph): Option[Index] = {
     val v = g.vertices
     val e = g.edges
@@ -89,13 +87,13 @@ private[graft] object Resident {
       typed(v, "id", LongType) && typed(e, "src", LongType) && typed(e, "dst", LongType) &&
       typed(e, "label", StringType)
     if (!contract) return None
-    val vs = v.select(col("id"), col("label"), col("key"), col("props"))
-    for (vr <- LocalFrames.rows(vs); er <- LocalFrames.rows(e)) yield {
-      val types = vs.schema.map(_.dataType)
-      val byId = mutable.LongMap.from(vr.filterNot(_.isNullAt(0)).groupBy(_.getLong(0))
-        .view.mapValues(_.map(r => types.indices.map(j => r.get(j, types(j))).toArray).toArray))
+    for (vr <- LocalFrames.rows(v); er <- LocalFrames.rows(e)) yield {
+      val fields = Seq("id", "label", "key", "props").map(v.schema.fieldIndex)
+      val byId = mutable.LongMap.from(vr.filterNot(_.isNullAt(fields.head)).groupBy(_.getLong(fields.head))
+        .view.mapValues(_.map(r => fields.map(j => r.get(j, v.schema(j).dataType)).toArray).toArray))
       val at = e.schema.fieldIndex _
-      new Index(vs.schema, byId, e.schema, er.toIndexedSeq, at("src"), at("dst"), at("label"))
+      new Index(StructType(fields.map(v.schema(_))), byId, e.schema, er.toIndexedSeq,
+        at("src"), at("dst"), at("label"))
     }
   }
 

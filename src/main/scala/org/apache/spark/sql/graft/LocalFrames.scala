@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
 /** Frames whose rows sit on the driver. A frame over a `LocalRelation`
@@ -30,4 +31,14 @@ object LocalFrames {
   def frame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** `df` over a `LocalRelation`: `df` itself when it has folded, else
+    * its rows collected in one job and kept in their internal form. */
+  def collected(df: DataFrame): DataFrame =
+    if (rows(df).isDefined) df
+    else {
+      val qe = df.queryExecution
+      frame(df.sparkSession, df.schema,
+        SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect()).toSeq)
+    }
 }

@@ -188,8 +188,8 @@ class GremlinLiteSpec extends AnyFunSuite {
   test("property: every step family agrees on the resident driver path and the DataFrame lowering") {
     val binds = Map("u1" -> 1L, "g1" -> 3L)
     def agree(graph: PropertyGraph, queries: Seq[String]): Unit = queries.foreach { q =>
-      val (resident, lowered) =
-        TestSpark.onBothPaths(TestSpark.rowsAndSchema(GremlinLite.run(graph, q, binds)))
+      val (resident, lowered) = TestSpark.onBothPaths(
+        TestSpark.rowsAndSchema(GremlinLite.run(graph, q, binds)), graft.graph.Resident.runs)
       assert(resident == lowered, q)
     }
     // Frames read from parquet, so the resident path collects its copy. Duplicate
@@ -287,8 +287,8 @@ class GremlinLiteSpec extends AnyFunSuite {
   }
 
   test("console reach and who_can run at most 3 jobs and leave nothing cached") {
-    // Tightened: on a resident store, after its one collect, all five
-    // console classes run 0 jobs; at most 3 (and at least 1) without one.
+    // On a resident store, after its one collect, all five console
+    // classes run 0 jobs; on the same store over its bound, at most 3.
     // An IAM-shaped store, written and loaded back as the console does:
     // users -in-> nested groups -in-> projects, buckets <-in- groups.
     val users = (1L to 6L).map(i => (i, "user", s"u$i@d", Map.empty[String, String]))
@@ -305,14 +305,17 @@ class GremlinLiteSpec extends AnyFunSuite {
       es.map { case (a, b) => (a, b, "in", 1) }.toDF("src", "dst", "label", "weight")), dir)
     def load() = graft.sources.GraphStorage.load(spark, dir)
     val sc = spark.sparkContext
-    def jobs(store: PropertyGraph, tag: String, q: String, binds: Map[String, Long] = Map.empty): Int = {
+    // (jobs, sorted answer rows) of one query, in its own job group
+    type Deck = Seq[(String, (Int, Seq[org.apache.spark.sql.Row]))]
+    def jobs(store: PropertyGraph, tag: String, q: String,
+             binds: Map[String, Long] = Map.empty): (Int, Seq[org.apache.spark.sql.Row]) = {
       sc.setJobGroup(tag, tag)
-      try GremlinLite.run(store, q, binds).collect() finally sc.clearJobGroup()
+      val rows = try GremlinLite.run(store, q, binds).collect() finally sc.clearJobGroup()
       org.apache.spark.TestBus.drain(sc)
-      sc.statusTracker.getJobIdsForGroup(tag).length
+      (sc.statusTracker.getJobIdsForGroup(tag).length, rows.toSeq.sortBy(_.toString))
     }
     // the console's five query classes, three of each
-    def deck(store: PropertyGraph, run: String): Seq[(String, Int)] = (1 to 3).flatMap { i =>
+    def deck(store: PropertyGraph, run: String): Deck = (1 to 3).flatMap { i =>
       def q(c: String, text: String, binds: Map[String, Long] = Map.empty) =
         s"$c $i" -> jobs(store, s"$run-$c-$i", text, binds)
       Seq(q("reach",
@@ -324,49 +327,71 @@ class GremlinLiteSpec extends AnyFunSuite {
           Map("u1" -> i, "g1" -> (10L + i))),
         q("scan", "g.V().groupCount().by(label)"))
     }
-    def noResident[A](body: => A): A =
-      GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
-    val runs = graft.graph.Traversal.smallPathRuns
-
-    // Not resident (-1): each query runs its lowering, with shuffle joins
-    // for the broadcasts and the join rounds for reach and who_can.
+    def counts(d: Deck) = d.map { case (q, (n, _)) => q -> n }
+    def answers(d: Deck) = d.map { case (q, (_, rows)) => q -> rows }
+    def threshold[A](t: String)(body: => A): A =
+      GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> t)(body)
+    val small = graft.graph.Traversal.smallPathRuns
+    val resident = graft.graph.Resident.runs
     val store = load()
-    val before = runs.get
-    val lowered = noResident(deck(store, "lowered"))
-    assert(runs.get == before, "a small path ran with the threshold at -1")
-    lowered.foreach { case (q, n) =>
-      assert(n >= 1 && (n <= 5 || q.startsWith("reach") || q.startsWith("who_can")),
-        s"$q ran $n jobs: $lowered")
+
+    // Not resident, with Traversal's small path: a threshold that the
+    // vertex frame is over and the repeat() gather's (src, dst), seed and
+    // stop projections are under. Reach and who_can take untilSmall, whose
+    // one collect is Adjacency.collectAll's tagged union of the three
+    // frames. Every class but lookup runs at most 3 jobs, as on a store
+    // the console queries through its lowering; lookup's join with the
+    // vertex frame cannot broadcast here, so it shuffles, as under -1.
+    val size = (df: org.apache.spark.sql.DataFrame) => df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val between = size(store.edges.select("src", "dst")) max size(store.vertices.select("id"))
+    assert(between < (size(store.vertices) max size(store.edges)), "no threshold between the frames")
+    val (small0, resident0) = (small.get, resident.get)
+    val gathered = threshold(between.toString)(deck(store, "gathered"))
+    assert(resident.get == resident0, "the store went resident over its bound")
+    assert(small.get == small0 + 6, "reach/who_can left the small path")
+    counts(gathered).foreach { case (q, n) =>
+      assert(n >= 1 && (n <= 3 || q.startsWith("lookup") && n <= 5), s"$q ran $n jobs: ${counts(gathered)}")
     }
 
-    // The lowering's cuts above are freed by the ContextCleaner; the
-    // resident path below must leave nothing: no NEW persisted RDD id
-    // (other suites' released RDDs may be cleaned meanwhile) and no
-    // CacheManager entry.
+    // Neither driver-side path (-1): each query runs its lowering, with
+    // shuffle joins for the broadcasts and the join rounds for reach and
+    // who_can.
+    val (small1, resident1) = (small.get, resident.get)
+    val lowered = threshold("-1")(deck(store, "lowered"))
+    assert(small.get == small1 && resident.get == resident1, "a driver-side path ran with the threshold at -1")
+    counts(lowered).foreach { case (q, n) =>
+      assert(n >= 1 && (n <= 5 || q.startsWith("reach") || q.startsWith("who_can")),
+        s"$q ran $n jobs: ${counts(lowered)}")
+    }
+
+    // The cuts above are freed by the ContextCleaner; the resident path
+    // below must leave nothing: no NEW persisted RDD id (other suites'
+    // released RDDs may be cleaned meanwhile) and no CacheManager entry.
     val persisted = sc.getPersistentRDDs.keySet
     val entries = org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark)
 
     // Resident: the first query collects both frames, one job each; after
-    // it every query runs 0 jobs.
-    val first = jobs(store, "first", "g.V().groupCount().by(label)")
+    // it every query runs 0 jobs, with the same answers as without it.
+    val (first, _) = jobs(store, "first", "g.V().groupCount().by(label)")
     assert(first >= 1 && first <= 2, s"the resident copy took $first jobs")
-    val resident = deck(store, "resident")
-    resident.foreach { case (q, n) => assert(n == 0, s"$q ran $n jobs: $resident") }
+    val onDriver = deck(store, "resident")
+    counts(onDriver).foreach { case (q, n) => assert(n == 0, s"$q ran $n jobs: ${counts(onDriver)}") }
+    assert(answers(onDriver) == answers(gathered))
+    assert(answers(onDriver) == answers(lowered))
 
     // A second graph object over the same store collects again.
     val second = load()
-    assert(jobs(second, "second", "g.V().groupCount().by(label)") >= 1)
-    assert(jobs(second, "second-again", "g.V().groupCount().by(label)") == 0)
+    assert(jobs(second, "second", "g.V().groupCount().by(label)")._1 >= 1)
+    assert(jobs(second, "second-again", "g.V().groupCount().by(label)")._1 == 0)
     assert(sc.getPersistentRDDs.keySet.subsetOf(persisted))
     assert(org.apache.spark.sql.graft.CheckpointUtil.cachedEntries(spark) <= entries)
 
     // Over the bound, a graph never collects: its first query once the
     // bound is lifted still pays the collect.
     val over = load()
-    val overBound = GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "512")(
-      deck(over, "over"))
-    overBound.foreach { case (q, n) => assert(n >= 1, s"$q over the bound ran $n jobs: $overBound") }
-    assert(jobs(over, "over-lifted", "g.V().groupCount().by(label)") >= 1)
+    val overBound = threshold("512")(deck(over, "over"))
+    counts(overBound).foreach { case (q, n) => assert(n >= 1, s"$q over the bound ran $n jobs: ${counts(overBound)}") }
+    assert(jobs(over, "over-lifted", "g.V().groupCount().by(label)")._1 >= 1)
   }
 
   test("mutate(): typed addV/addE upsert and drop() lower to the set-semantics API") {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.DataType
 import org.scalatest.Assertions
 
+import java.util.concurrent.atomic.AtomicLong
+
 /** Shared local session for all suites (one JVM, one context). */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -21,19 +23,20 @@ object TestSpark {
     s
   }
 
-  /** Runs `body` twice: first on `Traversal`'s small-relation path (the
-    * default broadcast threshold, which the specs' graphs are under), then
-    * on its join rounds (the threshold at -1). Asserts that each run took
-    * its path, and returns both results. */
-  def onBothPaths[A](body: => A): (A, A) = {
-    val runs = graph.Traversal.smallPathRuns
+  /** Runs `body` twice: first with the default broadcast threshold, which
+    * the specs' graphs are under, so a driver-side path runs (by default
+    * `Traversal`'s small-relation path; pass [[graph.Resident.runs]] for
+    * GremlinLite's resident copy), then with the threshold at -1, which
+    * turns every such path off. Asserts that `runs` counted the first
+    * run and not the second, and returns both results. */
+  def onBothPaths[A](body: => A, runs: AtomicLong = graph.Traversal.smallPathRuns): (A, A) = {
     val before = runs.get
     val small = body
-    Assertions.assert(runs.get > before, "the small-relation path did not run")
+    Assertions.assert(runs.get > before, "the driver-side path did not run")
     val mid = runs.get
     val rounds = GateSupport.withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
-    Assertions.assert(runs.get == mid, "the small-relation path ran with the threshold at -1")
+    Assertions.assert(runs.get == mid, "the driver-side path ran with the threshold at -1")
     (small, rounds)
   }
 

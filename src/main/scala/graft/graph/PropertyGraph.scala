@@ -33,8 +33,9 @@ import org.apache.spark.sql.graft.LocalFrames
   *     RDD. Filters and projections over it fold on the driver (Spark's
   *     `ConvertToLocalRelation`).
   *   - The hops (`out`, `in`, `outE`, `inE`, `inV`, `outV`) of a graph
-  *     whose frames have folded so (a resident copy, or a graph built
-  *     from local rows) run on the driver over per-label indexes
+  *     whose frames have folded so and pass the same size test (a
+  *     resident copy, or a small graph built from local rows) run on the
+  *     driver over per-label indexes
   *     ([[Resident.Index]]) when their input has folded too, and return
   *     a folded frame with the join lowering's rows and schema; every
   *     other input takes the join lowering.

@@ -288,7 +288,8 @@ class GremlinLiteSpec extends AnyFunSuite {
 
   test("console reach and who_can run at most 3 jobs and leave nothing cached") {
     // On a resident store, after its one collect, all five console
-    // classes run 0 jobs; on the same store over its bound, at most 3.
+    // classes run 0 jobs; on the same store over its bound, at most 3
+    // (lookup, whose vertex join then shuffles, 5).
     // An IAM-shaped store, written and loaded back as the console does:
     // users -in-> nested groups -in-> projects, buckets <-in- groups.
     val users = (1L to 6L).map(i => (i, "user", s"u$i@d", Map.empty[String, String]))

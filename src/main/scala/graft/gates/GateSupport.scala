@@ -75,14 +75,25 @@ private[graft] object GateSupport {
 
   /** Recursively delete a temp tree (the replay-harness cleanup — NOT for
     * anything a later reader still needs). Deliberately quiet on races:
-    * a file already gone is the desired end state. */
-  private[graft] def deleteRecursively(root: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(root)) {
+    * a file already gone is the desired end state. A directory that gains
+    * an entry while the walk deletes it (a stopped streaming query's
+    * RocksDB state store can still be committing changelog files into its
+    * checkpoint) is walked again, up to `attempts` walks 200 ms apart;
+    * then the call throws, naming the directory. */
+  private[graft] def deleteRecursively(root: java.nio.file.Path, attempts: Int = 10): Unit = {
+    import java.nio.file.{DirectoryNotEmptyException, Files}
+    var walks = 0
+    while (Files.exists(root)) {
+      walks += 1
       val walk = Files.walk(root) // must close: the stream holds directory handles
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
+      catch {
+        case e: DirectoryNotEmptyException =>
+          if (walks >= attempts) throw new IllegalStateException(
+            s"could not delete $root: ${e.getFile} still gained entries after $walks walks", e)
+          Thread.sleep(200)
+      } finally walk.close()
     }
   }
 

@@ -14,7 +14,10 @@ import scala.collection.mutable.ArrayBuffer
   * and every search over it runs without allocating per vertex.
   * Duplicate edges stay as they are: a search skips a vertex it already
   * reached. This is [[Traversal]]'s small-relation path (see its object
-  * doc); nothing here runs a Spark job but [[Adjacency.collectAll]]'s
+  * doc), and the adjacency a resident graph's index keeps per (edge
+  * label, direction) for GremlinLite's walks ([[Resident.Index]]). It
+  * is never mutated after it is built, so concurrent searches may share
+  * it. Nothing here runs a Spark job but [[Adjacency.collectAll]]'s
   * collect. */
 private[graph] final class Adjacency private (
     ids: Array[Long], offsets: Array[Int], targets: Array[Int], hasIn: Array[Boolean])
@@ -173,23 +176,27 @@ private[graph] object Adjacency {
 
   /** The adjacency of (src, dst) rows of longs. None when an id is null:
     * the join rounds define what a null endpoint does. */
-  def of(rows: Array[Row]): Option[Adjacency] = {
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val all = rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+  def of(rows: Array[Row]): Option[Adjacency] =
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+    else Some(of(rows.map(_.getLong(0)), rows.map(_.getLong(1))))
+
+  /** The adjacency of the edges `src(i)` → `dst(i)`. */
+  def of(src: Array[Long], dst: Array[Long]): Adjacency = {
+    val all = src ++ dst
     java.util.Arrays.sort(all)
     val ids = all.distinct // stays sorted: distinct keeps first occurrences
-    val s = rows.map(r => java.util.Arrays.binarySearch(ids, r.getLong(0)))
-    val d = rows.map(r => java.util.Arrays.binarySearch(ids, r.getLong(1)))
+    val s = src.map(java.util.Arrays.binarySearch(ids, _))
+    val d = dst.map(java.util.Arrays.binarySearch(ids, _))
     val offsets = new Array[Int](ids.length + 1)
     s.foreach(v => offsets(v + 1) += 1)
     for (v <- ids.indices) offsets(v + 1) += offsets(v)
     val fill = offsets.clone()
-    val targets = new Array[Int](rows.length)
+    val targets = new Array[Int](src.length)
     val hasIn = new Array[Boolean](ids.length)
-    for (i <- rows.indices) {
+    for (i <- src.indices) {
       targets(fill(s(i))) = d(i); fill(s(i)) += 1
       hasIn(d(i)) = true
     }
-    Some(new Adjacency(ids, offsets, targets, hasIn))
+    new Adjacency(ids, offsets, targets, hasIn)
   }
 }

@@ -106,15 +106,14 @@ object GraphExport {
     * pass), fully distributed, FAILFAST: an unparseable line in our own
     * export format is a bug, not data. */
   def readGraphson(spark: SparkSession, dir: String): PropertyGraph = {
-    def rd(path: String, ddl: String) = spark.read
-      .schema(StructType.fromDDL(ddl)).option("mode", "FAILFAST").json(path)
+    def rd(path: String, schema: StructType) = spark.read
+      .schema(schema).option("mode", "FAILFAST").json(path)
     PropertyGraph(
-      rd(s"$dir/vertices",
-        "id LONG, label STRING, key STRING, props MAP<STRING,STRING>")
+      rd(s"$dir/vertices", PropertyGraph.VertexSchema)
         .select(col("id"), col("label"), col("key"),
           coalesce(col("props"),
             map().cast("map<string,string>")).as("props")),
-      rd(s"$dir/edges", "src LONG, dst LONG, label STRING, weight INT")
+      rd(s"$dir/edges", PropertyGraph.EdgeSchema)
         .select(col("src"), col("dst"), col("label"), col("weight")))
   }
 

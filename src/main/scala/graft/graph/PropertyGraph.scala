@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.LocalFrames
+import org.apache.spark.sql.types.StructType
 
 /** Labeled property graph over two DataFrames — the Spark-native analogue of
   * the reference's JanusGraph store (reference: /root/reference/main.go,
@@ -38,7 +39,12 @@ import org.apache.spark.sql.graft.LocalFrames
   *     driver over per-label indexes
   *     ([[Resident.Index]]) when their input has folded too, and return
   *     a folded frame with the join lowering's rows and schema; every
-  *     other input takes the join lowering.
+  *     other input takes the join lowering. The same index caches a CSR
+  *     adjacency per (edge label, direction), built from its edge rows on
+  *     first use, that GremlinLite's `repeat().until()/emit()` walks search
+  *     ([[untilIndexed]]). The index and its adjacencies are built lazily
+  *     and held by this object, so they live and die with it, like the
+  *     resident copy.
   */
 final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
@@ -261,6 +267,16 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
   private lazy val foldedIndex: Option[Resident.Index] = Resident.index(this)
 
+  /** GremlinLite's `repeat(out|in(edgeLabel)).until(stops)/emit()` from
+    * the ids of `seeds`, searched over the CSR adjacency the index caches
+    * ([[Resident.Index.until]]): the reached vertices' (id, label, key,
+    * props) rows. None, when there is no index or a frame has not folded,
+    * and the caller takes [[Traversal.untilSmall]] or the join lowering. */
+  private[graft] def untilIndexed(seeds: DataFrame, edgeLabel: Option[String], out: Boolean,
+                                  stops: Option[DataFrame], emit: Boolean,
+                                  maxIter: Int = 64): Option[DataFrame] =
+    index.flatMap(_.until(seeds, edgeLabel, out, stops, emit, maxIter))
+
   // ---------------------------------------------------------------- A13 / A14
 
   /** True when the stored edges are already cached (e.g. via
@@ -295,4 +311,14 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   def bfsDepth(start: DataFrame, edgeLabel: String = "in", maxIter: Int = 64): DataFrame =
     Traversal.bfsDepth(edges.filter(col("label") === edgeLabel), start, maxIter,
       prepEdges = !edgesCached)
+}
+
+object PropertyGraph {
+
+  /** The schema contract's vertex frame (see the class doc). */
+  val VertexSchema: StructType =
+    StructType.fromDDL("id LONG, label STRING, key STRING, props MAP<STRING, STRING>")
+
+  /** The schema contract's edge frame. */
+  val EdgeSchema: StructType = StructType.fromDDL("src LONG, dst LONG, label STRING, weight INT")
 }

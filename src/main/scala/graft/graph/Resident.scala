@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.LocalFrames
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 /** Console steps on the driver, over frames that have folded to
@@ -26,6 +28,11 @@ private[graft] object Resident {
   /** Calls that took a graph's resident copy ([[PropertyGraph.resident]]),
     * so a caller (GremlinLiteSpec) can assert which path ran. */
   private[graft] val runs = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** `repeat().until()/emit()` walks answered by an index's cached
+    * adjacency ([[Index.until]]), so a caller (GremlinLiteSpec) can assert
+    * which of the walk's paths ran. */
+  private[graft] val searches = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** `df`'s rows when it has folded to a `LocalRelation` that passes the
     * size test; None otherwise. */
@@ -102,7 +109,13 @@ private[graft] object Resident {
     * Each hop returns what [[PropertyGraph]]'s join lowering of it
     * returns: `out`/`in` one row per (traverser, edge) with a vertex at
     * the far end, `outE`/`inE` each matching edge once (a semi-join),
-    * `inV`/`outV` one row per (edge, vertex at that end). */
+    * `inV`/`outV` one row per (edge, vertex at that end).
+    *
+    * The `repeat().until()/emit()` walk ([[until]]) searches a CSR
+    * [[Adjacency]] per (edge label, direction), built from the edge rows
+    * here on the walk's first use, without a fold or a job. Like the
+    * endpoint maps, it is kept as long as this index, which its graph
+    * object holds. */
   final class Index private[Resident] (vertexSchema: StructType,
       byId: mutable.LongMap[Array[Array[Any]]], edgeSchema: StructType,
       edgeRows: IndexedSeq[InternalRow], src: Int, dst: Int, label: Int) {
@@ -117,6 +130,19 @@ private[graft] object Resident {
     }
     private lazy val outOf = byEnd(src)
     private lazy val inOf = byEnd(dst)
+
+    /** The adjacency of the `edgeLabel` edges, `src` → `dst` when `out`
+      * and `dst` → `src` otherwise; None when one of them has a null
+      * endpoint. */
+    private val csr = TrieMap.empty[(Option[String], Boolean), Option[Adjacency]]
+    private def adjacency(edgeLabel: Option[String], out: Boolean): Option[Adjacency] =
+      csr.getOrElseUpdate((edgeLabel, out), {
+        val es = edgeLabel.map(UTF8String.fromString).fold(edgeRows)(l =>
+          edgeRows.filter(r => !r.isNullAt(label) && r.getUTF8String(label) == l))
+        val (near, far) = if (out) (src, dst) else (dst, src)
+        if (es.exists(r => r.isNullAt(near) || r.isNullAt(far))) None
+        else Some(Adjacency.of(es.map(_.getLong(near)).toArray, es.map(_.getLong(far)).toArray))
+      })
 
     /** Positions of the `edgeLabel` edges whose near end (`src` when
       * `out`, else `dst`) is `id`. */
@@ -145,19 +171,44 @@ private[graft] object Resident {
     def endpoint(e: DataFrame, end: String): Option[DataFrame] =
       hop(e, end, distinct = false)(_ => vertexSchema)(id => vertices(id).map(new GenericInternalRow(_)))
 
+    /** `repeat(out|in(edgeLabel))` from the ids of `seeds`, stopped by
+      * the ids of `stops` (an `until`) and keeping every vertex it passes
+      * when `emit`: [[Traversal.until]] over the cached adjacency. Returns
+      * the (id, label, key, props) rows of the vertices with the ids the
+      * search keeps, each vertex row once, as the lowering's filter of
+      * the vertices by those ids does. None, and the caller runs
+      * [[Traversal.untilSmall]], when `seeds` or `stops` has not folded or
+      * has no long `id`, or one of the label's edges has a null endpoint. */
+    def until(seeds: DataFrame, edgeLabel: Option[String], out: Boolean,
+              stops: Option[DataFrame], emit: Boolean, maxIter: Int): Option[DataFrame] =
+      for {
+        (_, from) <- longs(seeds, "id")
+        halt <- stops.fold(Option(Iterator.empty[Long]))(longs(_, "id").map(_._2))
+        adj <- adjacency(edgeLabel, out)
+      } yield {
+        searches.incrementAndGet()
+        val found = Traversal.until(adj, from, halt, onlyStops = stops.isDefined && !emit, maxIter)
+        LocalFrames.frame(seeds.sparkSession, vertexSchema,
+          found.iterator.flatMap(vertices).map(new GenericInternalRow(_)).toIndexedSeq)
+      }
+
     /** The one driver hop: for each non-null value of `from`'s long
       * column `on` (each distinct value once when `distinct`), the rows
       * `each` gives, under the schema `schema` builds from `on`'s field. */
     private def hop(from: DataFrame, on: String, distinct: Boolean)(schema: StructField => StructType)(
-        each: Long => Iterator[InternalRow]): Option[DataFrame] = {
-      val f = from.select(col(on))
-      val field = f.schema.head
-      if (field.dataType != LongType) None
-      else rows(f).map { rs =>
-        val ids = rs.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0))
+        each: Long => Iterator[InternalRow]): Option[DataFrame] =
+      longs(from, on).map { case (field, ids) =>
         LocalFrames.frame(from.sparkSession, schema(field),
           (if (distinct) ids.distinct else ids).flatMap(each).toIndexedSeq)
       }
+
+    /** The field of `df`'s column `on` and its non-null values, when it
+      * is a long column and `df` has folded and passes the size test. */
+    private def longs(df: DataFrame, on: String): Option[(StructField, Iterator[Long])] = {
+      val f = df.select(col(on))
+      val field = f.schema.head
+      if (field.dataType != LongType) None
+      else rows(f).map(rs => field -> rs.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)))
     }
   }
 }

@@ -65,7 +65,9 @@ import scala.jdk.CollectionConverters._
   * bound, or with non-integral or null ids, the rounds run unchanged.
   * GremlinLite's `repeat().until()/emit()` takes the same test through
   * [[untilSmall]], over its hop relation, seed ids and stop ids, and
-  * searches on the driver instead of in a task.
+  * searches on the driver instead of in a task; over a resident graph it
+  * runs the same search ([[until]]) over the adjacency that graph's index
+  * caches ([[Resident.Index]]), with nothing to gather.
   *
   * Scale notes (100 TB): each hop is one join frontier⋈edges; the edge
   * set is expected hash-partitioned AND sorted by `src` ([[GraphStore]]
@@ -265,13 +267,12 @@ object Traversal {
   /** GremlinLite's `repeat().until()/emit()` on the small-relation path:
     * when `step` (src, dst), `seeds` (id) and `stops` (id, given for an
     * `until`) are each integral and pass [[broadcastSized]], ONE job
-    * (none, when all three have folded to local rows) collects them and
-    * [[Adjacency.stopping]] searches on the driver. Returns the ids the
-    * lowering keeps (the stop vertices among them only, when there is an
-    * `until` and no `emit`), or None (a frame is over the bound, or an
-    * edge endpoint is null) and the join-round lowering runs. Throws
-    * bfsDepth's round-limit error exactly where the lowering's
-    * bfsDepth(ePrime, contStart) would. */
+    * (none, when all three have folded to local rows) gathers them into
+    * an [[Adjacency]] and the ids, and [[until]] searches on the driver.
+    * Returns the ids the lowering keeps, or None (a frame is over the
+    * bound, or an edge endpoint is null) and the join-round lowering
+    * runs. A resident graph's index runs the same search over its cached
+    * adjacency instead ([[Resident.Index.until]]). */
   private[graft] def untilSmall(step: DataFrame, seeds: DataFrame, stops: Option[DataFrame],
                                 emit: Boolean, maxIter: Int = 64): Option[Array[Long]] = {
     val frames = step.select(col("src"), col("dst")) +: (seeds +: stops.toSeq).map(_.select(col("id")))
@@ -280,10 +281,20 @@ object Traversal {
     def ids(k: Int) = rows.lift(k).iterator.flatten.filterNot(_.isNullAt(0)).map(_.getLong(0))
     Adjacency.of(rows(0)).map { adj =>
       smallPathRuns.incrementAndGet()
-      val (found, depth) = adj.stopping(ids(1), ids(2), onlyStops = stops.isDefined && !emit)
-      if (bfsDepthOver(maxIter)(depth)) throw bfsDepthLimit(maxIter)
-      found
+      until(adj, ids(1), ids(2), onlyStops = stops.isDefined && !emit, maxIter)
     }
+  }
+
+  /** The one `repeat().until()/emit()` search ([[Adjacency.stopping]]):
+    * the ids the lowering keeps (the stop vertices among them only, when
+    * `onlyStops`: an `until` and no `emit`). Throws bfsDepth's round-limit
+    * error exactly where the lowering's bfsDepth(ePrime, contStart)
+    * would. */
+  private[graph] def until(adj: Adjacency, seeds: Iterator[Long], stops: Iterator[Long],
+                           onlyStops: Boolean, maxIter: Int): Array[Long] = {
+    val (found, depth) = adj.stopping(seeds, stops, onlyStops)
+    if (bfsDepthOver(maxIter)(depth)) throw bfsDepthLimit(maxIter)
+    found
   }
 
   /** Calls that took the small-relation path, so a caller (TraversalSpec)

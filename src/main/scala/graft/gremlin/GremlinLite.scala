@@ -17,8 +17,9 @@ import graft.graph.{PropertyGraph, Resident, Traversal}
   * and joins, never the query string). A broadcast-sized graph is queried
   * through its resident copy ([[PropertyGraph.resident]]): while a
   * step's input stays folded to a `LocalRelation`, the hops, `count()`,
-  * `hasNext()`, `groupCount()` and the `repeat()` gather run on the
-  * driver ([[graft.graph.Resident]]) with the lowering's rows and schema,
+  * `hasNext()`, `groupCount()` and the `repeat().until()/emit()` walks
+  * (over a CSR adjacency the graph's index caches) run on the driver
+  * ([[graft.graph.Resident]]) with the lowering's rows and schema,
   * and a console query runs no Spark job; every other step keeps its
   * lowering. Traverser semantics follow Gremlin:
   * `out()` multiplies per path (no implicit dedup) — use `dedup()`.
@@ -368,29 +369,38 @@ object GremlinLite {
             require(!wantsPath && tagCols(cur).isEmpty,
               s"repeat().until()/emit() runs the set-semantics closure; " +
                 s"path()/as() tags are not supported in: $query")
-            val e0 = edgeLabel(bodyArgs) match {
-              case Some(l) => g.edges.filter(col("label") === l)
-              case None    => g.edges
+            // the hop relation, built only for paths 2 and 3 below
+            lazy val step = {
+              val e0 = edgeLabel(bodyArgs) match {
+                case Some(l) => g.edges.filter(col("label") === l)
+                case None    => g.edges
+              }
+              if (body == "out") e0.select(col("src"), col("dst"))
+              else e0.select(col("dst").as("src"), col("src").as("dst"))
             }
-            val step = if (body == "out") e0.select(col("src"), col("dst"))
-                       else e0.select(col("dst").as("src"), col("src").as("dst"))
-            // What runs: when the hop relation, the seed ids and the stop
-            // ids are each broadcast-sized (perfbench's IAM stores; the g5
-            // walk at sf0.001 and sf0.01), Traversal.untilSmall collects
-            // all three in ONE job (none over a resident copy, whose
-            // frames have folded) and searches on the driver, and the
-            // result is one filter of the vertices by the reached ids.
-            // Otherwise (g5 at sf0.1 starts from every lineitem) the join
-            // lowering below runs: an eager cut of s1, then bfsDepth —
-            // itself on its small-relation path (one collect, one search
-            // task) when ePrime alone is broadcast-sized, else its join
-            // rounds — then a join back to the vertices.
-            val small = Traversal.untilSmall(step, cur.select(col("id")),
-              untilPred.map(p => g.vertices.filter(p).select(col("id"))), emitAll)
-            val startIds = cur.select(col("id")).distinct()
-            lazy val endIds = untilPred match {
-              case Some(p) =>
-                val stopIds = g.vertices.filter(p).select(col("id"))
+            // What runs, the first that applies:
+            //  1. over a resident graph (PropertyGraph.resident) whose seed
+            //     and stop frames have folded, one search over the CSR its
+            //     index caches per (edge label, direction), and the answer
+            //     rows from the index's vertex map (PropertyGraph.untilIndexed;
+            //     perfbench's console, g5 at sf0.001 and sf0.01): no fold of
+            //     the edge relation, no job;
+            //  2. when the hop relation, the seed ids and the stop ids are
+            //     each broadcast-sized, Traversal.untilSmall gathers all
+            //     three in ONE job (none when they have folded) and runs
+            //     the same search, and the result is one filter of the
+            //     vertices by the reached ids;
+            //  3. otherwise (g5 at sf0.1 starts from every lineitem) the
+            //     join lowering below: an eager cut of s1, then bfsDepth —
+            //     itself on its small-relation path (one collect, one
+            //     search task) when ePrime alone is broadcast-sized, else
+            //     its join rounds — then a join back to the vertices.
+            // A null endpoint among the hop's edges skips 1 and 2.
+            val seeds = cur.select(col("id"))
+            val stops = untilPred.map(p => g.vertices.filter(p).select(col("id")))
+            lazy val startIds = seeds.distinct()
+            lazy val endIds = stops match {
+              case Some(stopIds) =>
                 // Do-while semantics: the first hop always runs (a start
                 // vertex satisfying the predicate still steps), then the
                 // closure continues only from and through non-stop
@@ -429,14 +439,14 @@ object GremlinLite {
                 Traversal.bfsDepth(step, s1,
                   prepEdges = !g.edgesCached).select(col("id"))
             }
-            cur = small match {
-              case Some(ids) => g.vertices.filter(col("id").isInCollection(ids))
-                .select(col("id"), col("label"), col("key"), col("props"))
-              case None => endIds.select(col("id").as("__end"))
+            cur = g.untilIndexed(seeds, edgeLabel(bodyArgs), body == "out", stops, emitAll)
+              .orElse(Traversal.untilSmall(step, seeds, stops, emitAll).map(ids =>
+                g.vertices.filter(col("id").isInCollection(ids))
+                  .select(col("id"), col("label"), col("key"), col("props"))))
+              .getOrElse(endIds.select(col("id").as("__end"))
                 .join(g.vertices.as("v"), col("__end") === col("v.id"))
                 .select(col("v.id").as("id"), col("v.label").as("label"),
-                  col("v.key").as("key"), col("v.props").as("props"))
-            }
+                  col("v.key").as("key"), col("v.props").as("props")))
           } else {
           val nTimes = nTimesOpt.get
           // Log-round lowering: `repeat(out(l)).times(n).dedup()` with no

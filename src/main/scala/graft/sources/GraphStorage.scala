@@ -45,12 +45,15 @@ object GraphStorage {
       .parquet(s"$path/edges")
   }
 
-  /** A18 — bulk load: reconstruct the graph from storage. */
+  /** A18 — bulk load: reconstruct the graph from storage. Both frames
+    * are read with the [[PropertyGraph]] schema contract, so no job reads
+    * the files' footers to infer one; a store whose columns have other
+    * types fails when it is read instead of being coerced. */
   def load(spark: SparkSession, path: String): PropertyGraph = {
     // Partition column `label` comes back at the end; restore column order.
-    val v = spark.read.parquet(s"$path/vertices")
-      .select(col("id"), col("label").cast("string"), col("key"), col("props"))
-    PropertyGraph(v, spark.read.parquet(s"$path/edges"))
+    val v = spark.read.schema(PropertyGraph.VertexSchema).parquet(s"$path/vertices")
+      .select(col("id"), col("label"), col("key"), col("props"))
+    PropertyGraph(v, spark.read.schema(PropertyGraph.EdgeSchema).parquet(s"$path/edges"))
   }
 
   /** Catalog-bucketed variant: `bucketBy(src)+sortBy(src)` edges and
@@ -87,14 +90,19 @@ object GraphStorage {
     * guard on the wrong property key). */
   def merge(spark: SparkSession, path: String, newV: DataFrame, newE: DataFrame): Unit = {
     val existing = load(spark, path)
-    // eager cuts: sever from the store files about to be appended
+    // Cuts sever the fresh rows from the store files about to be
+    // appended. Each materializes inside its count, before either append:
+    // the count adds one task to the cut's own job, and a side with no
+    // fresh rows appends nothing (a plain parquet append of zero rows
+    // would still write an empty file).
     val freshV = Cuts.cut(newV.dropDuplicates("label", "key")
       .join(existing.vertices.select("label", "key"), Seq("label", "key"), "left_anti")
-      .select(col("id"), col("label"), col("key"), col("props")))
+      .select(col("id"), col("label"), col("key"), col("props")), eager = false)
     val freshE = Cuts.cut(newE.dropDuplicates("src", "dst", "label")
       .join(existing.edges.select("src", "dst", "label"), Seq("src", "dst", "label"), "left_anti")
-      .select(col("src"), col("dst"), col("label"), col("weight")))
-    freshV.write.mode(SaveMode.Append).partitionBy("label").parquet(s"$path/vertices")
-    freshE.write.mode(SaveMode.Append).parquet(s"$path/edges")
+      .select(col("src"), col("dst"), col("label"), col("weight")), eager = false)
+    val (nV, nE) = (freshV.count(), freshE.count())
+    if (nV > 0) freshV.write.mode(SaveMode.Append).partitionBy("label").parquet(s"$path/vertices")
+    if (nE > 0) freshE.write.mode(SaveMode.Append).parquet(s"$path/edges")
   }
 }

@@ -21,6 +21,56 @@ class GremlinLiteSpec extends AnyFunSuite {
       .toDF("id", "label", "key", "props"),
     Seq((1L, 3L, "in", 1), (3L, 4L, "in", 1)).toDF("src", "dst", "label", "weight"))
 
+  /** A `repeat().until()/emit()` query's (rows, schema), or its error, on
+    * the walk's three paths, which must agree; returns it.
+    *  1. The default threshold: the graph is resident, and its index's
+    *     cached adjacency answers (`Resident.searches`) with 0 jobs; when
+    *     `indexed` is false (a null endpoint among the walk's edges), the
+    *     call falls back and the search does not run. Neither Traversal
+    *     small path runs.
+    *  2. A threshold the graph's frames are over and the walk's (src, dst),
+    *     seed and stop projections under: not resident, so when `gathered`
+    *     `Traversal.untilSmall` gathers the local frames and searches (one
+    *     small-path run, 0 jobs); otherwise (seeds from a hop, or a null
+    *     endpoint) the join lowering runs at least one job.
+    *  3. -1: the join lowering, with no driver-side path. */
+  private def threePaths(graph: PropertyGraph, q: String, indexed: Boolean = true,
+                         gathered: Boolean = true) = {
+    import graft.graph.{Resident, Traversal}
+    val sc = spark.sparkContext
+    val counters = Seq(Resident.runs, Resident.searches, Traversal.smallPathRuns)
+    // (outcome, jobs, growth of each counter) of one run
+    def leg(threshold: String) = {
+      val before = counters.map(_.get)
+      val tag = s"three-paths-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(tag, tag)
+      val out = try scala.util.Try(TestSpark.rowsAndSchema(GremlinLite.run(graph, q))).toEither
+          .left.map(e => (e.getClass, e.getMessage))
+        finally sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      val jobs = sc.statusTracker.getJobIdsForGroup(tag).length
+      (out, jobs, counters.zip(before).map { case (c, b) => c.get - b })
+    }
+    def threshold[A](t: String)(body: => A): A =
+      GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> t)(body)
+    val size = (df: org.apache.spark.sql.DataFrame) => df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val between = size(graph.edges.select("src", "dst")) max size(graph.vertices.select("id"))
+    assert(between < (size(graph.vertices) max size(graph.edges)), "no threshold between the frames")
+    val (onIndex, indexJobs, indexRuns) = leg(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    val (onGather, gatherJobs, gatherRuns) = threshold(between.toString)(leg(between.toString))
+    val (lowered, _, lowerRuns) = threshold("-1")(leg("-1"))
+    assert(indexRuns.head >= 1 && indexRuns(2) == 0, s"$q, resident: $indexRuns")
+    if (indexed) assert(indexRuns(1) == 1 && indexJobs == 0, s"$q, resident: $indexRuns, $indexJobs jobs")
+    else assert(indexRuns(1) == 0, s"$q searched the cached adjacency")
+    if (gathered) assert(gatherRuns == Seq(0, 0, 1) && gatherJobs == 0,
+      s"$q, gathered: $gatherRuns, $gatherJobs jobs")
+    else assert(gatherRuns.take(2) == Seq(0, 0) && gatherJobs >= 1, s"$q, gathered: $gatherRuns, $gatherJobs jobs")
+    assert(lowerRuns == Seq(0, 0, 0), s"$q at -1: $lowerRuns")
+    assert(onIndex == lowered, s"$q: the indexed path differs from the join lowering")
+    assert(onGather == lowered, s"$q: untilSmall differs from the join lowering")
+    lowered
+  }
+
   test("g.V().count() and g.E().count() — README.md:331-340") {
     assert(GremlinLite.run(g, "g.V().count()").as[Long].head() == 4L)
     assert(GremlinLite.run(g, "g.E().count()").as[Long].head() == 2L)
@@ -128,6 +178,8 @@ class GremlinLiteSpec extends AnyFunSuite {
   }
 
   test("property: repeat().until()/emit() agree on the small-relation path and the join rounds") {
+    // each query on the indexed resident path, untilSmall and the join
+    // rounds (threePaths)
     // seeded random graphs: cycles, a self-loop and a duplicate edge each
     val rnd = new scala.util.Random(99)
     val labels = Seq("user", "group", "project")
@@ -144,9 +196,9 @@ class GremlinLiteSpec extends AnyFunSuite {
           "g.V().hasLabel('user').repeat(out('in')).until(hasLabel('project')).emit().id()",
           "g.V().hasLabel('project').repeat(in('in')).until(hasLabel('user')).emit().id()",
           "g.V().hasLabel('user').repeat(out('in')).emit().id()",
-          "g.V().hasLabel('group').repeat(in('in')).emit().id()")) {
-        val (small, rounds) = TestSpark.onBothPaths(TestSpark.rowsAndSchema(GremlinLite.run(rg, q)))
-        assert(small == rounds, s"$q on edges $es")
+          "g.V().hasLabel('group').repeat(in('in')).emit().id()",
+          "g.V().hasLabel('user').repeat(out()).until(hasLabel('project')).id()")) {
+        withClue(s"edges $es: ")(threePaths(rg, q))
       }
     }
     // Edge cases of the lowering. Users 1, 2 (no out-edge) and a null-id
@@ -177,12 +229,12 @@ class GremlinLiteSpec extends AnyFunSuite {
         "g.V(6).repeat(in()).emit()",
         "g.V(1).repeat(out('in')).until(has('email','g4@d')).emit()", // promoted key
         "g.V(1).repeat(out('in')).until(has('email','g4@d'))",
-        s"g.V(1).out().in()$untilP.emit()",                   // duplicate seed rows
         s"g.V().hasLabel('user')$untilP.emit()",              // a null seed id
-        "g.V().hasLabel('user').repeat(out('in')).emit().valueMap()")) {
-      val (small, rounds) = TestSpark.onBothPaths(TestSpark.rowsAndSchema(GremlinLite.run(eg, q)))
-      assert(small == rounds, q)
-    }
+        "g.V().hasLabel('user').repeat(out('in')).emit().valueMap()"))
+      threePaths(eg, q)
+    // duplicate seed rows: from a hop, which the graph that is not
+    // resident joins, so its seeds are over the threshold of path 2
+    threePaths(eg, s"g.V(1).out().in()$untilP.emit()", gathered = false)
   }
 
   test("property: every step family agrees on the resident driver path and the DataFrame lowering") {
@@ -255,6 +307,54 @@ class GremlinLiteSpec extends AnyFunSuite {
     }
   }
 
+  test("property: repeat().until()/emit() agree on the indexed resident path, untilSmall and the join rounds") {
+    // Users 1, 2, 8 (8 touches no edge) and a null-id user; groups 3, 4
+    // (twice: a duplicate vertex id) and 7; projects 5, 6. `in` edges hold
+    // a duplicate edge, a self-loop, a membership cycle and an edge into
+    // a missing vertex (99); `owns` is a second label; each `bad` edge has
+    // a null endpoint, so walks over `bad` or over every label fall back.
+    val vs = Seq[(java.lang.Long, String, String, Map[String, String])](
+      (1L, "user", "u1@d", Map("tier" -> "gold")), (2L, "user", "u2@d", Map.empty),
+      (8L, "user", "u8@d", Map.empty), (null, "user", "ghost@d", Map.empty),
+      (3L, "group", "g3@d", Map.empty), (4L, "group", "g4@d", Map.empty),
+      (4L, "group", "g4-copy@d", Map("tier" -> "gold")), (7L, "group", "g7@d", Map.empty),
+      (5L, "project", "p5", Map.empty), (6L, "project", "p6", Map.empty))
+    val in = Seq((1L, 3L), (1L, 3L), (3L, 3L), (3L, 4L), (4L, 3L), (4L, 7L), (7L, 5L),
+      (5L, 6L), (3L, 99L), (2L, 7L)).map { case (a, b) => (a: java.lang.Long, b: java.lang.Long, "in") }
+    val owns = Seq[(java.lang.Long, java.lang.Long, String)]((1L, 4L, "owns"), (2L, 5L, "owns"), (5L, 1L, "owns"))
+    val bad = Seq[(java.lang.Long, java.lang.Long, String)]((null, 3L, "bad"), (4L, null, "bad"))
+    def graph(es: Seq[(java.lang.Long, java.lang.Long, String)]) = PropertyGraph(
+      vs.toDF("id", "label", "key", "props"),
+      es.map { case (a, b, l) => (a, b, l, 1) }.toDF("src", "dst", "label", "weight"))
+    val clean = graph(in ++ owns)
+    val withNulls = graph(in ++ owns ++ bad)
+    val walks = Seq(
+      // out and in, labeled and label-less; until, emit and both
+      "g.V().hasLabel('user').repeat(out('in')).until(hasLabel('project'))",
+      "g.V().hasLabel('user').repeat(out('in')).until(hasLabel('project')).emit()",
+      "g.V(1).repeat(out('in')).emit()",
+      "g.V().hasLabel('project').repeat(in('in')).until(hasLabel('user')).emit().valueMap()",
+      "g.V(6).repeat(in('in')).emit()",
+      "g.V(5).repeat(in('in')).until(hasLabel('user'))",
+      "g.V(2).repeat(out('owns')).emit()",
+      "g.V(1).repeat(in('owns')).until(has('tier','gold')).emit()", // the duplicate id 4
+      "g.V(1).repeat(out()).until(hasLabel('project'))",
+      "g.V(1).repeat(out()).emit()",
+      "g.V(6).repeat(in()).until(hasLabel('user')).emit()",
+      // seeds no edge touches, seeds that are no vertex, empty seeds
+      "g.V(8).repeat(out('in')).emit()", "g.V(99).repeat(out('in')).emit()",
+      "g.V().hasLabel('nobody').repeat(in('in')).until(hasLabel('user'))")
+    walks.foreach(threePaths(clean, _))
+    // with the `bad` edges: the labeled walks over `in` and `owns` keep the
+    // indexed path; label-less ones and walks over `bad` fall back
+    walks.foreach { q =>
+      val fallsBack = q.contains("out()") || q.contains("in()")
+      threePaths(withNulls, q, indexed = !fallsBack, gathered = !fallsBack)
+    }
+    Seq("g.V(4).repeat(out('bad')).emit()", "g.V(3).repeat(in('bad')).until(hasLabel('group'))")
+      .foreach(threePaths(withNulls, _, indexed = false, gathered = false))
+  }
+
   test("repeat().until()/emit() throw the round-limit error at the same depth on both paths") {
     // D = the largest depth of bfsDepth from contStart (s1 minus the stop
     // ids); the rounds return at D = 63 and throw at D = 64. `stopInS1`
@@ -271,25 +371,23 @@ class GremlinLiteSpec extends AnyFunSuite {
           .toDF("id", "label", "key", "props"),
         es.map { case (a, b) => (a, b, "in", 1) }.toDF("src", "dst", "label", "weight"))
     }
-    def outcome(cg: PropertyGraph, q: String) =
-      scala.util.Try(TestSpark.rowsAndSchema(GremlinLite.run(cg, q))).toEither
-        .left.map(e => (e.getClass, e.getMessage))
-    // each join-round run takes about a minute: one chain per modulator
+    // each join-round run takes about a minute: one chain per modulator;
+    // threePaths asserts the same outcome on the indexed resident path,
+    // untilSmall and the join rounds
     for ((stopInS1, q) <- Seq(true -> "g.V(-1).repeat(out('in')).until(hasLabel('project'))",
            false -> "g.V(-1).repeat(out('in')).emit()"); d <- Seq(63, 64)) {
-      val cg = chain(d, stopInS1)
-      val (small, rounds) = TestSpark.onBothPaths(outcome(cg, q))
-      assert(small == rounds, s"$q at D = $d")
-      if (d == 63) assert(small.exists(_._1.nonEmpty), s"$q at D = 63: $small")
-      else assert(small.left.exists(_._2.contains("did not converge in 64 levels")),
-        s"$q at D = 64: $small")
+      val out = withClue(s"D = $d: ")(threePaths(chain(d, stopInS1), q))
+      if (d == 63) assert(out.exists(_._1.nonEmpty), s"$q at D = 63: $out")
+      else assert(out.left.exists(_._2.contains("did not converge in 64 levels")),
+        s"$q at D = 64: $out")
     }
   }
 
   test("console reach and who_can run at most 3 jobs and leave nothing cached") {
     // On a resident store, after its one collect, all five console
-    // classes run 0 jobs; on the same store over its bound, at most 3
-    // (lookup, whose vertex join then shuffles, 5).
+    // classes run 0 jobs, and reach and who_can search the index's cached
+    // adjacency; on the same store over its bound, at most 3 (lookup,
+    // whose vertex join then shuffles, 5).
     // An IAM-shaped store, written and loaded back as the console does:
     // users -in-> nested groups -in-> projects, buckets <-in- groups.
     val users = (1L to 6L).map(i => (i, "user", s"u$i@d", Map.empty[String, String]))
@@ -334,6 +432,7 @@ class GremlinLiteSpec extends AnyFunSuite {
       GateSupport.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> t)(body)
     val small = graft.graph.Traversal.smallPathRuns
     val resident = graft.graph.Resident.runs
+    val searches = graft.graph.Resident.searches
     val store = load()
 
     // Not resident, with Traversal's small path: a threshold that the
@@ -346,9 +445,9 @@ class GremlinLiteSpec extends AnyFunSuite {
     val size = (df: org.apache.spark.sql.DataFrame) => df.queryExecution.optimizedPlan.stats.sizeInBytes
     val between = size(store.edges.select("src", "dst")) max size(store.vertices.select("id"))
     assert(between < (size(store.vertices) max size(store.edges)), "no threshold between the frames")
-    val (small0, resident0) = (small.get, resident.get)
+    val (small0, resident0, searched0) = (small.get, resident.get, searches.get)
     val gathered = threshold(between.toString)(deck(store, "gathered"))
-    assert(resident.get == resident0, "the store went resident over its bound")
+    assert(resident.get == resident0 && searches.get == searched0, "the store went resident over its bound")
     assert(small.get == small0 + 6, "reach/who_can left the small path")
     counts(gathered).foreach { case (q, n) =>
       assert(n >= 1 && (n <= 3 || q.startsWith("lookup") && n <= 5), s"$q ran $n jobs: ${counts(gathered)}")
@@ -357,9 +456,10 @@ class GremlinLiteSpec extends AnyFunSuite {
     // Neither driver-side path (-1): each query runs its lowering, with
     // shuffle joins for the broadcasts and the join rounds for reach and
     // who_can.
-    val (small1, resident1) = (small.get, resident.get)
+    val (small1, resident1, searched1) = (small.get, resident.get, searches.get)
     val lowered = threshold("-1")(deck(store, "lowered"))
-    assert(small.get == small1 && resident.get == resident1, "a driver-side path ran with the threshold at -1")
+    assert(small.get == small1 && resident.get == resident1 && searches.get == searched1,
+      "a driver-side path ran with the threshold at -1")
     counts(lowered).foreach { case (q, n) =>
       assert(n >= 1 && (n <= 5 || q.startsWith("reach") || q.startsWith("who_can")),
         s"$q ran $n jobs: ${counts(lowered)}")
@@ -373,10 +473,15 @@ class GremlinLiteSpec extends AnyFunSuite {
 
     // Resident: the first query collects both frames, one job each; after
     // it every query runs 0 jobs, with the same answers as without it.
+    // Reach and who_can take the indexed path: each searches the cached
+    // adjacency, and neither Traversal small path runs.
     val (first, _) = jobs(store, "first", "g.V().groupCount().by(label)")
     assert(first >= 1 && first <= 2, s"the resident copy took $first jobs")
+    val (small2, resident2, searched2) = (small.get, resident.get, searches.get)
     val onDriver = deck(store, "resident")
     counts(onDriver).foreach { case (q, n) => assert(n == 0, s"$q ran $n jobs: ${counts(onDriver)}") }
+    assert(resident.get == resident2 + 15, "a query did not take the resident copy")
+    assert(searches.get == searched2 + 6 && small.get == small2, "reach/who_can left the indexed path")
     assert(answers(onDriver) == answers(gathered))
     assert(answers(onDriver) == answers(lowered))
 

@@ -230,10 +230,40 @@ g — ünïcode]]>"""
       .toDF("id", "label", "key", "props")
     val newE = Seq((1L, 2L, "in", 1), (2L, 3L, "in", 1)).toDF("src", "dst", "label", "weight")
     GraphStorage.merge(spark, dir, newV, newE)
+    // every file under the store, with its size
+    def listing() = {
+      val walk = Files.walk(java.nio.file.Paths.get(dir))
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator).asScala
+        .filter(Files.isRegularFile(_)).map(p => p.toString -> Files.size(p)).toSet
+      finally walk.close()
+    }
+    val merged = listing()
     GraphStorage.merge(spark, dir, newV, newE) // replay: no-op
+    assert(listing() == merged, "a replay that adds no row wrote a file")
     val back = GraphStorage.load(spark, dir)
     assert(back.vertices.count() == 3)
     assert(back.edges.count() == 2)
+  }
+
+  test("load reads the schema contract with no job, and a store of other types fails") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-load").toString
+    GraphStorage.write(g0, dir)
+    sc.setJobGroup("graft-load", "graft-load")
+    val back = try GraphStorage.load(spark, dir) finally sc.clearJobGroup()
+    org.apache.spark.TestBus.drain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup("graft-load").isEmpty, "load ran a job")
+    assert(back.vertices.schema.map(f => f.name -> f.dataType) ==
+      PropertyGraph.VertexSchema.map(f => f.name -> f.dataType))
+    assert(back.edges.schema.map(f => f.name -> f.dataType) ==
+      PropertyGraph.EdgeSchema.map(f => f.name -> f.dataType))
+    assert(back.vertices.count() == g0.vertices.count() && back.edges.count() == g0.edges.count())
+    // a LONG weight is not narrowed to the contract's INT: the read fails
+    val wide = Files.createTempDirectory("graft-load-wide").toString
+    GraphStorage.write(g0.copy(edges = g0.edges.withColumn("weight", col("weight").cast("long"))), wide)
+    val e = intercept[Exception](GraphStorage.load(spark, wide).edges.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.toString.contains("weight")), e.toString)
   }
 
   test("bucketed tables: hop-join plans with no Exchange on either side") {

@@ -78,10 +78,11 @@ private[graft] object GateSupport {
     * a file already gone is the desired end state. A directory that gains
     * an entry while the walk deletes it (a stopped streaming query's
     * RocksDB state store can still be committing changelog files into its
-    * checkpoint) is walked again, up to `attempts` walks 200 ms apart;
-    * then the call throws, naming the directory. */
-  private[graft] def deleteRecursively(root: java.nio.file.Path, attempts: Int = 10): Unit = {
+    * checkpoint) is walked again, up to 10 walks 200 ms apart; then the
+    * call throws, naming the directory. */
+  private[graft] def deleteRecursively(root: java.nio.file.Path): Unit = {
     import java.nio.file.{DirectoryNotEmptyException, Files}
+    val attempts = 10
     var walks = 0
     while (Files.exists(root)) {
       walks += 1

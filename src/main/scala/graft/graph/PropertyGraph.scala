@@ -273,9 +273,8 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * props) rows. None, when there is no index or a frame has not folded,
     * and the caller takes [[Traversal.untilSmall]] or the join lowering. */
   private[graft] def untilIndexed(seeds: DataFrame, edgeLabel: Option[String], out: Boolean,
-                                  stops: Option[DataFrame], emit: Boolean,
-                                  maxIter: Int = 64): Option[DataFrame] =
-    index.flatMap(_.until(seeds, edgeLabel, out, stops, emit, maxIter))
+                                  stops: Option[DataFrame], emit: Boolean): Option[DataFrame] =
+    index.flatMap(_.until(seeds, edgeLabel, out, stops, emit))
 
   // ---------------------------------------------------------------- A13 / A14
 

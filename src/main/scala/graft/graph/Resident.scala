@@ -180,14 +180,14 @@ private[graft] object Resident {
       * [[Traversal.untilSmall]], when `seeds` or `stops` has not folded or
       * has no long `id`, or one of the label's edges has a null endpoint. */
     def until(seeds: DataFrame, edgeLabel: Option[String], out: Boolean,
-              stops: Option[DataFrame], emit: Boolean, maxIter: Int): Option[DataFrame] =
+              stops: Option[DataFrame], emit: Boolean): Option[DataFrame] =
       for {
         (_, from) <- longs(seeds, "id")
         halt <- stops.fold(Option(Iterator.empty[Long]))(longs(_, "id").map(_._2))
         adj <- adjacency(edgeLabel, out)
       } yield {
         searches.incrementAndGet()
-        val found = Traversal.until(adj, from, halt, onlyStops = stops.isDefined && !emit, maxIter)
+        val found = Traversal.until(adj, from, halt, onlyStops = stops.isDefined && !emit)
         LocalFrames.frame(seeds.sparkSession, vertexSchema,
           found.iterator.flatMap(vertices).map(new GenericInternalRow(_)).toIndexedSeq)
       }

@@ -274,24 +274,25 @@ object Traversal {
     * runs. A resident graph's index runs the same search over its cached
     * adjacency instead ([[Resident.Index.until]]). */
   private[graft] def untilSmall(step: DataFrame, seeds: DataFrame, stops: Option[DataFrame],
-                                emit: Boolean, maxIter: Int = 64): Option[Array[Long]] = {
+                                emit: Boolean): Option[Array[Long]] = {
     val frames = step.select(col("src"), col("dst")) +: (seeds +: stops.toSeq).map(_.select(col("id")))
     if (!frames.forall(integralCols) || !broadcastSized(frames: _*)) return None
     val rows = Adjacency.collectAll(frames: _*)
     def ids(k: Int) = rows.lift(k).iterator.flatten.filterNot(_.isNullAt(0)).map(_.getLong(0))
     Adjacency.of(rows(0)).map { adj =>
       smallPathRuns.incrementAndGet()
-      until(adj, ids(1), ids(2), onlyStops = stops.isDefined && !emit, maxIter)
+      until(adj, ids(1), ids(2), onlyStops = stops.isDefined && !emit)
     }
   }
 
   /** The one `repeat().until()/emit()` search ([[Adjacency.stopping]]):
     * the ids the lowering keeps (the stop vertices among them only, when
     * `onlyStops`: an `until` and no `emit`). Throws bfsDepth's round-limit
-    * error exactly where the lowering's bfsDepth(ePrime, contStart)
-    * would. */
+    * error exactly where the lowering's bfsDepth(ePrime, contStart), at
+    * its default of 64 levels, would. */
   private[graph] def until(adj: Adjacency, seeds: Iterator[Long], stops: Iterator[Long],
-                           onlyStops: Boolean, maxIter: Int): Array[Long] = {
+                           onlyStops: Boolean): Array[Long] = {
+    val maxIter = 64
     val (found, depth) = adj.stopping(seeds, stops, onlyStops)
     if (bfsDepthOver(maxIter)(depth)) throw bfsDepthLimit(maxIter)
     found

@@ -389,7 +389,9 @@ object GremlinLite {
             //     each broadcast-sized, Traversal.untilSmall gathers all
             //     three in ONE job (none when they have folded) and runs
             //     the same search, and the result is one filter of the
-            //     vertices by the reached ids;
+            //     vertices by the reached ids (a store whose frames are
+            //     over the bound but whose projections are under; no
+            //     measured workload takes it, see ROADMAP item 12);
             //  3. otherwise (g5 at sf0.1 starts from every lineitem) the
             //     join lowering below: an eager cut of s1, then bfsDepth —
             //     itself on its small-relation path (one collect, one

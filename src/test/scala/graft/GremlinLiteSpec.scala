@@ -232,8 +232,10 @@ class GremlinLiteSpec extends AnyFunSuite {
         s"g.V().hasLabel('user')$untilP.emit()",              // a null seed id
         "g.V().hasLabel('user').repeat(out('in')).emit().valueMap()"))
       threePaths(eg, q)
-    // duplicate seed rows: from a hop, which the graph that is not
-    // resident joins, so its seeds are over the threshold of path 2
+    // duplicate seed rows from a hop, which the graph that is not resident
+    // joins, so its seeds are over the threshold of path 2 and it takes
+    // the join lowering there; the new three-path property below gives
+    // untilSmall duplicate seed rows from a filter
     threePaths(eg, s"g.V(1).out().in()$untilP.emit()", gathered = false)
   }
 
@@ -338,6 +340,9 @@ class GremlinLiteSpec extends AnyFunSuite {
       "g.V(5).repeat(in('in')).until(hasLabel('user'))",
       "g.V(2).repeat(out('owns')).emit()",
       "g.V(1).repeat(in('owns')).until(has('tier','gold')).emit()", // the duplicate id 4
+      // duplicate seed rows from a filter (id 4 twice), which stay folded
+      // off the resident copy, so untilSmall still gets them
+      "g.V(4).repeat(out('in')).emit()",
       "g.V(1).repeat(out()).until(hasLabel('project'))",
       "g.V(1).repeat(out()).emit()",
       "g.V(6).repeat(in()).until(hasLabel('user')).emit()",
